@@ -48,10 +48,14 @@ object Bench {
     val tasks = new AtomicLong(0)
   }
 
-  private final case class QStat(name: String, secs: Double, shuffleB: Long,
-                                 spillB: Long, peakB: Long, ok: Boolean,
-                                 median: Double = 0.0, jobs: Long = 0L,
-                                 tasks: Long = 0L)
+  /** One query's measurement. `median` is over the successful reps only,
+    * so it is None when every rep failed: a failed query's fast-abort wall
+    * is not a measurement and must not enter any median total. */
+  private[graft] final case class QStat(name: String, secs: Double,
+                                        shuffleB: Long, spillB: Long,
+                                        peakB: Long, ok: Boolean,
+                                        median: Option[Double] = None,
+                                        jobs: Long = 0L, tasks: Long = 0L)
 
   private def timeSuite(spark: SparkSession, sfDir: String,
                         meters: Meters, reps: Int,
@@ -131,15 +135,18 @@ object Bench {
       // steady-state cost (unchanged contract), the median bounds how far
       // box noise pushed the other reps — flat code with a flat median and
       // a swung min is weather, not a plan change
-      val med = {
-        val s = okSecs.sorted
-        if (s.isEmpty) lastSecs
-        else if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-      }
       QStat(name, if (best == Double.MaxValue) lastSecs else best,
-        shuffleB, spillB, meters.peak.get(), okAny, med, jobsN, tasksN)
+        shuffleB, spillB, meters.peak.get(), okAny, medianOf(okSecs.toSeq),
+        jobsN, tasksN)
     }
+  }
+
+  /** Median of the successful reps' walls; None when no rep succeeded. */
+  private[graft] def medianOf(okSecs: Seq[Double]): Option[Double] = {
+    val s = okSecs.sorted
+    if (s.isEmpty) None
+    else if (s.size % 2 == 1) Some(s(s.size / 2))
+    else Some((s(s.size / 2 - 1) + s(s.size / 2)) / 2.0)
   }
 
   private def obj(entries: Seq[(String, String)]): String =
@@ -186,6 +193,35 @@ object Bench {
       writeBaseline(seedable)
       (Seq.empty[String], Seq.empty[String])
     }
+  }
+
+  /** The compact summary line — the last stdout line, which consumers of
+    * the bench parse, so its keys are frozen. `total_median_sec` sums the medians of the
+    * queries that succeeded at least once; a query whose every rep failed
+    * counts in `n_failed` and in no median. */
+  private[graft] def compactLine(primary: Seq[QStat], sfDir: String,
+                                 shuffleRegs: Int, spillRegs: Int): String = {
+    val total = primary.map(_.secs).sum
+    val header = obj(Seq(
+      "metric" -> "\"total\"", "value" -> f"$total%.1f", "unit" -> "\"sec\"",
+      "sf" -> ("\"" + sfDir + "\""),
+      "n_queries" -> primary.size.toString,
+      "n_failed" -> primary.count(!_.ok).toString,
+      "shuffle_regressions" -> shuffleRegs.toString,
+      "spill_regressions" -> spillRegs.toString,
+      // inventory-wide deterministic totals (see the full artifact for
+      // the per-query maps): flat code => flat totals, whatever the wall
+      "total_median_sec" -> f"${primary.flatMap(_.median).sum}%.1f",
+      "total_jobs" -> primary.map(_.jobs).sum.toString,
+      "total_tasks" -> primary.map(_.tasks).sum.toString))
+    val budget = 1800 - header.length - 64 // leave room for the tail keys
+    val slowestFirst = primary.sortBy(-_.secs)
+      .map(q => "\"" + q.name + "\":" + f"${q.secs}%.2f")
+    val kept = slowestFirst
+      .scanLeft(0)(_ + _.length + 1).tail.takeWhile(_ <= budget).size
+    header.dropRight(1) +
+      s""","queries":{${slowestFirst.take(kept).mkString(",")}}""" +
+      s""","queries_omitted":${primary.size - kept}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -291,7 +327,7 @@ object Bench {
     // the full artifact so a judge can separate plan changes from box
     // weather without diffing plan dumps — jobs/tasks are attributed from
     // rep 0 like shuffle/spill (the plan is deterministic).
-    val medians = obj(primary.map(q => q.name -> f"${q.median}%.3f"))
+    val medians = obj(primary.flatMap(q => q.median.map(m => q.name -> f"$m%.3f")))
     val jobsObj = obj(primary.map(q => q.name -> q.jobs.toString))
     val tasksObj = obj(primary.map(q => q.name -> q.tasks.toString))
     // failed queries BY NAME in the full artifact: a failed query still
@@ -313,26 +349,8 @@ object Bench {
     java.nio.file.Files.write(
       new java.io.File(outDir, s"bench_full_$sfName.json").toPath,
       fullLine.getBytes)
-    val header = obj(Seq(
-      "metric" -> "\"total\"", "value" -> f"$total%.1f", "unit" -> "\"sec\"",
-      "sf" -> ("\"" + sfDir + "\""),
-      "n_queries" -> primary.size.toString,
-      "n_failed" -> primary.count(!_.ok).toString,
-      "shuffle_regressions" -> shuffleRegs.size.toString,
-      "spill_regressions" -> spillRegs.size.toString,
-      // inventory-wide deterministic totals (see the full artifact for
-      // the per-query maps): flat code => flat totals, whatever the wall
-      "total_median_sec" -> f"${primary.map(_.median).sum}%.1f",
-      "total_jobs" -> primary.map(_.jobs).sum.toString,
-      "total_tasks" -> primary.map(_.tasks).sum.toString))
-    val budget = 1800 - header.length - 64 // leave room for the tail keys
-    val slowestFirst = primary.sortBy(-_.secs)
-      .map(q => "\"" + q.name + "\":" + f"${q.secs}%.2f")
-    val kept = slowestFirst
-      .scanLeft(0)(_ + _.length + 1).tail.takeWhile(_ <= budget).size
-    val compact = header.dropRight(1) +
-      s""","queries":{${slowestFirst.take(kept).mkString(",")}}""" +
-      s""","queries_omitted":${primary.size - kept}}"""
+    val compact = compactLine(primary, sfDir, shuffleRegs.size,
+      spillRegs.size)
     // fixed-path copy the driver/judge can read even if the stdout window
     // truncates: latest run wins, independent of SF naming
     java.nio.file.Files.write(

@@ -27,6 +27,11 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
+  /** Kafka partitions of the offsets queries' event logs: the key domain
+    * of their projections (`% P`, offsets `div P`), of the stateful
+    * stream's shuffle partitions, and of the matching oracle SQL. */
+  private val OffsetsPartitions = 8
+
   /** event-time as string, microsecond precision (matches DuckDB %f). */
   private def tss(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
@@ -941,7 +946,7 @@ object SparkEntry {
     "offsets_commit" -> ((s, d) => {
       val w = Window.partitionBy(col("part")).orderBy(col("event_id").asc)
       val df = T(s, d, "events")
-        .withColumn("part", col("user_id") % 8)
+        .withColumn("part", col("user_id") % OffsetsPartitions)
         .withColumn("offset", row_number().over(w).cast("long") - 1)
         .withColumn("processed", col("event_type") =!= "error")
       OffsetsCommit.committable(df, col("part"), col("offset"), col("processed"))
@@ -961,8 +966,8 @@ object SparkEntry {
       import graft.streaming.{OffsetEvent, OffsetsProgress, OffsetsTracker}
       val ev = T(s, d, "events")
         .filter(col("event_id") < 20000L)
-        .select((col("event_id") % 8).cast("string").as("part"),
-          expr("event_id div 8").cast("long").as("off"),
+        .select((col("event_id") % OffsetsPartitions).cast("string").as("part"),
+          expr(s"event_id div $OffsetsPartitions").cast("long").as("off"),
           (substring(md5(concat(lit("oc"),
             col("event_id").cast("string"))), 1, 1) =!= "f").as("consumed"),
           substring(md5(concat(lit("op"),
@@ -989,10 +994,11 @@ object SparkEntry {
         org.apache.spark.sql.Encoders.product[OffsetEvent]
       // r13 (guide §2.1/§2.2): the stateful operator's state-store layout
       // is fixed by the session's shuffle partition count at the
-      // checkpoint's first batch. This stream tracks exactly 8 Kafka
-      // partitions (the key domain constructed above), so partitions
-      // beyond the key count buy zero parallelism and pay per-batch
-      // state-store task + delta-file overhead for every empty partition:
+      // checkpoint's first batch. This stream tracks exactly
+      // OffsetsPartitions Kafka partitions (the key domain constructed
+      // above), so partitions beyond the key count buy zero parallelism
+      // and pay per-batch state-store task + delta-file overhead for
+      // every empty partition:
       // the 2-batch replay measured 3.31 s at 32 state partitions vs
       // 1.76 s at 8 (sf0.1, same box, back to back). A dedicated session
       // keys the stream's state layout to the DATA (the tracked-partition
@@ -1001,7 +1007,7 @@ object SparkEntry {
       // the session default is right again; the batch-side event-log
       // build above stays on the caller's session untouched.
       val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      ss.conf.set("spark.sql.shuffle.partitions", OffsetsPartitions.toString)
       val ms = MemoryStream[OffsetEvent](ss)
       val latest = new java.util.concurrent.ConcurrentHashMap[
         String, OffsetsProgress]()
@@ -1068,15 +1074,15 @@ object SparkEntry {
     // precision 1, so the blocked pair set provably equals the exact
     // all-pairs hamming<=3 set the oracle computes.
     "dedup_simhash" -> ((s, d) => {
-      // routed through simhashPairsAuto (r8 verdict item 2): below 2^18
+      // routed through simhashPairs (r8 verdict item 2): below 2^18
       // docs — every driver SF — this takes the narrow 60-bit md5 path
       // (fused one-pass kernel: no explode, no 60-way vote aggregation, no
       // shuffle before banding; SimhashMd5KernelSpec pins bit-equality
       // with the explode+vote formulation the oracle mirrors), which is
       // what this oracle reproduces. At >= 2^18 docs the router switches
       // to the wide 120-bit form whose own full-row oracle is
-      // dedup_simhash_wide; AutoSimhashSpec pins the switch point.
-      Dedup.simhashPairsAuto(T(s, d, "documents"),
+      // dedup_simhash_wide; RoutingSpec pins the switch point.
+      Dedup.simhashPairs(T(s, d, "documents"),
         col("doc_id"), col("text"), maxHamming = 3)
     }),
 
@@ -1091,8 +1097,6 @@ object SparkEntry {
     // all-pairs hamming<=3 set (recall is exact for maxHamming <= bands-1).
     "dedup_simhash_kernel" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val p = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
-        maxHamming = 3)
       // r12 probe, REVERTED: localCheckpointing this 16 B/doc signature
       // frame measured wall-neutral (2.14 → 2.13 s min-of-3 — the
       // broadcast builds already dedup via ReusedExchange) and its
@@ -1100,6 +1104,8 @@ object SparkEntry {
       // PlanHygieneSpec's whole-inventory codegen guard.
       val sig = docs.select(col("doc_id"),
         GraftFunctions.simhash(TextFunctions.tokens(col("text"))).as("sim"))
+      val p = Dedup.simhashPairsFromSig(sig, sigBits = 64, bands = 4,
+        maxHamming = 3)
       // VERIFICATION HARNESS, not a production path: the exact reference
       // is all-pairs — quadratic by construction — and runs at oracle SFs
       // only. The operator above (banded blocking) is the scale path.
@@ -1131,10 +1137,11 @@ object SparkEntry {
     // Wide-signature variant: 2×60-bit md5 simhashes over md5-parity token
     // halves, 4×30-bit bands — the occupancy-safe form for 10^8+-doc
     // corpora (the sf100 sweep measured the narrow form's ~N²/2^15
-    // map-side cost; see Dedup.simhashPairsWide scaladoc).
+    // map-side cost; see Dedup.simhashPairs scaladoc). The wide route is
+    // forced: this query's oracle is the wide form at every SF.
     "dedup_simhash_wide" -> ((s, d) =>
-      Dedup.simhashPairsWide(T(s, d, "documents"), col("doc_id"),
-        col("text"), maxHamming = 3)),
+      Dedup.simhashPairs(T(s, d, "documents"), col("doc_id"),
+        col("text"), maxHamming = 3, route = Routing.Large)),
 
     "dedup_ngram" -> ((s, d) =>
       Dedup.tokenJaccardPairs(T(s, d, "documents"), col("doc_id"), col("text"),
@@ -1327,7 +1334,7 @@ object SparkEntry {
     // r11: SemDeDup's decade-3 correctness receipt. The FULL-corpus oracle
     // is blocked two ways at sf100 — DuckDB's within-cluster pair replay
     // over 2M vectors exhausts sandbox disk (r10, PLANS), and above 2^17
-    // vectors ivfIndexAuto's hierarchical assignment is approximate at
+    // vectors ivfIndex's hierarchical assignment is approximate at
     // cell boundaries, so no exact SQL replay exists. A deterministic
     // id slice keeps the pipeline IDENTICAL on real decade-3 data
     // (31k sf100 vectors → flat exact assignment, SQL-replayable) while
@@ -1358,15 +1365,12 @@ object SparkEntry {
     // nlist follows the √N law (Similarity.autoStride): a pinned stride
     // makes nlist ∝ N and assignment ∝ N² — measured ×100/decade² at the
     // sf10 sweep before this query was re-parameterized.
-    // r9: index build routes through ivfIndexAuto — flat exact assignment
-    // (what this full-SQL oracle reproduces) below 2^17 vectors, i.e. at
-    // every driver SF; the hierarchical ≈N^1.25 build above it, so the
-    // N^1.5 flat law can't ride into the 10^8-vector regime. HierIvfSpec
-    // pins the switch point and probe-all-cells ≡ flat equivalence.
+    // The routed index build takes the flat exact assignment this
+    // full-SQL oracle reproduces at every test-data SF (Routing.hierThreshold).
     "similarity_ivf" -> ((s, d) => {
       val e = T(s, d, "embeddings")
       val stride = Similarity.autoStride(e)
-      val idx = Similarity.ivfIndexAuto(e, centroidStride = stride)
+      val idx = Similarity.ivfIndex(e, Similarity.strideCentroids(e, stride))
       Similarity.ivfTopK(e.filter(col("vec_id") < 8), idx, e,
         centroidStride = stride, nProbe = 3, k = 5)
     }),
@@ -1518,16 +1522,11 @@ object SparkEntry {
     // with the held-out eval slice (doc_id % 97 == 0) are dropped. Eval
     // n-grams broadcast; training text never shuffles — matched ids only.
     // (n=4 instead of the canonical 13 because the synthetic corpus'
-    // ~40-word vocabulary makes longer grams collision-free.)
-    // r11: routed through decontaminateAuto — the measured gram count
-    // (the same bounded eval-side action the Bloom path pays for sketch
-    // sizing) picks the branch, so no caller rides the exact broadcast
-    // into the 10⁸-gram regime it can't survive. At driver SFs the count
-    // sits under the default 2²⁰ threshold → the EXACT broadcast branch,
-    // so this query's output and oracle are unchanged.
+    // ~40-word vocabulary makes longer grams collision-free.) At the
+    // test-data SFs the measured gram count routes to the broadcast branch.
     "decontaminate" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      Corpus.decontaminateAuto(
+      Corpus.decontaminate(
           docs.filter(col("doc_id") % 97 =!= 0), col("doc_id"), col("text"),
           docs.filter(col("doc_id") % 97 === 0), col("text"), n = 4)
         .select(col("doc_id"), col("lang"))
@@ -1718,20 +1717,17 @@ object SparkEntry {
     // ranked merges, each chosen by exact weighted pair count with the
     // pair-key tie-break. The oracle replays the identical loop as 10
     // unrolled CTE stages (same symbol-string encoding, same literal
-    // left-to-right replace).
+    // left-to-right replace). The executor loop is forced: this query
+    // keeps it end-to-end executed and hash-checked at every SF.
     "bpe_train" -> ((s, d) =>
-      Corpus.bpeTrain(T(s, d, "documents"), col("text"), numMerges = 10)),
+      Corpus.bpeTrain(T(s, d, "documents"), col("text"), numMerges = 10,
+        route = Routing.Large)),
 
-    // The deployment form: bpeTrainAuto routes by MEASURED vocabulary
-    // type count — under the 2^22-type cap it collects the Heaps'-law
-    // (word, freq) frame and runs the merge loop ON THE DRIVER (the
-    // production-BPE-trainer shape: ~260 ms/merge of Spark job
-    // scheduling drops to in-core microseconds, 30k merges become
-    // seconds), above it the all-executor loop. Shares bpe_train's
+    // The deployment form: routed by MEASURED vocabulary type count (the
+    // driver-local loop at every real vocabulary size). Shares bpe_train's
     // oracle verbatim: bit-identical merges are the routing contract.
     "bpe_train_auto" -> ((s, d) =>
-      Corpus.bpeTrainAuto(T(s, d, "documents"), col("text"),
-        numMerges = 10)),
+      Corpus.bpeTrain(T(s, d, "documents"), col("text"), numMerges = 10)),
 
     // BPE tokenizer APPLICATION: encode every document with the merge
     // table trained on the same corpus (rank-order replace passes, word-
@@ -1740,16 +1736,10 @@ object SparkEntry {
     // verifies every merge landed at every position of every document.
     "bpe_encode" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      // r12 optimization: the merge-table artifact comes from the
-      // AUTO-ROUTED trainer (one corpus scan + the driver-local loop at
-      // real vocabulary sizes) instead of re-running the executor merge
-      // loop's ~2 jobs per merge here. The two loops are bit-identical by
-      // contract — CorpusSpec pins local ≡ executor including byte-order
-      // ties, and bpe_train_auto hash-checks the routed loop against
-      // bpe_train's oracle verbatim — so the encode output is unchanged;
-      // the encode form under test (the nested-replace projection) stays
-      // exactly what this query exercises.
-      val merges = Corpus.bpeTrainAuto(docs, col("text"), numMerges = 10)
+      // the merge table comes from the routed trainer (one corpus scan +
+      // the driver-local loop), not the executor loop's ~2 jobs per merge;
+      // the loops are bit-identical (CorpusSpec, bpe_train_auto's oracle)
+      val merges = Corpus.bpeTrain(docs, col("text"), numMerges = 10)
         .orderBy(col("rank"))
         .collect() // ≤ numMerges rows — the tokenizer artifact, driver-sized
         .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1764,7 +1754,8 @@ object SparkEntry {
     // oracle is shared verbatim.
     "bpe_encode_vocab" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      val merges = Corpus.bpeTrainLocal(docs, col("text"), numMerges = 10)
+      val merges = Corpus.bpeTrain(docs, col("text"), numMerges = 10,
+          route = Routing.Small)
         .orderBy(col("rank"))
         .collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1775,7 +1766,7 @@ object SparkEntry {
     // host is or sits under a blocklisted domain — exact suffix-set
     // equi-join, never substring (the notbadsite.io case pins that).
     // Blocklist broadcast under the measured-count threshold; Bloom-gated
-    // above it (urlFilter routes like decontaminateAuto).
+    // above it (urlFilter routes like decontaminate).
     "url_filter" -> ((s, d) => {
       import s.implicits._
       val docs = plantedUrlDocs(T(s, d, "documents"))
@@ -1911,9 +1902,9 @@ object SparkEntry {
           col("n_paras"), col("n_dropped"))
     }),
 
-    // STREAMING twin executed for real: the eval gram sketch is built once
-    // (Corpus.bloomDecontaminator — the production deployment: static eval
-    // set, unbounded training stream), the train slice replays through a
+    // STREAMING twin executed for real: the eval gram set is built and
+    // sketched once (Corpus.decontaminator — the production deployment:
+    // static eval set, unbounded training stream), the train slice replays through a
     // memory stream in two micro-batches, each gated EXACTLY via
     // foreachBatch, and the kept ids semi-join back for full-row output.
     // Oracle = the batch decontaminate SQL: stream ≡ batch is the
@@ -1926,7 +1917,7 @@ object SparkEntry {
       val train = docs.filter(col("doc_id") % 97 =!= 0 &&
         col("doc_id") < 20000L)
       val eval = docs.filter(col("doc_id") % 97 === 0)
-      val dc = Corpus.bloomDecontaminator(eval, col("text"), n = 4)
+      val dc = Corpus.decontaminator(eval, col("text"), n = 4)
       try {
         implicit val enc: org.apache.spark.sql.Encoder[(Long, String)] =
           org.apache.spark.sql.Encoders.tuple(
@@ -1965,15 +1956,15 @@ object SparkEntry {
     // the exact semi-join kills those), so the oracle is the identical SQL.
     // fpp = 0.25 on purpose: a sloppy filter stresses the FP-kill path —
     // at the default 1% the join would see almost no junk to reject.
-    // r11: also via decontaminateAuto, with maxBroadcastGrams = 0 forcing
-    // the SKETCH branch at every SF — both mechanisms stay end-to-end
-    // executed and hash-compared against the same exact-semantics oracle.
+    // The SKETCH route is forced at every SF, so both routes stay
+    // end-to-end executed and hash-compared against the same
+    // exact-semantics oracle.
     "decontaminate_bloom" -> ((s, d) => {
       val docs = T(s, d, "documents")
-      Corpus.decontaminateAuto(
+      Corpus.decontaminate(
           docs.filter(col("doc_id") % 97 =!= 0), col("doc_id"), col("text"),
           docs.filter(col("doc_id") % 97 === 0), col("text"), n = 4,
-          fpp = 0.25, maxBroadcastGrams = 0L)
+          fpp = 0.25, route = Routing.Large)
         .select(col("doc_id"), col("lang"))
     }),
 
@@ -2037,7 +2028,7 @@ object SparkEntry {
       val e = T(s, d, "embeddings")
       val centroids = Similarity.trainCentroids(e,
         centroidStride = Similarity.autoStride(e), iters = 2)
-      val idx = Similarity.ivfIndexFrom(e, centroids)
+      val idx = Similarity.ivfIndex(e, centroids)
       val res = Similarity.ivfTopKWith(e.filter(col("vec_id") < 8), idx,
         centroids, nProbe = 3, k = 5)
       // independent reference: nProbe nearest centroids by HOF cosine,
@@ -3103,9 +3094,9 @@ object SparkEntry {
         |FROM (SELECT event_id, ts, user_id % 4 AS part FROM events)""".stripMargin,
 
     "offsets_commit" ->
-      """WITH t AS (
-        |  SELECT user_id % 8 AS part,
-        |    row_number() OVER (PARTITION BY user_id % 8 ORDER BY event_id ASC) - 1 AS "offset",
+      s"""WITH t AS (
+        |  SELECT user_id % $OffsetsPartitions AS part,
+        |    row_number() OVER (PARTITION BY user_id % $OffsetsPartitions ORDER BY event_id ASC) - 1 AS "offset",
         |    event_type <> 'error' AS processed
         |  FROM events)
         |SELECT part,
@@ -3120,9 +3111,9 @@ object SparkEntry {
     // unprocessed CONSUMED offset (gaps were never consumed), or the
     // max processed offset when nothing consumed remains unprocessed
     "offsets_ooo_stream" ->
-      """WITH ev AS (
-        |  SELECT CAST(event_id % 8 AS VARCHAR) AS part,
-        |    event_id // 8 AS off,
+      s"""WITH ev AS (
+        |  SELECT CAST(event_id % $OffsetsPartitions AS VARCHAR) AS part,
+        |    event_id // $OffsetsPartitions AS off,
         |    substr(md5('oc' || CAST(event_id AS VARCHAR)), 1, 1) <> 'f'
         |      AS consumed,
         |    substr(md5('op' || CAST(event_id AS VARCHAR)), 1, 1)

@@ -414,143 +414,93 @@ object Corpus {
     *
     * Scale shape: the EVAL side collapses to distinct n-grams — bounded by
     * the eval corpus, which is orders of magnitude smaller than training —
-    * and broadcasts. The TRAINING side explodes to (id, gram) pairs that
-    * left-semi-join the broadcast locally (no shuffle of the exploded
-    * frame), and only the matched ids — typically a tiny fraction — reach
-    * the distinct + anti-join. Training text crosses the wire zero times;
-    * the anti-join shuffles ids only (AQE turns it into a broadcast when
-    * the contaminated set is small, which it virtually always is). */
+    * and is counted once. Up to [[Routing.maxBroadcastGrams]] grams they
+    * broadcast, and the TRAINING side's exploded (id, gram) pairs
+    * left-semi-join them locally (no shuffle of the exploded frame);
+    * above it the grams collapse to a
+    * Bloom sketch the training grams probe map-side, and only the
+    * survivors reach the exact semi-join. Only the matched ids — typically
+    * a tiny fraction — reach the distinct + anti-join. Training text
+    * crosses the wire zero times; the anti-join shuffles ids only (AQE
+    * turns it into a broadcast when the contaminated set is small, which
+    * it virtually always is). Both routes return the same rows at any
+    * `fpp`: Bloom error is one-sided, and the exact join admits no junk.
+    *
+    * Build, [[Decontaminator.exact]], close: the distinct-gram frame is
+    * persisted across the count and the sketch build, then dropped before
+    * the caller's action, so the returned plan recomputes the eval
+    * pipeline once — the price of a transparent, lineage-complete plan
+    * (eval is orders of magnitude smaller than the training side it
+    * gates). */
   def decontaminate(train: DataFrame, id: Column, text: Column,
                     eval: DataFrame, evalText: Column,
-                    n: Int = 13): DataFrame = {
-    require(n > 0, "need n > 0")
-    val evalGrams = eval
-      .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct()
-    val contaminated = train
-      .select(id.as("__dc_id"),
-        explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
-      .join(broadcast(evalGrams), Seq("__dc_g"), "left_semi")
-      .select(col("__dc_id"))
-      .distinct()
-    train.join(contaminated, id === col("__dc_id"), "left_anti")
+                    n: Int = 13, fpp: Double = 0.01,
+                    route: Routing.Route = Routing.Auto): DataFrame = {
+    val dc = gramSet(eval, evalText, n, fpp, route)
+    try dc.exact(train, id, text) finally dc.close()
   }
 
-  /** [[decontaminate]] with a Bloom prefilter — the 100-TB form. The exact
-    * variant broadcasts the DISTINCT eval n-grams as strings; past a few
-    * tens of millions of 13-gram strings that broadcast is gigabytes. Here
-    * the eval grams collapse to a Bloom filter (`df.stat.bloomFilter`,
-    * Spark's mergeable sketch — built with one treeAggregate, ~1.2 bytes/
-    * gram at 1% fpp), the TRAINING side's exploded grams probe it map-side
-    * via the codegen [[graft.functions.BloomMightContain]] (no join, no
-    * shuffle, fused into the scan), and only the survivors — true
-    * contaminations plus an fpp-sized sliver — reach the exact semi-join
-    * that kills the false positives. The result is EXACTLY
-    * [[decontaminate]]'s output at any fpp: Bloom errors are one-sided
-    * (false positives only), so the prefilter can admit junk but never
-    * drop a contaminated gram, and the exact join admits no junk.
-    *
-    * The final semi-join is deliberately NOT hinted broadcast: at scale
-    * the eval-gram frame is exactly the thing too big to broadcast, while
-    * the surviving training grams are tiny — AQE picks the broadcast side
-    * at runtime (and does broadcast the survivors at test SFs). */
-  def decontaminateBloom(train: DataFrame, id: Column, text: Column,
-                         eval: DataFrame, evalText: Column,
-                         n: Int = 13, fpp: Double = 0.01): DataFrame = {
+  /** Build a [[Decontaminator]] — the streaming deployment of
+    * [[decontaminate]]. The eval corpus is static (benchmark sets change
+    * rarely); a production pipeline builds its gram set ONCE and gates the
+    * training stream against it forever after. This factory collapses the
+    * eval side to distinct grams, persists and counts them, and always
+    * takes the Bloom-sketch route: every micro-batch then probes the
+    * prebuilt sketch map-side and semi-joins the persisted grams, where
+    * the broadcast route would re-ship the whole gram set on every
+    * trigger. Call `close()` when retiring it. */
+  def decontaminator(eval: DataFrame, evalText: Column, n: Int = 13,
+                     fpp: Double = 0.01): Decontaminator =
+    gramSet(eval, evalText, n, fpp, Routing.Large)
+
+  /** The distinct eval grams behind [[decontaminate]] and
+    * [[decontaminator]], routed on their count by [[keySet]]. */
+  private def gramSet(eval: DataFrame, evalText: Column, n: Int,
+                      fpp: Double, route: Routing.Route): Decontaminator = {
     require(n > 0, "need n > 0")
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    // Persisted: the distinct-gram frame is read twice INSIDE this call
-    // (count action, bloom build) — without the persist that is two full
-    // eval scans each paying the explode + distinct shuffle. The third use
-    // (the exact semi-join) executes lazily with the caller's action, after
-    // the finally has dropped the cache, so it recomputes the eval pipeline
-    // once — the price of returning a transparent, lineage-complete plan
-    // (an eager localCheckpoint of the contaminated ids would save that scan
-    // but loses executor-loss resilience and hides the probe-before-join
-    // shape from the optimizer and from plan audits). Eval is orders of
-    // magnitude smaller than training, so one extra eval scan is noise next
-    // to the training-side anti-join it feeds.
-    val evalGrams = eval
+    val (grams, sketch) = keySet(eval
       .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct()
-      .persist()
-    try {
-      // expectedNumItems sizes the bit array; the exact count is one bounded
-      // scalar action (same pattern as Similarity.autoStride's corpus count).
-      val nGrams = evalGrams.count()
-      // Zero eval grams (empty eval frame, or every eval doc shorter than n
-      // tokens) ⇒ nothing can be contaminated. Short-circuit: it keeps the
-      // "identical output to decontaminate at any fpp" contract (the exact
-      // form returns train unchanged here), and bloom_filter_agg over an
-      // empty input yields a null buffer that BloomFilter.readFrom rejects.
-      if (nGrams == 0L) return train
-      val bloom = evalGrams.stat.bloomFilter("__dc_g", nGrams, fpp)
-      val contaminated = train
-        .select(id.as("__dc_id"),
-          explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
-        .filter(GraftFunctions.bloomMightContain(col("__dc_g"), bloom))
-        .join(evalGrams, Seq("__dc_g"), "left_semi")
-        .select(col("__dc_id"))
-        .distinct()
-      train.join(contaminated, id === col("__dc_id"), "left_anti")
-    } finally evalGrams.unpersist()
+      .distinct(), fpp, route)(Routing.gramSketch)
+    new Decontaminator(grams, sketch, n)
   }
 
-  /** Auto-routed decontamination — the form callers should use at unknown
-    * scale: EXACT gram broadcast below `maxBroadcastGrams` distinct eval
-    * grams, the [[decontaminateBloom]] sketch path above it. The exact
-    * form's cliff is the broadcast itself: 13-gram strings run ~100-150 B
-    * each, so 10⁸ grams is tens of GB shipped to every executor — the
-    * r10 sf100 sweep measured the exact form at 148.1 s vs the Bloom
-    * twin's 55.4 s for identical output. The default threshold (2²⁰ ≈ 1M
-    * grams ≈ 100-150 MB) keeps the broadcast in torrent-comfortable
-    * territory; both branches return EXACTLY [[decontaminate]]'s rows at
-    * any fpp (one-sided Bloom error + exact semi-join), so routing can
-    * never change an answer, only a plan.
-    *
-    * The routing count is the same bounded eval-side action the Bloom
-    * path already pays to size its sketch (eval ≪ training by premise);
-    * the distinct-gram frame is persisted across count + probe exactly as
-    * in [[decontaminateBloom]], and the same post-unpersist lazy-replay
-    * note applies. */
-  def decontaminateAuto(train: DataFrame, id: Column, text: Column,
-                        eval: DataFrame, evalText: Column,
-                        n: Int = 13, fpp: Double = 0.01,
-                        maxBroadcastGrams: Long = 1L << 20): DataFrame = {
-    require(n > 0, "need n > 0")
-    require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    require(maxBroadcastGrams >= 0L, "need maxBroadcastGrams >= 0")
-    val evalGrams = eval
-      .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct()
-      .persist()
-    try {
-      val nGrams = evalGrams.count()
-      if (nGrams == 0L) return train
-      val contaminated =
-        if (nGrams <= maxBroadcastGrams) {
-          // exact branch: the gram frame is broadcast-small by measurement
-          train
-            .select(id.as("__dc_id"),
-              explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
-            .join(broadcast(evalGrams), Seq("__dc_g"), "left_semi")
-            .select(col("__dc_id"))
-            .distinct()
-        } else {
-          // sketch branch: map-side Bloom probe, exact semi-join kills the
-          // false positives (identical output, decontaminateBloom's shape)
-          val bloom = evalGrams.stat.bloomFilter("__dc_g", nGrams, fpp)
-          train
-            .select(id.as("__dc_id"),
-              explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
-            .filter(GraftFunctions.bloomMightContain(col("__dc_g"), bloom))
-            .join(evalGrams, Seq("__dc_g"), "left_semi")
-            .select(col("__dc_id"))
-            .distinct()
-        }
-      train.join(contaminated, id === col("__dc_id"), "left_anti")
-    } finally evalGrams.unpersist()
-  }
+  /** The distinct single-column key frame `keys` that [[matchedIds]]
+    * probes, with its Bloom sketch when the route is the sketch: `keys`
+    * is persisted and counted once (the count sizes the sketch), and
+    * `large` decides on that count. The forced broadcast route skips the
+    * count and the persist. Zero keys have nothing to sketch:
+    * bloom_filter_agg over no rows yields a null buffer that
+    * BloomFilter.readFrom rejects. */
+  private def keySet(keys: DataFrame, fpp: Double, route: Routing.Route)(
+      large: Long => Boolean)
+  : (DataFrame, Option[org.apache.spark.util.sketch.BloomFilter]) =
+    if (route == Routing.Small) (keys, None)
+    else {
+      val n = keys.persist().count()
+      (keys, if (n > 0L && Routing.isLarge(route, n)(large))
+        Some(keys.stat.bloomFilter(keys.columns.head, n, fpp)) else None)
+    }
+
+  /** The ids of `probes` (columns `idCol`, `keyCol`) whose key is in the
+    * distinct single-column frame `keys` — the probe [[Decontaminator]]
+    * and [[UrlGate]] share. Without a sketch `keys` broadcasts into a
+    * map-side semi-join. With one, the probes are Bloom-filtered map-side
+    * inside the scan's codegen stage (no join, no shuffle) and only the
+    * survivors — true matches plus an fpp-sized sliver — reach the exact
+    * semi-join, deliberately NOT hinted broadcast: on that route `keys` is
+    * the side too big to broadcast, while the surviving probes are tiny,
+    * so AQE picks the build side at runtime. Same ids either way: Bloom
+    * errors are false positives only, and the exact join kills them. */
+  private[operators] def matchedIds(probes: DataFrame, idCol: String,
+      keyCol: String, keys: DataFrame,
+      sketch: Option[org.apache.spark.util.sketch.BloomFilter]): DataFrame =
+    (sketch match {
+      case None => probes.join(broadcast(keys), Seq(keyCol), "left_semi")
+      case Some(b) =>
+        probes.filter(GraftFunctions.bloomMightContain(col(keyCol), b))
+          .join(keys, Seq(keyCol), "left_semi")
+    }).select(col(idCol)).distinct()
 
   /** Per-training-document contamination REPORT — the audit complement of
     * [[decontaminate]]: for each training doc, how many of its DISTINCT
@@ -569,7 +519,7 @@ object Corpus {
     * frac 0.0 rather than vanishing. At eval suites too large to
     * broadcast as strings, gate the explode through
     * [[graft.functions.GraftFunctions.bloomMightContain]] first, exactly
-    * as [[decontaminateBloom]] does — one-sided error keeps the exact
+    * as [[decontaminate]]'s sketch route does — one-sided error keeps the exact
     * semi-join's counts correct. */
   def contaminationReport(train: DataFrame, id: Column, text: Column,
                           eval: DataFrame, evalText: Column,
@@ -693,25 +643,38 @@ object Corpus {
     *
     * Scale shape: the corpus collapses ONCE to the vocabulary table
     * (Heaps' law: orders of magnitude smaller than the corpus — the only
-    * corpus-sized scan in the whole loop), persisted and iterated. Each
-    * iteration is (a) a map-side-combinable pair count over the vocab
-    * frame — pair keys are bounded by the symbol-pair vocabulary, so the
-    * reduce side never grows with data — feeding a 1-row top-1 action,
-    * and (b) a map-only literal-replace projection. The merge choice is
-    * driver-coordinated (one scalar per iteration — the loop is
-    * inherently sequential, each merge depends on the last), executors do
-    * all counting. Lineage is one thin projection per merge and is cut by
-    * an eager localCheckpoint every [[bpeCheckpointEvery]] merges, so a
-    * real 30k-merge training run keeps constant-depth plans (the
-    * connectedComponents device) while short runs never pay a checkpoint.
+    * corpus-sized scan in training). Routed by MEASURED vocabulary size
+    * ([[Routing.bpeOnExecutors]]): up to [[Routing.bpeLocalMaxTypes]]
+    * types the frame is collected and the loop runs on the driver
+    * ([[bpeLoopLocal]] — thousands of merges/s, the shape every
+    * production BPE trainer uses; the right branch for every real corpus,
+    * since Heaps' law puts even a 100 TB crawl's frequency-capped type
+    * count under the cap); above it the all-executor
+    * [[bpeLoopDistributed]] loop, which never ships the frame to the
+    * driver. Both loops consume the same persisted vocab frame (one
+    * corpus scan, routing count included).
     *
     * Determinism: exact integer counts, ties broken on the pair key
     * (≡ (p1, p2) lexicographic), and the merge application is a literal
     * left-to-right replace — bit-identical across engines, partitionings,
-    * and retries. Stops early (fewer rows) when no pair remains. */
-  def bpeTrain(docs: DataFrame, text: Column, numMerges: Int): DataFrame = {
+    * retries, and the two loops (CorpusSpec pins local ≡ executors).
+    * Stops early (fewer rows) when no pair remains. */
+  def bpeTrain(docs: DataFrame, text: Column, numMerges: Int,
+               route: Routing.Route = Routing.Auto): DataFrame = {
     require(numMerges > 0, "need numMerges > 0")
-    bpeLoopDistributed(bpeVocab(docs, text), numMerges)
+    val spark = docs.sparkSession
+    def local(vocab: DataFrame) =
+      bpeLoopLocal(vocab.collect().map(r => (r.getLong(0), r.getString(1))),
+        numMerges, spark)
+    val vocab = bpeVocab(docs, text)
+    // persisted only when measured: the count and the loop then share one
+    // corpus scan (the forced routes never evaluate the by-name size)
+    try {
+      if (Routing.isLarge(route, vocab.persist().count())(
+          Routing.bpeOnExecutors))
+        bpeLoopDistributed(vocab, numMerges)
+      else local(vocab)
+    } finally vocab.unpersist()
   }
 
   /** The (freq, padded-symbol-string) vocabulary frame every BPE training
@@ -728,8 +691,13 @@ object Corpus {
     * projection per merge. Right at any vocabulary size, but each merge
     * is a full Spark job — measured ~3.8 merges/s on a 50k-type
     * vocabulary at local[32] (job scheduling, not counting, is the
-    * floor), which prices a real 30k-merge run at ~2 h. [[bpeTrainAuto]]
-    * routes around that whenever the vocab frame fits the driver. */
+    * floor), which prices a real 30k-merge run at ~2 h. [[bpeTrain]]
+    * routes around that whenever the vocab frame fits the driver.
+    *
+    * Lineage is one thin projection per merge and is cut by an eager
+    * localCheckpoint every [[bpeCheckpointEvery]] merges, so a real
+    * 30k-merge run keeps constant-depth plans (the connectedComponents
+    * device) while short runs never pay a checkpoint. */
   private def bpeLoopDistributed(vocabDf: DataFrame,
                                  numMerges: Int): DataFrame = {
     val spark = vocabDf.sparkSession
@@ -788,25 +756,15 @@ object Corpus {
     * bounded; runs shorter than this never pay one. */
   private[operators] val bpeCheckpointEvery = 32
 
-  /** BPE tokenizer training with the merge loop run ON THE DRIVER over
-    * the collected vocabulary — the shape every production BPE trainer
-    * uses, because after the corpus collapses to (word, freq) types the
-    * loop's working set is Heaps'-law small while its 30k iterations are
-    * inherently sequential: as distributed jobs they cost ~260 ms EACH in
-    * scheduling alone (~3.8 merges/s measured at local[32] on a 50k-type
-    * vocab — ~2 h for a real vocabulary), while locally the same
-    * incremental statistics run at thousands of merges/s. Cluster work
-    * stays one aggregation: the corpus-sized tokenize+count is the same
-    * Spark scan [[bpeTrain]] runs; only the vocab frame (a few hundred
-    * bytes per TYPE — ~200 MB at 4M types, the [[bpeTrainAuto]] cap) ever
-    * reaches the driver.
+  /** [[bpeTrain]]'s driver-local merge loop over the collected
+    * vocabulary: same statistics, same tie-breaks, same replace semantics
+    * as [[bpeLoopDistributed]], at in-core speed (thousands of merges/s).
     *
-    * Bit-equivalence to [[bpeTrain]] (CorpusSpec pins it, and the query
-    * twin shares bpe_train's DuckDB oracle): counts are the same exact
-    * per-adjacent-position (overlapping) integers; ties break on the pair
-    * key compared as UNSIGNED UTF-8 BYTES — Spark's binary string order;
-    * Java's String.compareTo would disagree wherever a supplementary
-    * code point meets U+E000..U+FFFF — and each merge is the same literal
+    * Bit-equivalence: counts are the same exact per-adjacent-position
+    * (overlapping) integers; ties break on the pair key compared as
+    * UNSIGNED UTF-8 BYTES — Spark's binary string order; Java's
+    * String.compareTo would disagree wherever a supplementary code point
+    * meets U+E000..U+FFFF — and each merge is the same literal
     * non-overlapping left-to-right replace of " p1  p2 " (Java
     * String.replace ≡ UTF8String.replace on these space-delimited
     * symbol strings).
@@ -817,52 +775,6 @@ object Corpus {
     * a lazy-deletion max-heap (stale entries pop until one matches the
     * live count), so a merge costs O(affected words · their symbols),
     * never a vocabulary scan. */
-  def bpeTrainLocal(docs: DataFrame, text: Column,
-                    numMerges: Int): DataFrame = {
-    require(numMerges > 0, "need numMerges > 0")
-    val spark = docs.sparkSession
-    val rows = bpeVocab(docs, text).collect()
-    bpeLoopLocal(rows.map(r => (r.getLong(0), r.getString(1))),
-      numMerges, spark)
-  }
-
-  /** Vocabulary-type cap under which [[bpeTrainAuto]] collects the vocab
-    * frame and trains locally. The honest budget is the LOOP's working
-    * set, not the frame: the incremental pair→word-ids index holds one
-    * boxed entry per (word, adjacent pair) — ~50 B × ~15 pairs/word ≈
-    * 3 GB at the 2^22 cap, inside the project's 8 GB driver with the
-    * ~200 MB collected frame and Heaps'-law pair-count map on top. Far
-    * past real tokenizer-training vocabularies (frequency-capped word
-    * lists are ~10^5..10^6 types) while three decimal orders under the
-    * corpus row count even at sf100. */
-  private[operators] val bpeLocalMaxTypes: Long = 1L << 22
-
-  /** BPE training routed by MEASURED vocabulary size (the
-    * decontaminateAuto device): collect-and-loop-locally when the
-    * (word, freq) frame has at most `localMaxTypes` rows — thousands of
-    * merges/s, the right branch for every real corpus, since Heaps' law
-    * puts even a 100 TB web crawl's frequency-capped type count well
-    * under the cap — else fall back to the all-executor
-    * [[bpeLoopDistributed]] loop, which never ships the frame to the
-    * driver. Both branches consume the SAME persisted vocab frame (one
-    * corpus scan total, routing scan included) and emit bit-identical
-    * merge tables. */
-  def bpeTrainAuto(docs: DataFrame, text: Column, numMerges: Int,
-                   localMaxTypes: Long = bpeLocalMaxTypes): DataFrame = {
-    require(numMerges > 0, "need numMerges > 0")
-    val spark = docs.sparkSession
-    val vocab = bpeVocab(docs, text).persist()
-    try {
-      if (vocab.count() <= localMaxTypes)
-        bpeLoopLocal(vocab.collect().map(r => (r.getLong(0), r.getString(1))),
-          numMerges, spark)
-      else bpeLoopDistributed(vocab, numMerges)
-    } finally vocab.unpersist()
-  }
-
-  /** [[bpeTrainLocal]]'s in-memory merge loop: same statistics, same
-    * tie-breaks, same replace semantics as [[bpeLoopDistributed]], at
-    * in-core speed. */
   private def bpeLoopLocal(vocab: Array[(Long, String)], numMerges: Int,
                            spark: org.apache.spark.sql.SparkSession)
       : DataFrame = {
@@ -1021,15 +933,15 @@ object Corpus {
     * of the 30k-merge table), so total encode work is
     * O(types · word-length), independent of corpus size. The dictionary
     * ships to executors as ONE broadcast (a few hundred MB at the 2^22
-    * [[bpeLocalMaxTypes]] cap); scoring is a dictionary lookup per token
+    * [[Routing.bpeLocalMaxTypes]] cap); scoring is a dictionary lookup per token
     * inside one projection — no join, no per-doc shuffle, and the output
     * schema and values match [[bpeEncode]] exactly.
     *
     * Equivalence contract (CorpusSpec pins it, and the query twin shares
     * bpe_encode's oracle): `merges` must be a TRAINING OUTPUT in rank
     * order (every pair that names a merged symbol ranks after the merge
-    * that created it — true of every [[bpeTrain]]/[[bpeTrainLocal]]
-    * table). Under that invariant, repeatedly applying the
+    * that created it — true of every [[bpeTrain]] table, on
+    * either route). Under that invariant, repeatedly applying the
     * lowest-ranked pair present in a word — the standard tokenizer
     * encode loop — reproduces the sequential all-merges replace pass
     * bit-for-bit: a merge can only ever CREATE pairs that rank after
@@ -1232,7 +1144,7 @@ object Corpus {
     * groupBys, and the scorer collapses to ONE vocab-scale (w, lw) table
     * (r12, the lmPerplexity device — per-type math, not per-occurrence)
     * that the token stream equi-joins once — broadcast-converted on
-    * small corpora, hinted SHUFFLE_HASH past [[lmShuffleHashMinDocs]]
+    * small corpora, hinted SHUFFLE_HASH past [[Routing.lmShuffleHashMinDocs]]
     * (the sort-merge fallback's occurrence-stream sort spilled 22 GB at
     * sf100; Zipf skew remains AQE's skew-split case); corpus sizes and
     * the joint vocabulary
@@ -1281,8 +1193,8 @@ object Corpus {
     // on the vocab-scale side and streams the occurrences — routed on
     // measured corpus size so small corpora keep the broadcast
     val lwSide =
-      if (graft.plans.PlanStats.rowCount(raw, corpusDocs)
-          > lmShuffleHashMinDocs) lw.hint("SHUFFLE_HASH")
+      if (Routing.lmShuffleHash(graft.plans.PlanStats.rowCount(raw, corpusDocs)))
+        lw.hint("SHUFFLE_HASH")
       else lw
     val scored = rawToks.join(lwSide, Seq("w")) // every token has a count
       .select(col("doc_id"), col("lw"))
@@ -1326,7 +1238,7 @@ object Corpus {
     * the log/round/decimal arithmetic runs once per bigram TYPE, not once
     * per occurrence. Scoring is then ONE equi-join of the occurrence
     * stream against that table: small corpora get AQE's broadcast
-    * conversion; past [[lmShuffleHashMinDocs]] the type table outgrows
+    * conversion; past [[Routing.lmShuffleHashMinDocs]] the type table outgrows
     * broadcast and the join is HINTED SHUFFLE_HASH — the unhinted
     * sort-merge fallback sorts the occurrence stream (measured 42 GB of
     * spill at sf100) where the hash build pays only vocab-scale state
@@ -1386,12 +1298,12 @@ object Corpus {
     // side and STREAMS the occurrences — no sort, no occurrence-side
     // spill; per-partition build state is bigram-types/shuffle-partitions
     // (hundreds of MB per node even at web scale). Routed on measured
-    // corpus size (the decontaminateAuto device; PlanStats reads parquet
+    // corpus size (the decontaminate device; PlanStats reads parquet
     // footers, no scan) so small corpora keep the strictly-better
     // broadcast conversion.
     val model =
-      if (graft.plans.PlanStats.rowCount(docs, corpusDocs)
-          > lmShuffleHashMinDocs) lp.hint("SHUFFLE_HASH")
+      if (Routing.lmShuffleHash(graft.plans.PlanStats.rowCount(docs, corpusDocs)))
+        lp.hint("SHUFFLE_HASH")
       else lp
     val scored = bi.join(model, Seq("w1", "w2"))
       .select(col("doc_id"), col("lp"))
@@ -1415,16 +1327,6 @@ object Corpus {
         avg.as("avg_logp"),
         round(exp(-avg), 4).as("ppl"))
   }
-
-  /** Corpus-size threshold above which [[lmPerplexity]] / [[dsirSample]]
-    * hint their model-side join SHUFFLE_HASH instead of trusting AQE's
-    * broadcast conversion: past ~1M docs the type tables (bigram types
-    * for the LM, word types for DSIR) outgrow broadcast and the unhinted
-    * fallback is a sort-merge join that SORTS THE OCCURRENCE STREAM —
-    * measured 42 GB (lm) / 22 GB (dsir) of spill at sf100, all of it
-    * eliminated by hash-building on the vocab-scale side. Below the
-    * threshold broadcast is strictly better and the plan is left alone. */
-  private[operators] val lmShuffleHashMinDocs: Long = 1L << 20
 
   /** Build an [[LmScorer]] — the STREAMING deployment of [[lmPerplexity]]:
     * the bigram model is trained ONCE on the (static) reference corpus —
@@ -1555,29 +1457,6 @@ object Corpus {
         (col("n_paras") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"))
   }
 
-  /** Build a [[BloomDecontaminator]]: the STREAMING deployment of
-    * [[decontaminateBloom]]. The eval corpus is static (benchmark sets
-    * change rarely); a production pipeline builds its gram sketch ONCE and
-    * gates the training stream against it forever after — this factory
-    * does the build (distinct grams persisted for the exact path, sketch
-    * sized by one bounded count), and the returned object exposes the two
-    * streaming forms. Call `close()` when retiring it. */
-  def bloomDecontaminator(eval: DataFrame, evalText: Column,
-                          n: Int = 13,
-                          fpp: Double = 0.01): BloomDecontaminator = {
-    require(n > 0, "need n > 0")
-    require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    val evalGrams = eval
-      .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct()
-      .persist()
-    val nGrams = evalGrams.count()
-    val bloom =
-      if (nGrams == 0L) { evalGrams.unpersist(); None }
-      else Some(evalGrams.stat.bloomFilter("__dc_g", nGrams, fpp))
-    new BloomDecontaminator(evalGrams, bloom, n)
-  }
-
   /** Lowercased host of a URL column, or '' when the string does not
     * parse as a scheme://[userinfo@]host[:port][/…] URL. One regex in the
     * java.util.regex ∩ RE2 dialect (no lookaround), so the DuckDB oracle
@@ -1608,19 +1487,18 @@ object Corpus {
     * of [[hostSuffixes]] — never a substring scan.
     *
     * Scale shape: the domain list collapses to distinct lowercased keys
-    * and is COUNTED once (the decontaminateAuto routing action — domain
-    * lists are small by nature, 10⁵-10⁷ rows): under
-    * `maxBroadcastDomains` it broadcasts into a map-side semi-join over
-    * the exploded suffixes (≤ ~6 rows per doc, no shuffle of doc text);
-    * above it, the suffixes probe a Bloom sketch map-side and only the
-    * surviving sliver reaches the exact semi-join — the
-    * [[decontaminateBloom]] machinery verbatim, same one-sided-error ⇒
+    * and is COUNTED once (domain lists are small by nature, 10⁵-10⁷ rows):
+    * up to [[Routing.maxBroadcastDomains]] it broadcasts into a map-side
+    * semi-join over the exploded suffixes (≤ ~6 rows per doc, no shuffle
+    * of doc text); above it, the suffixes probe a Bloom sketch map-side
+    * and only the surviving sliver reaches the exact semi-join — the
+    * [[matchedIds]] probe [[decontaminate]] uses, same one-sided-error ⇒
     * exact-output argument. Matched ids (tiny) anti/semi-join back. */
   def urlFilter(docs: DataFrame, id: Column, url: Column,
                 domains: DataFrame, domain: Column,
                 mode: String = "deny", fpp: Double = 0.01,
-                maxBroadcastDomains: Long = 1L << 22): DataFrame = {
-    val gate = urlGate(domains, domain, fpp, maxBroadcastDomains)
+                route: Routing.Route = Routing.Auto): DataFrame = {
+    val gate = urlGate(domains, domain, fpp, route)
     try gate.filter(docs, id, url, mode) finally gate.close()
   }
 
@@ -1634,14 +1512,11 @@ object Corpus {
     * slice is row-identical to batch [[urlFilter]]. `close()` when
     * retiring it. */
   def urlGate(domains: DataFrame, domain: Column, fpp: Double = 0.01,
-              maxBroadcastDomains: Long = 1L << 22): UrlGate = {
+              route: Routing.Route = Routing.Auto): UrlGate = {
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    val dset = domains.select(lower(domain).as("__uf_d")).distinct().persist()
-    val nDomains = dset.count()
-    val bloom =
-      if (nDomains == 0L || nDomains <= maxBroadcastDomains) None
-      else Some(dset.stat.bloomFilter("__uf_d", nDomains, fpp))
-    new UrlGate(dset, nDomains, bloom)
+    val (dset, bloom) = keySet(domains.select(lower(domain).as("__uf_d"))
+      .distinct(), fpp, route)(Routing.domainSketch)
+    new UrlGate(dset, bloom)
   }
 
   /** Per-domain curation report: document counts and byte mass by URL
@@ -1678,62 +1553,55 @@ object Corpus {
   }
 }
 
-/** Streaming eval-set decontamination against a PREBUILT gram sketch —
-  * the production deployment of [[Corpus.decontaminateBloom]]: the eval
-  * corpus is static, so its Bloom filter is built once (driver-resident,
-  * serialized into every task closure like any broadcast scalar) and the
-  * training STREAM is gated against it with zero per-batch eval work.
+/** Eval-set decontamination against a PREBUILT eval gram set —
+  * [[Corpus.decontaminator]]'s product and the body of
+  * [[Corpus.decontaminate]]. The eval corpus is static, so its distinct
+  * grams are collapsed, counted and sketched once, and the training
+  * STREAM is gated against them with zero per-batch eval work.
   *
   * Two forms, one trade:
   *  - [[gate]] is STATELESS map-only streaming: keep a record iff none of
-  *    its n-grams hits the sketch. No join, no state store, composes with
-  *    any streaming plan at any scale. Error is one-sided and
-  *    conservative: a clean doc is over-dropped with probability ≈
-  *    1-(1-fpp)^grams, a contaminated doc is NEVER leaked (Bloom has no
-  *    false negatives). For a decontamination gate, over-dropping a
-  *    10^-2-sliver is the safe direction.
-  *  - [[exact]] is the per-micro-batch form for `foreachBatch`: bloom
-  *    prefilter map-side, then the exact semi-join against the persisted
-  *    distinct-gram frame kills false positives — output IDENTICAL to the
-  *    batch operator on the same slice (CorpusSpec pins stream ≡ batch).
-  *    Direct use on an unbounded frame would need a stream-stream anti
-  *    join (rejected by Spark) — foreachBatch is the supported shape,
-  *    exactly like the exact `decontaminate`'s streaming composition.
+  *    its n-grams hits the Bloom sketch (driver-resident, serialized into
+  *    every task closure like any broadcast scalar; the factory always
+  *    builds it, and it is absent only when the eval set has no gram).
+  *    No join, no state store, composes with any streaming plan at any
+  *    scale. Error is one-sided and conservative: a clean doc is
+  *    over-dropped with probability ≈ 1-(1-fpp)^grams, a contaminated
+  *    doc is NEVER leaked (Bloom has no false negatives). For a
+  *    decontamination gate, over-dropping a 10^-2-sliver is the safe
+  *    direction.
+  *  - [[exact]] is the per-micro-batch form for `foreachBatch`: output
+  *    IDENTICAL to [[Corpus.decontaminate]] on the same slice (CorpusSpec
+  *    pins stream ≡ batch). Direct use on an unbounded frame would need a
+  *    stream-stream anti join (rejected by Spark) — foreachBatch is the
+  *    supported shape.
   */
-final class BloomDecontaminator private[operators] (
+final class Decontaminator private[operators] (
     evalGrams: DataFrame,
-    bloom: Option[org.apache.spark.util.sketch.BloomFilter],
-    n: Int) {
+    sketch: Option[org.apache.spark.util.sketch.BloomFilter], n: Int) {
 
   /** Stateless streaming gate (works on streaming AND batch frames):
     * map-only sketch probes inside whole-stage codegen, conservative
     * one-sided error (see class doc). */
-  def gate(train: DataFrame, text: Column): DataFrame = bloom match {
+  def gate(train: DataFrame, text: Column): DataFrame = sketch match {
     case None => train
     case Some(b) =>
       train.filter(!exists(TextFunctions.wordNGrams(text, n),
         g => GraftFunctions.bloomMightContain(g, b)))
   }
 
-  /** Exact per-batch form for foreachBatch: ≡ [[Corpus.decontaminate]] on
-    * the same batch, at zero per-batch eval-side cost (the sketch is
-    * prebuilt, the gram frame persisted). */
-  def exact(trainBatch: DataFrame, id: Column, text: Column): DataFrame =
-    bloom match {
-      case None => trainBatch
-      case Some(b) =>
-        val contaminated = trainBatch
-          .select(id.as("__dc_id"),
-            explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
-          .filter(GraftFunctions.bloomMightContain(col("__dc_g"), b))
-          .join(evalGrams, Seq("__dc_g"), "left_semi")
-          .select(col("__dc_id"))
-          .distinct()
-        trainBatch.join(contaminated, id === col("__dc_id"), "left_anti")
-    }
+  /** Exact per-batch form: drop every row sharing an n-gram with the eval
+    * set — ≡ [[Corpus.decontaminate]] on the same batch. */
+  def exact(trainBatch: DataFrame, id: Column, text: Column): DataFrame = {
+    val grams = trainBatch.select(id.as("__dc_id"),
+      explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
+    val contaminated = Corpus.matchedIds(grams, "__dc_id", "__dc_g",
+      evalGrams, sketch)
+    trainBatch.join(contaminated, id === col("__dc_id"), "left_anti")
+  }
 
   /** Drop the persisted gram frame. */
-  def close(): Unit = if (bloom.isDefined) evalGrams.unpersist()
+  def close(): Unit = { evalGrams.unpersist(): Unit }
 }
 
 /** Per-batch LM quality scoring against a PREBUILT bigram model — the
@@ -1758,7 +1626,7 @@ final class LmScorer private[operators] (
     * vanish. `batchDocs`: caller-known batch size — pass it when scoring
     * a CORPUS-SCALE frame (the ccnet twin ranks the whole corpus through
     * this scorer) so the model joins route SHUFFLE_HASH past
-    * [[Corpus.lmShuffleHashMinDocs]]; left at None, micro-batches keep
+    * [[Routing.lmShuffleHashMinDocs]]; left at None, micro-batches keep
     * the planner's choice (broadcast when the persisted frames fit,
     * else a sort-merge whose sort side is the SMALL batch). */
   def score(batch: DataFrame, id: Column, text: Column,
@@ -1780,7 +1648,7 @@ final class LmScorer private[operators] (
     // batch hints both model joins SHUFFLE_HASH (build on the persisted
     // vocab-scale frames, stream the occurrences; LeftOuter+BuildRight
     // is a supported shuffled-hash shape).
-    val big = batchDocs.exists(_ > Corpus.lmShuffleHashMinDocs)
+    val big = batchDocs.exists(Routing.lmShuffleHash)
     val (bcSide, lcSide) =
       if (big) (bc.hint("SHUFFLE_HASH"), lc.hint("SHUFFLE_HASH"))
       else (bc, lc)
@@ -1809,15 +1677,14 @@ final class LmScorer private[operators] (
 }
 
 /** Batch-trained URL/domain gate — [[Corpus.urlGate]]'s product. Holds the
-  * normalized blocklist (persisted, vocab-scale), its measured count, and
-  * the Bloom sketch when the list outgrew the broadcast threshold; each
-  * `filter` call is the exact suffix-set equi-join of [[Corpus.urlFilter]]
-  * over one (micro-)batch. Stateless across batches: no state store, no
+  * normalized blocklist (persisted, vocab-scale) and the Bloom sketch
+  * when the list outgrew the broadcast threshold; each `filter` call is
+  * the exact suffix-set equi-join of [[Corpus.urlFilter]] over one
+  * (micro-)batch. Stateless across batches: no state store, no
   * watermark — a document's verdict depends only on its own URL and the
   * static list. */
 final class UrlGate private[operators] (
-    dset: DataFrame, nDomains: Long,
-    bloom: Option[org.apache.spark.util.sketch.BloomFilter]) {
+    dset: DataFrame, bloom: Option[org.apache.spark.util.sketch.BloomFilter]) {
 
   /** Keep (`allow`) or drop (`deny`) the batch rows whose URL host is or
     * sits under a listed domain — row-identical to [[Corpus.urlFilter]]
@@ -1827,18 +1694,7 @@ final class UrlGate private[operators] (
     require(mode == "deny" || mode == "allow", "mode must be deny|allow")
     val suffixes = batch.select(id.as("__uf_id"),
       explode(Corpus.hostSuffixes(Corpus.urlHost(url))).as("__uf_d"))
-    val matched =
-      if (nDomains == 0L) suffixes.filter(lit(false)).select(col("__uf_id"))
-      else bloom match {
-        case None =>
-          suffixes.join(broadcast(dset), Seq("__uf_d"), "left_semi")
-            .select(col("__uf_id")).distinct()
-        case Some(b) =>
-          suffixes
-            .filter(GraftFunctions.bloomMightContain(col("__uf_d"), b))
-            .join(dset, Seq("__uf_d"), "left_semi")
-            .select(col("__uf_id")).distinct()
-      }
+    val matched = Corpus.matchedIds(suffixes, "__uf_id", "__uf_d", dset, bloom)
     batch.join(matched, id === col("__uf_id"),
       if (mode == "deny") "left_anti" else "left_semi")
   }

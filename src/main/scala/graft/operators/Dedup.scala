@@ -195,37 +195,72 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** SimHash near-dup: pairs within `maxHamming` of each other, blocked by
-    * 16-bit bands (pigeonhole: hamming ≤ 3 ⇒ some band of 4 is identical). */
+  /** SimHash near-dup: pairs (id_a < id_b, hamming) within `maxHamming`
+    * of each other, band-blocked by [[simhashPairsFromSig]]. The signature
+    * WIDTH is routed on corpus size ([[Routing.simhashWide]] — the
+    * autoStride/autoBandBits pattern applied to the bucket space), so no
+    * caller can ride the narrow form into the regime where its buckets
+    * saturate:
+    *  - narrow: one 60-bit md5 simhash (4 × 15-bit bands, 2^15 buckets per
+    *    band) — exact-recall and DuckDB-reproducible; its expected band
+    *    occupancy is N/2^15 and the map-side hamming verification grows
+    *    ∝ N²/2^15 (measured ×16.8/decade at the sf100 5M-doc sweep);
+    *  - wide: TWO independent 60-bit md5 simhashes over disjoint token
+    *    halves (split by the token's md5 16th hex digit parity —
+    *    engine-portable, so the full-row DuckDB oracle reproduces it), a
+    *    120-bit signature banded as 4 × 30-bit slices: band occupancy
+    *    stays ≪ 1 into the 10^8-10^9-doc regime, so candidates come from
+    *    signature agreement, not birthday collisions, and `bucketCap`
+    *    never bites on honest corpora.
+    * The size resolves through [[graft.plans.PlanStats.rowCount]] (hint >
+    * exact statistics > parquet footers > count()).
+    *
+    * The 120-bit hamming is a FINER similarity than the 60-bit one (a
+    * token's vote lands in one half, not both), so the switch changes the
+    * measure by design — exactly the way [[autoBandBits]] changes the LSH
+    * geometry with corpus size. WideSimhashSpec pins the wide route's
+    * exact recall/precision against an all-pairs reference. */
   def simhashPairs(docs: DataFrame, id: Column, text: Column,
-                   maxHamming: Int = 3, bucketCap: Int = 10000): DataFrame = {
-    val sig = docs.select(id.as("doc_id"),
-      GraftFunctions.simhash(TextFunctions.tokens(text)).as("sim"))
-    simhashPairsFromSig(sig, sigBits = 64, bands = 4,
-      maxHamming = maxHamming, bucketCap = bucketCap)
+                   maxHamming: Int = 3, bucketCap: Int = 10000,
+                   rowCountHint: Option[Long] = None,
+                   route: Routing.Route = Routing.Auto): DataFrame = {
+    val toks = TextFunctions.tokens(text)
+    val wide = Routing.isLarge(route,
+      graft.plans.PlanStats.rowCount(docs.select(id), rowCountHint))(
+      Routing.simhashWide)
+    if (wide) {
+      def half(par: Int) = filter(toks, t =>
+        conv(substring(md5(t.cast("binary")), 16, 1), 16, 10).cast("int")
+          % 2 === lit(par))
+      simhashPairsFromSig(docs.select(id.as("doc_id"),
+          GraftFunctions.simhashMd5(half(0)).as("sim_a"),
+          GraftFunctions.simhashMd5(half(1)).as("sim_b")),
+        sigBits = 120, bands = 4, maxHamming, bucketCap)
+    } else
+      simhashPairsFromSig(docs.select(id.as("doc_id"),
+          GraftFunctions.simhashMd5(toks).as("sim")),
+        sigBits = 60, bands = 4, maxHamming, bucketCap)
   }
 
-  /** Band-blocked near-dup pairs from a precomputed signature frame
-    * (doc_id, sim). Recall is EXACT for maxHamming ≤ bands − 1: a pair
-    * differing in ≤ bands−1 bits cannot differ in every one of the `bands`
-    * disjoint bit slices (pigeonhole), so it shares ≥ 1 band bucket; the
-    * hamming verification then makes precision exact too. Larger maxHamming
-    * values are rejected rather than silently losing pairs.
+  /** Band-blocked near-dup pairs from a precomputed signature frame:
+    * `doc_id` plus one or more signature words (every other column, in
+    * order; `sigBits` in total, split evenly over the words). Each word
+    * contributes bands/words disjoint `sigBits/bands`-bit slices. Recall
+    * is EXACT for maxHamming ≤ bands − 1: a pair differing in ≤ bands−1
+    * bits cannot differ in every one of the `bands` disjoint slices
+    * (pigeonhole), so it shares ≥ 1 band bucket; the hamming verification
+    * (summed over the words) then makes precision exact too. Larger
+    * maxHamming values are rejected rather than silently losing pairs.
     *
-    * Scale limit (same class as the hyperplane-LSH finding the r7 sf1
-    * sweep measured, but NOT auto-fixable here): the bucket space is
-    * 2^(sigBits/bands), fixed by the pigeonhole guarantee — 4 bands of 16
-    * bits for hamming ≤ 3 on 64-bit signatures. Beyond ~10⁸ docs average
-    * occupancy exceeds `bucketCap` and recall degrades cap-bounded (the
-    * cap keeps cost linear; it cannot keep recall exact). Past that scale,
-    * widen the signature (e.g. two 64-bit simhashes over disjoint token
-    * halves → 8×16-bit bands) or pre-partition the corpus; at the sf1
-    * decade (50k docs over 65k buckets/band) occupancy is ~1 and the
-    * sweep measured ratio 1.2.
+    * Scale limit: the bucket space is 2^(sigBits/bands), fixed by the
+    * pigeonhole guarantee. Once average occupancy exceeds `bucketCap`
+    * recall degrades cap-bounded (the cap keeps cost linear; it cannot
+    * keep recall exact) — widen the signature, which is what
+    * [[simhashPairs]]' wide route does.
     *
     * Same shuffle economics as [[minhashLsh]]: the grouped pair expansion
     * evaluates the signature subtree once (no self-join), carries only
-    * (doc_id, sim) = 16 bytes/row through the bucket shuffle, and the
+    * (doc_id, signature words) through the bucket shuffle, and the
     * per-bucket capping window (spillable radix sort over tiny bucket
     * partitions — the measured-right form for hashed band spaces, see
     * [[bucketPairs]]) bounds hot-bucket state and pair blowup.
@@ -233,16 +268,25 @@ object Dedup {
   def simhashPairsFromSig(sig: DataFrame, sigBits: Int, bands: Int,
                           maxHamming: Int,
                           bucketCap: Int = 10000): DataFrame = {
-    require(bands > 0 && sigBits % bands == 0, "bands must divide sigBits")
+    val words = sig.columns.toSeq.filterNot(_ == "doc_id")
+    require(words.nonEmpty && bands % words.size == 0,
+      "bands must split evenly over the signature words")
+    require(sigBits % bands == 0, "bands must divide sigBits")
     require(maxHamming >= 0 && maxHamming <= bands - 1,
       s"band blocking guarantees recall only for maxHamming <= bands-1 " +
         s"(got maxHamming=$maxHamming, bands=$bands)")
     val bitsPerBand = sigBits / bands
+    val bandsPerWord = bands / words.size
     val mask = if (bitsPerBand >= 64) -1L else (1L << bitsPerBand) - 1L
     val bandCols = array((0 until bands).map(b =>
-      shiftright(col("sim"), b * bitsPerBand).bitwiseAND(lit(mask))): _*)
-    val banded = sig.select(col("doc_id"), col("sim"),
-      posexplode(bandCols).as(Seq("band", "bucket")))
+      shiftright(col(words(b / bandsPerWord)), (b % bandsPerWord) * bitsPerBand)
+        .bitwiseAND(lit(mask))): _*)
+    val sigCols = col("doc_id") +: words.map(col)
+    val banded = sig.select(
+      sigCols :+ posexplode(bandCols).as(Seq("band", "bucket")): _*)
+    // pair struct fields: a<i>/b<i> = word i of the lower/higher id
+    val wordPairs = words.zipWithIndex
+      .map { case (w, i) => s"x.$w AS a$i, y.$w AS b$i" }.mkString(", ")
     // window cap, not collectSmallest: hashed band spaces put ~1 row in
     // ~every bucket — the tiny-group regime where the object aggregate
     // measured ×2-×7 slower (see bucketPairs scaladoc)
@@ -252,130 +296,26 @@ object Dedup {
       .withColumn("rn", row_number().over(wB))
       .filter(col("rn") <= bucketCap)
       .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sim"))))
-        .as("ms"))
+      .agg(sort_array(collect_list(struct(sigCols: _*))).as("ms"))
       .filter(size(col("ms")) > 1)
       .select(explode(expr(
-        """flatten(transform(ms, (x, i) ->
+        s"""flatten(transform(ms, (x, i) ->
           |  transform(slice(ms, i + 2, size(ms) - i - 1),
-          |    y -> struct(x.doc_id AS id_a, x.sim AS sim_a,
-          |                y.doc_id AS id_b, y.sim AS sim_b))))""".stripMargin))
-        .as("p"))
+          |    y -> struct(x.doc_id AS id_a, y.doc_id AS id_b, $wordPairs))))"""
+          .stripMargin)).as("p"))
       // hamming BEFORE the pair dedup: it's a pure per-pair function
       // (same value in every band a pair lands in), and one xor+popcount
       // per candidate is map-side — so the dropDuplicates exchange
       // carries only TRUE near-dup pairs at 20 B/row instead of every
-      // candidate with both 8-byte signatures aboard. The sf10 sweep
-      // measured the difference: 14.6 GB of sort spill at 500k docs came
-      // from deduplicating the raw candidate stream.
+      // candidate with both signatures aboard. The sf10 sweep measured
+      // the difference: 14.6 GB of sort spill at 500k docs came from
+      // deduplicating the raw candidate stream.
       .select(col("p.id_a"), col("p.id_b"),
-        GraftFunctions.hamming(col("p.sim_a"), col("p.sim_b")).as("hamming"))
+        words.indices.map(i =>
+          GraftFunctions.hamming(col(s"p.a$i"), col(s"p.b$i"))).reduce(_ + _)
+          .as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
-  }
-
-  /** Wide-signature SimHash near-dup — the documented path past the narrow
-    * form's bucket-space ceiling, made real after the sf100 sweep measured
-    * that ceiling (~N²/2^15 map-side hamming work ⇒ ×16.8/decade at 5M
-    * docs). TWO independent 60-bit md5 simhashes over disjoint token
-    * halves (deterministic split by the token's md5 16th hex digit parity
-    * — engine-portable, so the full-row DuckDB oracle reproduces it) form
-    * a 120-bit signature banded as 4×30-bit slices: pigeonhole recall is
-    * exact for combined hamming ≤ 3, and the band bucket space grows from
-    * 2^15 to 2^30 — expected band-bucket occupancy stays ≪ 1 into the
-    * 10^8-10^9-doc regime (the 100 TB corpus scale), so candidate pairs
-    * come from signature agreement, not birthday collisions, and
-    * `bucketCap` never bites on honest corpora.
-    *
-    * The 120-bit hamming is a FINER similarity than the 60-bit one (a
-    * token's vote lands in one half, not both): this is a variant
-    * measure, not a drop-in replacement — WideSimhashSpec pins exact
-    * recall/precision against an all-pairs reference on an adversarial
-    * corpus, and the `dedup_simhash_wide` query carries a full-row
-    * DuckDB oracle. Same shuffle economics as [[simhashPairsFromSig]]:
-    * 24 B/row through the bucket exchange, hamming map-side before the
-    * pair dedup. */
-  def simhashPairsWide(docs: DataFrame, id: Column, text: Column,
-                       maxHamming: Int = 3,
-                       bucketCap: Int = 10000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4x30-bit banding guarantees recall only for maxHamming <= 3 " +
-        s"(got $maxHamming)")
-    val toks = TextFunctions.tokens(text)
-    def half(par: Int) = filter(toks, t =>
-      conv(substring(md5(t.cast("binary")), 16, 1), 16, 10).cast("int")
-        % 2 === lit(par))
-    val sig = docs.select(id.as("doc_id"),
-      GraftFunctions.simhashMd5(half(0)).as("sim_a"),
-      GraftFunctions.simhashMd5(half(1)).as("sim_b"))
-    val mask = (1L << 30) - 1L
-    val bandCols = array(
-      col("sim_a").bitwiseAND(lit(mask)),
-      shiftright(col("sim_a"), 30).bitwiseAND(lit(mask)),
-      col("sim_b").bitwiseAND(lit(mask)),
-      shiftright(col("sim_b"), 30).bitwiseAND(lit(mask)))
-    val banded = sig.select(col("doc_id"), col("sim_a"), col("sim_b"),
-      posexplode(bandCols).as(Seq("band", "bucket")))
-    // window cap: 2^30 buckets per band, occupancy ≪ 1 into 10^8-10^9
-    // docs — the tiny-group regime (see bucketPairs scaladoc; the r9
-    // sf100 sweep measured the object-aggregate form ×2 here)
-    val wB = Window.partitionBy(col("band"), col("bucket"))
-      .orderBy(col("doc_id").asc)
-    banded
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= bucketCap)
-      .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sim_a"),
-        col("sim_b")))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ms, (x, i) ->
-          |  transform(slice(ms, i + 2, size(ms) - i - 1),
-          |    y -> struct(x.doc_id AS id_a, x.sim_a AS saa, x.sim_b AS sab,
-          |                y.doc_id AS id_b, y.sim_a AS sba, y.sim_b AS sbb))))"""
-          .stripMargin)).as("p"))
-      // combined hamming map-side before the pair dedup — the sf10
-      // finding-5 shape: only true near-dup pairs reach the exchange
-      .select(col("p.id_a"), col("p.id_b"),
-        (GraftFunctions.hamming(col("p.saa"), col("p.sba")) +
-          GraftFunctions.hamming(col("p.sab"), col("p.sbb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-  }
-
-  /** Corpus-size-routed simhash near-dup — the autoStride/autoBandBits
-    * pattern applied to SIGNATURE WIDTH, so no caller can ride the narrow
-    * form into the regime where its bucket space saturates: the narrow
-    * 60-bit md5 signature (4×15-bit bands, 2^15 buckets/band) has expected
-    * band occupancy N/2^15, and with it the map-side hamming verification
-    * grows ∝ N²/2^15 (measured ×16.8/decade at the sf100 5M-doc sweep).
-    * One bounded count() routes the call: below `wideThreshold` docs the
-    * narrow form (exact-recall, DuckDB-reproducible) runs; at or above it
-    * the 120-bit wide form ([[simhashPairsWide]], 2^30 buckets/band) takes
-    * over. The default threshold 2^18 puts the switch at narrow occupancy
-    * ~8 — well before the quadratic term is measurable, an order of
-    * magnitude before it dominates.
-    *
-    * NOTE (same caveat as [[simhashPairsWide]]): the 120-bit hamming is a
-    * FINER similarity measure than the 60-bit one, so the switch changes
-    * the measure by design — exactly the way [[autoBandBits]] changes the
-    * LSH geometry with corpus size. Callers needing a fixed measure call
-    * the specific form directly. */
-  def simhashPairsAuto(docs: DataFrame, id: Column, text: Column,
-                       maxHamming: Int = 3, bucketCap: Int = 10000,
-                       wideThreshold: Long = 1L << 18,
-                       rowCountHint: Option[Long] = None): DataFrame = {
-    // hint > exact statistics > parquet footers > count() — the routing
-    // count is metadata when the frame allows it (PlanStats scaladoc)
-    val n = graft.plans.PlanStats.rowCount(docs.select(id), rowCountHint)
-    if (n >= wideThreshold)
-      simhashPairsWide(docs, id, text, maxHamming, bucketCap)
-    else {
-      val sig = docs.select(id.as("doc_id"),
-        GraftFunctions.simhashMd5(TextFunctions.tokens(text)).as("sim"))
-      simhashPairsFromSig(sig, sigBits = 60, bands = 4,
-        maxHamming = maxHamming, bucketCap = bucketCap)
-    }
   }
 
   /** Fail-fast misuse guard for the quadratic-per-block pair operators:
@@ -689,6 +629,13 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("cos"))
   }
 
+  /** Times the observe-folded convergence statistic fell back to its own
+    * aggregation job (diagnostics: a spec pins this at 0 — the fold IS
+    * the optimization; the fallback only guards against a Spark release
+    * changing checkpoint's execution-event behavior). */
+  private[graft] val ccObserveFallbacks =
+    new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** Connected components over an undirected edge list — the closure step
     * of every near-dup pipeline: pairwise edges (from [[minhashLsh]],
     * [[simhashPairsFromSig]], [[tokenJaccardPairs]], [[embeddingLshPairs]])
@@ -737,17 +684,10 @@ object Dedup {
     * configured yet; if one already is, it wins and this parameter's
     * value is ignored (reliable checkpointing still happens, into the
     * pre-configured directory). */
-  /** Times the observe-folded convergence statistic fell back to its own
-    * aggregation job (diagnostics: a spec pins this at 0 — the fold IS
-    * the optimization; the fallback only guards against a Spark release
-    * changing checkpoint's execution-event behavior). */
-  private[graft] val ccObserveFallbacks =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   def connectedComponents(edges: DataFrame, src: String, dst: String,
                           maxIter: Int = 25,
                           checkpointDir: Option[String] = None,
-                          prePartitionMinNodes: Long = 1L << 20): DataFrame = {
+                          route: Routing.Route = Routing.Auto): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sc = edges.sparkSession.sparkContext
     // never clobber an application-configured dir (session-global state)
@@ -781,17 +721,12 @@ object Dedup {
     // fewer per round): min(comp(v) : v ∈ N(u) ∪ {u}) ≡
     // least(comp(u), coalesce(nbrMin, comp(u))) row for row.
     //
-    // PRE-PARTITIONING on the per-round join key is routed on measured
-    // node count (from the emptiness action above; the
-    // lmShuffleHashMinDocs device): below ~2^20 nodes the 16 B/node label frame broadcasts
-    // every round, the edge frame never shuffles, and an explicit
-    // repartition would ADD the only exchange in the loop (measured
-    // +2 s / +3 MB shuffle across the five sf0.1 cluster queries).
-    // Above it the label side outgrows broadcast, every round's join
-    // re-shuffles the 2|E|-row edge frame — the heavy side, which must
-    // cross the wire ONCE, at persist time — while each round then
-    // shuffles only the labels (16 B/node) into the cached layout.
-    val manyNodes = nNodes > prePartitionMinNodes
+    // PRE-PARTITIONING on the per-round join key, routed on the node count
+    // above (no extra job): past Routing.prePartitionMinNodes the labels
+    // outgrow broadcast and every round's join would re-shuffle the
+    // 2|E|-row edge frame, so it crosses the wire ONCE, at persist time,
+    // and each round shuffles only the 16 B/node labels.
+    val manyNodes = Routing.isLarge(route, nNodes)(Routing.ccPrePartition)
     val symSelf =
       sym.union(labels.select(col("id").as("u"), col("id").as("v")))
     val symPlus = (if (manyNodes) symSelf.repartition(col("v")) else symSelf)
@@ -881,7 +816,7 @@ object Dedup {
     * Clustering reuses the IVF machinery end to end: deterministic
     * stride-seeded centroids sized by the √N law
     * ([[Similarity.autoStride]]) and the map-only codegen bank assignment
-    * ([[Similarity.ivfIndexFrom]]) — no join, no shuffle, bit-reproducible
+    * ([[Similarity.ivfIndex]]) — no join, no shuffle, bit-reproducible
     * in SQL (the similarity_ivf oracle's `asg` CTE), which is what makes
     * the full output DuckDB-checkable. Within-cluster pairing delegates to
     * [[embeddingNearDup]] with the cluster as the block: its
@@ -896,13 +831,14 @@ object Dedup {
                     threshold: Double,
                     maxPairsPerBlock: Long = 25000000L): DataFrame = {
     val base = vecs.select(id.as("vec_id"), vec.as("embedding"))
-    // ivfIndexAuto: flat exact assignment below 2^17 vectors — what the
+    // ivfIndex: flat exact assignment below 2^17 vectors — what the
     // full-SQL oracle replays, i.e. at every driver SF — and the ≈N^1.25
     // hierarchical assignment above it. Clustering is a recall heuristic
     // (SemDeDup compares only within a cluster either way); hier rerouting
     // a boundary vector moves which pairs get COMPARED, never the
     // correctness of a comparison.
-    val assigned = Similarity.ivfIndexAuto(base, Similarity.autoStride(base))
+    val assigned = Similarity.ivfIndex(base,
+      Similarity.strideCentroids(base, Similarity.autoStride(base)))
     val dups = embeddingNearDup(assigned, col("vec_id"), col("embedding"),
         col("centroid_id"), threshold, maxPairsPerBlock)
       .select(col("id_b").as("vec_id")).distinct()
@@ -926,8 +862,8 @@ object Dedup {
     *    per window, map-side combinable — never the span text;
     *  - candidate hashes (>= minDocs docs) collapse to a long-keyed Bloom
     *    sketch probed MAP-SIDE by the codegen [[graft.functions.BloomMightContainLong]]
-    *    fused into the recomputed window scan (decontaminateBloom's
-    *    pattern), so only the duplicate sliver re-materializes text;
+    *    fused into the recomputed window scan (decontaminate's sketch
+    *    route), so only the duplicate sliver re-materializes text;
     *  - the surviving sliver is re-verified by EXACT span equality (a
     *    64-bit collision can nominate a candidate, never confirm one) and
     *    the final semi-join is unhinted — AQE broadcasts whichever side

@@ -177,46 +177,51 @@ object Similarity {
     * -centroid_id))), so results are bit-identical. */
   private def assignToCentroids(corpus: DataFrame,
                                 centroids: DataFrame): DataFrame = {
-    val cents = centroids
-      .select(col("centroid_id").cast("long"),
-        col("centroid").cast("array<float>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1)
+    val cents = collectCentroids(centroids)
     val bank = new graft.functions.CentroidBank(
       cents.map(_._1), cents.map(_._2))
-    corpus.select(
-      GraftFunctions.nearestCentroidId(col("embedding"), bank)
-        .as("centroid_id"),
-      col("vec_id"), col("embedding"))
+    tagCentroid(corpus,
+      GraftFunctions.nearestCentroidId(col("embedding"), bank))
   }
 
-  /** IVF bucketing: assign every corpus vector to its nearest centroid.
-    * Centroids = deterministic stride sample of the corpus itself. */
-  def ivfIndex(corpus: DataFrame, centroidStride: Int): DataFrame =
-    ivfIndexFrom(corpus, strideCentroids(corpus, centroidStride))
+  /** The centroid frame on the driver, ascending by id — the scan order
+    * both assignment kernels' tie rule depends on. */
+  private def collectCentroids(
+      centroids: DataFrame): Array[(Long, Array[Float])] = centroids
+    .select(col("centroid_id").cast("long"),
+      col("centroid").cast("array<float>"))
+    .collect()
+    .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    .sortBy(_._1)
 
-  /** Corpus-size threshold above which [[ivfIndexAuto]] switches to the
-    * hierarchical assignment: below it the flat scan's nlist ≈ 2√N
-    * centroids per row is cheap (≤ ~720 dots at 2^17 vectors) and exact;
-    * above it the N^1.5 law dominates build time. */
-  val hierThreshold: Long = 1L << 17
+  /** The IVF index row: (centroid_id, vec_id, embedding). */
+  private def tagCentroid(corpus: DataFrame, centroidId: Column): DataFrame =
+    corpus.select(centroidId.as("centroid_id"), col("vec_id"), col("embedding"))
 
-  /** Corpus-size-routed IVF build (the autoStride/autoSimhash pattern):
-    * the corpus size picks flat (exact argmax, oracle-reproducible)
-    * below [[hierThreshold]] vectors, hierarchical ([[ivfIndexHier]],
-    * ≈ N^1.25 assignment) at or above it — so no caller rides the flat
-    * N^1.5 build into the 10^8-vector regime. The size resolves through
-    * [[graft.plans.PlanStats]] (hint > exact statistics > parquet
-    * footers > count()), so routing is metadata-free-of-charge on a bare
-    * scan and a caller with a known corpus size never pays a pre-pass. */
-  def ivfIndexAuto(corpus: DataFrame, centroidStride: Int,
-                   wProbe: Int = 2,
-                   rowCountHint: Option[Long] = None): DataFrame = {
-    if (graft.plans.PlanStats.rowCount(corpus, rowCountHint) >= hierThreshold)
-      ivfIndexHier(corpus, strideCentroids(corpus, centroidStride), wProbe)
-    else ivfIndex(corpus, centroidStride)
-  }
+  /** IVF bucketing: assign every corpus vector to its nearest centroid in
+    * `centroids` (a [[strideCentroids]] sample or a [[trainCentroids]]
+    * refinement). The centroid frame is materialized on the DRIVER at plan
+    * time (it must be small — nlist × dim is an index design constant);
+    * the corpus side is never joined, aggregated, or shuffled.
+    *
+    * Routed on corpus size ([[Routing.ivfHier]]): the flat exact argmax
+    * (oracle-reproducible) below [[Routing.hierThreshold]] vectors, the
+    * hierarchical ≈ N^1.25 kernel ([[hierAssign]], [[hierProbe]] cells)
+    * at or above it — so no caller rides the flat N^1.5 build into the
+    * 10^8-vector regime. The size resolves through
+    * [[graft.plans.PlanStats.rowCount]] (hint > exact statistics > parquet
+    * footers > count()), so routing is free on a bare scan and a caller
+    * with a known corpus size never pays a pre-pass. */
+  def ivfIndex(corpus: DataFrame, centroids: DataFrame,
+               rowCountHint: Option[Long] = None,
+               route: Routing.Route = Routing.Auto): DataFrame =
+    if (Routing.isLarge(route,
+        graft.plans.PlanStats.rowCount(corpus, rowCountHint))(Routing.ivfHier))
+      hierAssign(corpus, centroids, hierProbe)
+    else assignToCentroids(corpus, centroids)
+
+  /** Coarse cells the hierarchical route scans per row. */
+  private val hierProbe = 2
 
   /** Hierarchical (two-level) IVF assignment: the nlist fine centroids
     * are grouped into ≈ √nlist coarse cells (coarse seeds = ascending-id
@@ -232,14 +237,9 @@ object Similarity {
     * accuracy); with `wProbe >= #cells` it equals the flat assignment,
     * the equivalence HierIvfSpec pins. Probing ([[ivfTopKWith]]) is
     * unchanged — it ranks the full fine-centroid set per query. */
-  def ivfIndexHier(corpus: DataFrame, centroids: DataFrame,
-                   wProbe: Int = 2): DataFrame = {
-    val fine = centroids
-      .select(col("centroid_id").cast("long"),
-        col("centroid").cast("array<float>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1)
+  private[operators] def hierAssign(corpus: DataFrame, centroids: DataFrame,
+                                    wProbe: Int): DataFrame = {
+    val fine = collectCentroids(centroids)
     require(fine.nonEmpty, "need at least one centroid")
     val coarseStride = math.max(1, math.floor(math.sqrt(fine.length)).toInt)
     val seeds = fine.indices.filter(_ % coarseStride == 0).toArray
@@ -271,19 +271,9 @@ object Similarity {
         members(c).map(i => fine(i)._2).toArray)
     }
     val bank = new graft.functions.HierCentroidBank(coarseKept, cells, wProbe)
-    corpus.select(
-      GraftFunctions.nearestCentroidIdHier(col("embedding"), bank)
-        .as("centroid_id"),
-      col("vec_id"), col("embedding"))
+    tagCentroid(corpus,
+      GraftFunctions.nearestCentroidIdHier(col("embedding"), bank))
   }
-
-  /** IVF bucketing against an explicit centroid frame (e.g. one refined by
-    * [[trainCentroids]]). The centroid frame is materialized on the DRIVER
-    * at plan time (it must be small — nlist × dim is an index design
-    * constant, the same bound the former broadcast form imposed); the
-    * corpus side is never joined, aggregated, or shuffled. */
-  def ivfIndexFrom(corpus: DataFrame, centroids: DataFrame): DataFrame =
-    assignToCentroids(corpus, centroids)
 
   /** Persist an IVF index partitioned BY CENTROID: probing then becomes a
     * partition-pruned scan — a query touching nProbe of C centroids reads
@@ -303,7 +293,7 @@ object Similarity {
       nProbe, k)
 
   /** IVF search against an explicit centroid frame (pair with
-    * [[ivfIndexFrom]] over the same centroids). */
+    * [[ivfIndex]] over the same centroids). */
   def ivfTopKWith(queries: DataFrame, index: DataFrame,
                   centroids: DataFrame, nProbe: Int, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),

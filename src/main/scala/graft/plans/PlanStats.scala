@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Row counts WITHOUT a scan, where one is derivable.
   *
-  * The corpus-size-routed operators (Similarity.ivfIndexAuto,
-  * Dedup.simhashPairsAuto, the autoStride / autoBandBits sizers) need one
+  * The corpus-size-routed operators (Similarity.ivfIndex,
+  * Dedup.simhashPairs, the autoStride / autoBandBits sizers) need one
   * number — how many rows — to pick a branch or size a sketch. Paying a
   * full `count()` scan for that number is fine at test SFs and a real
   * pre-pass at 100 TB (a whole extra read of the corpus before any work

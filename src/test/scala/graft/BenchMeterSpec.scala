@@ -58,4 +58,27 @@ class BenchMeterSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("a query whose every rep failed stays out of the median totals") {
+    // a failed query's fast-abort wall is not a measurement: it must not
+    // become its median, nor enter total_median_sec — and the compact
+    // line keeps every key its consumers parse
+    assert(Bench.medianOf(Nil).isEmpty)
+    assert(Bench.medianOf(Seq(3.0, 1.0, 2.0)).contains(2.0))
+    assert(Bench.medianOf(Seq(4.0, 1.0)).contains(2.5))
+    val ok = Bench.QStat("ok_q", secs = 2.0, shuffleB = 0L, spillB = 0L,
+      peakB = 0L, ok = true, median = Bench.medianOf(Seq(2.0, 3.0, 2.5)),
+      jobs = 3L, tasks = 7L)
+    val failed = Bench.QStat("failed_q", secs = 40.0, shuffleB = 0L,
+      spillB = 0L, peakB = 0L, ok = false, median = Bench.medianOf(Nil),
+      jobs = 1L, tasks = 1L)
+    val line = Bench.compactLine(Seq(ok, failed), "/data/sf0.1", 0, 0)
+    for (k <- Seq("metric", "value", "unit", "sf", "n_queries", "n_failed",
+        "shuffle_regressions", "spill_regressions", "total_median_sec",
+        "total_jobs", "total_tasks", "queries", "queries_omitted"))
+      assert(line.contains("\"" + k + "\":"), s"compact line lost $k: $line")
+    assert(line.contains("\"total_median_sec\":2.5"), line)
+    assert(line.contains("\"n_failed\":1"), line)
+    assert(line.contains("\"total_jobs\":4"), line)
+  }
 }

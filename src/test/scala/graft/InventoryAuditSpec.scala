@@ -12,6 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the map literal's 4-space indentation) must be unique, the source key
   * count must equal the runtime Map size, and every query must carry an
   * oracle.
+  *
+  * The same source audit keeps every routing threshold in one home: each
+  * value is defined in `graft.operators.Routing` and nowhere else, and no
+  * public operator takes one as a parameter.
   */
 class InventoryAuditSpec extends AnyFunSuite {
 
@@ -51,5 +55,80 @@ class InventoryAuditSpec extends AnyFunSuite {
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
     assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
+  }
+
+  private val mainDir = java.nio.file.Paths.get(sys.props("user.dir"),
+    "src", "main", "scala")
+  private def read(p: java.nio.file.Path) =
+    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+  private def scalaFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(dir)
+    try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally w.close()
+  }
+  private val opsDir = mainDir.resolve("graft").resolve("operators")
+  private val routingFile = opsDir.resolve("Routing.scala")
+  /** threshold name -> its `1L << k` shift, as Routing declares them */
+  private val thresholds: Map[String, String] =
+    """(?m)^  val (\w+): Long = 1L << (\d+)$""".r
+      .findAllMatchIn(read(routingFile)).map(m => m.group(1) -> m.group(2))
+      .toMap
+
+  test("every routing threshold is defined once, in Routing") {
+    assert(thresholds.nonEmpty, "Routing declares no `val x: Long = 1L << k`")
+    val shiftLit = s"""1L << (${thresholds.values.mkString("|")})\\b""".r
+    val bad = for {
+      f <- scalaFiles(mainDir) if f != routingFile
+      (line, i) <- read(f).linesIterator.zipWithIndex
+      hit <- thresholds.keys.filter(n =>
+          (s"\\b$n\\b".r.findAllMatchIn(line).exists(m =>
+            !line.substring(0, m.start).endsWith("Routing."))))
+        .map(n => s"$n (unqualified)") ++
+        (if (f.startsWith(opsDir)) shiftLit.findFirstIn(line).toSeq
+         else Nil)
+    } yield s"${mainDir.relativize(f)}:${i + 1}: $hit"
+    assert(bad.isEmpty, "threshold defined outside Routing:\n" +
+      bad.mkString("\n"))
+  }
+
+  /** Each `def` header in `src` that no access modifier narrows: its name
+    * and the text of its parameter lists. */
+  private def publicDefs(src: String): Seq[(String, String)] =
+    """(?m)^([ \t]*)((?:[a-z]+(?:\[\w+\])?\s+)*)def\s+(\w+)""".r
+      .findAllMatchIn(src)
+      .filterNot(m => m.group(2).contains("private") ||
+        m.group(2).contains("protected"))
+      .map { m =>
+        // consume [type params] and (param lists), balanced, skipping
+        // string literals, up to the result type or body
+        var i = m.end
+        var depth = 0
+        val sb = new StringBuilder
+        var done = false
+        while (!done && i < src.length) {
+          val c = src.charAt(i)
+          if (c == '"') {
+            val close = src.indexOf('"', i + 1)
+            i = if (close < 0) src.length else close
+          } else if (c == '(' || c == '[') depth += 1
+          else if (c == ')' || c == ']') depth -= 1
+          else if (depth == 0 && !c.isWhitespace) done = true
+          if (!done) { if (depth > 0 || c == ')') sb += c; i += 1 }
+        }
+        m.group(3) -> sb.toString
+      }.toSeq
+
+  test("no public operator takes a routing-threshold parameter") {
+    // a threshold by name, or under another name with a Routing default
+    val bad = for {
+      f <- scalaFiles(opsDir)
+      (defName, params) <- publicDefs(read(f))
+      n <- thresholds.keys
+        if s"\\b$n\\s*:".r.findFirstIn(params).isDefined ||
+          params.contains(s"Routing.$n")
+    } yield s"${mainDir.relativize(f)}: def $defName takes $n"
+    assert(bad.isEmpty, "public operator takes a routing threshold:\n" +
+      bad.mkString("\n"))
   }
 }

@@ -260,13 +260,14 @@ class CorpusSpec extends SparkSpecBase {
     // (0.49) that the join sees plenty of junk to reject
     val exact = Corpus.decontaminate(
         docs.filter(col("doc_id") % 7 =!= 0), col("doc_id"), col("text"),
-        docs.filter(col("doc_id") % 7 === 0), col("text"), n = 3)
+        docs.filter(col("doc_id") % 7 === 0), col("text"), n = 3,
+        route = Routing.Small)
       .select("doc_id").as[Long].collect().toSet
     for (fpp <- Seq(0.01, 0.49)) {
-      val bloomed = Corpus.decontaminateBloom(
+      val bloomed = Corpus.decontaminate(
           docs.filter(col("doc_id") % 7 =!= 0), col("doc_id"), col("text"),
           docs.filter(col("doc_id") % 7 === 0), col("text"), n = 3,
-          fpp = fpp)
+          fpp = fpp, route = Routing.Large)
         .select("doc_id").as[Long].collect().toSet
       assert(bloomed == exact, s"fpp=$fpp diverged: " +
         s"only-bloom=${bloomed.diff(exact)} only-exact=${exact.diff(bloomed)}")
@@ -280,19 +281,22 @@ class CorpusSpec extends SparkSpecBase {
     val train = Seq((1L, "a b c d"), (2L, "e f g h")).toDF("doc_id", "text")
     // empty eval frame
     val emptyEval = train.filter(col("doc_id") < 0)
-    val k1 = Corpus.decontaminateBloom(train, col("doc_id"), col("text"),
-      emptyEval, col("text"), n = 3).select("doc_id").as[Long].collect().toSet
+    val k1 = Corpus.decontaminate(train, col("doc_id"), col("text"),
+        emptyEval, col("text"), n = 3, route = Routing.Large)
+      .select("doc_id").as[Long].collect().toSet
     assert(k1 == Set(1L, 2L))
     // non-empty eval, but every doc shorter than n tokens -> zero grams
     val shortEval = Seq((9L, "x y")).toDF("doc_id", "text")
-    val k2 = Corpus.decontaminateBloom(train, col("doc_id"), col("text"),
-      shortEval, col("text"), n = 3).select("doc_id").as[Long].collect().toSet
+    val k2 = Corpus.decontaminate(train, col("doc_id"), col("text"),
+        shortEval, col("text"), n = 3, route = Routing.Large)
+      .select("doc_id").as[Long].collect().toSet
     assert(k2 == Set(1L, 2L))
   }
 
   test("decontaminateBloom probes map-side: the bloom filter precedes any join") {
-    val plan = Corpus.decontaminateBloom(docs, col("doc_id"), col("text"),
-        docs.filter(col("doc_id") < 10), col("text"), n = 3)
+    val plan = Corpus.decontaminate(docs, col("doc_id"), col("text"),
+        docs.filter(col("doc_id") < 10), col("text"), n = 3,
+        route = Routing.Large)
       .queryExecution.executedPlan.toString
     assert(plan.contains("bloommightcontain"),
       s"expected the BloomMightContain prefilter in the plan:\n$plan")
@@ -574,9 +578,9 @@ class CorpusSpec extends SparkSpecBase {
   }
 
   test("streaming Bloom decontamination: foreachBatch exact ≡ batch form") {
-    // the production twin of decontaminateBloom: the eval sketch + gram
-    // frame are built ONCE, then every micro-batch is gated exactly —
-    // output must equal the BATCH operator's on the same slice
+    // the production twin of decontaminate's sketch route: the eval
+    // sketch + gram frame are built ONCE, then every micro-batch is gated
+    // exactly — output must equal the BATCH operator's on the same slice
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val slice = Seq(
       (1L, "alpha beta gamma delta epsilon"), // contaminated
@@ -586,10 +590,10 @@ class CorpusSpec extends SparkSpecBase {
       (5L, "xx"))                             // shorter than n
     val eval = Seq((100L, "prefix beta gamma delta suffix"))
       .toDF("doc_id", "text")
-    val want = Corpus.decontaminateBloom(slice.toDF("doc_id", "text"),
+    val want = Corpus.decontaminate(slice.toDF("doc_id", "text"),
         col("doc_id"), col("text"), eval, col("text"), n = 3)
       .select("doc_id").as[Long].collect().toSet
-    val dc = Corpus.bloomDecontaminator(eval, col("text"), n = 3)
+    val dc = Corpus.decontaminator(eval, col("text"), n = 3)
     try {
       val s = MemoryStream[(Long, String)](spark)
       val kept = scala.collection.mutable.Set[Long]()
@@ -619,7 +623,9 @@ class CorpusSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val eval = Seq((100L, "prefix beta gamma delta suffix"))
       .toDF("doc_id", "text")
-    val dc = Corpus.bloomDecontaminator(eval, col("text"), n = 3)
+    // routed to the broadcast (one eval doc): the gate builds its sketch
+    // on first use
+    val dc = Corpus.decontaminator(eval, col("text"), n = 3)
     try {
       val s = MemoryStream[(Long, String)](spark)
       val q = dc.gate(s.toDF().toDF("doc_id", "text"), col("text"))
@@ -641,7 +647,7 @@ class CorpusSpec extends SparkSpecBase {
 
   test("bloomDecontaminator with zero eval grams passes everything through") {
     val eval = Seq((9L, "x y")).toDF("doc_id", "text") // all docs < n tokens
-    val dc = Corpus.bloomDecontaminator(eval, col("text"), n = 3)
+    val dc = Corpus.decontaminator(eval, col("text"), n = 3)
     try {
       val train = Seq((1L, "a b c d"), (2L, "e f g h")).toDF("doc_id", "text")
       assert(dc.gate(train, col("text"))
@@ -653,24 +659,24 @@ class CorpusSpec extends SparkSpecBase {
 
   test("decontaminateAuto routes exact vs Bloom on the measured gram count") {
     // eval = 100 docs × 8 distinct 3-grams (per-doc-unique vocabulary)
-    // = exactly 800 distinct grams; pin the routing threshold on both
-    // sides of that measurement
+    // = exactly 800 distinct grams, under the broadcast cap; the switch
+    // point itself is pinned in RoutingSpec
     val eval = docs.filter(col("doc_id") % 10 === 0)
     val nGrams = eval.select(explode(
         graft.functions.TextFunctions.wordNGrams(col("text"), 3)).as("g"))
       .distinct().count()
     assert(nGrams == 800L, s"fixture drift: $nGrams grams")
-    val exact = Corpus.decontaminateAuto(docs, col("doc_id"), col("text"),
-      eval, col("text"), n = 3, maxBroadcastGrams = nGrams)
-    val bloom = Corpus.decontaminateAuto(docs, col("doc_id"), col("text"),
-      eval, col("text"), n = 3, maxBroadcastGrams = nGrams - 1)
-    // one gram under the measured count flips the plan to the sketch path
+    assert(!Routing.gramSketch(nGrams))
+    val exact = Corpus.decontaminate(docs, col("doc_id"), col("text"),
+      eval, col("text"), n = 3)
+    val bloom = Corpus.decontaminate(docs, col("doc_id"), col("text"),
+      eval, col("text"), n = 3, route = Routing.Large)
     val pExact = exact.queryExecution.executedPlan.toString
     val pBloom = bloom.queryExecution.executedPlan.toString
     assert(!pExact.contains("bloommightcontain"),
-      s"at-threshold must take the exact broadcast branch:\n$pExact")
+      s"under the cap the router must take the broadcast branch:\n$pExact")
     assert(pBloom.contains("bloommightcontain"),
-      s"below-threshold must take the sketch branch:\n$pBloom")
+      s"the sketch route must probe the Bloom filter:\n$pBloom")
     // routing can change the plan, never the answer
     val a = exact.select("doc_id").as[Long].collect().toSet
     val b = bloom.select("doc_id").as[Long].collect().toSet
@@ -736,10 +742,10 @@ class CorpusSpec extends SparkSpecBase {
         col("d"), mode = "allow")
       .select("doc_id").as[Long].collect().toSet
     assert(allowed == Set(1L, 2L, 4L, 6L), allowed.toString)
-    // above the broadcast threshold the list routes through the Bloom
-    // sketch — plan shape flips, output must not
+    // the sketch route (taken above the broadcast threshold) — plan shape
+    // flips, output must not
     val viaBloom = Corpus.urlFilter(urls, col("doc_id"), col("url"), bl,
-      col("d"), maxBroadcastDomains = 1L)
+      col("d"), route = Routing.Large)
     assert(viaBloom.queryExecution.executedPlan.toString
       .contains("bloommightcontain"), "expected the sketch route")
     assert(viaBloom.select("doc_id").as[Long].collect().toSet == kept)
@@ -775,7 +781,7 @@ class CorpusSpec extends SparkSpecBase {
       assert((b1 ++ b2) == want, s"$b1 ++ $b2 vs $want")
     } finally gate.close()
     // Bloom route (list over the broadcast threshold): same verdicts
-    val gateB = Corpus.urlGate(bl, col("d"), maxBroadcastDomains = 1L)
+    val gateB = Corpus.urlGate(bl, col("d"), route = Routing.Large)
     try {
       val got = gateB.filter(urls, col("doc_id"), col("url"))
       assert(got.queryExecution.executedPlan.toString
@@ -818,7 +824,8 @@ class CorpusSpec extends SparkSpecBase {
     (4L, "widest widest widest")).toDF("doc_id", "text")
 
   test("bpeTrain reproduces the hand-computed Sennrich merge sequence") {
-    val m = Corpus.bpeTrain(bpeDocs, col("text"), numMerges = 3)
+    val m = Corpus.bpeTrain(bpeDocs, col("text"), numMerges = 3,
+        route = Routing.Large)
       .as[(Int, String, String, String, Long)].collect().toSeq
     assert(m == Seq(
       (1, "e", "s", "es", 9L),
@@ -827,17 +834,18 @@ class CorpusSpec extends SparkSpecBase {
   }
 
   test("bpeTrain is layout-stable and stops early when no pair remains") {
-    val a = Corpus.bpeTrain(bpeDocs, col("text"), 3).collect().toSeq
-    val b = Corpus.bpeTrain(bpeDocs.repartition(7), col("text"), 3)
+    val x = Routing.Large // the executor loop
+    val a = Corpus.bpeTrain(bpeDocs, col("text"), 3, x).collect().toSeq
+    val b = Corpus.bpeTrain(bpeDocs.repartition(7), col("text"), 3, x)
       .collect().toSeq
     assert(a == b, "merge list must not depend on partitioning")
     // all-single-char words: no pair exists, zero merges
     val none = Corpus.bpeTrain(Seq((1L, "a b c")).toDF("doc_id", "text"),
-      col("text"), 5)
+      col("text"), 5, x)
     assert(none.count() == 0)
     // one two-char word: exactly one merge possible
     val one = Corpus.bpeTrain(Seq((1L, "ab")).toDF("doc_id", "text"),
-      col("text"), 5).as[(Int, String, String, String, Long)].collect()
+      col("text"), 5, x).as[(Int, String, String, String, Long)].collect()
     assert(one.toSeq == Seq((1, "a", "b", "ab", 1L)))
   }
 
@@ -848,7 +856,7 @@ class CorpusSpec extends SparkSpecBase {
       ('A' to 'H').mkString
     assert(word.length == 44)
     val m = Corpus.bpeTrain(Seq((1L, word)).toDF("doc_id", "text"),
-      col("text"), numMerges = 40).collect()
+      col("text"), numMerges = 40, route = Routing.Large).collect()
     assert(m.length == 40)
     assert(m.forall(_.getLong(4) == 1L))
     // first merge is the lexicographically smallest adjacent pair
@@ -856,15 +864,16 @@ class CorpusSpec extends SparkSpecBase {
   }
 
   test("bpeTrainLocal ≡ bpeTrain: Sennrich fixture, exhaustion, overlap") {
-    val local = Corpus.bpeTrainLocal(bpeDocs, col("text"), 3)
+    val (l, x) = (Routing.Small, Routing.Large) // driver / executor loop
+    val local = Corpus.bpeTrain(bpeDocs, col("text"), 3, l)
       .as[(Int, String, String, String, Long)].collect().toSeq
     assert(local == Seq(
       (1, "e", "s", "es", 9L),
       (2, "es", "t", "est", 9L),
       (3, "l", "o", "lo", 7L)), local.toString)
     // run both loops PAST exhaustion: early stop at the same rank
-    val deep = Corpus.bpeTrain(bpeDocs, col("text"), 50).collect().toSeq
-    val deepL = Corpus.bpeTrainLocal(bpeDocs, col("text"), 50)
+    val deep = Corpus.bpeTrain(bpeDocs, col("text"), 50, x).collect().toSeq
+    val deepL = Corpus.bpeTrain(bpeDocs, col("text"), 50, l)
       .collect().toSeq
     assert(deepL == deep, "local loop diverged from the executor loop")
     // overlapping occurrences: "aaaa" counts (a,a) at every adjacent
@@ -872,9 +881,9 @@ class CorpusSpec extends SparkSpecBase {
     // [aa, aa] — both statistics and application must agree
     val over = Seq((1L, "aaaa")).toDF("doc_id", "text")
     val wantO = Seq((1, "a", "a", "aa", 3L), (2, "aa", "aa", "aaaa", 1L))
-    assert(Corpus.bpeTrain(over, col("text"), 5)
+    assert(Corpus.bpeTrain(over, col("text"), 5, x)
       .as[(Int, String, String, String, Long)].collect().toSeq == wantO)
-    assert(Corpus.bpeTrainLocal(over, col("text"), 5)
+    assert(Corpus.bpeTrain(over, col("text"), 5, l)
       .as[(Int, String, String, String, Long)].collect().toSeq == wantO)
   }
 
@@ -884,8 +893,8 @@ class CorpusSpec extends SparkSpecBase {
     // a String.compareTo tie-break picks the OTHER pair than Spark
     val t = Seq((1L, "a�"), (2L, "a😀"))
       .toDF("doc_id", "text")
-    val d = Corpus.bpeTrain(t, col("text"), 1).collect().toSeq
-    val l = Corpus.bpeTrainLocal(t, col("text"), 1).collect().toSeq
+    val d = Corpus.bpeTrain(t, col("text"), 1, Routing.Large).collect().toSeq
+    val l = Corpus.bpeTrain(t, col("text"), 1, Routing.Small).collect().toSeq
     assert(l == d, s"local $l vs executor $d")
     assert(l.head.getString(2) == "�")
   }
@@ -893,20 +902,21 @@ class CorpusSpec extends SparkSpecBase {
   test("bpeTrainLocal incremental statistics survive a wide corpus") {
     // 1000 docs / 10k distinct words: the pair→word index and lazy-heap
     // path sees real churn; both loops must emit the identical table
-    val d = Corpus.bpeTrain(docs, col("text"), 10)
+    val d = Corpus.bpeTrain(docs, col("text"), 10, Routing.Large)
       .as[(Int, String, String, String, Long)].collect().toSeq
-    val l = Corpus.bpeTrainLocal(docs, col("text"), 10)
+    val l = Corpus.bpeTrain(docs, col("text"), 10, Routing.Small)
       .as[(Int, String, String, String, Long)].collect().toSeq
     assert(l == d)
   }
 
   test("bpeTrainAuto routes by measured type count, both branches exact") {
-    val want = Corpus.bpeTrain(bpeDocs, col("text"), 3).collect().toSeq
-    // default cap: 4 types ≤ 2^22 → driver-local branch
-    assert(Corpus.bpeTrainAuto(bpeDocs, col("text"), 3)
-      .collect().toSeq == want)
-    // cap 0: forced executor branch over the SAME persisted vocab frame
-    assert(Corpus.bpeTrainAuto(bpeDocs, col("text"), 3, localMaxTypes = 0)
+    val want = Corpus.bpeTrain(bpeDocs, col("text"), 3, Routing.Large)
+      .collect().toSeq
+    // 4 types ≤ 2^22 → the router takes the driver-local branch (the
+    // switch point itself is pinned in RoutingSpec)
+    assert(!Routing.bpeOnExecutors(4L))
+    assert(Corpus.bpeTrain(bpeDocs, col("text"), 3).collect().toSeq == want)
+    assert(Corpus.bpeTrain(bpeDocs, col("text"), 3, Routing.Small)
       .collect().toSeq == want)
   }
 

@@ -23,25 +23,25 @@ class HierIvfSpec extends SparkSpecBase {
     .withColumn("embedding", col("embedding").cast("array<float>"))
 
   private val stride = 8 // 60 fine centroids
+  private val cents = Similarity.strideCentroids(corpus, stride)
+  private def flatIndex = Similarity.ivfIndex(corpus, cents, route = Routing.Small)
 
   test("probe-all-cells hierarchical assignment == flat assignment") {
     // with wProbe >= #cells every fine centroid is scanned, so the
     // two-level kernel must reproduce the flat argmax exactly (cosines
     // here are distinct, so tie order can't mask a defect)
-    val flat = Similarity.ivfIndex(corpus, stride)
+    val flat = flatIndex
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
-    val hier = Similarity.ivfIndexHier(corpus,
-        Similarity.strideCentroids(corpus, stride), wProbe = 1000)
+    val hier = Similarity.hierAssign(corpus, cents, wProbe = 1000)
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
     assert(hier == flat)
   }
 
   test("small wProbe assignment is deterministic and cell-consistent") {
-    val a = Similarity.ivfIndexHier(corpus,
-        Similarity.strideCentroids(corpus, stride), wProbe = 2)
+    // the hier route's own probe width (2 cells)
+    val a = Similarity.ivfIndex(corpus, cents, route = Routing.Large)
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
-    val b = Similarity.ivfIndexHier(corpus,
-        Similarity.strideCentroids(corpus, stride), wProbe = 2)
+    val b = Similarity.hierAssign(corpus, cents, wProbe = 2)
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
     assert(a == b, "hierarchical assignment must be deterministic")
     // every assignment is a real centroid id
@@ -52,11 +52,10 @@ class HierIvfSpec extends SparkSpecBase {
     // (the top-w coarse scan is prefix-consistent, so the scanned fine
     // set only grows — if the flat winner was scanned at w it is scanned
     // at w+1), with a floor that catches a broken kernel outright
-    val flat = Similarity.ivfIndex(corpus, stride)
+    val flat = flatIndex
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
     val agree2 = a.count { case (k, v) => flat(k) == v }
-    val a3 = Similarity.ivfIndexHier(corpus,
-        Similarity.strideCentroids(corpus, stride), wProbe = 3)
+    val a3 = Similarity.hierAssign(corpus, cents, wProbe = 3)
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
     val agree3 = a3.count { case (k, v) => flat(k) == v }
     assert(agree2 >= (a.size * 0.8).toInt,
@@ -69,23 +68,21 @@ class HierIvfSpec extends SparkSpecBase {
     def planOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.analyzed.toString
     // 480 vectors < 2^17: flat kernel in the plan
-    val auto = Similarity.ivfIndexAuto(corpus, stride)
+    val auto = Similarity.ivfIndex(corpus, cents)
     assert(planOf(auto).contains("nearestcentroidid") &&
       !planOf(auto).toLowerCase.contains("hier"))
-    // force the switch by lowering the threshold via a direct call — the
-    // routing expression itself is one count() against hierThreshold, so
-    // pin the CONSTANT instead: the largest driver SF (~20k embeddings)
-    // must stay under it with margin
-    assert(Similarity.hierThreshold > 100000L)
-    // and the hier plan carries the hier kernel
-    val hier = Similarity.ivfIndexHier(corpus,
-      Similarity.strideCentroids(corpus, stride))
+    // the largest test-data SF (~20k embeddings) must stay under the
+    // threshold with margin (the switch point is pinned in RoutingSpec)
+    assert(Routing.hierThreshold > 100000L)
+    // a corpus stated AT the threshold routes hier, and the hier plan
+    // carries the hier kernel
+    val hier = Similarity.ivfIndex(corpus, cents,
+      rowCountHint = Some(Routing.hierThreshold))
     assert(planOf(hier).toLowerCase.contains("hier"))
   }
 
   test("probing a hier-built index returns k ranked distinct neighbors") {
-    val idx = Similarity.ivfIndexHier(corpus,
-      Similarity.strideCentroids(corpus, stride), wProbe = 2)
+    val idx = Similarity.ivfIndex(corpus, cents, route = Routing.Large)
     val got = Similarity.ivfTopKWith(
       corpus.filter(col("vec_id") < 4).select(col("vec_id"), col("embedding")),
       idx, Similarity.strideCentroids(corpus, stride), nProbe = 4, k = 5)

@@ -33,6 +33,14 @@ class DedupSpec extends SparkSpecBase {
     val r = Dedup.simhashPairs(docs, col("doc_id"), col("text"), maxHamming = 3)
       .as[(Long, Long, Int)].collect()
     assert(r.exists(t => t._1 == 1L && t._2 == 2L && t._3 == 0))
+    // the same over the fused 64-bit kernel signature (16-bit bands), the
+    // dedup_simhash_kernel shape
+    val sig = docs.select(col("doc_id"), graft.functions.GraftFunctions
+      .simhash(graft.functions.TextFunctions.tokens(col("text"))).as("sim"))
+    val k = Dedup.simhashPairsFromSig(sig, sigBits = 64, bands = 4,
+        maxHamming = 3)
+      .as[(Long, Long, Int)].collect()
+    assert(k.exists(t => t._1 == 1L && t._2 == 2L && t._3 == 0))
   }
 
   test("simhashPairs rejects maxHamming beyond the band-blocking guarantee") {
@@ -202,8 +210,8 @@ class ComponentsSpec extends SparkSpecBase {
   test("the many-nodes pre-partition route: same labels, edges shuffle " +
     "once per closure instead of once per round (r13, guide §2.4)") {
     // The >2^20-node route had never EXECUTED before this test (bench SFs
-    // stay far below the threshold): prePartitionMinNodes is the test
-    // hook that forces it. Broadcast is disabled so the per-round join
+    // stay far below the threshold): the forced route runs it. Broadcast
+    // is disabled so the per-round join
     // actually plans a shuffle join — at real scale the label frame
     // outgrows broadcast, which is the regime the route exists for; a
     // chain graph forces many rounds so the per-round edge re-shuffle
@@ -263,14 +271,14 @@ class ComponentsSpec extends SparkSpecBase {
       }.sum
     def joinRounds(ps: Seq[SparkPlan]): Seq[SparkPlan] =
       ps.filter(hasEdgeScan)
-    def run(thresh: Long): (Map[Long, Long], Long, Seq[SparkPlan]) = {
+    def run(route: Routing.Route): (Map[Long, Long], Long, Seq[SparkPlan]) = {
       roundPlans.clear()
       spark.sparkContext.addSparkListener(meter)
       spark.listenerManager.register(capture)
       try {
         shuffleB.set(0)
         val r = Dedup.connectedComponents(edges, "id_a", "id_b",
-            prePartitionMinNodes = thresh)
+            route = route)
           .as[(Long, Long)].collect().toMap
         Thread.sleep(300) // let async listener events drain
         import scala.jdk.CollectionConverters._
@@ -287,7 +295,7 @@ class ComponentsSpec extends SparkSpecBase {
     val ((resOn, bytesOn, plansOn), (resOff, bytesOff, plansOff)) =
       withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
           "spark.sql.adaptive.enabled" -> "false") {
-        (run(0L), run(Long.MaxValue))
+        (run(Routing.Large), run(Routing.Small))
       }
     assert(resOn == expected && resOff == expected,
       "pre-partition route changed the labels")
@@ -303,13 +311,14 @@ class ComponentsSpec extends SparkSpecBase {
       "scan — the structural assertion is vacuous")
     assert(bytesOn < bytesOff,
       s"route saved no shuffle bytes: on=$bytesOn off=$bytesOff")
-    // receipt for the judge: the first round's executed plan, both routes
-    val dir = new java.io.File("plans/r13"); dir.mkdirs()
+    // receipt: the first round's executed plan, both routes (under the
+    // build's target/ — tests never write into the source tree)
+    val dir = new java.io.File("target/receipts"); dir.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(dir, "cc_prepartition_route.txt").toPath,
       (s"# shuffle bytes, ${onRounds.size}+ rounds, broadcast+AQE off\n" +
-        s"# routed (prePartitionMinNodes=0): $bytesOn\n" +
-        s"# un-routed (threshold=MaxValue):  $bytesOff\n\n" +
+        s"# routed (pre-partitioned route): $bytesOn\n" +
+        s"# un-routed (plain route):        $bytesOff\n\n" +
         s"## routed round-1 plan (edge scan NOT under any Exchange)\n" +
         onRounds.head.toString + "\n\n" +
         s"## un-routed round-1 plan (edge scan under an Exchange)\n" +
@@ -398,8 +407,8 @@ class WideSimhashSpec extends SparkSpecBase {
         % 2 === lit(par)))
 
   test("wide pairs == exact all-pairs 120-bit hamming (recall AND precision)") {
-    val got = Dedup.simhashPairsWide(docs, col("doc_id"), col("text"),
-        maxHamming = 3)
+    val got = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
+        maxHamming = 3, route = Routing.Large)
       .select("id_a", "id_b", "hamming")
       .as[(Long, Long, Int)].collect().toSet
     val sig = docs.select(col("doc_id"), halfSig(0).as("sa"),
@@ -421,7 +430,8 @@ class WideSimhashSpec extends SparkSpecBase {
 
   test("wide form rejects maxHamming beyond the 4-band pigeonhole") {
     intercept[IllegalArgumentException] {
-      Dedup.simhashPairsWide(docs, col("doc_id"), col("text"), maxHamming = 4)
+      Dedup.simhashPairs(docs, col("doc_id"), col("text"), maxHamming = 4,
+        route = Routing.Large)
     }
   }
 }
@@ -449,8 +459,9 @@ class AutoSimhashSpec extends SparkSpecBase {
     df.queryExecution.analyzed.toString.contains("md5(cast(")
 
   test("below the threshold the router IS the narrow 60-bit form") {
-    val auto = Dedup.simhashPairsAuto(docs, col("doc_id"), col("text"),
-      maxHamming = 3, wideThreshold = 1000L)
+    // 44 docs, far under Routing.wideThreshold
+    val auto = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
+      maxHamming = 3)
     assert(!routedWide(auto))
     val narrow = Dedup.simhashPairsFromSig(
       docs.select(col("doc_id"),
@@ -462,18 +473,20 @@ class AutoSimhashSpec extends SparkSpecBase {
   }
 
   test("at the threshold the router switches to the wide 120-bit form") {
-    // corpus has 44 docs; threshold 44 must route wide — pinned by
-    // equality with the wide form AND by the boundary doc count itself
-    val n = docs.count()
-    val auto = Dedup.simhashPairsAuto(docs, col("doc_id"), col("text"),
-      maxHamming = 3, wideThreshold = n)
+    // a corpus size AT the threshold (stated through the public size
+    // hint) must route wide — pinned by equality with the forced wide
+    // route; the table of switch points lives in RoutingSpec
+    val t = Routing.wideThreshold
+    val auto = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
+      maxHamming = 3, rowCountHint = Some(t))
     assert(routedWide(auto))
-    val wide = Dedup.simhashPairsWide(docs, col("doc_id"), col("text"),
-      maxHamming = 3)
+    val wide = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
+      maxHamming = 3, route = Routing.Large)
+    assert(routedWide(wide))
     assert(pairs(auto) == pairs(wide))
     // one doc fewer than the threshold routes narrow again (strict >= gate)
-    val under = Dedup.simhashPairsAuto(docs, col("doc_id"), col("text"),
-      maxHamming = 3, wideThreshold = n + 1)
+    val under = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
+      maxHamming = 3, rowCountHint = Some(t - 1))
     assert(!routedWide(under))
     val narrow = Dedup.simhashPairsFromSig(
       docs.select(col("doc_id"),
@@ -487,7 +500,7 @@ class AutoSimhashSpec extends SparkSpecBase {
     // the dedup_simhash DuckDB oracle reproduces the NARROW signature;
     // sf0.1 is the largest corpus the driver verifies (~50k docs) — the
     // default 2^18 switch point must stay above it with margin
-    assert((1L << 18) > 100000L)
+    assert(Routing.wideThreshold > 100000L)
   }
 }
 
@@ -715,7 +728,7 @@ class SimilaritySpec extends SparkSpecBase {
       val ang = i * math.Pi / 50
       (i.toLong, Array(math.cos(ang).toFloat, math.sin(ang).toFloat))
     }.toDF("vec_id", "embedding")
-    val idx = Similarity.ivfIndex(e, centroidStride = 10)
+    val idx = Similarity.ivfIndex(e, Similarity.strideCentroids(e, 10))
     val r = Similarity.ivfTopK(e.filter(col("vec_id") === 0L), idx, e,
         centroidStride = 10, nProbe = 3, k = 3)
       .select("cand_id", "rank").as[(Long, Int)].collect().sortBy(_._2)
@@ -1030,7 +1043,7 @@ class IvfPersistenceSpec extends SparkSpecBase {
       val ang = i * math.Pi / 50
       (i.toLong, Array(math.cos(ang).toFloat, math.sin(ang).toFloat))
     }.toDF("vec_id", "embedding")
-    val idx = Similarity.ivfIndex(e, centroidStride = 10)
+    val idx = Similarity.ivfIndex(e, Similarity.strideCentroids(e, 10))
     Similarity.writeIndex(idx, s"$dir/idx")
     val loaded = Similarity.readIndex(spark, s"$dir/idx")
     // probing 2 centroids must turn into PartitionFilters, not a full scan

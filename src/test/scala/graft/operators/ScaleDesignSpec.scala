@@ -110,7 +110,8 @@ class SimilarityScaleSpec extends SparkSpecBase {
     // per assignment (var-length agg buffer -> sort-based aggregation over
     // |corpus| x |centroids| expanded vector rows); the fix is a codegen
     // argmax expression over the scan — pin that shape
-    val plan = Similarity.ivfIndex(corpus, centroidStride = 20)
+    val plan = Similarity.ivfIndex(corpus,
+        Similarity.strideCentroids(corpus, 20), route = Routing.Small)
       .queryExecution.executedPlan.toString
     for (bad <- Seq("Window", "Join", "Aggregate", "Exchange"))
       assert(!plan.contains(bad), s"assignment is no longer map-only " +
@@ -127,7 +128,7 @@ class SimilarityScaleSpec extends SparkSpecBase {
       (11L, Array(0f, 1f))).toDF("centroid_id", "centroid")
     val tieCorpus = corpus.union(Seq(
       (900L, Array(0f, 0f)), (901L, Array(1f, 0f))).toDF("vec_id", "embedding"))
-    val got = Similarity.ivfIndexFrom(tieCorpus, cents)
+    val got = Similarity.ivfIndex(tieCorpus, cents, route = Routing.Small)
       .select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
     val ref = tieCorpus.crossJoin(broadcast(cents))
       .withColumn("cos_c", GraftFunctions.cosineSimilarity(
@@ -179,7 +180,7 @@ class KMeansIvfSpec extends SparkSpecBase {
   }.toDF("vec_id", "embedding")
 
   private def objective(centroids: org.apache.spark.sql.DataFrame): Double = {
-    val idx = Similarity.ivfIndexFrom(clustered, centroids)
+    val idx = Similarity.ivfIndex(clustered, centroids)
     idx.join(centroids, Seq("centroid_id"))
       .select(avg(graft.functions.GraftFunctions.cosineSimilarity(
         col("embedding"), col("centroid"))).as("m"))
@@ -198,7 +199,7 @@ class KMeansIvfSpec extends SparkSpecBase {
 
   test("trained IVF search still returns k ranked neighbors") {
     val centroids = Similarity.trainCentroids(clustered, 29, iters = 2)
-    val idx = Similarity.ivfIndexFrom(clustered, centroids)
+    val idx = Similarity.ivfIndex(clustered, centroids)
     val r = Similarity.ivfTopKWith(
         clustered.filter(col("vec_id") === 0L), idx, centroids,
         nProbe = 2, k = 3)

@@ -36,7 +36,7 @@ class SemanticDedupSpec extends SparkSpecBase {
     val centroids = Similarity.strideCentroids(
       corpus.select(col("vec_id"), col("embedding")),
       Similarity.autoStride(corpus))
-    val asg = Similarity.ivfIndexFrom(
+    val asg = Similarity.ivfIndex(
       corpus.select(col("vec_id"), col("embedding")), centroids)
     val l = asg.select(col("centroid_id"), col("vec_id").as("a"),
       col("embedding").as("va"))

@@ -87,10 +87,10 @@ class PlanStatsSpec extends SparkSpecBase {
     // form's own execution then runs real jobs, so assert on the plan
     // choice, not job count: the wide form carries two 120-bit signatures
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("id", "text")
-    val widePlan = Dedup.simhashPairsAuto(docs, col("id"), col("text"),
+    val widePlan = Dedup.simhashPairs(docs, col("id"), col("text"),
         rowCountHint = Some(1L << 20))
       .queryExecution.optimizedPlan.toString
-    val narrowPlan = Dedup.simhashPairsAuto(docs, col("id"), col("text"),
+    val narrowPlan = Dedup.simhashPairs(docs, col("id"), col("text"),
         rowCountHint = Some(4L))
       .queryExecution.optimizedPlan.toString
     assert(widePlan != narrowPlan,
