@@ -2,41 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
 /** Spark-native deployment hook: set
   * `spark.sql.extensions=graft.GraftExtensions` and every session gets the
-  * engine's SQL functions at analysis time — the idiomatic
-  * SparkSessionExtensions route (no runtime register() call needed).
+  * engine's SQL functions ([[GraftFunctions.sqlFunctions]]) at analysis
+  * time — the idiomatic SparkSessionExtensions route (no runtime
+  * register() call needed).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.types._
-    def asStr(e: Expression) = org.apache.spark.sql.catalyst.expressions.Cast(e, StringType)
-    def asLong(e: Expression) = org.apache.spark.sql.catalyst.expressions.Cast(e, LongType)
-    def asFloats(e: Expression) = org.apache.spark.sql.catalyst.expressions.Cast(e, ArrayType(FloatType))
-    def asStrs(e: Expression) = org.apache.spark.sql.catalyst.expressions.Cast(e, ArrayType(StringType))
-
-    ext.injectFunction((FunctionIdentifier("graft_murmur2"),
-      info("graft_murmur2", "Kafka-compatible murmur2 of a string"),
-      (es: Seq[Expression]) => Murmur2(asStr(es.head))))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "cosine similarity of two float arrays"),
-      (es: Seq[Expression]) => CosineSimilarity(asFloats(es(0)), asFloats(es(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "64-bit SimHash of a token array"),
-      (es: Seq[Expression]) => SimHash64(asStrs(es.head))))
-    ext.injectFunction((FunctionIdentifier("graft_fingerprint"),
-      info("graft_fingerprint", "rolling fingerprint of a string"),
-      (es: Seq[Expression]) => RollingFingerprint(asStr(es.head))))
-    ext.injectFunction((FunctionIdentifier("graft_hamming"),
-      info("graft_hamming", "hamming distance of two 64-bit values"),
-      (es: Seq[Expression]) => HammingDistance64(asLong(es(0)), asLong(es(1)))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), builder))
+    }
 }

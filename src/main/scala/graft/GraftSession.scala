@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One place to build a correctly-tuned engine session — the library's
   * equivalent of the reference's WorkersConfig defaults
   * (api/WorkersConfig.java): sensible parallelism, AQE with skew-join
-  * handling, UTC session time, and the engine's SQL functions registered.
+  * handling and UTC session time. The engine's SQL functions come from
+  * `GraftFunctions.register` or the `graft.GraftExtensions` hook.
   *
   * On a cluster, master/parallelism come from spark-submit and only the
   * tuning confs below matter; `local(n)` is the single-JVM entry used by
@@ -41,13 +42,6 @@ object GraftSession {
     // it). The scale answer is row WIDTH, not the threshold: every
     // grouped-collect exchange in the engine carries ids/signatures only
     // (20-ish bytes), so the fallback sort is an in-memory sort of a few
-    // MB per task — see Dedup.embeddingLshPairs.
+    // MB per task — see Dedup.sortedRunMembers.
     .config("spark.ui.enabled", "false")
-
-  /** Build + register the graft SQL functions (graft_cosine, ...). */
-  def localWithFunctions(cores: Int): SparkSession = {
-    val s = local(cores)
-    functions.GraftFunctions.register(s)
-    s
-  }
 }

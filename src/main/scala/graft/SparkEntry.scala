@@ -134,6 +134,39 @@ object SparkEntry {
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
+  /** Replay harness of the STREAMING twins: the (id, string) rows of
+    * `slice` replay through a memory stream in two micro-batches,
+    * `perBatch` runs on each via foreachBatch, and the rows it yields come
+    * back as one frame with the per-batch frame's schema. The replay is a
+    * driver-side collect by construction, so callers id-cap the slice. */
+  private def replayStream(s: SparkSession, slice: DataFrame)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val enc: Encoder[(Long, String)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
+    val buf = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val schema = new java.util.concurrent.atomic.AtomicReference[StructType]()
+    def runBatch(batch: DataFrame): Unit = {
+      val out = perBatch(batch)
+      schema.set(out.schema)
+      out.collect().foreach(buf.add(_))
+    }
+    val rows = slice.collect().map(r => (r.getLong(0), r.getString(1)))
+    if (rows.isEmpty) runBatch(slice) // nothing to replay: one empty batch
+    else {
+      val ms = MemoryStream[(Long, String)](s)
+      val q = ms.toDF().toDF(slice.columns.toSeq: _*).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) => runBatch(batch) }
+        .start()
+      try rows.grouped(math.max(1, rows.length / 2)).foreach { chunk =>
+        ms.addData(chunk.toSeq: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    s.createDataFrame(new java.util.ArrayList(buf), schema.get)
+  }
+
   /** Invariant booleans for a set-similarity pair frame
     * (`id_a, id_b, jaccard`), cross-checked by a RELATIONAL
     * explode→join→count intersection over `items` (`doc_id, item`) — an
@@ -1580,43 +1613,12 @@ object SparkEntry {
     // replay harness (a driver-side collect by construction), not the
     // operator.
     "lm_score_stream" -> ((s, d) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = T(s, d, "documents")
       val slice = docs.filter(col("doc_id") < 20000L)
       val scorer = Corpus.lmScorer(docs, col("doc_id"), col("text"), k = 0.5)
-      try {
-        implicit val enc: org.apache.spark.sql.Encoder[(Long, String)] =
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.STRING)
-        val ms = MemoryStream[(Long, String)](s)
-        val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-          org.apache.spark.sql.Row]()
-        val q = ms.toDF().toDF("doc_id", "text").writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            scorer.score(batch, col("doc_id"), col("text"))
-              .collect().foreach(buf.add(_)): Unit
-          }.start()
-        try {
-          val rows = slice.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-          val half = math.max(1, rows.length / 2)
-          rows.grouped(half).foreach { chunk =>
-            ms.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_bigrams",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("avg_logp",
-            org.apache.spark.sql.types.DoubleType, nullable = true),
-          org.apache.spark.sql.types.StructField("ppl",
-            org.apache.spark.sql.types.DoubleType, nullable = true)))
-        s.createDataFrame(new java.util.ArrayList(buf), schema)
-      } finally scorer.close()
+      try replayStream(s, slice.select("doc_id", "text"))(
+        scorer.score(_, col("doc_id"), col("text")))
+      finally scorer.close()
     }),
 
     // STREAMING twin of ccnet_bucket: tercile BOUNDARIES are trained
@@ -1626,7 +1628,6 @@ object SparkEntry {
     // the batch bucket SQL on the replayed slice — boundary semantics
     // including exact-tie doc_id breaks must reproduce ntile(3) verbatim.
     "ccnet_gate_stream" -> ((s, d) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = T(s, d, "documents")
       // ONE model build: the scorer both ranks the corpus (score(corpus)
       // ≡ lmPerplexity on in-corpus input — LmScorerSpec pins the
@@ -1647,40 +1648,14 @@ object SparkEntry {
         val cuts = Corpus.ntileBoundaries(bucketed, col("ppl"),
           col("doc_id"), col("ntile"), 3)
         val labels = Seq("head", "middle", "tail").take(cuts.length + 1)
-        implicit val enc: org.apache.spark.sql.Encoder[(Long, String)] =
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.STRING)
-        val ms = MemoryStream[(Long, String)](s)
-        val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-          org.apache.spark.sql.Row]()
-        val q = ms.toDF().toDF("doc_id", "text").writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Corpus.ntileGate(
-                scorer.score(batch, col("doc_id"), col("text"))
-                  .filter(col("ppl").isNotNull)
-                  .select(col("doc_id"), col("ppl")),
-                col("ppl"), col("doc_id"), cuts, labels)
-              .collect().foreach(buf.add(_)): Unit
-          }.start()
-        try {
-          val rows = docs.filter(col("doc_id") < 20000L)
-            .select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-          val half = math.max(1, rows.length / 2)
-          rows.grouped(half).foreach { chunk =>
-            ms.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("ppl",
-            org.apache.spark.sql.types.DoubleType, nullable = true),
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.StringType, nullable = false)))
-        s.createDataFrame(new java.util.ArrayList(buf), schema)
+        replayStream(s, docs.filter(col("doc_id") < 20000L)
+            .select("doc_id", "text")) { batch =>
+          Corpus.ntileGate(
+            scorer.score(batch, col("doc_id"), col("text"))
+              .filter(col("ppl").isNotNull)
+              .select(col("doc_id"), col("ppl")),
+            col("ppl"), col("doc_id"), cuts, labels)
+        }
       } finally { scorer.close(); scored.unpersist(): Unit }
     }),
 
@@ -1785,42 +1760,14 @@ object SparkEntry {
     // bounds the replay harness (a driver-side collect by construction),
     // not the operator.
     "url_filter_stream" -> ((s, d) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
       val docs = plantedUrlDocs(T(s, d, "documents"))
       val slice = docs.filter(col("doc_id") < 20000L)
       val gate = Corpus.urlGate(urlBlocklist.toDF("domain"), col("domain"))
-      try {
-        implicit val enc: org.apache.spark.sql.Encoder[(Long, String)] =
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.STRING)
-        val ms = MemoryStream[(Long, String)](s)
-        val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-          org.apache.spark.sql.Row]()
-        val q = ms.toDF().toDF("doc_id", "url").writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            gate.filter(batch, col("doc_id"), col("url"), mode = "deny")
-              .select(col("doc_id"),
-                Corpus.urlHost(col("url")).as("domain"))
-              .collect().foreach(buf.add(_)): Unit
-          }.start()
-        try {
-          val rows = slice.select("doc_id", "url").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-          val half = math.max(1, rows.length / 2)
-          rows.grouped(half).foreach { chunk =>
-            ms.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("domain",
-            org.apache.spark.sql.types.StringType, nullable = true)))
-        s.createDataFrame(new java.util.ArrayList(buf), schema)
-      } finally gate.close()
+      try replayStream(s, slice.select("doc_id", "url"))(
+        gate.filter(_, col("doc_id"), col("url"), mode = "deny")
+          .select(col("doc_id"), Corpus.urlHost(col("url")).as("domain")))
+      finally gate.close()
     }),
 
     // Per-domain curation report: doc counts + byte mass by URL host —
@@ -1912,41 +1859,16 @@ object SparkEntry {
     // driver-side collect by construction) stays bounded at any SF; the
     // operator itself has no such cap.
     "decontaminate_stream" -> ((s, d) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = T(s, d, "documents")
       val train = docs.filter(col("doc_id") % 97 =!= 0 &&
         col("doc_id") < 20000L)
       val eval = docs.filter(col("doc_id") % 97 === 0)
       val dc = Corpus.decontaminator(eval, col("text"), n = 4)
       try {
-        implicit val enc: org.apache.spark.sql.Encoder[(Long, String)] =
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.STRING)
-        val ms = MemoryStream[(Long, String)](s)
-        val kept = java.util.concurrent.ConcurrentHashMap
-          .newKeySet[java.lang.Long]()
-        val q = ms.toDF().toDF("doc_id", "text").writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            dc.exact(batch, col("doc_id"), col("text"))
-              .select("doc_id").collect()
-              .foreach(r => kept.add(r.getLong(0))): Unit
-          }.start()
-        try {
-          val rows = train.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-          val half = math.max(1, rows.length / 2)
-          rows.grouped(half).foreach { chunk =>
-            ms.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        import scala.jdk.CollectionConverters._
-        val keptIds = kept.asScala.map(Long2long).toSeq
-        val idsDf = s.createDataset(keptIds)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF("__kept_id")
-        train.join(broadcast(idsDf), col("doc_id") === col("__kept_id"),
-            "left_semi")
+        val kept = replayStream(s, train.select("doc_id", "text"))(
+          dc.exact(_, col("doc_id"), col("text")).select("doc_id"))
+        train.join(broadcast(kept.toDF("__kept_id")),
+            col("doc_id") === col("__kept_id"), "left_semi")
           .select(col("doc_id"), col("lang"))
       } finally dc.close()
     }),

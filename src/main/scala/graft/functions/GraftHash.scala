@@ -109,28 +109,6 @@ object GraftHash {
     UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
-  /** MinHash over pre-hashed elements: same scheme as minHashSignature but
-    * the per-element base hash is supplied (e.g. xxhash64 of a shingle). */
-  def minHashSignatureLong(hashes: ArrayData, k: Int, seed: Long): ArrayData = {
-    val n = hashes.numElements()
-    val sig = new Array[Long](k)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!hashes.isNullAt(i)) {
-        val base = hashes.getLong(i)
-        var j = 0
-        while (j < k) {
-          val h = mix64(base ^ mix64(seed + j))
-          if (h < sig(j)) sig(j) = h
-          j += 1
-        }
-      }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(sig)
-  }
-
   /** Fused shingle+MinHash kernel: word n-gram shingles are hashed
     * positionally (FNV-style polynomial combine over per-token FNV hashes —
     * order-sensitive, no string concatenation) and fed straight into the k

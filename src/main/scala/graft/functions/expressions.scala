@@ -281,22 +281,6 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
   override protected def withNewChildInternal(c: Expression): MinHashSignature = copy(child = c)
 }
 
-/** MinHash signature over pre-hashed elements (array<long>): skips the
-  * per-element string hashing — the scale path when shingles are built as
-  * numeric hashes (e.g. xxhash64 over token triples) instead of strings. */
-case class MinHashSignatureLong(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
-  require(k > 0, "minhash k must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    GraftHash.minHashSignatureLong(v.asInstanceOf[ArrayData], k, seed)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftHash.minHashSignatureLong($c, $k, ${seed}L);")
-  override protected def withNewChildInternal(c: Expression): MinHashSignatureLong = copy(child = c)
-}
-
 /** Fused shingle+MinHash over a token array (see
   * GraftHash.minHashShingles): word n-grams hashed positionally, k minima
   * in one loop — the codegen-hot path for MinHash-LSH dedup. */
@@ -644,14 +628,11 @@ object GraftFunctions {
   private def toExpr(c: Column): Expression = GraftShims.expression(c)
   private def toCol(e: Expression): Column = GraftShims.column(e)
 
-  def murmur2(c: Column): Column = toCol(Murmur2(toExpr(c)))
   def murmur2Mod(c: Column, n: Int): Column = toCol(Murmur2Mod(toExpr(c), n))
   def cosineSimilarity(a: Column, b: Column): Column =
     toCol(CosineSimilarity(toExpr(a), toExpr(b)))
   def minhash(tokens: Column, k: Int, seed: Long = 42L): Column =
     toCol(MinHashSignature(toExpr(tokens), k, seed))
-  def minhashLong(hashes: Column, k: Int, seed: Long = 42L): Column =
-    toCol(MinHashSignatureLong(toExpr(hashes), k, seed))
   def minhashShingles(tokens: Column, shingleSize: Int, k: Int,
                       seed: Long = 42L): Column =
     toCol(MinHashShingles(toExpr(tokens), shingleSize, k, seed))
@@ -709,48 +690,56 @@ object GraftFunctions {
 
   /** Bounded-state smallest-k collect: Spark's CollectTopK aggregate with
     * the ordering reversed, so each group keeps its `k` SMALLEST elements
-    * in a size-k priority queue — with map-side partial aggregation. This
-    * replaces the `row_number().over(band,bucket) <= cap` window the LSH
-    * bucket-capping used: that form shuffles every raw banded row and
-    * EXTERNALLY SORTS each bucket (the r8 sf100 sweep measured ~137 GB
-    * memory-equivalent spill on embedding_cluster_lsh from exactly this
-    * sort), where the aggregate form shuffles only ≤ k-element partial
-    * states and never sorts the bucket at all. Selection is identical:
-    * lexicographic struct ordering with a unique id as the first field ==
-    * the window's `orderBy(id)` ranking. */
+    * in a size-k priority queue — with map-side partial aggregation.
+    * Selection equals a `row_number() <= k` window: lexicographic struct
+    * ordering with a unique id as the first field == the window's
+    * `orderBy(id)` ranking. The LSH bucket caps measured faster without it
+    * (see Dedup.windowCapMembers and Dedup.sortedRunMembers). */
   def collectSmallest(c: Column, k: Int): Column =
     toCol(GraftShims.collectSmallestExpr(toExpr(c), k))
   def jaccardSorted(a: Column, b: Column): Column =
     toCol(JaccardSorted(toExpr(a), toExpr(b)))
 
-  /** Register SQL names so `spark.sql("SELECT graft_cosine(a,b) ...")` works.
-    * SQL literals arrive untyped-coerced (these expressions declare no
-    * inputTypes — AbstractDataType is private[sql]), so builders cast
-    * arguments to the expected types explicitly. */
-  def register(spark: SparkSession): Unit = {
+  /** The engine's SQL functions as (name, usage, builder) — the one table
+    * both [[register]] and [[graft.GraftExtensions]] read. SQL literals
+    * arrive untyped-coerced (these expressions declare no inputTypes —
+    * AbstractDataType is private[sql]), so builders cast arguments to the
+    * expected types explicitly. */
+  private[graft] val sqlFunctions: Seq[(String, String,
+      Seq[Expression] => Expression)] = {
     def asStr(e: Expression) = Cast(e, StringType)
     def asLong(e: Expression) = Cast(e, LongType)
+    def asInt(e: Expression) = Cast(e, IntegerType)
     def asFloats(e: Expression) = Cast(e, ArrayType(FloatType))
     def asStrs(e: Expression) = Cast(e, ArrayType(StringType))
-    GraftShims.registerFunction(spark, "graft_murmur2",
-      es => Murmur2(asStr(es.head)))
-    GraftShims.registerFunction(spark, "graft_cosine",
-      es => CosineSimilarity(asFloats(es(0)), asFloats(es(1))))
-    GraftShims.registerFunction(spark, "graft_simhash",
-      es => SimHash64(asStrs(es.head)))
-    GraftShims.registerFunction(spark, "graft_fingerprint",
-      es => RollingFingerprint(asStr(es.head)))
-    GraftShims.registerFunction(spark, "graft_hamming",
-      es => HammingDistance64(asLong(es(0)), asLong(es(1))))
-    GraftShims.registerFunction(spark, "graft_simhash_md5",
-      es => SimHashMd5(asStrs(es.head)))
-    GraftShims.registerFunction(spark, "graft_zorder",
-      es => ZOrder62(Cast(es(0), IntegerType), Cast(es(1), IntegerType)))
-    GraftShims.registerFunction(spark, "graft_ngram_rep",
-      es => NGramRepetition(asStrs(es(0)), es(1) match {
-        case Literal(v: Int, IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_ngram_rep(tokens, n): n must be an integer literal, got $other")
-      }))
+    Seq(
+      ("graft_murmur2", "Kafka-compatible murmur2 of a string",
+        es => Murmur2(asStr(es.head))),
+      ("graft_cosine", "cosine similarity of two float arrays",
+        es => CosineSimilarity(asFloats(es(0)), asFloats(es(1)))),
+      ("graft_simhash", "64-bit SimHash of a token array",
+        es => SimHash64(asStrs(es.head))),
+      ("graft_fingerprint", "rolling fingerprint of a string",
+        es => RollingFingerprint(asStr(es.head))),
+      ("graft_hamming", "hamming distance of two 64-bit values",
+        es => HammingDistance64(asLong(es(0)), asLong(es(1)))),
+      ("graft_simhash_md5", "60-bit md5-token-hash SimHash of a token array",
+        es => SimHashMd5(asStrs(es.head))),
+      ("graft_zorder", "Z-order interleave of two non-negative ints",
+        es => ZOrder62(asInt(es(0)), asInt(es(1)))),
+      ("graft_ngram_rep",
+        "word n-gram repetition ratio of a token array (n: int literal)",
+        es => NGramRepetition(asStrs(es(0)), es(1) match {
+          case Literal(v: Int, IntegerType) => v
+          case other => throw new IllegalArgumentException(
+            s"graft_ngram_rep(tokens, n): n must be an integer literal, got $other")
+        })))
   }
+
+  /** Register the SQL names on a running session so
+    * `spark.sql("SELECT graft_cosine(a,b) ...")` works. */
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, builder) =>
+      GraftShims.registerFunction(spark, name, builder)
+    }
 }

@@ -109,44 +109,56 @@ object Dedup {
     // evaluate the whole scan+shingle+minhash tree twice (Spark does not
     // reuse non-identical exchange branches). The bucket cap bounds the
     // state and the quadratic pair blowup of an adversarial hot bucket.
-    val candidates = bucketPairs(banded, "doc_id", bucketCap)
+    val candidates = bucketPairs(banded, "doc_id", bucketCap, windowCapMembers)
 
     // Verify candidates with exact Jaccard — but only ever compute shingle
-    // arrays for docs that appear in a candidate pair: semi-join the id set
-    // first, then project the (expensive) shingles for those rows alone.
-    // At scale this is the difference between re-shingling the whole corpus
-    // twice and shingling a few thousand candidates.
-    val candIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("cand_id"))
-      .distinct()
-    // semi-join BEFORE projecting shingles, so the shingle expression only
-    // evaluates for surviving rows (Catalyst keeps the project above the
-    // join; only column pruning is pushed into the branches).
-    val candShingles = docs
-      .join(candIds, id === col("cand_id"), "left_semi")
-      .select(id.as("doc_id"), shingles.as("sh"))
-    candidates
-      .join(candShingles.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(candShingles.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
-      .withColumn("jaccard",
-        round(TextFunctions.jaccard(col("sh_a"), col("sh_b")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // arrays for docs that appear in a candidate pair.
+    verifyPairs(candidates, docs, id, shingles, "jaccard", threshold)(
+      TextFunctions.jaccard)
   }
 
-  /** In-bucket candidate pairs from a banded frame (band, bucket, `idCol`):
-    * cap each bucket at its `bucketCap` smallest ids, then groupBy +
-    * collect + pair expansion.
+  /** The banded-pair kernel behind the three keyless LSH joins
+    * ([[minhashLsh]], [[simhashPairsFromSig]], [[embeddingLshPairs]]):
+    * cap each (band, bucket) of `banded` at its `bucketCap` smallest
+    * `idCol` members with `capForm`, expand every in-bucket member pair
+    * (x before y, so `id_a < id_b`) with the caller's per-pair columns
+    * `pairCols(x, y)`, drop pairs failing `keep` MAP-SIDE — before
+    * anything pair-shaped reaches an exchange — and deduplicate the pairs
+    * that share several bands.
     *
     * The cap bounds the quadratic pair blowup of an adversarial hot bucket
-    * (≤ cap²/2 pairs) AND the aggregation state (collect_list only ever
-    * sees ≤ cap rows per bucket).
+    * (≤ cap²/2 pairs) AND the per-bucket state. Its form is fixed by the
+    * band space the operator builds: [[windowCapMembers]] for hashed band
+    * spaces, [[sortedRunMembers]] for the occupied hyperplane space. */
+  private[graft] def bucketPairs(banded: DataFrame, idCol: String,
+      bucketCap: Int, capForm: (DataFrame, String, Int) => DataFrame,
+      pairCols: (Column, Column) => Seq[Column] = (_, _) => Nil,
+      keep: Column = lit(true)): DataFrame = {
+    require(bucketCap > 1, "bucketCap must allow at least one pair")
+    val ms = col("ms")
+    capForm(banded, idCol, bucketCap)
+      .filter(size(ms) > 1)
+      .select(explode(flatten(transform(ms, (x, i) =>
+        transform(slice(ms, i + 2, size(ms) - i - 1), y =>
+          struct(x.getField(idCol).as("id_a") +: y.getField(idCol).as("id_b")
+            +: pairCols(x, y): _*))))).as("p"))
+      .select(col("p.*"))
+      // null ids never pair; saying so HERE, below the pair dedup, keeps
+      // its exchange identical (reusable) in both branches of a
+      // verification tail, which would otherwise infer the filter on its
+      // join branch alone
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull && keep)
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** Members of each (band, bucket) — every column but band and bucket, as
+    * one struct per row — capped at the `cap` smallest `idCol` values via a
+    * row_number WINDOW and grouped into one ascending array `ms` per
+    * bucket (the id leads the struct, so struct order is id order).
     *
-    * CAP-FORM CHOICE (r9, measured): this site caps via the row_number
-    * WINDOW, not the bounded [[GraftFunctions.collectSmallest]] aggregate.
-    * MinHash buckets live in a 2^64 hash space — occupancy ≪ 1, so the
+    * CAP-FORM CHOICE (r9, measured): hashed band spaces (MinHash's 2^64,
+    * SimHash's pigeonhole slices) cap via the window, not the bounded
+    * [[GraftFunctions.collectSmallest]] aggregate. Occupancy ≪ 1, so the
     * group count ≈ the banded row count. In that regime the window wins:
     * its sort is Tungsten radix over 20-byte rows and the following
     * groupBy rides the SAME sort (sorted-run aggregation, already
@@ -159,11 +171,8 @@ object Dedup {
     * metrics. (Sweep-position numbers for these queries swing up to ×4
     * with the PREDECESSOR query's spill pressure in a shared bench JVM —
     * see Bench's scaladoc — so only matched-context or solo comparisons
-    * are admissible.) The bounded aggregate remains the right form where
-    * buckets are genuinely OCCUPIED — the corpus-sized-band hyperplane
-    * LSH site keeps it (its in-bucket window sort was the 137 GB
-    * memory-equivalent spill the r8 verdict named; the aggregate form
-    * measured 178.8 s vs the window's 231.2 s at sf100 solo).
+    * are admissible.) Buckets that are genuinely OCCUPIED take
+    * [[sortedRunMembers]] instead.
     *
     * SKEW CAVEAT: the occupancy ≪ 1 argument assumes near-distinct
     * signatures. A duplicate-heavy corpus — the adversarial input dedup
@@ -175,24 +184,44 @@ object Dedup {
     * order — exact dedup is cheaper and removes the identical-signature
     * mass), after which the near-distinct assumption holds by
     * construction. */
-  private[graft] def bucketPairs(banded: DataFrame, idCol: String,
-                                 bucketCap: Int): DataFrame = {
-    require(bucketCap > 1, "bucketCap must allow at least one pair")
-    val wB = Window.partitionBy(col("band"), col("bucket"))
-      .orderBy(col(idCol).asc)
+  private[graft] def windowCapMembers(banded: DataFrame, idCol: String,
+                                      cap: Int): DataFrame = {
+    val members = banded.columns.toSeq.filterNot(Set("band", "bucket"))
     banded
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= bucketCap)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("band"), col("bucket")).orderBy(col(idCol))))
+      .filter(col("rn") <= cap)
       .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids) - i - 1),
-          |            y -> struct(x AS id_a, y AS id_b))))""".stripMargin))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .dropDuplicates("id_a", "id_b")
+      .agg(sort_array(collect_list(struct(members.map(col): _*))).as("ms"))
+  }
+
+  /** Verifies candidate pairs on their payloads: `payload` is computed
+    * only for rows of `rows` that appear in a candidate pair (semi-join
+    * the id set first, then project the — expensive — payload for those
+    * rows alone), attached to both sides, scored, rounded to 4 places and
+    * thresholded. Emits (id_a, id_b, `scoreName`). */
+  private def verifyPairs(candidates: DataFrame, rows: DataFrame, id: Column,
+                          payload: Column, scoreName: String,
+                          threshold: Double)(
+      score: (Column, Column) => Column): DataFrame = {
+    val pairs = candidates.select(col("id_a"), col("id_b"))
+    val candIds = pairs
+      .select(explode(array(col("id_a"), col("id_b"))).as("cand_id"))
+      .distinct()
+    // semi-join BEFORE projecting the payload, so its expression only
+    // evaluates for surviving rows (Catalyst keeps the project above the
+    // join; only column pruning is pushed into the branches)
+    val cand = rows
+      .join(candIds, id === col("cand_id"), "left_semi")
+      .select(id.as("pid"), payload.as("pv"))
+    pairs
+      .join(cand.select(col("pid").as("id_a"), col("pv").as("pv_a")),
+        Seq("id_a"))
+      .join(cand.select(col("pid").as("id_b"), col("pv").as("pv_b")),
+        Seq("id_b"))
+      .withColumn(scoreName, round(score(col("pv_a"), col("pv_b")), 4))
+      .filter(col(scoreName) >= threshold)
+      .select(col("id_a"), col("id_b"), col(scoreName))
   }
 
   /** SimHash near-dup: pairs (id_a < id_b, hamming) within `maxHamming`
@@ -261,9 +290,9 @@ object Dedup {
     * Same shuffle economics as [[minhashLsh]]: the grouped pair expansion
     * evaluates the signature subtree once (no self-join), carries only
     * (doc_id, signature words) through the bucket shuffle, and the
-    * per-bucket capping window (spillable radix sort over tiny bucket
-    * partitions — the measured-right form for hashed band spaces, see
-    * [[bucketPairs]]) bounds hot-bucket state and pair blowup.
+    * per-bucket capping window (the measured-right form for hashed band
+    * spaces, see [[windowCapMembers]]) bounds hot-bucket state and pair
+    * blowup.
     */
   def simhashPairsFromSig(sig: DataFrame, sigBits: Int, bands: Int,
                           maxHamming: Int,
@@ -281,41 +310,20 @@ object Dedup {
     val bandCols = array((0 until bands).map(b =>
       shiftright(col(words(b / bandsPerWord)), (b % bandsPerWord) * bitsPerBand)
         .bitwiseAND(lit(mask))): _*)
-    val sigCols = col("doc_id") +: words.map(col)
-    val banded = sig.select(
-      sigCols :+ posexplode(bandCols).as(Seq("band", "bucket")): _*)
-    // pair struct fields: a<i>/b<i> = word i of the lower/higher id
-    val wordPairs = words.zipWithIndex
-      .map { case (w, i) => s"x.$w AS a$i, y.$w AS b$i" }.mkString(", ")
-    // window cap, not collectSmallest: hashed band spaces put ~1 row in
-    // ~every bucket — the tiny-group regime where the object aggregate
-    // measured ×2-×7 slower (see bucketPairs scaladoc)
-    val wB = Window.partitionBy(col("band"), col("bucket"))
-      .orderBy(col("doc_id").asc)
-    banded
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= bucketCap)
-      .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(struct(sigCols: _*))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(explode(expr(
-        s"""flatten(transform(ms, (x, i) ->
-          |  transform(slice(ms, i + 2, size(ms) - i - 1),
-          |    y -> struct(x.doc_id AS id_a, y.doc_id AS id_b, $wordPairs))))"""
-          .stripMargin)).as("p"))
-      // hamming BEFORE the pair dedup: it's a pure per-pair function
-      // (same value in every band a pair lands in), and one xor+popcount
-      // per candidate is map-side — so the dropDuplicates exchange
-      // carries only TRUE near-dup pairs at 20 B/row instead of every
-      // candidate with both signatures aboard. The sf10 sweep measured
-      // the difference: 14.6 GB of sort spill at 500k docs came from
-      // deduplicating the raw candidate stream.
-      .select(col("p.id_a"), col("p.id_b"),
-        words.indices.map(i =>
-          GraftFunctions.hamming(col(s"p.a$i"), col(s"p.b$i"))).reduce(_ + _)
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
+    val banded = sig.select(("doc_id" +: words).map(col) :+
+      posexplode(bandCols).as(Seq("band", "bucket")): _*)
+    // hamming BEFORE the pair dedup: it's a pure per-pair function
+    // (same value in every band a pair lands in), and one xor+popcount
+    // per candidate is map-side — so the dropDuplicates exchange
+    // carries only TRUE near-dup pairs at 20 B/row instead of every
+    // candidate with both signatures aboard. The sf10 sweep measured
+    // the difference: 14.6 GB of sort spill at 500k docs came from
+    // deduplicating the raw candidate stream.
+    bucketPairs(banded, "doc_id", bucketCap, windowCapMembers,
+      (x, y) => Seq(words.map(w =>
+        GraftFunctions.hamming(x.getField(w), y.getField(w))).reduce(_ + _)
+        .as("hamming")),
+      col("hamming") <= maxHamming)
   }
 
   /** Fail-fast misuse guard for the quadratic-per-block pair operators:
@@ -409,44 +417,29 @@ object Dedup {
       math.ceil(math.log(math.max(1.0, n.max(1L) / 16.0)) /
         math.log(2)).toInt))
 
-  /** Embedding cosine near-dup with random-hyperplane LSH blocking — the
-    * 100 TB path: no external blocking key needed. Each vector gets a
-    * `bitsPerBand`-bit hyperplane bucket per band (Charikar 2002); a pair
-    * at angular similarity θ agrees on one b-bit band with probability
-    * (1 - θ/π)^b, so high-cosine pairs collide in ≥1 of the bands w.h.p.
-    * while the bucket join stays linear. Candidates are verified with exact
-    * cosine — same shape as [[minhashLsh]]: ids-only shuffle, groupBy
-    * bucket pair expansion, semi-join before re-reading vectors.
+  /** Sorted-run bucket capping for OCCUPIED band spaces: repartition by
+    * (band, bucket), radix-sort plain Tungsten rows by (band, bucket,
+    * `idCol`) within each task, then a streaming mapPartitions walks the
+    * sorted runs keeping each bucket's `cap` smallest members (O(cap)
+    * state, one pass) and emits ONE array row `ms` per bucket — the same
+    * members frame, selected identically, as [[windowCapMembers]].
     *
-    * `bitsPerBand = 0` (the default) AUTO-SIZES the band width to the
-    * corpus: `max(8, ceil(log2(n / 16)))` from one bounded count() of the
-    * input (the same driver-scalar class as mergedN's min/max). This is
-    * the parameter 100 TB lives or dies on — the round-7 sf1 sweep
-    * measured the fixed 8-bit geometry going SUPER-linear (×18 at 10×
-    * data): a b-bit band has only 2^b buckets, so occupancy grows ∝ N and
-    * verification pairs ∝ N²/2^b. Auto keeps 2^b ∝ N — candidates stay
-    * ∝ N. At ≤4096 vectors auto lands on the legacy 8×8 packed geometry,
-    * bit-identical to an explicit `bitsPerBand = 8`.
-    *
-    * When `bands × bitsPerBand > 64`, each band draws an independent
-    * hyperplane signature (seed-offset per band) instead of slicing one
-    * packed 64-bit word — band width is then unbounded. Wider bands lower
-    * per-band match probability for NON-identical pairs (recall at the
-    * threshold is probabilistic, as with any LSH geometry; raise `bands`
-    * to buy it back); identical vectors collide on every band at any
-    * width, so the recall-of-identical invariant is exact regardless. */
-  /** Sorted-run bucket capping: repartition by (band, bucket), radix-sort
-    * plain Tungsten rows within each task, then a streaming mapPartitions
-    * walks the sorted runs keeping each bucket's `cap` smallest members
-    * (O(cap) state, one pass) and emits ONE array row per bucket. This is
-    * the third cap mechanism next to the row_number window and the
-    * bounded collectSmallest aggregate: it pays the same exchange but
-    * sorts NARROW DATA ROWS (radix-sortable, no aggregation buffers)
-    * and never plants per-group object state — the ObjectHashAggregate
-    * 128-key sort fallback with object-SERIALIZED buffers is exactly what
-    * it avoids. Selection is identical to both other forms: ascending
-    * vec_id per bucket (unique ids ⇒ struct order ≡ vec_id order). */
-  private[graft] def sortedRunMembers(banded: DataFrame,
+    * Why not the window: the hyperplane band space is corpus-sized
+    * ([[autoBandBits]]), so buckets are genuinely occupied, and r8
+    * measured the in-bucket window sort spilling ~137 GB
+    * memory-equivalent at sf100. The grouped collect ALWAYS sorts its
+    * shuffled input — ObjectHashAggregate falls back to sort-based
+    * aggregation past 128 keys/task, and raising that threshold OOMs (the
+    * object hash map is memory-untracked — the conservative default IS
+    * the safety mechanism). This walk accepts that the external sort is
+    * unavoidable and makes it cheap: it sorts NARROW DATA ROWS
+    * (radix-sortable, no aggregation buffers) and never plants per-group
+    * object state. Solo sf100 pair stage (r10): 64.1 s, at bit-identical
+    * shuffle (13.7 GB) to the bounded-aggregate cap it replaced (96.8 s).
+    * The residual spill is healthy bounded external-sort disk churn under
+    * a deliberately tiny heap, linear in input, and absent at sf10 and
+    * below. */
+  private[graft] def sortedRunMembers(banded: DataFrame, idCol: String,
                                       cap: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
@@ -463,7 +456,7 @@ object Dedup {
     implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
     banded
       .repartition(col("band"), col("bucket"))
-      .sortWithinPartitions(col("band"), col("bucket"), col("vec_id"))
+      .sortWithinPartitions(col("band"), col("bucket"), col(idCol))
       .mapPartitions { rows =>
         val it = rows.buffered
         new Iterator[Row] {
@@ -486,78 +479,41 @@ object Dedup {
       }
   }
 
+  /** Embedding cosine near-dup with random-hyperplane LSH blocking — the
+    * 100 TB path: no external blocking key needed. Each vector gets a
+    * `bitsPerBand`-bit hyperplane bucket per band (Charikar 2002); a pair
+    * at angular similarity θ agrees on one b-bit band with probability
+    * (1 - θ/π)^b, so high-cosine pairs collide in ≥1 of the bands w.h.p.
+    * while the bucket join stays linear. Candidates are verified with exact
+    * cosine — same shape as [[minhashLsh]]: the banded-pair kernel
+    * [[bucketPairs]], then a semi-join before re-reading vectors.
+    *
+    * `bitsPerBand = 0` (the default) AUTO-SIZES the band width to the
+    * corpus: `max(8, ceil(log2(n / 16)))` from one bounded count() of the
+    * input (the same driver-scalar class as mergedN's min/max). This is
+    * the parameter 100 TB lives or dies on — the round-7 sf1 sweep
+    * measured the fixed 8-bit geometry going SUPER-linear (×18 at 10×
+    * data): a b-bit band has only 2^b buckets, so occupancy grows ∝ N and
+    * verification pairs ∝ N²/2^b. Auto keeps 2^b ∝ N — candidates stay
+    * ∝ N. At ≤4096 vectors auto lands on the legacy 8×8 packed geometry,
+    * bit-identical to an explicit `bitsPerBand = 8`.
+    *
+    * When `bands × bitsPerBand > 64`, each band draws an independent
+    * hyperplane signature (seed-offset per band) instead of slicing one
+    * packed 64-bit word — band width is then unbounded. Wider bands lower
+    * per-band match probability for NON-identical pairs (recall at the
+    * threshold is probabilistic, as with any LSH geometry; raise `bands`
+    * to buy it back); identical vectors collide on every band at any
+    * width, so the recall-of-identical invariant is exact regardless. */
   def embeddingLshPairs(vecs: DataFrame, id: Column, vec: Column,
                         threshold: Double, bands: Int = 8,
                         bitsPerBand: Int = 0, seed: Long = 42L,
                         bucketCap: Int = 10000,
-                        rowCountHint: Option[Long] = None,
-                        sortedRunCap: Boolean = true): DataFrame = {
-    require(bands > 0, "need bands > 0")
+                        rowCountHint: Option[Long] = None): DataFrame = {
     val bits =
       if (bitsPerBand > 0) bitsPerBand
       else autoBandBits(
         graft.plans.PlanStats.rowCount(vecs.select(id), rowCountHint))
-    require(bits <= 62, s"bitsPerBand=$bits exceeds the 62-bit hash range")
-    // quantized sidecars (1 B/dim codes, max-abs scale, exact norm) are
-    // computed IN the banding projection — pure map-side, no join — and
-    // ride the bucket shuffle at ~dim+16 bytes/row.
-    //
-    // r9 scale note (three experiments at sf100, 2M vectors): the grouped
-    // collect ALWAYS sorts its shuffled input — ObjectHashAggregate
-    // falls back to sort-based aggregation past 128 keys/task, and with
-    // ~16M banded rows over 32 tasks that external sort under the
-    // 150 MB/task budget is the measured "LSH spill" (the r8 hypothesis
-    // that the row_number window was the cause is disproven: replacing it
-    // with the bounded smallest-cap aggregate kept output identical and
-    // cut spill only ~18%, 60.8 → 49.9 GB memory-equivalent, because the
-    // fallback sorts either way). Raising the fallback threshold OOMs
-    // (the object hash map is memory-untracked — the conservative default
-    // IS the safety mechanism); stripping sidecars off the banding
-    // exchange and prefiltering after a pair-level dedup+join is ~2×
-    // WORSE (the raw ~110M-pair candidate stream then crosses three
-    // exchanges and a 110M-key dedup). The in-expansion prefilter below
-    // — candidates die map-side before anything pair-shaped reaches an
-    // exchange — remains the right shape; the residual spill is healthy
-    // bounded external-sort disk churn under a deliberately tiny heap,
-    // linear in input, and absent at sf10 and below.
-    //
-    // r10: the FOURTH mechanism — sortedRunCap, the default — accepts
-    // that the external sort is unavoidable and makes it cheap: sort
-    // plain narrow Tungsten rows (radix path, no aggregation buffers),
-    // then build each bucket's capped member array in a one-pass
-    // streaming mapPartitions. Solo sf100 pair stage: 96.8 s (aggregate)
-    // → 64.1 s (sorted-run) at bit-identical shuffle (13.7 GB) and the
-    // same external-sort spill — the object-serialized agg-buffer
-    // machinery was the remaining distinguishing cost, exactly what the
-    // sorted-run walk removes. Output identity pinned by
-    // EmbeddingLshSpec (hot buckets, both geometries, cap binding).
-    val sidecarCols = Seq(
-      GraftFunctions.int8Codes(vec).as("c8"),
-      GraftFunctions.int8Scale(vec).as("s8"),
-      sqrt(aggregate(transform(vec, x => x.cast("double") * x.cast("double")),
-        lit(0.0), (acc, x) => acc + x)).as("nrm"))
-    val banded =
-      if (bands * bits <= 64) {
-        // packed geometry: ONE fused signature, band buckets are bit
-        // slices — one kernel pass per vector (the round-6 shape)
-        val sig = vecs.select(id.as("vec_id") +: sidecarCols :+
-          GraftFunctions.hyperplaneSimhash(vec, bands * bits, seed)
-            .as("hsig"): _*)
-        val mask = (1L << bits) - 1
-        val bandCols = array((0 until bands).map(b =>
-          shiftright(col("hsig"), b * bits).bitwiseAND(lit(mask))): _*)
-        sig.select(col("vec_id"), col("c8"), col("s8"), col("nrm"),
-          posexplode(bandCols).as(Seq("band", "bucket")))
-      } else {
-        // wide geometry: per-band independent signatures — band width no
-        // longer capped by one 64-bit word (bands × bits kernel dots per
-        // vector, map-side codegen, still linear)
-        val bandCols = array((0 until bands).map(b =>
-          GraftFunctions.hyperplaneSimhash(vec, bits,
-            seed + 0x9E3779B97F4A7CL * (b + 1))): _*)
-        vecs.select(id.as("vec_id") +: sidecarCols :+
-          posexplode(bandCols).as(Seq("band", "bucket")): _*)
-      }
     // The candidate-pair stream is PREFILTERED map-side with a SOUND int8
     // error bound before anything pair-shaped reaches an exchange. The
     // sf10 sweep measured why: verifying candidates by joining the pair
@@ -572,61 +528,63 @@ object Dedup {
     // |approxDot − dot| ≤ n·sa·sb·(2/254 + 1/254²) over the n-prefix, so
     // cos ≤ (approxDot + errDot)/(‖a‖·‖b‖) when both lengths equal n
     // (full norm = prefix norm); ragged pairs — where the kernel's
-    // prefix norms diverge from the precomputed full norms — skip the
-    // prefilter entirely. Zero-norm vectors score 0.0, exactly the
+    // prefix norms diverge from the precomputed full norms — get no bound
+    // (+∞) and always pass. Zero-norm vectors score 0.0, exactly the
     // kernel's convention. The 1e-4 slack absorbs round(cos, 4).
-    val p = col("p")
     val errC = 2.0 / 254.0 + 1.0 / 64516.0
-    val approxCos = when(col("nprod") > 0.0,
-      (col("dotq") * col("sprod") / lit(16129.0) +
-        col("n").cast("double") * col("sprod") * lit(errC)) / col("nprod"))
-      .otherwise(lit(0.0))
-    // bounded smallest-cap per bucket: either the collectSmallest
-    // aggregate (selection identical to the former row_number window:
-    // vec_id leads the struct — see the r9 scale note above) or the
-    // sorted-run mapPartitions walk ([[sortedRunMembers]]); all three
-    // mechanisms select the same members, ScaleDesignSpec pins it
-    val memberArrays =
-      if (sortedRunCap) sortedRunMembers(banded, bucketCap)
-      else banded
-        .groupBy(col("band"), col("bucket"))
-        .agg(sort_array(GraftFunctions.collectSmallest(struct(
-          col("vec_id"), col("c8"), col("s8"), col("nrm")), bucketCap))
-          .as("ms"))
-    val survivors = memberArrays
-      .filter(size(col("ms")) > 1)
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms")) - i - lit(1)),
-          y => struct(
-            x.getField("vec_id").as("id_a"),
-            y.getField("vec_id").as("id_b"),
-            GraftFunctions.int8Dot(x.getField("c8"), y.getField("c8"))
-              .as("dotq"),
-            (x.getField("s8") * y.getField("s8")).as("sprod"),
-            (x.getField("nrm") * y.getField("nrm")).as("nprod"),
-            least(size(x.getField("c8")), size(y.getField("c8"))).as("n"),
-            (size(x.getField("c8")) =!= size(y.getField("c8")))
-              .as("ragged")))))).as("p"))
-      .select(p.getField("id_a").as("id_a"), p.getField("id_b").as("id_b"),
-        p.getField("dotq").as("dotq"), p.getField("sprod").as("sprod"),
-        p.getField("nprod").as("nprod"), p.getField("n").as("n"),
-        p.getField("ragged").as("ragged"))
-      .filter(col("ragged") || approxCos >= lit(threshold) - lit(1e-4))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val candIds = survivors
-      .select(explode(array(col("id_a"), col("id_b"))).as("cand_id"))
-      .distinct()
-    val candVecs = vecs
-      .join(candIds, id === col("cand_id"), "left_semi")
-      .select(id.as("vid"), vec.as("v"))
-    survivors
-      .join(candVecs.select(col("vid").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(candVecs.select(col("vid").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .withColumn("cos",
-        round(GraftFunctions.cosineSimilarity(col("v_a"), col("v_b")), 4))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+    def cosBound(x: Column, y: Column): Column = {
+      val (ca, cb) = (x.getField("c8"), y.getField("c8"))
+      val sprod = x.getField("s8") * y.getField("s8")
+      val nprod = x.getField("nrm") * y.getField("nrm")
+      when(size(ca) =!= size(cb), lit(Double.PositiveInfinity))
+        .when(nprod > 0.0, (GraftFunctions.int8Dot(ca, cb) * sprod /
+          lit(16129.0) + size(ca).cast("double") * sprod * lit(errC)) / nprod)
+        .otherwise(lit(0.0))
+    }
+    val candidates = bucketPairs(
+      hyperplaneBands(vecs, id, vec, bands, bits, seed), "vec_id", bucketCap,
+      sortedRunMembers, (x, y) => Seq(cosBound(x, y).as("cos_ub")),
+      col("cos_ub") >= lit(threshold) - lit(1e-4))
+    verifyPairs(candidates, vecs, id, vec, "cos", threshold)(
+      GraftFunctions.cosineSimilarity)
+  }
+
+  /** The hyperplane band space of [[embeddingLshPairs]]: one row per
+    * (vector, band) — (vec_id, c8, s8, nrm, band, bucket). The quantized
+    * sidecars (1 B/dim codes, max-abs scale, exact norm) are computed IN
+    * the banding projection — pure map-side, no join — and ride the
+    * bucket shuffle at ~dim+16 bytes/row. */
+  private[graft] def hyperplaneBands(vecs: DataFrame, id: Column, vec: Column,
+                                     bands: Int, bits: Int,
+                                     seed: Long): DataFrame = {
+    require(bands > 0, "need bands > 0")
+    require(bits <= 62, s"bitsPerBand=$bits exceeds the 62-bit hash range")
+    val sidecarCols = Seq(
+      GraftFunctions.int8Codes(vec).as("c8"),
+      GraftFunctions.int8Scale(vec).as("s8"),
+      sqrt(aggregate(transform(vec, x => x.cast("double") * x.cast("double")),
+        lit(0.0), (acc, x) => acc + x)).as("nrm"))
+    if (bands * bits <= 64) {
+      // packed geometry: ONE fused signature, band buckets are bit
+      // slices — one kernel pass per vector (the round-6 shape)
+      val sig = vecs.select(id.as("vec_id") +: sidecarCols :+
+        GraftFunctions.hyperplaneSimhash(vec, bands * bits, seed)
+          .as("hsig"): _*)
+      val mask = (1L << bits) - 1
+      val bandCols = array((0 until bands).map(b =>
+        shiftright(col("hsig"), b * bits).bitwiseAND(lit(mask))): _*)
+      sig.select(col("vec_id"), col("c8"), col("s8"), col("nrm"),
+        posexplode(bandCols).as(Seq("band", "bucket")))
+    } else {
+      // wide geometry: per-band independent signatures — band width no
+      // longer capped by one 64-bit word (bands × bits kernel dots per
+      // vector, map-side codegen, still linear)
+      val bandCols = array((0 until bands).map(b =>
+        GraftFunctions.hyperplaneSimhash(vec, bits,
+          seed + 0x9E3779B97F4A7CL * (b + 1))): _*)
+      vecs.select(id.as("vec_id") +: sidecarCols :+
+        posexplode(bandCols).as(Seq("band", "bucket")): _*)
+    }
   }
 
   /** Times the observe-folded convergence statistic fell back to its own
@@ -635,6 +593,32 @@ object Dedup {
     * changing checkpoint's execution-event behavior). */
   private[graft] val ccObserveFallbacks =
     new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The convergence rule of [[connectedComponents]]: a round converges
+    * when its label sum equals the previous round's. The sum is the
+    * metric observed on the checkpoint materialization, or — once that is
+    * missing — the explicit aggregation, from then on for EVERY round
+    * (sticky), and the fallback round only seeds the comparison. The two
+    * are not comparable: a reliable checkpoint runs the observed plan
+    * twice, so its observed sum is 2× the true sum, while the aggregation
+    * is 1×. A rule that mixed them per round could compare 2× with 1×,
+    * never converge, or falsely converge on a 1× sum that equals a later
+    * 2× one. */
+  private[graft] final case class LabelSums(
+      prev: Option[java.math.BigDecimal] = None, fellBack: Boolean = false) {
+    /** (converged, next state) for one round; `labelSum` runs only when
+      * the observed sum is missing or the fallback already fired. */
+    def next(observed: => Option[java.math.BigDecimal],
+             labelSum: => java.math.BigDecimal): (Boolean, LabelSums) =
+      (if (fellBack) None else observed) match {
+        case Some(s) =>
+          (prev.exists(_.compareTo(s) == 0), LabelSums(Some(s)))
+        case None =>
+          val s = labelSum
+          (fellBack && prev.exists(_.compareTo(s) == 0),
+            LabelSums(Some(s), fellBack = true))
+      }
+  }
 
   /** Connected components over an undirected edge list — the closure step
     * of every near-dup pipeline: pairwise edges (from [[minhashLsh]],
@@ -731,12 +715,14 @@ object Dedup {
       sym.union(labels.select(col("id").as("u"), col("id").as("v")))
     val symPlus = (if (manyNodes) symSelf.repartition(col("v")) else symSelf)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
+    def labelSum(df: DataFrame): java.math.BigDecimal = {
+      ccObserveFallbacks.incrementAndGet()
       df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0)
-    // prevSum lazily seeded by round 1's result: labels start at comp=id,
-    // so the first round can never be the fixpoint unless a later sum
-    // repeats — skipping the initial sum saves one job.
-    var prevSum: java.math.BigDecimal = null
+    }
+    // no previous sum yet: labels start at comp=id, so the first round can
+    // never be the fixpoint unless a later sum repeats — skipping the
+    // initial sum saves one job.
+    var sums = LabelSums()
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -764,17 +750,17 @@ object Dedup {
       // (queryExecution.observedMetrics) — no listener, no wait; if a
       // Spark release ever stopped collecting metrics for checkpoint
       // actions, the explicit aggregation is the fallback (correctness
-      // identical, one extra job — a spec pins that it never fires).
+      // identical, one extra job — a spec pins that it never fires; see
+      // LabelSums for why it is sticky).
       val obsDf = jumped.observe("cc_labelsum",
         sum(col("comp").cast("decimal(38,0)")).as("labelsum"))
       val next = materialize(obsDf)
-      val s = obsDf.queryExecution.observedMetrics.get("cc_labelsum")
-        .map(_.getDecimal(0)).filter(_ != null) match {
-        case Some(d) => d
-        case None => ccObserveFallbacks.incrementAndGet(); labelSum(next)
-      }
-      converged = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
+      val (done, nextSums) = sums.next(
+        obsDf.queryExecution.observedMetrics.get("cc_labelsum")
+          .map(_.getDecimal(0)).filter(_ != null),
+        labelSum(next))
+      converged = done
+      sums = nextSums
       labels.unpersist()
       labels = next
       // symPlus is fully cached once round 1's join consumed it — the
@@ -802,10 +788,6 @@ object Dedup {
         col("cluster_size"))
   }
 
-  /** Embedding cosine near-dup, blocked to keep the pair space linear.
-    * `maxPairsPerBlock` fails the call fast when a block's pair estimate
-    * goes quadratic-hot (see [[tokenJaccardPairs]]); [[embeddingLshPairs]]
-    * is the keyless path. `Long.MaxValue` disables. */
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     * deduplication of an embedding corpus: cluster, then compare pairs
     * ONLY within a cluster, and mark every vector that has a
@@ -942,6 +924,10 @@ object Dedup {
         coalesce(col("dup_spans"), lit(0L)).as("dup_spans"))
   }
 
+  /** Embedding cosine near-dup, blocked to keep the pair space linear.
+    * `maxPairsPerBlock` fails the call fast when a block's pair estimate
+    * goes quadratic-hot (see [[tokenJaccardPairs]]); [[embeddingLshPairs]]
+    * is the keyless path. `Long.MaxValue` disables. */
   def embeddingNearDup(vecs: DataFrame, id: Column, vec: Column,
                        block: Column, threshold: Double,
                        maxPairsPerBlock: Long = 25000000L): DataFrame = {

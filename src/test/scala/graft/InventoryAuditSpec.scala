@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The same source audit keeps every routing threshold in one home: each
   * value is defined in `graft.operators.Routing` and nowhere else, and no
-  * public operator takes one as a parameter.
+  * public operator takes one as a parameter. It also keeps one copy of
+  * each shared mechanism: the LSH in-bucket pair expansion, the streaming
+  * twins' replay harness and the SQL-function table.
   */
 class InventoryAuditSpec extends AnyFunSuite {
 
@@ -130,5 +132,38 @@ class InventoryAuditSpec extends AnyFunSuite {
     } yield s"${mainDir.relativize(f)}: def $defName takes $n"
     assert(bad.isEmpty, "public operator takes a routing threshold:\n" +
       bad.mkString("\n"))
+  }
+
+  test("the in-bucket pair expansion is written once under graft/operators") {
+    val expansion = """slice\([^\n]*\bi \+ (lit\()?2\b""".r
+    val hits = for {
+      f <- scalaFiles(opsDir)
+      (line, i) <- read(f).linesIterator.zipWithIndex
+        if expansion.findFirstIn(line).isDefined
+    } yield s"${mainDir.relativize(f)}:${i + 1}"
+    assert(hits.size == 1, "in-bucket pair expansion copies:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("the streaming twins share one replay harness") {
+    val harness = """MemoryStream\[\(Long, String\)\]""".r
+    assert(harness.findAllMatchIn(src).size == 1,
+      "SparkEntry builds more than one (Long, String) memory stream")
+  }
+
+  test("graft_ SQL names appear only in the one function table") {
+    val name = "\"(graft_[a-z0-9_]+)\"".r
+    val hits = for {
+      f <- scalaFiles(mainDir)
+      m <- name.findAllMatchIn(read(f))
+    } yield mainDir.relativize(f).toString -> m.group(1)
+    val files = hits.map(_._1).distinct
+    assert(files == Seq("graft/functions/expressions.scala"),
+      s"graft_ SQL names outside the function table: $files")
+    val names = hits.map(_._2)
+    assert(names.distinct == names, s"a name is written twice: $names")
+    assert(names.toSet ==
+      graft.functions.GraftFunctions.sqlFunctions.map(_._1).toSet,
+      "every graft_ literal must be a row of GraftFunctions.sqlFunctions")
   }
 }

@@ -79,12 +79,37 @@ class ExpressionsSpec extends SparkSpecBase {
   }
 }
 
-class GraftExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
+class GraftExtensionsSpec extends SparkSpecBase {
   test("GraftExtensions wires all five functions without error") {
-    // full end-to-end (spark.sql.extensions config in a fresh JVM) is
-    // exercised by the ExtSmoke drive; here we pin the injection wiring.
+    // pins the injection wiring alone; the test below resolves the names
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.GraftExtensions().apply(ext)
+  }
+
+  test("a session built with GraftExtensions resolves every name " +
+    "register provides") {
+    import org.apache.spark.sql.SparkSession
+    val registered = spark.newSession()
+    GraftFunctions.register(registered)
+    val names = registered.catalog.listFunctions().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSet
+    assert(names.nonEmpty)
+    // a fresh session on the shared context, its functions coming from
+    // the extension alone
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val withExt =
+      try SparkSession.builder()
+        .withExtensions(new graft.GraftExtensions()).getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(withExt ne spark)
+    val missing = names.filterNot(withExt.catalog.functionExists)
+    assert(missing.isEmpty, s"names register provides but the " +
+      s"extension does not: $missing")
+    assert(withExt.sql("SELECT graft_zorder(3, 3)").head().getLong(0) == 15L)
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
@@ -73,6 +74,19 @@ class DedupSpec extends SparkSpecBase {
     val full = Dedup.simhashPairs(hot, col("doc_id"), col("text"),
       maxHamming = 0).count()
     assert(full == 50L * 49 / 2)
+  }
+
+  test("bucketCap = 1 is rejected by every LSH join, not silently pairless") {
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(2f, 0f)))
+      .toDF("vec_id", "embedding")
+    for (call <- Seq[() => Any](
+        () => Dedup.minhashLsh(docs, col("doc_id"), col("text"),
+          bucketCap = 1),
+        () => Dedup.simhashPairs(docs, col("doc_id"), col("text"),
+          bucketCap = 1),
+        () => Dedup.embeddingLshPairs(vecs, col("vec_id"), col("embedding"),
+          threshold = 0.9, bitsPerBand = 8, bucketCap = 1)))
+      intercept[IllegalArgumentException](call())
   }
 
   test("tokenJaccardPairs respects blocking") {
@@ -170,6 +184,28 @@ class ComponentsSpec extends SparkSpecBase {
     // all would silently undo the one-job-per-round optimization
     assert(Dedup.ccObserveFallbacks.get() == before,
       "labelSum fell back to its own job — observe() fold is not firing")
+  }
+
+  test("convergence never compares an observed sum with a fallback sum") {
+    // reliable checkpoints run the observed plan twice (observed = 2× the
+    // true label sum); the fallback aggregation is 1×. True sums below:
+    // 100, 50, 40, 40 — the fixpoint is reached at round 4.
+    def bd(v: Long) = java.math.BigDecimal.valueOf(v)
+    def run(rounds: Seq[(Option[Long], Long)]): Seq[Boolean] =
+      rounds.scanLeft((false, Dedup.LabelSums())) {
+        case ((_, st), (obs, trueSum)) => st.next(obs.map(bd), bd(trueSum))
+      }.tail.map(_._1)
+    // round 1 falls back (1× = 100), round 2 observes 2×50 = 100: a
+    // per-round rule would see 100 == 100 and stop on unconverged labels
+    assert(run(Seq(None -> 100L, Some(100L) -> 50L, Some(80L) -> 40L,
+      Some(80L) -> 40L)) == Seq(false, false, false, true))
+    // the observation flickers after one fallback: a per-round rule
+    // compares 2× with 1× every round and never converges
+    assert(run(Seq(Some(200L) -> 100L, None -> 50L, Some(80L) -> 40L,
+      None -> 40L, Some(80L) -> 40L)) == Seq(false, false, false, true, true))
+    // all observed: the normal path never runs the aggregation
+    val st = Dedup.LabelSums().next(Some(bd(7)), sys.error("no job"))._2
+    assert(st.next(Some(bd(7)), sys.error("no job"))._1)
   }
 
   test("maxIter guard throws instead of returning partial labels") {
@@ -913,10 +949,11 @@ class EmbeddingLshSpec extends SparkSpecBase {
 
   test("sorted-run cap emits pairs identical to the aggregate cap, " +
     "both geometries, cap binding and not") {
-    // three cap mechanisms must be interchangeable: the bounded aggregate
-    // (default) and the sorted-run mapPartitions walk select the same
-    // ascending-vec_id members per bucket — incl. on a HOT bucket where
-    // the cap actually bites (20 identical-direction vectors, cap 5)
+    // the two cap forms of the banded-pair kernel must be interchangeable
+    // on the hyperplane band space: the sorted-run mapPartitions walk
+    // selects the same ascending-vec_id members per bucket as the
+    // row_number window (the reference) — incl. on a HOT bucket where the
+    // cap actually bites (20 identical-direction vectors, cap 5)
     val rnd = new scala.util.Random(11)
     val hot = (0 until 20).map(i => (i.toLong, Array(1f, 0f, 0f, 0f, 0f,
       0f, 0f, 0f).map(_ * (1f + i))))
@@ -925,17 +962,20 @@ class EmbeddingLshSpec extends SparkSpecBase {
     }
     val vecs = (hot ++ spread).toDF("vec_id", "embedding")
     for ((bands, bits) <- Seq((8, 8), (4, 20))) { // packed and wide
-      def run(sorted: Boolean) =
-        Dedup.embeddingLshPairs(vecs, col("vec_id"), col("embedding"),
-            threshold = 0.5, bands = bands, bitsPerBand = bits,
-            bucketCap = 5, sortedRunCap = sorted)
-          .as[(Long, Long, Double)].collect().toSet
-      val agg = run(false)
-      val srt = run(true)
-      assert(agg == srt,
-        s"bands=$bands bits=$bits: only-agg=${agg.diff(srt)} " +
-          s"only-sorted=${srt.diff(agg)}")
-      assert(agg.nonEmpty, "hot bucket must yield capped pairs")
+      val banded = Dedup.hyperplaneBands(vecs, col("vec_id"),
+        col("embedding"), bands, bits, seed = 42L)
+      def run(capForm: (DataFrame, String, Int) => DataFrame) =
+        Dedup.bucketPairs(banded, "vec_id", 5, capForm)
+          .as[(Long, Long)].collect().toSet
+      val win = run(Dedup.windowCapMembers)
+      val srt = run(Dedup.sortedRunMembers)
+      assert(win == srt,
+        s"bands=$bands bits=$bits: only-window=${win.diff(srt)} " +
+          s"only-sorted=${srt.diff(win)}")
+      // the hot bucket keeps exactly its 5 smallest ids
+      assert(win.filter(_._2 < 20) ==
+        (for (a <- 0L until 5L; b <- a + 1 until 5L) yield (a, b)).toSet,
+        "hot bucket must yield exactly the capped pairs")
     }
   }
 

@@ -350,8 +350,9 @@ class DedupScaleSpec extends SparkSpecBase {
     val cap = 20
     val banded = (0 until 10 * cap).reverse.map(i => (0, 0L, i.toLong))
       .toDF("band", "bucket", "doc_id")
-    val pairs = Dedup.bucketPairs(banded, "doc_id", cap)
-      .as[(Long, Long)].collect()
+    def capped = Dedup.bucketPairs(banded, "doc_id", cap,
+      Dedup.windowCapMembers)
+    val pairs = capped.as[(Long, Long)].collect()
     assert(pairs.length == cap * (cap - 1) / 2,
       s"expected capped pair count, got ${pairs.length}")
     assert(pairs.forall { case (a, b) => a < cap && b < cap && a < b },
@@ -361,14 +362,18 @@ class DedupScaleSpec extends SparkSpecBase {
     // WINDOW is the fast form (Tungsten radix sort + sorted-run groupBy);
     // the bounded collectSmallest aggregate allocates per-group PQ state
     // for millions of one-row groups and object-sorts past 128 keys/task
-    // (×7 on dedup_minhash at sf100). The bounded aggregate belongs to
-    // the OCCUPIED-bucket regime — the hyperplane-LSH site, pinned below.
-    val plan = Dedup.bucketPairs(banded, "doc_id", cap)
-      .queryExecution.executedPlan.toString
+    // (×7 on dedup_minhash at sf100). The OCCUPIED-bucket regime — the
+    // hyperplane-LSH site, pinned below — takes the sorted-run walk.
+    val plan = capped.queryExecution.executedPlan.toString
     assert(plan.contains("Window"),
       s"hashed-band capping must ride the window sort:\n$plan")
     assert(!plan.contains("partial_collect_top_k"),
       s"tiny-group capping regressed to the object aggregate:\n$plan")
+    // and both hashed-band operators pick that cap form
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+    for (op <- Seq(Dedup.minhashLsh(docs, col("doc_id"), col("text")),
+        Dedup.simhashPairs(docs, col("doc_id"), col("text"))))
+      assert(op.queryExecution.executedPlan.toString.contains("Window"))
   }
 
   test("embedding-LSH capping rides the sorted-run walk (occupied buckets)") {
