@@ -124,7 +124,7 @@ object SparkEntry {
   }
 
   /** Exact cosine via SQL higher-order folds — an execution path
-    * INDEPENDENT of the codegen CosineSimilarity kernel; the partial-oracle
+    * INDEPENDENT of the codegen cosineSimilarity kernel; the partial-oracle
     * invariant queries use it to cross-check reported scores (interpreted
     * lambdas, so only ever applied to small candidate/result sets). */
   private def cosineHof(a: String, b: String): Column = {
@@ -1119,7 +1119,7 @@ object SparkEntry {
         col("doc_id"), col("text"), maxHamming = 3)
     }),
 
-    // The production path: fused codegen SimHash64 kernel (custom 64-bit
+    // The production path: fused codegen simHash64 kernel (custom 64-bit
     // hash, KAT-pinned in GraftHashSpec). The signature is not
     // DuckDB-reproducible, so the oracle is PARTIAL: invariant booleans
     // computed from the operator's pair output by an INDEPENDENT in-engine
@@ -1328,8 +1328,8 @@ object SparkEntry {
       // identical-vector pairs (equi-join on vector hash, verified by array
       // equality): cosine 1 >= threshold and signatures agree on all bands,
       // so every one of them MUST appear in the LSH output. Zero-norm
-      // vectors are excluded — the CosineSimilarity kernel defines their
-      // cosine as 0.0 (expressions.scala zero-norm guard), so the
+      // vectors are excluded — the cosineSimilarity kernel defines their
+      // cosine as 0.0 (GraftHash.cosineSimilarity's zero-norm guard), so the
       // operator's `cos >= threshold` filter correctly drops them even
       // when the vectors are bit-identical, and demanding them here would
       // be a false failure.

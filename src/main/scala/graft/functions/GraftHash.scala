@@ -4,9 +4,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static hash kernels, callable both from interpreted `eval` paths and from
-  * whole-stage-generated Java (a generated-code call to a static method keeps
-  * the surrounding operators inside one codegen stage).
+/** Static kernels behind every [[GraftFunctions]] column: each one is
+  * called through a [[KernelCall]], both from interpreted `eval` and from
+  * whole-stage-generated Java (a generated-code call to a static method
+  * keeps the surrounding operators inside one codegen stage). Data
+  * arguments come first, constants after them.
   *
   * All algorithms below are public-domain / published:
   *  - murmur2: Austin Appleby's MurmurHash2, the variant Kafka uses for key
@@ -459,7 +461,8 @@ object GraftHash {
     inter.toDouble / union.toDouble
   }
 
-  /** Bloom membership probe — the codegen kernel behind BloomMightContain.
+  /** Bloom membership probe — the kernel behind
+    * [[GraftFunctions.bloomMightContain]].
     * `mightContainBinary(utf8.getBytes)` is exactly `mightContainString`
     * on the equivalent java.lang.String (Spark's BloomFilterImpl hashes a
     * string as its UTF-8 bytes), so probing the raw UTF8String avoids a
@@ -468,8 +471,39 @@ object GraftHash {
                         bloom: org.apache.spark.util.sketch.BloomFilter): Boolean =
     bloom.mightContainBinary(s.getBytes)
 
-  /** Subword-token count — the codegen kernel behind SubwordCount: the
-    * number of matches of `[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]` (maximal
+  /** Bloom membership probe of a 64-bit value — the kernel behind
+    * [[GraftFunctions.bloomMightContainLong]]. */
+  def bloomMightContainLong(v: Long,
+                            bloom: org.apache.spark.util.sketch.BloomFilter): Boolean =
+    bloom.mightContainLong(v)
+
+  /** Cosine similarity of two float vectors over their common prefix
+    * (n = min length), accumulated in double; a zero-norm side gives 0.0.
+    * [[CentroidBank]] replays this exact loop. */
+  def cosineSimilarity(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = a.getFloat(i).toDouble
+      val yi = b.getFloat(i).toDouble
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Argmax-cosine centroid id of a vector against a plan-time bank. */
+  def nearestCentroidId(vec: ArrayData, bank: CentroidBank): Long =
+    bank.assign(vec)
+
+  /** [[nearestCentroidId]] over a two-level [[HierCentroidBank]]. */
+  def nearestCentroidIdHier(vec: ArrayData, bank: HierCentroidBank): Long =
+    bank.assign(vec)
+
+  /** Subword-token count — the kernel behind
+    * [[GraftFunctions.subwordCount]]: the number of matches of
+    * `[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]` (maximal
     * ASCII-letter runs + maximal digit runs + every other glyph, one per
     * code point), counted in ONE pass over the UTF-8 BYTES with zero
     * allocation. `regexp_extract_all(...).size` materializes every match
@@ -511,7 +545,7 @@ object GraftHash {
   }
 
   /** Count of array elements present in `set` (duplicates counted) — the
-    * codegen kernel behind StopwordHits. */
+    * kernel behind [[GraftFunctions.stopwordHits]]. */
   def countIn(arr: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
     val n = arr.numElements()
     var c = 0
@@ -529,8 +563,9 @@ object GraftHash {
   @inline private def isRegexWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
-  /** BPE boundary-padding — the codegen kernel behind BpeSymbolPad:
-    * byte-exact `" " || regexp_replace(s, "(\S)", "$1  ")`, built in ONE
+  /** BPE boundary-padding — the kernel behind
+    * [[GraftFunctions.bpeSymbolPad]]: byte-exact
+    * `" " || regexp_replace(s, "(\S)", "$1  ")`, built in ONE
     * pass over the UTF-8 bytes instead of a per-code-point regex match
     * (the padding regex alone was 75.4 s of bpe_encode's sf100 budget —
     * ~2.5 B group substitutions). `\S` in both java.util.regex and RE2
@@ -560,8 +595,8 @@ object GraftHash {
     UTF8String.fromBytes(out, 0, o)
   }
 
-  /** Space-run collapse + space trim — the codegen kernel behind
-    * CollapseSpaces: byte-exact `trim(regexp_replace(s, " +", " "))`
+  /** Space-run collapse + space trim — the kernel behind
+    * [[GraftFunctions.collapseSpaces]]: byte-exact `trim(regexp_replace(s, " +", " "))`
     * (0x20 ONLY, like the regex and like Spark's trim; other whitespace
     * passes through — an interior tab stays glued to its neighbors
     * exactly as the regex form leaves it). One pass, one allocation. */

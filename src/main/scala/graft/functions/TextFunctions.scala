@@ -21,13 +21,13 @@ object TextFunctions {
   /** BPE-ish subword token count: count of maximal runs matched by a
     * wordpiece-flavored regex (letters runs, digit runs, other glyph runs)
     * — `[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]`. A cheap, deterministic proxy
-    * for an LLM tokenizer's token count. Backed by the SubwordCount
-    * codegen scanner (one allocation-free byte pass): the literal
-    * `size(regexp_extract_all(...))` form materializes every match string
-    * and was measured at 109.6 s over 5M docs at sf100 — the entire
-    * text_stats budget; the scanner counts the identical automaton's
-    * matches and is cross-checked against DuckDB's regex engine by every
-    * oracle compare. */
+    * for an LLM tokenizer's token count. Backed by the
+    * [[GraftHash.subwordCount]] codegen scanner (one allocation-free byte
+    * pass): the literal `size(regexp_extract_all(...))` form materializes
+    * every match string and was measured at 109.6 s over 5M docs at sf100
+    * — the entire text_stats budget; the scanner counts the identical
+    * automaton's matches and is cross-checked against DuckDB's regex
+    * engine by every oracle compare. */
   def regexTokenCount(text: Column): Column =
     GraftFunctions.subwordCount(text)
 
@@ -70,7 +70,7 @@ object TextFunctions {
     "zh" -> Seq("的", "是", "了", "在", "和", "有", "我", "不", "人", "这"))
 
   /** Count of tokens that belong to a fixed stopword list (duplicates
-    * counted). Backed by the StopwordHits codegen expression — a
+    * counted). Backed by the [[GraftFunctions.stopwordHits]] kernel — a
     * `size(filter(...))` formulation evaluates its lambda interpreted. */
   def stopwordHits(toks: Column, words: Seq[String]): Column =
     GraftFunctions.stopwordHits(toks, words)

@@ -601,7 +601,7 @@ object Corpus {
     * over non-overlapping occurrences, which IS the BPE merge rule.
     * Semantics are one regex (`(\S)` → `$1␣␣`) restricted to the
     * java.util.regex ∩ RE2 dialect so DuckDB replays the identical
-    * automaton — the ENGINE builds it with the BpeSymbolPad codegen byte
+    * automaton — the ENGINE builds it with the bpeSymbolPad codegen byte
     * kernel (byte-exact, one pass; the regex form alone was 75.4 s of
     * bpe_encode's sf100 budget), the ORACLE keeps the regex, so every
     * hash compare cross-checks the kernel. Applied to multi-word text
@@ -910,8 +910,8 @@ object Corpus {
     val enc = merges.foldLeft(sym0) { case (p, (p1, p2)) =>
       bpeApplyMerge(p, p1 + "  " + p2)
     }
-    // normalization + token count are byte kernels (CollapseSpaces /
-    // SpaceCount): the regex forms live on in the oracle as cross-checks.
+    // normalization + token count are byte kernels (collapseSpaces /
+    // spaceCount): the regex forms live on in the oracle as cross-checks.
     // A single-spaced non-empty string has exactly spaces+1 tokens — no
     // split-array allocation on the hot path.
     val norm = graft.functions.GraftFunctions.collapseSpaces(enc)
@@ -1255,12 +1255,7 @@ object Corpus {
     require(k > 0.0, "need smoothing k > 0")
     val base = docs.select(id.as("doc_id"),
       TextFunctions.tokens(text).as("toks"))
-    val bi = base.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(toks[i-1] AS w1, toks[i] AS w2))""".stripMargin))
-        .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val bi = bigrams(base, col("doc_id"))
       // tokens are split() elements (never null), and a null-id doc's
       // bigrams can never match the final doc_id join-back (it reports
       // n_bigrams=0 either way); stating all three filters EXPLICITLY —
@@ -1305,8 +1300,26 @@ object Corpus {
       if (Routing.lmShuffleHash(graft.plans.PlanStats.rowCount(docs, corpusDocs)))
         lp.hint("SHUFFLE_HASH")
       else lp
-    val scored = bi.join(model, Seq("w1", "w2"))
-      .select(col("doc_id"), col("lp"))
+    docScores(base, bi.join(model, Seq("w1", "w2"))
+      .select(col("doc_id"), col("lp")))
+  }
+
+  /** Adjacent-token bigrams `(keep…, w1, w2)` of a frame's `toks` column;
+    * a doc under two tokens yields none. */
+  private[operators] def bigrams(toks: DataFrame, keep: Column*): DataFrame =
+    toks.filter(size(col("toks")) >= 2)
+      .select(keep :+ explode(expr(
+        """transform(sequence(1, size(toks) - 1),
+          |  i -> struct(toks[i-1] AS w1, toks[i] AS w2))""".stripMargin))
+        .as("bg"): _*)
+      .select(keep ++ Seq(col("bg.w1").as("w1"), col("bg.w2").as("w2")): _*)
+
+  /** The [[lmPerplexity]] schema `(doc_id, n_bigrams, avg_logp, ppl)` from
+    * per-bigram decimal log-probs `(doc_id, lp)`, left-joined back onto
+    * every doc of `base` so a doc with no scored bigram reports
+    * n_bigrams = 0 and NULL scores instead of vanishing. */
+  private[operators] def docScores(base: DataFrame,
+                                   scored: DataFrame): DataFrame = {
     val perDoc = scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("slp"))
       // slp is an exact integer at scale 6; avg_logp must NOT be
@@ -1339,14 +1352,8 @@ object Corpus {
   def lmScorer(corpus: DataFrame, id: Column, text: Column,
                k: Double = 0.5): LmScorer = {
     require(k > 0.0, "need smoothing k > 0")
-    val bi = corpus.select(id.as("doc_id"),
-        TextFunctions.tokens(text).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(toks[i-1] AS w1, toks[i] AS w2))""".stripMargin))
-        .as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val bi = bigrams(corpus.select(id.as("doc_id"),
+      TextFunctions.tokens(text).as("toks")))
     val bc = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
       .persist()
     // ONE corpus-scale scan (bc's build): the left-context counts are the
@@ -1633,12 +1640,7 @@ final class LmScorer private[operators] (
             batchDocs: Option[Long] = None): DataFrame = {
     val base = batch.select(id.as("doc_id"),
       graft.functions.TextFunctions.tokens(text).as("toks"))
-    val bi = base.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(toks[i-1] AS w1, toks[i] AS w2))""".stripMargin))
-        .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val bi = Corpus.bigrams(base, col("doc_id"))
     // out-of-corpus bigrams need BOTH left-outer joins (an unseen w2
     // under a seen w1 still has a real cl), so the lp-table collapse the
     // batch operator uses doesn't apply. When the SCORED side is corpus-
@@ -1652,24 +1654,13 @@ final class LmScorer private[operators] (
     val (bcSide, lcSide) =
       if (big) (bc.hint("SHUFFLE_HASH"), lc.hint("SHUFFLE_HASH"))
       else (bc, lc)
-    val scored = bi
+    Corpus.docScores(base, bi
       .join(bcSide, Seq("w1", "w2"), "left_outer")
       .join(lcSide, Seq("w1"), "left_outer")
       .select(col("doc_id"),
         round(log((coalesce(col("cb"), lit(0L)) + lit(k)) /
             (coalesce(col("cl"), lit(0L)) + lit(k) * lit(vocab))), 6)
-          .cast("decimal(18,6)").as("lp"))
-    val perDoc = scored.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("slp"))
-      .withColumn("slp6", (col("slp") * lit(1000000)).cast("long"))
-      .withColumn("avg6", Corpus.halfUpAvg6("slp6", "n_bigrams"))
-    val avg = col("avg6").cast("double") / lit(1000000.0)
-    base.select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        avg.as("avg_logp"),
-        round(exp(-avg), 4).as("ppl"))
+          .cast("decimal(18,6)").as("lp")))
   }
 
   /** Drop the persisted model frames. */

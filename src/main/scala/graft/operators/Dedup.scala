@@ -83,7 +83,7 @@ object Dedup {
     val shingles = array_distinct(TextFunctions.wordNGrams(text, shingleSize))
 
     // Signature path never builds shingle STRINGS: the fused
-    // MinHashShingles kernel hashes each word n-gram positionally and
+    // minhashShingles kernel hashes each word n-gram positionally and
     // maintains the k minima in one codegen'd loop (Spark's higher-order
     // functions evaluate lambdas interpreted — avoiding them here is ~10×).
     // Duplicate shingles can't affect a min, so no distinct is needed.
@@ -843,7 +843,8 @@ object Dedup {
     *  - the corpus-sized shuffle carries (xxhash64, doc_id) pairs — 16 B
     *    per window, map-side combinable — never the span text;
     *  - candidate hashes (>= minDocs docs) collapse to a long-keyed Bloom
-    *    sketch probed MAP-SIDE by the codegen [[graft.functions.BloomMightContainLong]]
+    *    sketch probed MAP-SIDE by the codegen
+    *    [[graft.functions.GraftFunctions.bloomMightContainLong]]
     *    fused into the recomputed window scan (decontaminate's sketch
     *    route), so only the duplicate sliver re-materializes text;
     *  - the surviving sliver is re-verified by EXACT span equality (a

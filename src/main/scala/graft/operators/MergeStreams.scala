@@ -64,27 +64,12 @@ object MergeStreams {
   def mergedN(inputs: Seq[DataFrame], ts: Column,
               tieBreak: Column): DataFrame = {
     require(inputs.nonEmpty, "mergedN needs at least one input")
-    val u = inputs.reduce(_ unionByName _)
-    val tsd = ts.cast("double")
-    val stats = u.agg(min(tsd), max(tsd)).head()
-    if (stats.isNullAt(0)) // empty (or all-null-ts) input: empty output
-      return u.withColumn("emit_seq", lit(0L)).filter(lit(false))
-    val (lo, hi) = (stats.getDouble(0), stats.getDouble(1))
-    // Monotone [0,1] bucket draw from the row's OWN data: identical on
-    // every plan branch, retry, and AQE re-plan by construction. Double
-    // rounding can merge near-equal timestamps onto one u, so the scan's
-    // id carries the FULL sort key — ties in u fall back to
-    // (ts, tieBreak), keeping the emitted order exactly the contract's
-    // total order.
-    // Clamp into [0,1): rows AT the max timestamp draw exactly 1.0, which
-    // would bucket to `buckets` — outside runningTotal's documented
-    // [0,buckets) contract. The offsets theta-join happens to tolerate an
-    // overflow bucket, but that is incidental; keep the contract honest
-    // rather than lean on it (nextDown(1.0) maps only the exact-1.0 draw).
-    val uCol =
-      if (hi <= lo) lit(0.0)
-      else least((tsd - lit(lo)) / lit(hi - lo), lit(Math.nextDown(1.0)))
-    Corpus.runningTotal(u, struct(ts, tieBreak), lit(1), uCol,
+    // Windows.rowNumberScan's draw is monotone in ts and data-derived
+    // (identical on every plan branch, retry, and AQE re-plan); double
+    // rounding can merge near-equal timestamps onto one draw, so the
+    // scan's id carries the FULL sort key — ties fall back to
+    // (ts, tieBreak), keeping emit_seq exactly the contract's total order.
+    Windows.rowNumberScan(inputs.reduce(_ unionByName _), Nil, ts, tieBreak,
       out = "emit_seq")
   }
 

@@ -73,19 +73,8 @@ object Subpartitions {
                      buckets: Int = 256): DataFrame = {
     if (n <= 0) throw new graft.BadSubpartitionException(
       s"subpartition count must be positive, got $n")
-    val tsd = ts.cast("double")
-    val stats = df.agg(min(tsd), max(tsd)).head()
-    if (stats.isNullAt(0)) // empty input: no rows to number
-      return df.withColumn("subpartition", lit(0).cast("int"))
-        .filter(lit(false))
-    val (lo, hi) = (stats.getDouble(0), stats.getDouble(1))
-    // same normalized monotone draw as MergeStreams.mergedN: data-derived,
-    // so every plan branch/retry/AQE re-plan buckets a row identically
-    val u =
-      if (hi <= lo) lit(0.0)
-      else least((tsd - lit(lo)) / lit(hi - lo), lit(Math.nextDown(1.0)))
-    Corpus.runningTotal(df, struct(ts, tieBreak), lit(1), u, buckets,
-        out = "__rr_seq", group = Seq(sourcePartition))
+    Windows.rowNumberScan(df, Seq(sourcePartition), ts, tieBreak,
+        out = "__rr_seq", buckets = buckets)
       .withColumn("subpartition",
         ((col("__rr_seq") - 1) % n).cast("int"))
       .drop("__rr_seq")

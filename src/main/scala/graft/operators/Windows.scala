@@ -29,8 +29,10 @@ import org.apache.spark.sql.functions._
 object Windows {
 
   /** Per-group ascending row number along (orderValue, tieBreak), as a
-    * grouped prefix scan. Appends `out`; fails fast on a null orderValue
-    * (runningTotal's contract). */
+    * grouped prefix scan; an empty `group` numbers the whole frame
+    * (MergeStreams.mergedN's emission index). Appends `out`; fails fast
+    * on a null orderValue (runningTotal's contract); an empty (or
+    * all-null) input gives an empty frame with `out` appended. */
   def rowNumberScan(df: DataFrame, group: Seq[Column], orderValue: Column,
                     tieBreak: Column, out: String = "rn",
                     buckets: Int = 256): DataFrame = {
@@ -40,7 +42,10 @@ object Windows {
       return df.withColumn(out, lit(0L)).filter(lit(false))
     val (lo, hi) = (stats.getDouble(0), stats.getDouble(1))
     // normalized monotone draw (data-derived: identical across plan
-    // branches, retries, and AQE re-plans — the roundRobinScan shape)
+    // branches, retries, and AQE re-plans). Clamped into [0,1): rows AT
+    // the max draw exactly 1.0, which would bucket to `buckets` — outside
+    // runningTotal's documented [0,buckets) contract (nextDown(1.0) maps
+    // only the exact-1.0 draw).
     val u =
       if (hi <= lo) lit(0.0)
       else least((vd - lit(lo)) / lit(hi - lo), lit(Math.nextDown(1.0)))

@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * value is defined in `graft.operators.Routing` and nowhere else, and no
   * public operator takes one as a parameter. It also keeps one copy of
   * each shared mechanism: the LSH in-bucket pair expansion, the streaming
-  * twins' replay harness and the SQL-function table.
+  * twins' replay harness, the SQL-function table, the one kernel-call
+  * expression, the prefix scan's row-number draw and the LM bigram stream.
   */
 class InventoryAuditSpec extends AnyFunSuite {
 
@@ -165,5 +166,42 @@ class InventoryAuditSpec extends AnyFunSuite {
     assert(names.toSet ==
       graft.functions.GraftFunctions.sqlFunctions.map(_._1).toSet,
       "every graft_ literal must be a row of GraftFunctions.sqlFunctions")
+  }
+
+  /** `file:line` of every line under `dir` matching `pat`. */
+  private def linesMatching(dir: java.nio.file.Path,
+                            pat: scala.util.matching.Regex): Seq[String] =
+    for {
+      f <- scalaFiles(dir)
+      (line, i) <- read(f).linesIterator.zipWithIndex
+        if pat.findFirstIn(line).isDefined
+    } yield s"${mainDir.relativize(f)}:${i + 1}"
+
+  test("code generation is written once, in the kernel-call expression") {
+    val exprFile = "graft/functions/expressions.scala"
+    val codegen = linesMatching(mainDir, """\b(doGenCode|nullSafeEval)\b""".r)
+    assert(codegen.forall(_.startsWith(exprFile + ":")),
+      "doGenCode/nullSafeEval outside the kernel call:\n" +
+        codegen.mkString("\n"))
+    assert(linesMatching(mainDir,
+        """\bdef\s+(doGenCode|nullSafeEval)\b""".r).size == 1,
+      "more than one doGenCode/nullSafeEval definition")
+    assert("""\bextends\s+Expression\b""".r
+        .findAllMatchIn(read(mainDir.resolve(exprFile))).size == 1,
+      s"$exprFile must hold exactly one Expression subclass")
+    val handWritten = linesMatching(mainDir,
+      """\b(extends|with)\s+(Unary|Binary)Expression\b""".r)
+    assert(handWritten.isEmpty, "hand-written unary/binary expressions:\n" +
+      handWritten.mkString("\n"))
+  }
+
+  test("the scan's clamped [0,1) draw is written once under graft/operators") {
+    val hits = linesMatching(opsDir, """Math\.nextDown\(1\.0\)""".r)
+    assert(hits.size == 1, "row-number draw copies:\n" + hits.mkString("\n"))
+  }
+
+  test("the LM bigram stream is written once") {
+    val hits = linesMatching(mainDir, """toks\[i-1\] AS w1""".r)
+    assert(hits.size == 1, "bigram stream copies:\n" + hits.mkString("\n"))
   }
 }
