@@ -629,7 +629,20 @@ object Dedup {
     * component = smallest node id reachable from `id` — deterministic, so
     * an exact SQL oracle (recursive closure) can verify it.
     *
-    * Algorithm: distributed min-label propagation with path halving. Each
+    * Ids must be integral — tinyint, smallint, int or bigint, checked
+    * before any job — and `id`/`component` take the (widened) type of the
+    * two columns. An edge with a null endpoint is dropped: a null is not a
+    * node, so it never takes a label and never joins two nodes.
+    *
+    * Routing ([[Routing.ccOnExecutors]]): the symmetrized edge frame
+    * (two rows per edge) is persisted and measured once by its row count.
+    * Up to [[Routing.ccLocalMaxEdges]] rows each edge is collected once
+    * and the graph closes on the driver ([[closeOnDriver]]: one union-find
+    * pass, a local result frame), in a fixed number of jobs instead of
+    * a handful per round. Above it the distributed loop below runs, and
+    * nothing but its convergence sum reaches the driver.
+    *
+    * Distributed algorithm: min-label propagation with path halving. Each
     * round does (1) a neighbor-min step — every node adopts the smallest
     * label among itself and its neighbors (join + map-side-combinable min
     * aggregation, both keyed by node id) — and (2) a pointer-jump step —
@@ -646,13 +659,18 @@ object Dedup {
     * persisted: the jump step self-joins the label frame, so the logical
     * plan would double every round — 2^rounds plan nodes — and plan
     * analysis itself OOMs long before any data moves. Checkpointing
-    * truncates both lineage and plan to constant depth. Nothing is
-    * collected to the driver — convergence is detected from the sum of
-    * labels, which strictly decreases until fixpoint; the sum rides the
-    * checkpoint materialization as an observe() metric (r13), so each
-    * round is ONE Spark job, not checkpoint + aggregation.
+    * truncates both lineage and plan to constant depth. Convergence is
+    * detected from the sum of labels, which strictly decreases until
+    * fixpoint; the sum rides the checkpoint materialization as an
+    * observe() metric (r13), so each round is ONE Spark job, not
+    * checkpoint + aggregation.
     *
-    * `checkpointDir`: None (default) uses `localCheckpoint` — blocks live
+    * `maxIter` bounds the loop's rounds; past it the loop throws rather
+    * than return partial labels. The driver route always converges and
+    * ignores it.
+    *
+    * `checkpointDir` applies to the loop only; the driver route writes no
+    * checkpoint. None (default) uses `localCheckpoint` — blocks live
     * on executors, right for a single-JVM run, but an executor loss kills
     * the job since truncated lineage cannot recompute. On a multi-node
     * run pass a reliable (HDFS/S3) directory: each round's labels are
@@ -672,32 +690,87 @@ object Dedup {
                           maxIter: Int = 25,
                           checkpointDir: Option[String] = None,
                           route: Routing.Route = Routing.Auto): DataFrame = {
+    import org.apache.spark.sql.types._
     import org.apache.spark.storage.StorageLevel
-    val sc = edges.sparkSession.sparkContext
+    for (c <- Seq(src, dst)) {
+      val t = edges.select(col(c)).schema.head.dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"connectedComponents needs integral ids (tinyint, smallint, int " +
+          s"or bigint); column $c is ${t.simpleString}")
+    }
+    // No distinct over the symmetrized edges: min-aggregation is
+    // duplicate-insensitive, so deduping would buy nothing but a shuffle.
+    // Persisted: the routing count and the route's first read (the
+    // driver collect, or the loop's distinct nodes and symPlus) share one
+    // run of the upstream edge pipeline (an LSH candidate generator).
+    val kept = edges.filter(col(src).isNotNull && col(dst).isNotNull)
+    val sym = kept.select(col(src).as("u"), col(dst).as("v"))
+      .union(kept.select(col(dst).as("u"), col(src).as("v")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the loop's schema, which the driver route's frame carries too: id
+    // keeps the edge columns' nullability (a logical filter does not
+    // narrow it), comp leaves a min aggregate, which Spark types nullable
+    val schema = StructType(Seq(sym.schema("u").copy(name = "id"),
+      StructField("comp", sym.schema("u").dataType, nullable = true)))
+    // forced Small never counts; forced Large counts only to skip the
+    // loop on an empty graph, whose label sum is null
+    lazy val rows = sym.count()
+    try {
+      if (!Routing.isLarge(route, rows)(Routing.ccOnExecutors) || rows == 0L)
+        closeOnDriver(sym, schema)
+      else closeOnExecutors(sym, maxIter, checkpointDir)
+    } finally sym.unpersist()
+  }
+
+  /** [[connectedComponents]]' driver route: every edge collected once
+    * (the u <= v half of the symmetric frame), then one union-find pass
+    * over a primitive long-keyed map. Linking the larger root under the
+    * smaller keeps every root the smallest id of its component; path
+    * halving keeps finds short. Rows leave in id order. */
+  private def closeOnDriver(sym: DataFrame,
+                            schema: org.apache.spark.sql.types.StructType)
+      : DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var y = x
+      while (parent(y) != y) { parent(y) = parent(parent(y)); y = parent(y) }
+      y
+    }
+    for (e <- sym.filter(col("u") <= col("v"))
+           .select(col("u").cast("long"), col("v").cast("long")).collect()) {
+      val (u, v) = (e.getLong(0), e.getLong(1))
+      parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
+      val (a, b) = (find(u), find(v))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val box: Long => Any = schema("comp").dataType match {
+      case ByteType    => _.toByte
+      case ShortType   => _.toShort
+      case IntegerType => _.toInt
+      case _           => identity
+    }
+    val out = new java.util.ArrayList[Row](parent.size)
+    for (k <- parent.keys.toArray.sorted) out.add(Row(box(k), box(find(k))))
+    sym.sparkSession.createDataFrame(out, schema)
+  }
+
+  /** [[connectedComponents]]' distributed route: the Hash-to-Min loop over
+    * the persisted symmetric edge frame `sym` (non-empty). */
+  private def closeOnExecutors(sym: DataFrame, maxIter: Int,
+                               checkpointDir: Option[String]): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val sc = sym.sparkSession.sparkContext
     // never clobber an application-configured dir (session-global state)
     checkpointDir.foreach(d =>
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d))
     def materialize(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
-    // No distinct over the symmetrized edges: min-aggregation is
-    // duplicate-insensitive, so deduping would buy nothing but a shuffle.
-    // Persisted BRIEFLY (dropped after round 1): the distinct-nodes
-    // materialization below and symPlus's first caching both consume sym,
-    // and without the cache the upstream edge pipeline (an LSH candidate
-    // generator at scale) would run end to end twice (r12-ADVICE item).
-    val sym = edges.select(col(src).as("u"), col(dst).as("v"))
-      .union(edges.select(col(dst).as("u"), col(src).as("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     var labels = materialize(sym.select(col("u").as("id"))
       .distinct()
       .select(col("id"), col("id").as("comp")))
-    // no edges -> no nodes: already the fixpoint (and labelSum of an
-    // empty frame is null, which the convergence compare must never see).
-    // count(), not isEmpty: the same single action also yields the node
-    // count the pre-partitioning route below needs — no extra job.
-    val nNodes = labels.count()
-    if (nNodes == 0L) { sym.unpersist(); return labels }
     // Edges + one self-loop per node, persisted once (r12 optimization,
     // guide §2.4): the self-loops fold the node's own label into the
     // neighbor-min aggregation, which deletes the old per-round left-join
@@ -705,15 +778,12 @@ object Dedup {
     // fewer per round): min(comp(v) : v ∈ N(u) ∪ {u}) ≡
     // least(comp(u), coalesce(nbrMin, comp(u))) row for row.
     //
-    // PRE-PARTITIONING on the per-round join key, routed on the node count
-    // above (no extra job): past Routing.prePartitionMinNodes the labels
-    // outgrow broadcast and every round's join would re-shuffle the
-    // 2|E|-row edge frame, so it crosses the wire ONCE, at persist time,
-    // and each round shuffles only the 16 B/node labels.
-    val manyNodes = Routing.isLarge(route, nNodes)(Routing.ccPrePartition)
-    val symSelf =
-      sym.union(labels.select(col("id").as("u"), col("id").as("v")))
-    val symPlus = (if (manyNodes) symSelf.repartition(col("v")) else symSelf)
+    // PRE-PARTITIONED on the per-round join key: at the sizes this route
+    // runs at the labels outgrow broadcast and every round's join would
+    // re-shuffle the 2|E|-row edge frame, so it crosses the wire ONCE, at
+    // persist time, and each round shuffles only the 16 B/node labels.
+    val symPlus = sym.union(labels.select(col("id").as("u"), col("id").as("v")))
+      .repartition(col("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       ccObserveFallbacks.incrementAndGet()
@@ -764,7 +834,7 @@ object Dedup {
       labels.unpersist()
       labels = next
       // symPlus is fully cached once round 1's join consumed it — the
-      // brief sym cache has served both of its readers by then
+      // sym cache has served both of its readers by then
       if (iter == 0) sym.unpersist()
       iter += 1
     }

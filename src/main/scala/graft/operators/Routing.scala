@@ -57,12 +57,20 @@ object Routing {
     * checks. */
   val hierThreshold: Long = 1L << 17
 
-  /** Graph nodes above which connected components hash-partitions the
-    * persisted edge frame on the join key. Below it the 16 B/node label
-    * frame broadcasts every round and the edge frame never shuffles, so
-    * an explicit repartition would add the loop's only exchange (measured
-    * +2 s / +3 MB shuffle across the five sf0.1 cluster queries). */
-  val prePartitionMinNodes: Long = 1L << 20
+  /** Symmetric edge rows (two per undirected edge) up to which connected
+    * components collects the edges and closes the graph with a union-find
+    * on the driver; above it the Hash-to-Min loop runs on the executors,
+    * its edge frame pre-partitioned on the join key. Receipt (local[4],
+    * 4-core box, 4 GB driver, median of 3; a generated graph of 16-node
+    * blocks, one hashed edge per node): at the cap — 2^19 edges, 2^19
+    * nodes — the driver route took 4.3 s, allocating 775 MB on the
+    * calling thread with an old-gen peak 482 MB over its baseline, where
+    * the un-partitioned loop it replaces took 30.6 s (old-gen peak
+    * 1187 MB, executor blocks included) and the pre-partitioned loop
+    * 22.8 s. Just above it (2^19 + 2^12 edges) the pre-partitioned loop
+    * took 21.9 s against the un-partitioned loop's 27.3 s, so no third,
+    * un-partitioned arm is kept. */
+  val ccLocalMaxEdges: Long = 1L << 20
 
   /** Corpus docs above which the LM scorers hint their model-side join
     * SHUFFLE_HASH: past ~1M docs the type tables outgrow broadcast and the
@@ -88,8 +96,8 @@ object Routing {
   /** Hierarchical IVF assignment instead of the flat argmax. */
   def ivfHier(vectors: Long): Boolean = vectors >= hierThreshold
 
-  /** Connected components with the edge frame pre-partitioned. */
-  def ccPrePartition(nodes: Long): Boolean = nodes > prePartitionMinNodes
+  /** Connected components by the executor loop instead of the driver. */
+  def ccOnExecutors(edgeRows: Long): Boolean = edgeRows > ccLocalMaxEdges
 
   /** LM model-side join hinted SHUFFLE_HASH. */
   def lmShuffleHash(docs: Long): Boolean = docs > lmShuffleHashMinDocs
@@ -105,10 +113,10 @@ object Routing {
   /** Measure the input and decide. */
   private[graft] case object Auto extends Route
   /** The small-input route: driver-local BPE loop, broadcast probe,
-    * narrow simhash, flat IVF, un-partitioned CC edges. */
+    * narrow simhash, flat IVF, driver-side CC union-find. */
   private[graft] case object Small extends Route
   /** The large-input route: executor BPE loop, Bloom-sketch probe, wide
-    * simhash, hierarchical IVF, pre-partitioned CC edges. */
+    * simhash, hierarchical IVF, executor CC loop. */
   private[graft] case object Large extends Route
 
   /** Resolve `route`: a forced route never evaluates `size`; [[Auto]]

@@ -53,8 +53,11 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (ts.taskInfo.speculative) speculativeStarts.incrementAndGet()
     }
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      runningTasks.decrementAndGet()
       val r = Option(te.reason).map(_.toString).getOrElse("")
+      // a finished map task whose output died with its executor gets a
+      // second TaskEnd (reason Resubmitted) while it is not running; left
+      // counted, each one drives runningTasks below the tasks in flight
+      if (r != "Resubmitted") runningTasks.decrementAndGet()
       if (r.contains("injected fault")) injectedFailures.incrementAndGet()
       if (r.contains("ExecutorLostFailure") || r.contains("FetchFailed"))
         lostExecutorTasks.incrementAndGet()
@@ -212,8 +215,10 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connectedComponents(checkpointDir) survives losing every executor mid-closure") {
-    // the round-6 claim, executed: reliable checkpoints (vs localCheckpoint,
-    // whose blocks die with the executor) let the iterative closure resume
+    // the round-6 claim, executed on the forced executor loop (a graph
+    // this small would close on the driver): reliable checkpoints (vs
+    // localCheckpoint, whose blocks die with the executor) let the
+    // iterative closure resume
     // from files after an executor loss. 50 chain components of size 100 →
     // ~7 pointer-jumping rounds; a once-per-attempt straggler holds the
     // computation open long enough for the kill to land mid-closure.
@@ -232,7 +237,8 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
         when(col("id") % 100 === 99, col("id"))
           .otherwise(col("id") + 1).as("d"))
     def run() = RowCanon.collect(operators.Dedup.connectedComponents(
-      edges, "s", "d", checkpointDir = Some(ckpt)))
+      edges, "s", "d", checkpointDir = Some(ckpt),
+      route = operators.Routing.Large))
     val clean = run()
     assert(clean.size == 5001, s"expected 5000 labeled nodes, got ${clean.size - 1}")
     // r13: retry-until-landed (see the executor-loss test) — fixed-delay

@@ -138,14 +138,45 @@ class ResampleSpec extends SparkSpecBase {
 class ComponentsSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Closes `edges` on every route — driver union-find, executor loop,
+    * auto — asserts that all three return one schema and the same labels,
+    * and returns those labels. */
+  private def closeOnEveryRoute(edges: DataFrame): Map[Long, Long] = {
+    val outs = Seq(Routing.Small, Routing.Large, Routing.Auto).map(r =>
+      r -> Dedup.connectedComponents(edges, "id_a", "id_b", route = r))
+    val schemas = outs.map(_._2.schema).distinct
+    assert(schemas.size == 1, s"the routes return different schemas: $schemas")
+    val labels = outs.map { case (r, df) =>
+      r -> df.as[(Long, Long)].collect().toSeq.sorted }
+    for ((r, l) <- labels.tail)
+      assert(l == labels.head._2, s"route $r disagrees with the driver route")
+    labels.head._2.toMap
+  }
+
+  /** Runs `body` and returns (result, number of Spark jobs started). */
+  private def countingJobs[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      Thread.sleep(500) // the listener bus is async
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def path200 = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+
   test("connectedComponents closes transitive chains to min-id labels") {
     // components: {1,2,3} (chain), {10,11} (pair), {20,21,22,23} (star)
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L),
       (20L, 21L), (20L, 22L), (20L, 23L)).toDF("id_a", "id_b")
-    val r = Dedup.connectedComponents(edges, "id_a", "id_b")
-      .as[(Long, Long)].collect().toMap
-    assert(r == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L))
+    assert(closeOnEveryRoute(edges) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L))
   }
 
   test("reliable-checkpoint closure matches localCheckpoint exactly") {
@@ -155,10 +186,11 @@ class ComponentsSpec extends SparkSpecBase {
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L),
         (20L, 21L), (20L, 22L), (20L, 23L)).toDF("id_a", "id_b")
-      val local = Dedup.connectedComponents(edges, "id_a", "id_b")
+      val local = Dedup.connectedComponents(edges, "id_a", "id_b",
+          route = Routing.Large)
         .as[(Long, Long)].collect().toMap
       val reliable = Dedup.connectedComponents(edges, "id_a", "id_b",
-          checkpointDir = Some(dir.toString))
+          checkpointDir = Some(dir.toString), route = Routing.Large)
         .as[(Long, Long)].collect().toMap
       assert(reliable == local)
       // the rounds actually wrote through the reliable dir
@@ -174,9 +206,9 @@ class ComponentsSpec extends SparkSpecBase {
   test("pointer jumping converges on a long path in O(log n) rounds") {
     // a 200-node path is the worst case for plain propagation (diameter
     // 199); with the jump step it must converge well within 25 rounds
-    val edges = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val before = Dedup.ccObserveFallbacks.get()
-    val r = Dedup.connectedComponents(edges, "id_a", "id_b", maxIter = 12)
+    val r = Dedup.connectedComponents(path200, "id_a", "id_b", maxIter = 12,
+        route = Routing.Large)
       .as[(Long, Long)].collect()
     assert(r.length == 200 && r.forall(_._2 == 0L))
     // the convergence sums must come from the observe() metrics riding
@@ -184,6 +216,22 @@ class ComponentsSpec extends SparkSpecBase {
     // all would silently undo the one-job-per-round optimization
     assert(Dedup.ccObserveFallbacks.get() == before,
       "labelSum fell back to its own job — observe() fold is not firing")
+    assert(closeOnEveryRoute(path200) == r.toMap)
+  }
+
+  test("the driver route closes the 200-node path in a fixed number of jobs") {
+    val (auto, autoJobs) = countingJobs(Dedup.connectedComponents(
+      path200, "id_a", "id_b").as[(Long, Long)].collect())
+    val (loop, loopJobs) = countingJobs(Dedup.connectedComponents(
+      path200, "id_a", "id_b", route = Routing.Large)
+      .as[(Long, Long)].collect())
+    assert(auto.sorted.toSeq == loop.sorted.toSeq)
+    // the routing count (its AQE stages) and one collect of the edges;
+    // the caller's collect reads a local frame and runs none (4 measured)
+    assert(autoJobs <= 4, s"the driver route ran $autoJobs jobs")
+    // the loop needs >= 5 rounds on diameter 199, each at least one job
+    assert(loopJobs >= autoJobs + 5,
+      s"the loop ran $loopJobs jobs, the driver route $autoJobs")
   }
 
   test("convergence never compares an observed sum with a fallback sum") {
@@ -209,9 +257,9 @@ class ComponentsSpec extends SparkSpecBase {
   }
 
   test("maxIter guard throws instead of returning partial labels") {
-    val edges = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[graft.GraftException] {
-      Dedup.connectedComponents(edges, "id_a", "id_b", maxIter = 2)
+      Dedup.connectedComponents(path200, "id_a", "id_b", maxIter = 2,
+        route = Routing.Large)
     }
   }
 
@@ -236,37 +284,26 @@ class ComponentsSpec extends SparkSpecBase {
       val byRoot = nodes.groupBy(find).flatMap { case (_, ms) =>
         val m = ms.min; ms.map(_ -> m)
       }
-      val got = Dedup.connectedComponents(
-        edges.toDF("id_a", "id_b"), "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
+      val got = closeOnEveryRoute(edges.toDF("id_a", "id_b"))
       assert(got == byRoot, s"trial $trial (n=$n) mismatch")
     }
   }
 
   test("the many-nodes pre-partition route: same labels, edges shuffle " +
     "once per closure instead of once per round (r13, guide §2.4)") {
-    // The >2^20-node route had never EXECUTED before this test (bench SFs
-    // stay far below the threshold): the forced route runs it. Broadcast
-    // is disabled so the per-round join
-    // actually plans a shuffle join — at real scale the label frame
-    // outgrows broadcast, which is the regime the route exists for; a
-    // chain graph forces many rounds so the per-round edge re-shuffle
-    // the route deletes dominates its one-time repartition.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    // The executor loop always pre-partitions its edge frame; the forced
+    // route runs it on a graph the driver route would take. Broadcast
+    // is disabled so the per-round join actually plans a shuffle join —
+    // at real scale the label frame outgrows broadcast, which is the
+    // regime the loop exists for; a chain graph forces many rounds.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val edges = (0L until 2000L).filter(_ % 50 != 49)
       .map(i => (i, i + 1)).toDF("id_a", "id_b")
     val expected = (0L until 2000L).map(i => i -> (i - i % 50)).toMap
-    val shuffleB = new java.util.concurrent.atomic.AtomicLong(0)
-    val meter = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleB.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-      }
-    }
     val roundPlans =
       new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val capture = new QueryExecutionListener {
@@ -294,79 +331,90 @@ class ComponentsSpec extends SparkSpecBase {
     // directly. The probe looks at the innermost join (the one whose
     // edge-side child contains no further join — i.e. the neighbor-min
     // join, not the pointer jump above it, whose children both embed the
-    // whole stepped subtree) and counts exchanges on its edge-side child.
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // whole stepped subtree) and counts exchanges on one of its sides.
     def hasEdgeScan(p: SparkPlan): Boolean = p.collect {
       case i: InMemoryTableScanExec
         if i.output.map(_.name).toSet == Set("u", "v") => i }.nonEmpty
-    def edgeSideExchanges(p: SparkPlan): Int =
-      p.collect { case j: BaseJoinExec =>
-        j.children.filter(c => hasEdgeScan(c) &&
-            c.collect { case jj: BaseJoinExec => jj }.isEmpty)
+    def sideExchanges(p: SparkPlan, edgeSide: Boolean): Int =
+      p.collect { case j: BaseJoinExec
+          if j.children.exists(c => hasEdgeScan(c) &&
+            c.collect { case jj: BaseJoinExec => jj }.isEmpty) =>
+        j.children.filter(c => hasEdgeScan(c) == edgeSide)
           .map(_.collect { case e: ShuffleExchangeExec => e }.size).sum
       }.sum
-    def joinRounds(ps: Seq[SparkPlan]): Seq[SparkPlan] =
-      ps.filter(hasEdgeScan)
-    def run(route: Routing.Route): (Map[Long, Long], Long, Seq[SparkPlan]) = {
-      roundPlans.clear()
-      spark.sparkContext.addSparkListener(meter)
-      spark.listenerManager.register(capture)
-      try {
-        shuffleB.set(0)
-        val r = Dedup.connectedComponents(edges, "id_a", "id_b",
-            route = route)
-          .as[(Long, Long)].collect().toMap
-        Thread.sleep(300) // let async listener events drain
-        import scala.jdk.CollectionConverters._
-        (r, shuffleB.get(), roundPlans.asScala.toSeq)
-      } finally {
-        spark.listenerManager.unregister(capture)
-        spark.sparkContext.removeSparkListener(meter)
-      }
-    }
+    import scala.jdk.CollectionConverters._
     // AQE off for the structural receipt: plain ShuffleExchangeExec trees
     // (no query-stage wrappers), and EnsureRequirements' static decision —
     // "cached partitioning satisfies the join requirement" — is exactly
     // the property under test
-    val ((resOn, bytesOn, plansOn), (resOff, bytesOff, plansOff)) =
-      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.enabled" -> "false") {
-        (run(Routing.Large), run(Routing.Small))
+    val got = withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      spark.listenerManager.register(capture)
+      try Dedup.connectedComponents(edges, "id_a", "id_b",
+          route = Routing.Large).as[(Long, Long)].collect().toMap
+      finally {
+        Thread.sleep(300) // let async listener events drain
+        spark.listenerManager.unregister(capture)
       }
-    assert(resOn == expected && resOff == expected,
-      "pre-partition route changed the labels")
-    val onRounds = joinRounds(plansOn)
-    val offRounds = joinRounds(plansOff)
-    assert(onRounds.nonEmpty && offRounds.nonEmpty,
+    }
+    assert(got == expected, "pre-partition route changed the labels")
+    val rounds = roundPlans.asScala.toSeq.filter(hasEdgeScan)
+    assert(rounds.nonEmpty,
       "captured no round plans — the receipt proves nothing")
-    val onBad = onRounds.map(edgeSideExchanges).sum
-    val offBad = offRounds.map(edgeSideExchanges).sum
+    val onBad = rounds.map(sideExchanges(_, edgeSide = true)).sum
     assert(onBad == 0, s"routed plan re-shuffles the cached edge frame " +
-      s"($onBad exchange-covered edge scans):\n${onRounds.head}")
-    assert(offBad > 0, "un-routed plan shows no exchange over the edge " +
-      "scan — the structural assertion is vacuous")
-    assert(bytesOn < bytesOff,
-      s"route saved no shuffle bytes: on=$bytesOn off=$bytesOff")
-    // receipt: the first round's executed plan, both routes (under the
-    // build's target/ — tests never write into the source tree)
+      s"($onBad exchange-covered edge scans):\n${rounds.head}")
+    // anchor: the same probe sees the exchange that shuffles the label
+    // side of that join, so a zero on the edge side is not vacuous
+    assert(rounds.forall(sideExchanges(_, edgeSide = false) > 0),
+      s"the probe sees no exchange on the label side:\n${rounds.head}")
+    // receipt: the first round's executed plan (under the build's
+    // target/ — tests never write into the source tree)
     val dir = new java.io.File("target/receipts"); dir.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(dir, "cc_prepartition_route.txt").toPath,
-      (s"# shuffle bytes, ${onRounds.size}+ rounds, broadcast+AQE off\n" +
-        s"# routed (pre-partitioned route): $bytesOn\n" +
-        s"# un-routed (plain route):        $bytesOff\n\n" +
-        s"## routed round-1 plan (edge scan NOT under any Exchange)\n" +
-        onRounds.head.toString + "\n\n" +
-        s"## un-routed round-1 plan (edge scan under an Exchange)\n" +
-        offRounds.head.toString).getBytes)
+      (s"# ${rounds.size} rounds, broadcast+AQE off\n" +
+        s"## round-1 plan (edge scan NOT under any Exchange)\n" +
+        rounds.head.toString).getBytes)
   }
 
   test("empty edge set returns an empty frame, not a convergence error") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(empty, "id_a", "id_b").isEmpty)
+    assert(closeOnEveryRoute(empty).isEmpty)
     val r = Dedup.duplicateClusters(empty)
     assert(r.isEmpty &&
       r.columns.toSeq == Seq("doc_id", "component", "cluster_size"))
+  }
+
+  test("null endpoints are dropped on every route: no null node, no " +
+    "one-member cluster") {
+    // a kept null would take a neighbour's label without joining 1 and 2
+    val edges = Seq((Some(1L), None), (None, Some(2L)), (Some(5L), Some(6L)))
+      .toDF("id_a", "id_b")
+    assert(closeOnEveryRoute(edges) == Map(5L -> 5L, 6L -> 5L))
+    assert(Dedup.duplicateClusters(edges).as[(Long, Long, Long)].collect()
+      .toSet == Set((5L, 5L, 2L), (6L, 5L, 2L)))
+  }
+
+  test("ids must be integral: rejected before any job, types named") {
+    val strings = Seq(("a", "b")).toDF("id_a", "id_b")
+    val doubles = Seq((1L, 2.0)).toDF("id_a", "id_b")
+    for (bad <- Seq(strings, doubles)) {
+      val (e, jobs) = countingJobs(intercept[IllegalArgumentException](
+        Dedup.connectedComponents(bad, "id_a", "id_b")))
+      assert(e.getMessage.contains("tinyint, smallint, int or bigint"))
+      assert(jobs == 0, s"the type check ran after $jobs jobs")
+    }
+    // every accepted type closes on both routes, keeping the id type
+    import org.apache.spark.sql.types.IntegerType
+    val ints = Seq((3, 2), (2, 1), (7, 8)).toDF("id_a", "id_b")
+    val outs = Seq(Routing.Small, Routing.Large).map(r =>
+      Dedup.connectedComponents(ints, "id_a", "id_b", route = r))
+    for (o <- outs) {
+      assert(o.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+      assert(o.as[(Int, Int)].collect().toMap ==
+        Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
+    }
   }
 
   test("duplicateClusters reports every member with canonical + size") {

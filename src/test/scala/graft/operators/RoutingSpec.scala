@@ -17,7 +17,7 @@ class RoutingSpec extends AnyFunSuite {
     ("maxBroadcastDomains", Routing.maxBroadcastDomains, Routing.domainSketch, false),
     ("wideThreshold", Routing.wideThreshold, Routing.simhashWide, true),
     ("hierThreshold", Routing.hierThreshold, Routing.ivfHier, true),
-    ("prePartitionMinNodes", Routing.prePartitionMinNodes, Routing.ccPrePartition, false),
+    ("ccLocalMaxEdges", Routing.ccLocalMaxEdges, Routing.ccOnExecutors, false),
     ("lmShuffleHashMinDocs", Routing.lmShuffleHashMinDocs, Routing.lmShuffleHash, false))
 
   for ((name, t, large, atThreshold) <- table)
@@ -40,7 +40,7 @@ class RoutingSpec extends AnyFunSuite {
       "maxBroadcastDomains" -> (1L << 22),
       "wideThreshold" -> (1L << 18),
       "hierThreshold" -> (1L << 17),
-      "prePartitionMinNodes" -> (1L << 20),
+      "ccLocalMaxEdges" -> (1L << 20),
       "lmShuffleHashMinDocs" -> (1L << 20)))
   }
 

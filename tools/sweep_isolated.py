@@ -6,7 +6,10 @@ query's spill/page-cache pressure (PLANS.md r9 interference notes), which
 pollutes scale-ratio claims. This driver forks ONE fresh JVM per query —
 same flags as `sbt runMain graft.Bench` (build.sbt's jdk17AddOpens +
 driver heap) — so every measurement starts from an identical cold heap,
-and merges the per-query JSON lines into one Bench-shaped artifact.
+and merges the per-query JSON lines into one Bench-shaped artifact. Each
+query's `jobs` and `tasks` come from the `bench_out/bench_full_<sf>.json`
+its Bench run writes (the compact line does not carry them), so the sweep
+shows which route an auto-routed operator took and what it cost.
 
 Usage:
   python3 tools/sweep_isolated.py OUT.json SF_DIR q1,q2,... [reps]
@@ -27,6 +30,12 @@ ADD_OPENS_PKGS = [
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
 ]
+
+# per-query work counters carried over from Bench's full artifact
+COUNTERS = ("jobs", "tasks")
+# every per-query map of the merged artifact
+PER_QUERY = ("queries", "shuffle_mb", "spill_mb", "peak_mem_mb",
+             "scale_ratio") + COUNTERS
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CP_CACHE = os.path.join(REPO, "target", "runtime_classpath.txt")
@@ -51,6 +60,12 @@ def classpath() -> str:
 
 
 def run_one(cp: str, sf_dir: str, query: str, reps: int) -> dict:
+    """The query's compact metric line, plus `jobs` and `tasks` read from
+    the full artifact Bench writes under the working directory."""
+    full = os.path.join("bench_out", "bench_full_%s.json"
+                        % os.path.basename(sf_dir.rstrip("/")))
+    if os.path.exists(full):
+        os.remove(full)  # never read a previous query's counters
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env["SPARK_GRAFT_QUERIES"] = query
@@ -65,7 +80,12 @@ def run_one(cp: str, sf_dir: str, query: str, reps: int) -> dict:
     for ln in r.stdout.splitlines():
         ln = ln.strip()
         if ln.startswith('{"metric"') and '"queries"' in ln:
-            return json.loads(ln)
+            rec = json.loads(ln)
+            if os.path.exists(full):
+                counters = json.load(open(full))
+                for k in COUNTERS:
+                    rec[k] = counters.get(k) or {}
+            return rec
     raise SystemExit(
         f"{query}: no metric line (exit {r.returncode})\n"
         f"stdout tail: {r.stdout[-1500:]}\nstderr tail: {r.stderr[-1500:]}")
@@ -78,12 +98,10 @@ def main() -> int:
     cp = classpath()
     merged = {"metric": "total", "value": 0.0, "unit": "sec",
               "isolation": "one JVM per query", "sf": sf_dir,
-              "queries": {}, "shuffle_mb": {}, "spill_mb": {},
-              "peak_mem_mb": {}, "scale_ratio": {}, "failed": []}
+              **{k: {} for k in PER_QUERY}, "failed": []}
     for i, q in enumerate(queries):
         rec = run_one(cp, sf_dir, q, reps)
-        for k in ("queries", "shuffle_mb", "spill_mb", "peak_mem_mb",
-                  "scale_ratio"):
+        for k in PER_QUERY:
             merged[k].update(rec.get(k) or {})
         if q in (rec.get("failed") or []):
             # Bench reports a failed query's fast-abort wall in `queries`
@@ -91,8 +109,7 @@ def main() -> int:
             # a measurement (r13: dedup_cluster at sf100 trips the
             # guardBlockPairs contract in 1.5 s and looked like a success)
             merged["failed"].append(q)
-            for k in ("queries", "shuffle_mb", "spill_mb", "peak_mem_mb",
-                      "scale_ratio"):
+            for k in PER_QUERY:
                 merged[k].pop(q, None)
             print(f"[{i+1}/{len(queries)}] {q}: FAILED (reported by bench)",
                   flush=True)
@@ -100,7 +117,9 @@ def main() -> int:
             merged["value"] += float(rec["queries"][q])
             print(f"[{i+1}/{len(queries)}] {q}: {rec['queries'][q]:.1f}s "
                   f"shuffle={merged['shuffle_mb'].get(q)}MB "
-                  f"spill={merged['spill_mb'].get(q)}MB", flush=True)
+                  f"spill={merged['spill_mb'].get(q)}MB "
+                  f"jobs={merged['jobs'].get(q)} tasks={merged['tasks'].get(q)}",
+                  flush=True)
         else:
             merged["failed"].append(q)
             print(f"[{i+1}/{len(queries)}] {q}: FAILED", flush=True)
