@@ -154,6 +154,11 @@ object Bench {
 
   private def mb(bytes: Long): Double = (bytes / 10486) / 100.0 // MB, 2 dp
 
+  /** A baseline file's `"query": mb` entries, compact or pretty-printed. */
+  private[graft] def parseBaseline(txt: String): Map[String, Double] =
+    """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+
   /** Diff `nowMb` against the committed per-SF baseline at `file`: flags
     * >2x growth on queries moving >= 1 MB, auto-appends newly added
     * queries (successful runs only), seeds the file on first run at a new
@@ -169,8 +174,7 @@ object Bench {
     }
     if (file.isFile && sys.env.get("SPARK_GRAFT_UPDATE_BASELINE").isEmpty) {
       val txt = new String(java.nio.file.Files.readAllBytes(file.toPath))
-      val prev = """"([^"]+)":([0-9.eE+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      val prev = parseBaseline(txt)
       if (prev.isEmpty && txt.trim.nonEmpty)
         System.err.println("[bench] WARNING: baseline file " + file +
           " is non-empty but parsed to zero entries — this regression " +

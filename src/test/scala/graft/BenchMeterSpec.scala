@@ -81,4 +81,17 @@ class BenchMeterSpec extends SparkSpecBase {
     assert(line.contains("\"n_failed\":1"), line)
     assert(line.contains("\"total_jobs\":4"), line)
   }
+
+  test("a pretty-printed baseline parses to every entry") {
+    // the committed sf0.1 shuffle baseline is pretty-printed ("q": mb); a
+    // parser that needs "q":mb reads it as empty and the gate is off
+    val pretty = "{\n\"accept_filter\": 0.0,\n\"agg_distinct\" : 6.42,\n\"x\":1e-3\n}"
+    assert(Bench.parseBaseline(pretty) ==
+      Map("accept_filter" -> 0.0, "agg_distinct" -> 6.42, "x" -> 1e-3))
+    assert(Bench.parseBaseline("{\"a\":1.5,\"b\":0.0}") == Map("a" -> 1.5, "b" -> 0.0))
+    val committed = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("bench_baseline/sf0.1.shuffle.json")))
+    val entries = committed.count(_ == ',') + 1 // query names hold no comma
+    assert(entries > 100 && Bench.parseBaseline(committed).size == entries)
+  }
 }

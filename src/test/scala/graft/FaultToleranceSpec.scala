@@ -43,12 +43,10 @@ object FaultInjection {
   */
 class FaultToleranceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
+  private lazy val spark: SparkSession = GraftSession.configure(SparkSession.builder()
     .master("local[4, 3]")
     .appName("FaultToleranceSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "4"))
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"

@@ -75,14 +75,12 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
         java.nio.file.Files.createSymbolicLink(
           link, java.nio.file.Paths.get(s"/opt/spark/$d"))
     }
-    val s = SparkSession.builder()
+    val s = GraftSession.configure(SparkSession.builder()
       .master("local-cluster[2,2,1024]")
       .appName("LocalClusterSpec")
       .config("spark.executor.extraClassPath",
         System.getProperty("java.class.path"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4"))
       // aggressive speculation: with one 2 s straggler among 4 uniform
       // tasks, a duplicate attempt launches within ~100 ms
       .config("spark.speculation", "true")

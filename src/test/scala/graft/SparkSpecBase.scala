@@ -4,14 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, stopped after). */
+/** Shared local SparkSession for specs (one per suite, stopped after),
+  * built through the engine's own `GraftSession.configure`. */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.configure(SparkSession.builder()
     .master("local[4]")
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "4"))
     .getOrCreate()
 
   override def afterAll(): Unit = {
