@@ -160,11 +160,11 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
   /** Diff `nowMb` against the committed per-SF baseline at `file`: flags
-    * >2x growth on queries moving >= 1 MB, auto-appends newly added
-    * queries (successful runs only), seeds the file on first run at a new
-    * SF or under SPARK_GRAFT_UPDATE_BASELINE=1. Returns (regression JSON
-    * objects, queries that were missing from the baseline). */
-  private def baselineGate(file: java.io.File, nowMb: Seq[(String, Double)],
+    * >2x growth on queries moving >= 1 MB. The file is written only when
+    * seeding a new SF or under SPARK_GRAFT_UPDATE_BASELINE=1 (successful
+    * runs only), so a run never rewrites a committed baseline. Returns
+    * (regression JSON objects, queries missing from the baseline). */
+  private[graft] def baselineGate(file: java.io.File, nowMb: Seq[(String, Double)],
                            seedable: Seq[(String, Double)])
   : (Seq[String], Seq[String]) = {
     def writeBaseline(m: Seq[(String, Double)]): Unit = {
@@ -185,13 +185,9 @@ object Bench {
           obj(Seq("query" -> ("\"" + q + "\""),
             "prev_mb" -> prev(q).toString, "now_mb" -> now.toString))
       }
-      // queries added since the baseline was seeded: gate them from their
-      // first observed run (auto-append, successful runs only) instead
-      // of leaving them permanently un-gated; surface them in the output
+      // queries added since the baseline was seeded are un-gated until it
+      // is re-seeded; surface them in the output
       val missing = nowMb.collect { case (q, _) if !prev.contains(q) => q }
-      val appendable = seedable.filter { case (q, _) => !prev.contains(q) }
-      if (appendable.nonEmpty && prev.nonEmpty)
-        writeBaseline((prev.toSeq ++ appendable).sortBy(_._1))
       (regs, missing)
     } else {
       writeBaseline(seedable)

@@ -1,6 +1,16 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+
+import graft.plans.PlanStats
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -8,6 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * it; the same code path would read a 100 TB partitioned table on a real
   * cluster (spark.read.parquet over a directory tree), so nothing here is
   * local-mode specific.
+  *
+  * Opening a table runs no Spark job. `spark.read.parquet` infers the schema
+  * with a one-task job that reads one footer (70-120 ms of scheduling per
+  * open on a 4-core box, paid by every query). Instead the driver reads that
+  * same footer and hands its schema to `spark.read.schema(s).parquet`:
+  * Spark's inference picks `_common_metadata`, then `_metadata`, then the
+  * first data file in path order, hidden files skipped, and converts it with
+  * Spark's own footer-to-schema code, so the schema is the one inference
+  * gives. A session with `spark.sql.parquet.mergeSchema` on, a directory
+  * with subdirectories (partition discovery), and a path with nothing to
+  * read take plain `spark.read.parquet`, with its job and its errors.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -15,23 +36,60 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = if (name == "events") {
-      // events.ts arrives in several wire formats: parquet TIMESTAMP(NANOS)
-      // (earlier driver drops and GenScale's int64-nanos scale dirs) and
-      // timestamp[us] (current driver drops). With the legacy conf on, a
-      // NANOS column reads as long — convert with exact integer division
-      // (a double division would lose precision above 2^53 ns) — while a
-      // MICROS column reads as a timestamp already.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          df.withColumn("ts",
-            org.apache.spark.sql.functions.timestamp_micros(
-              org.apache.spark.sql.functions.expr("ts DIV 1000")))
-        case _ => df
+    // events.ts arrives in several wire formats: parquet TIMESTAMP(NANOS)
+    // (earlier driver drops and GenScale's int64-nanos scale dirs) and
+    // timestamp[us] (current driver drops). With the legacy conf on, a
+    // NANOS column reads as long, which normalize converts.
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalize(name, readParquet(spark, s"$sfDir/$name.parquet"))
+  }
+
+  /** Register every table as a temp view so SQL-form queries work too. */
+  def registerAll(spark: SparkSession, sfDir: String): Unit =
+    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+
+  /** `spark.read.parquet(path)`, with the schema read on the driver when
+    * it can be (see the object doc). */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark's inference would give `path`, from one footer; None
+    * where only Spark's own inference answers. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      val top = fs.getFileStatus(root)
+      val files: Seq[FileStatus] =
+        if (top.isFile) Seq(top)
+        else fs.listStatus(root).toSeq
+          .filterNot(f => GraftShims.hiddenPathName(f.getPath.getName))
+          .sortBy(_.getPath.toString)
+      val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      val pick =
+        if (files.exists(_.isDirectory)) None
+        else summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+          .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      pick.map { f =>
+        val footer = PlanStats.footer(HadoopInputFile.fromStatus(f, conf), rowGroups = false)
+        GraftShims.parquetSchema(spark, f.getPath, footer)
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } catch { case NonFatal(_) => None } // a missing path or a bad footer: Spark reports it
+
+  /** The engine's column types over a raw table read. */
+  private[graft] def normalize(name: String, raw: DataFrame): DataFrame = {
+    // A NANOS events.ts read as long: convert with exact integer division
+    // (a double division would lose precision above 2^53 ns), while a
+    // MICROS column reads as a timestamp already.
+    val df = if (name == "events" && raw.schema("ts").dataType == LongType)
+      raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+    else raw
     // Timezone-NAIVE parquet timestamps (isAdjustedToUTC=false, what the
     // current driver drop writes for events.ts / o_orderdate / l_shipdate)
     // read as TIMESTAMP_NTZ under Spark 4's NTZ inference, which rejects
@@ -39,17 +97,9 @@ object Tables {
     // its DuckDB oracles rely on. The session is pinned UTC (GraftSession),
     // so casting NTZ -> TIMESTAMP maps the wall-clock to the identical
     // instant DuckDB sees when it reads the same naive column.
-    raw.schema.fields.foldLeft(raw) { (df, f) =>
-      f.dataType match {
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          df.withColumn(f.name, df.col(f.name)
-            .cast(org.apache.spark.sql.types.TimestampType))
-        case _ => df
-      }
+    df.schema.fields.foldLeft(df) { (d, f) =>
+      if (f.dataType == TimestampNTZType) d.withColumn(f.name, col(f.name).cast(TimestampType))
+      else d
     }
   }
-
-  /** Register every table as a temp view so SQL-form queries work too. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -3,12 +3,13 @@ package graft.plans
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 
 /** Row counts WITHOUT a scan, where one is derivable.
   *
@@ -87,11 +88,18 @@ object PlanStats {
       // no Spark job, no executor involvement
       val total = java.util.Arrays.stream(files).parallel()
         .mapToLong { f =>
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(f), conf))
-          try r.getRecordCount finally r.close()
+          footer(HadoopInputFile.fromPath(new Path(f), conf), rowGroups = true)
+            .getBlocks.stream().mapToLong(_.getRowCount).sum()
         }.sum()
       Some(total)
     }
   }
+
+  /** One Parquet footer, read on the driver by Spark's own footer reader.
+    * `rowGroups = false` skips the row-group metadata: a schema needs only
+    * the file metadata (Tables.load). */
+  private[graft] def footer(file: HadoopInputFile, rowGroups: Boolean): ParquetMetadata =
+    ParquetFooterReader.readFooter(file,
+      if (rowGroups) ParquetMetadataConverter.NO_FILTER
+      else ParquetMetadataConverter.SKIP_ROW_GROUPS)
 }

@@ -1,10 +1,13 @@
 package graft.sources
 
-import java.io.File
+import java.io.{BufferedReader, File, InputStreamReader}
+import java.nio.ByteBuffer
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.util.Base64
+import java.nio.file.{Files, StandardOpenOption}
+import java.util.{Base64, Optional}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -13,7 +16,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -111,26 +114,9 @@ object KafkaWire {
       parts.sorted.map(t -> _)
     }
 
-  /** End offset (= record count) of one partition log. */
-  private[sources] def endOffset(root: String, topic: String, p: Int): Long = {
-    val f = partitionFile(root, topic, p)
-    if (!f.isFile) 0L
-    else {
-      // count '\n' bytes — every appended record ends with one
-      val in = Files.newInputStream(f.toPath)
-      try {
-        val buf = new Array[Byte](64 * 1024)
-        var n = 0L
-        var r = in.read(buf)
-        while (r > 0) {
-          var i = 0
-          while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
-          r = in.read(buf)
-        }
-        n
-      } finally in.close()
-    }
-  }
+  /** Lines between two indexed line starts of a [[LineIndex]]: a reader
+    * skips fewer than this many lines after its seek. */
+  private[sources] val Stride = 4096
 
   // ---- offsets codec: the connector's JSON shape {"topic":{"0":5}} ----
 
@@ -161,14 +147,70 @@ object KafkaWire {
   }
 }
 
+/** Incremental sparse line index of one partition log: the complete lines
+  * seen so far, the bytes they span, and the byte offset of every
+  * `Stride`-th line start. Each `refresh` reads only the bytes appended
+  * since the last one, so a log's end offset costs the new bytes, not the
+  * whole log, and a reader seeks to within `Stride` lines of its start. */
+private[sources] final class LineIndex {
+  private var scanned = 0L // bytes up to the end of the last complete line
+  private var count = 0L   // complete lines (every record ends with '\n')
+  private val starts = mutable.ArrayBuffer(0L) // starts(k): byte offset of line k * Stride
+
+  /** Scan what `f` gained since the last call and return its complete line
+    * count. A torn last line is not counted until its newline arrives; a
+    * file that shrank is scanned again from 0. */
+  def refresh(f: File): Long = synchronized {
+    val size = f.length() // 0 when absent
+    if (size < scanned) {
+      scanned = 0L; count = 0L
+      starts.clear(); starts += 0L
+    }
+    if (size > scanned) {
+      val ch = FileChannel.open(f.toPath)
+      try {
+        val buf = ByteBuffer.allocate(64 * 1024)
+        val a = buf.array()
+        var at = scanned
+        var r = ch.read(buf, at)
+        while (r > 0) {
+          var i = 0
+          while (i < r) {
+            if (a(i) == '\n') {
+              count += 1
+              scanned = at + i + 1
+              if (count % KafkaWire.Stride == 0) starts += scanned
+            }
+            i += 1
+          }
+          at += r
+          buf.clear()
+          r = ch.read(buf, at)
+        }
+      } finally ch.close()
+    }
+    count
+  }
+
+  /** Complete lines as of the last `refresh`. */
+  def lines: Long = synchronized(count)
+
+  /** (line, byte offset) of the nearest indexed line start at or before `line`. */
+  def seek(line: Long): (Long, Long) = synchronized {
+    val k = math.min(line / KafkaWire.Stride, starts.size - 1L).toInt
+    (k.toLong * KafkaWire.Stride, starts(k))
+  }
+}
+
 /** Producer side of the test log — the KafkaUtils/KafkaProducer stand-in
   * the integration suites drive (reference
   * integration/utils/KafkaUtils.java:19-33). Same-JVM appends only. */
 object KafkaWireLog {
 
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(f: File): Object =
-    locks.computeIfAbsent(f.getAbsolutePath, _ => new Object)
+  // per file: its line index, which is also the lock appends take
+  private val indexes = new java.util.concurrent.ConcurrentHashMap[String, LineIndex]()
+  private def indexFor(f: File): LineIndex =
+    indexes.computeIfAbsent(f.getAbsolutePath, _ => new LineIndex)
 
   /** Create `partitions` empty partition logs per topic (so subscribe
     * discovers them before any record arrives). */
@@ -186,8 +228,10 @@ object KafkaWireLog {
            tsType: Int = 0): Long = {
     val f = KafkaWire.partitionFile(root, topic, partition)
     f.getParentFile.mkdirs()
-    lockFor(f).synchronized {
-      val offset = KafkaWire.endOffset(root, topic, partition)
+    val index = indexFor(f)
+    index.synchronized {
+      // the count kept from earlier appends, checked against the file size
+      val offset = index.refresh(f)
       val line = KafkaWire.encodeLine(tsMillis, tsType, key, value, headers) + "\n"
       Files.write(f.toPath, line.getBytes(UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -263,7 +307,8 @@ final class KafkaWireScan(options: CaseInsensitiveStringMap) extends Scan {
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
       resolveTps().map { case (t, p) =>
-        KafkaWireInputPartition(root, t, p, 0L, KafkaWire.endOffset(root, t, p))
+        val end = new LineIndex().refresh(KafkaWire.partitionFile(root, t, p))
+        KafkaWireInputPartition(root, t, p, 0L, end, 0L, 0L)
       }.filter(ip => ip.end > ip.start).toArray
     override def createReaderFactory(): PartitionReaderFactory =
       new KafkaWireReaderFactory
@@ -277,13 +322,21 @@ final class KafkaWireOffset(val offsets: Map[(String, Int), Long]) extends Offse
 final class KafkaWireMicroBatchStream(root: String,
                                       options: CaseInsensitiveStringMap,
                                       tps: () => Seq[(String, Int)])
-  extends MicroBatchStream with SupportsAdmissionControl {
+  extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
 
   private val maxOffsetsPerTrigger: Option[Long] =
     Option(options.get("maxOffsetsPerTrigger")).map(_.toLong)
 
+  // one incremental line index per topic-partition, kept across triggers
+  private val indexes = mutable.Map.empty[(String, Int), LineIndex]
+  private def index(tp: (String, Int)): LineIndex =
+    indexes.getOrElseUpdate(tp, new LineIndex)
+
+  // the uncapped ends the last latestOffset saw, for the lag metrics
+  @volatile private var latestEnds = Map.empty[(String, Int), Long]
+
   private def currentEnds(): Map[(String, Int), Long] =
-    tps().map { case (t, p) => (t, p) -> KafkaWire.endOffset(root, t, p) }.toMap
+    tps().map { case (t, p) => (t, p) -> index((t, p)).refresh(KafkaWire.partitionFile(root, t, p)) }.toMap
 
   override def initialOffset(): Offset = {
     val mode = Option(options.get("startingOffsets")).getOrElse("earliest")
@@ -309,6 +362,7 @@ final class KafkaWireMicroBatchStream(root: String,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[KafkaWireOffset].offsets
     val ends = currentEnds()
+    latestEnds = ends
     val capped = limit match {
       case _ if maxRowsOf(limit).isEmpty => ends
       case _ =>
@@ -346,9 +400,32 @@ final class KafkaWireMicroBatchStream(root: String,
     val to = end.asInstanceOf[KafkaWireOffset].offsets
     to.toSeq.sortBy(_._1).flatMap { case ((t, p), endO) =>
       val startO = from.getOrElse((t, p), 0L)
-      if (endO > startO) Some(KafkaWireInputPartition(root, t, p, startO, endO))
-      else None
+      if (endO > startO) {
+        // a restart can plan a logged batch before any latestOffset scan
+        val idx = index((t, p))
+        if (idx.lines < startO) idx.refresh(KafkaWire.partitionFile(root, t, p))
+        val (seekLine, seekByte) = idx.seek(startO)
+        Some(KafkaWireInputPartition(root, t, p, startO, endO, seekLine, seekByte))
+      } else None
     }.toArray
+  }
+
+  /** The connector's lag metrics: records between the consumed offsets
+    * and the ends the last `latestOffset` saw, per partition. */
+  override def metrics(latestConsumedOffset: Optional[Offset]): java.util.Map[String, String] = {
+    val ends = latestEnds
+    val lags = if (!latestConsumedOffset.isPresent) Nil else {
+      val consumed = latestConsumedOffset.get match {
+        case o: KafkaWireOffset => o.offsets
+        case o => KafkaWire.parseOffsetsJson(o.json) // a recovered, still serialized offset
+      }
+      ends.toSeq.map { case (tp, end) => end - consumed.getOrElse(tp, 0L) }
+    }
+    if (lags.isEmpty) java.util.Collections.emptyMap()
+    else Map(
+      "minOffsetsBehindLatest" -> lags.min.toString,
+      "maxOffsetsBehindLatest" -> lags.max.toString,
+      "avgOffsetsBehindLatest" -> (lags.sum.toDouble / lags.size).toString).asJava
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -363,10 +440,12 @@ final class KafkaWireMicroBatchStream(root: String,
 
 /** One topic-partition offset slice `[start, end)` (Kafka's `(start, end]`
   * phrasing counts from the last consumed record; line numbering counts
-  * from the next unread one — the same half-open range). */
+  * from the next unread one — the same half-open range). The reader starts
+  * at byte `seekByte`, where line `seekLine <= start` begins. */
 final case class KafkaWireInputPartition(root: String, topic: String,
                                          partition: Int, start: Long,
-                                         end: Long) extends InputPartition
+                                         end: Long, seekLine: Long,
+                                         seekByte: Long) extends InputPartition
 
 final class KafkaWireReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -378,12 +457,14 @@ final class KafkaWireReaderFactory extends PartitionReaderFactory {
 final class KafkaWirePartitionReader(ip: KafkaWireInputPartition)
   extends PartitionReader[InternalRow] {
 
-  private val lines = Files.newBufferedReader(
-    Paths.get(KafkaWire.partitionFile(ip.root, ip.topic, ip.partition).getPath),
-    UTF_8)
-  private var pos = 0L
+  private val lines = {
+    val ch = FileChannel.open(KafkaWire.partitionFile(ip.root, ip.topic, ip.partition).toPath)
+    ch.position(ip.seekByte)
+    new BufferedReader(new InputStreamReader(Channels.newInputStream(ch), UTF_8))
+  }
+  private var pos = ip.seekLine
   private var row: InternalRow = _
-  // skip to the slice start
+  // skip to the slice start: fewer than KafkaWire.Stride lines
   while (pos < ip.start && lines.readLine() != null) pos += 1
 
   override def next(): Boolean =

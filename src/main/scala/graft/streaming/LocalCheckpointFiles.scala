@@ -33,11 +33,16 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *  - `cancel` deletes both temp files.
   * Like Hadoop's local file system, neither file is fsync'ed.
   *
-  * Everything else (`open`, `list`, `exists`, `delete`,
+  * `open` of a `file:` path goes through Hadoop's checksummed local
+  * `FileSystem`, so a corrupt offset, commit or state file raises
+  * `ChecksumException` instead of being read back (Spark's `FileContext`
+  * manager reads a local file raw: `FilterFs.open` bypasses `ChecksumFs`).
+  * A file with no sidecar, as older checkpoints may hold, reads unchecked.
+  *
+  * Everything else (`list`, `exists`, `delete`,
   * `createCheckpointDirectory`), and every path whose scheme is not `file`,
   * goes to the manager Spark builds from the same configuration without the
-  * key: reads are Spark's own (its `FileContext` reads a local file without
-  * checking the sidecar, as before), and HDFS or S3 behave as in Spark.
+  * key, so HDFS or S3 behave as in Spark.
   */
 final class LocalCheckpointFiles(path: Path, conf: Configuration)
   extends CheckpointFileManager {
@@ -71,7 +76,10 @@ final class LocalCheckpointFiles(path: Path, conf: Configuration)
     case None => spark.mkdirs(p)
   }
 
-  override def open(p: Path): FSDataInputStream = spark.open(p)
+  override def open(p: Path): FSDataInputStream = local(p) match {
+    case Some(_) => FileSystem.getLocal(conf).open(p)
+    case None => spark.open(p)
+  }
   override def list(p: Path, filter: PathFilter): Array[FileStatus] = spark.list(p, filter)
   override def exists(p: Path): Boolean = spark.exists(p)
   override def delete(p: Path): Unit = spark.delete(p)

@@ -1,10 +1,16 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge into Spark's `private[sql]` surface — the one place the engine
   * touches non-public API. Everything else builds on the public DataFrame /
@@ -51,6 +57,21 @@ object GraftShims {
     case s: StreamExecution => s.queryExecutionThread.isAlive
     case _ => q.isActive
   }
+
+  /** The Spark schema of one Parquet footer, converted by the code Spark's
+    * schema inference runs on the footer it picks
+    * (`ParquetFileFormat.readSchemaFromFooter`): the Spark row-metadata
+    * schema when the file carries one, and the session's binary, int96,
+    * NTZ and nanos settings. (Inference takes Spark's defaults for case
+    * sensitivity, field-id reads and variant annotations where this reads
+    * the session's; the engine changes none of them.) */
+  def parquetSchema(spark: SparkSession, file: Path, footer: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+  /** True for a name Spark's file listing skips: hidden `_`/`.` files other
+    * than the Parquet summary files, and `._COPYING_` files. */
+  def hiddenPathName(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
 
   /** Register a SQL function name building a custom expression. */
   def registerFunction(spark: SparkSession, name: String,

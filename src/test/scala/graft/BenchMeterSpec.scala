@@ -94,4 +94,15 @@ class BenchMeterSpec extends SparkSpecBase {
     val entries = committed.count(_ == ',') + 1 // query names hold no comma
     assert(entries > 100 && Bench.parseBaseline(committed).size == entries)
   }
+
+  test("a baseline missing queries is reported, not rewritten") {
+    assume(sys.env.get("SPARK_GRAFT_UPDATE_BASELINE").isEmpty)
+    val file = java.nio.file.Files.createTempFile("baseline", ".json")
+    val committed = "{\n\"a\": 1.5\n}\n"
+    java.nio.file.Files.writeString(file, committed)
+    val now = Seq("a" -> 1.5, "b" -> 2.0)
+    val (regs, missing) = Bench.baselineGate(file.toFile, now, now)
+    assert(regs.isEmpty && missing == Seq("b"))
+    assert(java.nio.file.Files.readString(file) == committed)
+  }
 }

@@ -1,7 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.util.Try
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -15,6 +20,11 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *    that boundary.
   *  - native timestamp[us] (current driver drops): must pass through
   *    untouched.
+  *
+  * And pins the job-free open: the schema Tables.load reads from one footer
+  * on the driver is, field for field (nullability and metadata included),
+  * the schema Spark's own inference gives, on every fixture shape, and
+  * opening the ten tables runs no Spark job.
   */
 class TablesLoadSpec extends SparkSpecBase {
   import spark.implicits._
@@ -102,5 +112,135 @@ class TablesLoadSpec extends SparkSpecBase {
     val loaded = Tables.load(spark, dir, "documents")
     assert(loaded.schema("ts").dataType == LongType,
       "only the events loader interprets ts")
+  }
+
+  // ---------- the footer schema is the inferred schema ----------
+
+  /** The driver-provided scale-factor tables (TESTDATA.md). */
+  private val testdata = "/root/testdata"
+
+  /** Runs `body` and returns (result, number of Spark jobs started). */
+  private def countingJobs[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      // the listener bus is async and its drain API is private[spark]
+      Thread.sleep(500)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Table `name` under `dir`: the driver-read schema equals the inferred
+    * one, raw and after the engine's normalization. */
+  private def assertInferredSchema(dir: String, name: String): Unit = {
+    val path = s"$dir/$name.parquet"
+    val loaded = Tables.load(spark, dir, name) // sets the events conf first
+    val inferred = spark.read.parquet(path)
+    assert(Tables.readParquet(spark, path).schema == inferred.schema, s"$path raw schema")
+    assert(loaded.schema == Tables.normalize(name, inferred).schema, s"$path loaded schema")
+  }
+
+  for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"))
+    test(s"every $sf table opens with the schema Spark infers") {
+      val dir = s"$testdata/$sf"
+      assume(new java.io.File(dir).isDirectory, s"$dir is not present")
+      Tables.all.foreach(assertInferredSchema(dir, _))
+    }
+
+  test("opening all ten tables runs no Spark job") {
+    val dir = s"$testdata/sf0.01"
+    val (schemas, jobs) = countingJobs(Tables.all.map(Tables.load(spark, dir, _).schema))
+    assert(schemas.forall(_.nonEmpty))
+    assert(jobs == 0, s"opening the tables ran $jobs Spark jobs")
+    // the listener does see inference's job
+    assert(countingJobs(spark.read.parquet(s"$dir/nation.parquet"))._2 >= 1)
+  }
+
+  /** The three events wire formats of the tests above. */
+  private def wireFormats: Seq[(String, DataFrame)] = {
+    val us = micros.toDF("us")
+    Seq(
+      "int64 nanos" -> us.select((col("us") * 1000L).as("ts"), col("us").as("expected_us")),
+      "timestamp[us]" -> us.select(timestamp_micros(col("us")).as("ts"), col("us")),
+      "tz-naive timestamp[us]" -> us.select(timestamp_micros(col("us"))
+        .cast(org.apache.spark.sql.types.TimestampNTZType).as("ts"), col("us")))
+  }
+
+  test("the events wire formats open with the schema Spark infers") {
+    for ((format, df) <- wireFormats) withClue(format) {
+      val dir = tmp()
+      df.write.parquet(s"$dir/events.parquet")
+      assertInferredSchema(dir, "events")
+    }
+  }
+
+  test("a GenScale-style multi-part directory with _SUCCESS and .crc files") {
+    // GenScale writes events as int64 nanos, repartitioned, in appended chunks
+    val dir = tmp()
+    val path = s"$dir/events.parquet"
+    val events = Tables.load(spark, s"$testdata/sf0.001", "events")
+      .withColumn("ts", unix_micros(col("ts")) * lit(1000L))
+    events.repartition(3).write.mode("overwrite").parquet(path)
+    events.withColumn("event_id", col("event_id") + lit(1000000L))
+      .repartition(2).write.mode("append").parquet(path)
+    val names = new java.io.File(path).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    assert(names.count(_.endsWith(".parquet")) == 5)
+    assertInferredSchema(dir, "events")
+    assert(Tables.load(spark, dir, "events").count() == 2 * events.count())
+  }
+
+  test("summary files come first: _common_metadata, then _metadata, then data") {
+    val dir = tmp()
+    val path = s"$dir/t.parquet"
+    def single(df: DataFrame): java.nio.file.Path = {
+      val d = tmp()
+      df.coalesce(1).write.parquet(d + "/x")
+      Files.list(Paths.get(d, "x")).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    }
+    Seq(1L, 2L).toDF("a").write.parquet(path)
+    val withB = single(Seq((3L, "x")).toDF("a", "b"))
+    val withC = single(Seq((4L, "y", 1.5)).toDF("a", "b", "c"))
+    def inferredNames = spark.read.parquet(path).schema.fieldNames.toSeq
+    Files.copy(withB, Paths.get(path, "_metadata"))
+    assert(inferredNames == Seq("a", "b"))
+    assert(Tables.readParquet(spark, path).schema == spark.read.parquet(path).schema)
+    Files.copy(withC, Paths.get(path, "_common_metadata"), StandardCopyOption.REPLACE_EXISTING)
+    assert(inferredNames == Seq("a", "b", "c"))
+    assert(Tables.readParquet(spark, path).schema == spark.read.parquet(path).schema)
+  }
+
+  test("mergeSchema and partitioned directories fall back to Spark's inference") {
+    val dir = tmp()
+    val merged = s"$dir/merged.parquet"
+    Seq(1L).toDF("a").write.parquet(merged)
+    Seq((2L, "x")).toDF("a", "b").write.mode("append").parquet(merged)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val (schema, jobs) = countingJobs(Tables.readParquet(spark, merged).schema)
+      assert(schema == spark.read.parquet(merged).schema)
+      assert(schema.fieldNames.toSeq == Seq("a", "b"))
+      assert(jobs >= 1, "mergeSchema must take Spark's inference")
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+    val parted = s"$dir/parted.parquet"
+    Seq((1L, 0), (2L, 1)).toDF("a", "p").write.partitionBy("p").parquet(parted)
+    val schema = Tables.readParquet(spark, parted).schema
+    assert(schema == spark.read.parquet(parted).schema)
+    assert(schema.fieldNames.toSeq == Seq("a", "p"))
+  }
+
+  test("an empty or missing directory fails with Spark's own error") {
+    val empty = tmp()
+    for (path <- Seq(empty, s"$empty/absent.parquet")) {
+      def failure(read: => DataFrame) = Try(read).failed.map(e => (e.getClass, e.getMessage))
+      val ours = failure(Tables.readParquet(spark, path))
+      assert(ours.isSuccess, s"$path read without an error")
+      assert(ours == failure(spark.read.parquet(path)))
+    }
   }
 }
