@@ -4,11 +4,13 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.graft.GraftShims
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 import graft.plans.PlanStats
 
@@ -36,12 +38,17 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val footer = footerOf(spark, path)
     // events.ts arrives in several wire formats: parquet TIMESTAMP(NANOS)
-    // (earlier driver drops and GenScale's int64-nanos scale dirs) and
+    // (earlier driver drops), int64 nanos (GenScale's scale dirs) and
     // timestamp[us] (current driver drops). With the legacy conf on, a
-    // NANOS column reads as long, which normalize converts.
-    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalize(name, readParquet(spark, s"$sfDir/$name.parquet"))
+    // NANOS column reads as long, which normalize converts. The conf is
+    // session-wide, so it is set only for a NANOS footer, or where no
+    // footer answers and Spark's inference reads the files.
+    if (name == "events" && footer.forall { case (_, f) => nanosTs(f) })
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalize(name, readFooter(spark, path, footer))
   }
 
   /** Register every table as a temp view so SQL-form queries work too. */
@@ -51,14 +58,21 @@ object Tables {
   /** `spark.read.parquet(path)`, with the schema read on the driver when
     * it can be (see the object doc). */
   private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
+    readFooter(spark, path, footerOf(spark, path))
+
+  private def readFooter(spark: SparkSession, path: String,
+                         footer: Option[(Path, ParquetMetadata)]): DataFrame =
+    footer.flatMap { case (file, f) =>
+      try Some(GraftShims.parquetSchema(spark, file, f))
+      catch { case NonFatal(_) => None } // Spark reports it
+    } match {
       case Some(s) => spark.read.schema(s).parquet(path)
       case None => spark.read.parquet(path)
     }
 
-  /** The schema Spark's inference would give `path`, from one footer; None
-    * where only Spark's own inference answers. */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+  /** The file Spark's inference would read for `path`, and its footer;
+    * None where only Spark's own inference answers. */
+  private def footerOf(spark: SparkSession, path: String): Option[(Path, ParquetMetadata)] =
     if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) None
     else try {
       val conf = spark.sessionState.newHadoopConf()
@@ -76,11 +90,20 @@ object Tables {
         if (files.exists(_.isDirectory)) None
         else summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
           .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
-      pick.map { f =>
-        val footer = PlanStats.footer(HadoopInputFile.fromStatus(f, conf), rowGroups = false)
-        GraftShims.parquetSchema(spark, f.getPath, footer)
-      }
+      pick.map(f => f.getPath ->
+        PlanStats.footer(HadoopInputFile.fromStatus(f, conf), rowGroups = false))
     } catch { case NonFatal(_) => None } // a missing path or a bad footer: Spark reports it
+
+  /** True when the footer's top-level `ts` is a parquet TIMESTAMP(NANOS). */
+  private def nanosTs(footer: ParquetMetadata): Boolean = {
+    val schema = footer.getFileMetaData.getSchema
+    schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      })
+  }
 
   /** The engine's column types over a raw table read. */
   private[graft] def normalize(name: String, raw: DataFrame): DataFrame = {

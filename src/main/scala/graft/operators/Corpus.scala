@@ -414,7 +414,8 @@ object Corpus {
     *
     * Scale shape: the EVAL side collapses to distinct n-grams — bounded by
     * the eval corpus, which is orders of magnitude smaller than training —
-    * and is counted once. Up to [[Routing.maxBroadcastGrams]] grams they
+    * and is fetched once, bounded at [[Routing.maxBroadcastGrams]]
+    * ([[Routing.fetchUpTo]]). Up to that many grams they
     * broadcast, and the TRAINING side's exploded (id, gram) pairs
     * left-semi-join them locally (no shuffle of the exploded frame);
     * above it the grams collapse to a
@@ -426,12 +427,14 @@ object Corpus {
     * it virtually always is). Both routes return the same rows at any
     * `fpp`: Bloom error is one-sided, and the exact join admits no junk.
     *
-    * Build, [[Decontaminator.exact]], close: the distinct-gram frame is
-    * persisted across the count and the sketch build, then dropped before
-    * the caller's action, so the returned plan recomputes the eval
-    * pipeline once — the price of a transparent, lineage-complete plan
-    * (eval is orders of magnitude smaller than the training side it
-    * gates). */
+    * Build, [[Decontaminator.exact]], close: on the broadcast route the
+    * fetched grams are a local frame, so the returned plan broadcasts
+    * driver rows. On the sketch route the distinct-gram frame is
+    * persisted across the fetch, the count and the sketch build, then
+    * dropped before the caller's action, so the returned plan recomputes
+    * the eval pipeline once — the price of a transparent,
+    * lineage-complete plan (eval is orders of magnitude smaller than the
+    * training side it gates). */
   def decontaminate(train: DataFrame, id: Column, text: Column,
                     eval: DataFrame, evalText: Column,
                     n: Int = 13, fpp: Double = 0.01,
@@ -461,25 +464,36 @@ object Corpus {
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
     val (grams, sketch) = keySet(eval
       .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct(), fpp, route)(Routing.gramSketch)
+      .distinct(), fpp, route)(Routing.maxBroadcastGrams, Routing.gramSketch)
     new Decontaminator(grams, sketch, n)
   }
 
   /** The distinct single-column key frame `keys` that [[matchedIds]]
-    * probes, with its Bloom sketch when the route is the sketch: `keys`
-    * is persisted and counted once (the count sizes the sketch), and
-    * `large` decides on that count. The forced broadcast route skips the
-    * count and the persist. Zero keys have nothing to sketch:
-    * bloom_filter_agg over no rows yields a null buffer that
-    * BloomFilter.readFrom rejects. */
+    * probes, with its Bloom sketch when the route is the sketch. Under
+    * [[Routing.Auto]] `keys` is persisted and fetched once, bounded at
+    * `cap`, the broadcast threshold `large` switches above: on the
+    * broadcast route the fetched keys come back as a local frame (the
+    * probe broadcasts driver rows, no cached relation stays behind); on
+    * the sketch route the persisted keys are counted, which sizes the
+    * sketch. The forced broadcast route skips the fetch and the persist.
+    * Zero keys have nothing to sketch: bloom_filter_agg over no rows
+    * yields a null buffer that BloomFilter.readFrom rejects. */
   private def keySet(keys: DataFrame, fpp: Double, route: Routing.Route)(
-      large: Long => Boolean)
+      cap: Long, large: Long => Boolean)
   : (DataFrame, Option[org.apache.spark.util.sketch.BloomFilter]) =
     if (route == Routing.Small) (keys, None)
     else {
-      val n = keys.persist().count()
-      (keys, if (n > 0L && Routing.isLarge(route, n)(large))
-        Some(keys.stat.bloomFilter(keys.columns.head, n, fpp)) else None)
+      keys.persist()
+      Routing.smallSide(route, keys, cap)(large) match {
+        case Some(k) =>
+          keys.unpersist()
+          (keys.sparkSession.createDataFrame(java.util.Arrays.asList(k: _*),
+            keys.schema), None)
+        case None =>
+          val n = keys.count()
+          (keys, if (n > 0L)
+            Some(keys.stat.bloomFilter(keys.columns.head, n, fpp)) else None)
+      }
     }
 
   /** The ids of `probes` (columns `idCol`, `keyCol`) whose key is in the
@@ -651,8 +665,10 @@ object Corpus {
     * since Heaps' law puts even a 100 TB crawl's frequency-capped type
     * count under the cap); above it the all-executor
     * [[bpeLoopDistributed]] loop, which never ships the frame to the
-    * driver. Both loops consume the same persisted vocab frame (one
-    * corpus scan, routing count included).
+    * driver. Under [[Routing.Auto]] the vocab frame is persisted and
+    * fetched once, bounded at the cap ([[Routing.fetchUpTo]]): the driver
+    * loop runs on the fetched rows, the executor loop on the persisted
+    * frame (one corpus scan, routing fetch included).
     *
     * Determinism: exact integer counts, ties broken on the pair key
     * (≡ (p1, p2) lexicographic), and the merge application is a literal
@@ -663,17 +679,15 @@ object Corpus {
                route: Routing.Route = Routing.Auto): DataFrame = {
     require(numMerges > 0, "need numMerges > 0")
     val spark = docs.sparkSession
-    def local(vocab: DataFrame) =
-      bpeLoopLocal(vocab.collect().map(r => (r.getLong(0), r.getString(1))),
-        numMerges, spark)
     val vocab = bpeVocab(docs, text)
-    // persisted only when measured: the count and the loop then share one
-    // corpus scan (the forced routes never evaluate the by-name size)
-    try {
-      if (Routing.isLarge(route, vocab.persist().count())(
-          Routing.bpeOnExecutors))
-        bpeLoopDistributed(vocab, numMerges)
-      else local(vocab)
+    // persisted when measured: the bounded fetch and the executor loop
+    // share one corpus scan
+    if (route == Routing.Auto) vocab.persist()
+    try Routing.smallSide(route, vocab, Routing.bpeLocalMaxTypes)(
+        Routing.bpeOnExecutors) match {
+      case Some(v) =>
+        bpeLoopLocal(v.map(r => (r.getLong(0), r.getString(1))), numMerges, spark)
+      case None => bpeLoopDistributed(vocab, numMerges)
     } finally vocab.unpersist()
   }
 
@@ -1494,8 +1508,9 @@ object Corpus {
     * of [[hostSuffixes]] — never a substring scan.
     *
     * Scale shape: the domain list collapses to distinct lowercased keys
-    * and is COUNTED once (domain lists are small by nature, 10⁵-10⁷ rows):
-    * up to [[Routing.maxBroadcastDomains]] it broadcasts into a map-side
+    * and is fetched once, bounded at [[Routing.maxBroadcastDomains]]
+    * (domain lists are small by nature, 10⁵-10⁷ rows): up to that many
+    * keys the fetched rows broadcast into a map-side
     * semi-join over the exploded suffixes (≤ ~6 rows per doc, no shuffle
     * of doc text); above it, the suffixes probe a Bloom sketch map-side
     * and only the surviving sliver reaches the exact semi-join — the
@@ -1510,7 +1525,7 @@ object Corpus {
   }
 
   /** Build a [[UrlGate]] — the STREAMING deployment of [[urlFilter]]:
-    * the blocklist is normalized, deduped, and COUNTED once (domain lists
+    * the blocklist is normalized, deduped, and measured once (domain lists
     * are static in production — RefinedWeb's runs in-stream against a
     * fixed registry), choosing the broadcast or Bloom-prefiltered match
     * path up front; every scored (micro-)batch then pays only the
@@ -1522,7 +1537,8 @@ object Corpus {
               route: Routing.Route = Routing.Auto): UrlGate = {
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
     val (dset, bloom) = keySet(domains.select(lower(domain).as("__uf_d"))
-      .distinct(), fpp, route)(Routing.domainSketch)
+      .distinct(), fpp, route)(Routing.maxBroadcastDomains,
+        Routing.domainSketch)
     new UrlGate(dset, bloom)
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.{GraftFunctions, TextFunctions}
 
@@ -327,8 +328,8 @@ object Dedup {
   }
 
   /** Fail-fast misuse guard for the quadratic-per-block pair operators:
-    * ONE bounded scalar aggregation (the same driver-action class as
-    * mergedN's min/max) over the light key frame finds the hottest block;
+    * ONE top-1 over the light key frame's block counts (one aggregation,
+    * its row count, a take-ordered head) finds the hottest block;
     * if its pair estimate exceeds `maxPairs` the call dies in seconds —
     * at call time, before any O(block²) join is even planned — instead of
     * hours into a 100 TB run. Double arithmetic: block counts can exceed
@@ -337,9 +338,9 @@ object Dedup {
                               maxPairs: Long, op: String,
                               lshPath: String): Unit = {
     if (maxPairs < Long.MaxValue) {
-      val hot = light.groupBy(blkCols.map(col): _*)
-        .agg(count(lit(1)).as("__gb_n")).agg(max(col("__gb_n"))).head()
-      val n = if (hot.isNullAt(0)) 0.0 else hot.getLong(0).toDouble
+      val n = light.groupBy(blkCols.map(col): _*).count()
+        .orderBy(col("count").desc).head(1)
+        .headOption.fold(0.0)(_.getAs[Long]("count").toDouble)
       val pairs = n * (n - 1) / 2
       if (pairs > maxPairs)
         throw new graft.GraftException(
@@ -441,8 +442,6 @@ object Dedup {
     * below. */
   private[graft] def sortedRunMembers(banded: DataFrame, idCol: String,
                                       cap: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
     val schema = banded.schema
     val bandIdx = schema.fieldIndex("band")
     val bucketIdx = schema.fieldIndex("bucket")
@@ -634,13 +633,16 @@ object Dedup {
     * two columns. An edge with a null endpoint is dropped: a null is not a
     * node, so it never takes a label and never joins two nodes.
     *
-    * Routing ([[Routing.ccOnExecutors]]): the symmetrized edge frame
-    * (two rows per edge) is persisted and measured once by its row count.
-    * Up to [[Routing.ccLocalMaxEdges]] rows each edge is collected once
-    * and the graph closes on the driver ([[closeOnDriver]]: one union-find
-    * pass, a local result frame), in a fixed number of jobs instead of
-    * a handful per round. Above it the distributed loop below runs, and
-    * nothing but its convergence sum reaches the driver.
+    * Routing ([[Routing.ccOnExecutors]], on the symmetric frame's two
+    * rows per edge): under [[Routing.Auto]] the non-null edges are
+    * persisted and fetched once, bounded at [[Routing.ccLocalMaxEdges]]
+    * / 2 + 1 edges ([[Routing.fetchUpTo]]); no count runs first. When the
+    * small route takes them the graph closes on the driver ([[unionFind]]:
+    * one union-find pass, a local result frame) in a fixed number of jobs
+    * instead of a handful per round. Otherwise the distributed loop below
+    * runs over the persisted edges, and nothing but its convergence sum
+    * reaches the driver. A forced small route collects without a bound; a
+    * forced large route never fetches, and an empty graph skips its loop.
     *
     * Distributed algorithm: min-label propagation with path halving. Each
     * round does (1) a neighbor-min step — every node adopts the smallest
@@ -689,8 +691,26 @@ object Dedup {
   def connectedComponents(edges: DataFrame, src: String, dst: String,
                           maxIter: Int = 25,
                           checkpointDir: Option[String] = None,
-                          route: Routing.Route = Routing.Auto): DataFrame = {
-    import org.apache.spark.sql.types._
+                          route: Routing.Route = Routing.Auto): DataFrame =
+    components(edges, src, dst, maxIter, checkpointDir, route) match {
+      case Left(DriverLabels(spark, schema, labels)) =>
+        val id = box(schema("comp").dataType)
+        localFrame(spark, schema,
+          labels.map { case (n, c) => Row(id(n), id(c)) })
+      case Right(loop) => loop
+    }
+
+  /** The driver route's closure: every node's (id, component) in id order,
+    * and the schema of the loop's (id, comp) frame. */
+  private final case class DriverLabels(spark: SparkSession,
+      schema: StructType, labels: Array[(Long, Long)])
+
+  /** [[connectedComponents]] and [[duplicateClusters]] in one: type check,
+    * routing, and either the driver route's labels or the loop's frame. */
+  private def components(edges: DataFrame, src: String, dst: String,
+                         maxIter: Int, checkpointDir: Option[String],
+                         route: Routing.Route)
+      : Either[DriverLabels, DataFrame] = {
     import org.apache.spark.storage.StorageLevel
     for (c <- Seq(src, dst)) {
       val t = edges.select(col(c)).schema.head.dataType
@@ -698,67 +718,69 @@ object Dedup {
         s"connectedComponents needs integral ids (tinyint, smallint, int " +
           s"or bigint); column $c is ${t.simpleString}")
     }
-    // No distinct over the symmetrized edges: min-aggregation is
-    // duplicate-insensitive, so deduping would buy nothing but a shuffle.
-    // Persisted: the routing count and the route's first read (the
-    // driver collect, or the loop's distinct nodes and symPlus) share one
-    // run of the upstream edge pipeline (an LSH candidate generator).
-    val kept = edges.filter(col(src).isNotNull && col(dst).isNotNull)
+    val kept = edges.select(Seq(src, dst).distinct.map(col): _*)
+      .filter(col(src).isNotNull && col(dst).isNotNull)
+    // both directions of every edge, for the loop. No distinct over them:
+    // min-aggregation is duplicate-insensitive, so deduping would buy
+    // nothing but a shuffle.
     val sym = kept.select(col(src).as("u"), col(dst).as("v"))
       .union(kept.select(col(dst).as("u"), col(src).as("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // the loop's schema, which the driver route's frame carries too: id
     // keeps the edge columns' nullability (a logical filter does not
     // narrow it), comp leaves a min aggregate, which Spark types nullable
     val schema = StructType(Seq(sym.schema("u").copy(name = "id"),
       StructField("comp", sym.schema("u").dataType, nullable = true)))
-    // forced Small never counts; forced Large counts only to skip the
-    // loop on an empty graph, whose label sum is null
-    lazy val rows = sym.count()
-    try {
-      if (!Routing.isLarge(route, rows)(Routing.ccOnExecutors) || rows == 0L)
-        closeOnDriver(sym, schema)
-      else closeOnExecutors(sym, maxIter, checkpointDir)
-    } finally sym.unpersist()
+    def onDriver(labels: Array[(Long, Long)]) =
+      Left(DriverLabels(edges.sparkSession, schema, labels))
+    // Persisted when measured: the fetch and the loop share one run of
+    // the upstream edge pipeline (an LSH candidate generator).
+    if (route != Routing.Small) kept.persist(StorageLevel.MEMORY_AND_DISK)
+    try Routing.smallSide(route,
+        kept.select(col(src).cast("long"), col(dst).cast("long")),
+        Routing.ccLocalMaxEdges / 2 + 1)(n => Routing.ccOnExecutors(2L * n)) match {
+      case Some(es) => onDriver(unionFind(es))
+      // an empty graph has no label sum for the loop to converge on
+      case None if route == Routing.Large && kept.isEmpty => onDriver(Array.empty)
+      case None => Right(closeOnExecutors(kept, sym, maxIter, checkpointDir))
+    } finally kept.unpersist()
   }
 
-  /** [[connectedComponents]]' driver route: every edge collected once
-    * (the u <= v half of the symmetric frame), then one union-find pass
-    * over a primitive long-keyed map. Linking the larger root under the
-    * smaller keeps every root the smallest id of its component; path
-    * halving keeps finds short. Rows leave in id order. */
-  private def closeOnDriver(sym: DataFrame,
-                            schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
+  /** [[connectedComponents]]' driver route: one union-find pass over the
+    * fetched (u, v) long edges, on a primitive long-keyed map. Linking the
+    * larger root under the smaller keeps every root the smallest id of its
+    * component; path halving keeps finds short. Labels leave in id
+    * order. */
+  private def unionFind(edges: Array[Row]): Array[(Long, Long)] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var y = x
       while (parent(y) != y) { parent(y) = parent(parent(y)); y = parent(y) }
       y
     }
-    for (e <- sym.filter(col("u") <= col("v"))
-           .select(col("u").cast("long"), col("v").cast("long")).collect()) {
+    for (e <- edges) {
       val (u, v) = (e.getLong(0), e.getLong(1))
       parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
       val (a, b) = (find(u), find(v))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
-    val box: Long => Any = schema("comp").dataType match {
-      case ByteType    => _.toByte
-      case ShortType   => _.toShort
-      case IntegerType => _.toInt
-      case _           => identity
-    }
-    val out = new java.util.ArrayList[Row](parent.size)
-    for (k <- parent.keys.toArray.sorted) out.add(Row(box(k), box(find(k))))
-    sym.sparkSession.createDataFrame(out, schema)
+    parent.keys.toArray.sorted.map(k => k -> find(k))
   }
 
+  /** A long id back in the id column's integral type. */
+  private def box(t: DataType): Long => Any = t match {
+    case ByteType    => _.toByte
+    case ShortType   => _.toShort
+    case IntegerType => _.toInt
+    case _           => identity
+  }
+
+  private def localFrame(spark: SparkSession, schema: StructType,
+                         rows: Array[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
   /** [[connectedComponents]]' distributed route: the Hash-to-Min loop over
-    * the persisted symmetric edge frame `sym` (non-empty). */
-  private def closeOnExecutors(sym: DataFrame, maxIter: Int,
+    * `sym`, the symmetric frame of the persisted non-empty edges `kept`. */
+  private def closeOnExecutors(kept: DataFrame, sym: DataFrame, maxIter: Int,
                                checkpointDir: Option[String]): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sc = sym.sparkSession.sparkContext
@@ -782,9 +804,13 @@ object Dedup {
     // runs at the labels outgrow broadcast and every round's join would
     // re-shuffle the 2|E|-row edge frame, so it crosses the wire ONCE, at
     // persist time, and each round shuffles only the 16 B/node labels.
-    val symPlus = sym.union(labels.select(col("id").as("u"), col("id").as("v")))
+    val cached = sym.union(labels.select(col("id").as("u"), col("id").as("v")))
       .repartition(col("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // the pointer jump self-joins each round's plan: over the bare cache
+    // entry its right side reads the cache too, instead of re-running
+    // the edge union and its shuffle
+    val symPlus = org.apache.spark.sql.graft.GraftShims.cachedLeaf(cached)
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       ccObserveFallbacks.incrementAndGet()
       df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0)
@@ -834,11 +860,11 @@ object Dedup {
       labels.unpersist()
       labels = next
       // symPlus is fully cached once round 1's join consumed it — the
-      // sym cache has served both of its readers by then
-      if (iter == 0) sym.unpersist()
+      // edge cache has served both of its readers by then
+      if (iter == 0) kept.unpersist()
       iter += 1
     }
-    symPlus.unpersist()
+    cached.unpersist()
     if (!converged)
       throw new graft.GraftException(
         s"connectedComponents did not converge in $maxIter rounds — " +
@@ -848,15 +874,30 @@ object Dedup {
 
   /** Duplicate clusters from near-dup pair edges: every doc that belongs
     * to a multi-doc cluster, its canonical (smallest) member, and the
-    * cluster size — the "which docs do I drop" frame of a dedup pass. */
+    * cluster size — the "which docs do I drop" frame of a dedup pass.
+    * Routed as [[connectedComponents]]: on the driver route the sizes are
+    * counted on the driver and the result is one local frame; the loop's
+    * labels are counted and joined back on the executors. Both routes
+    * return one schema. */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a",
-                        idB: String = "id_b"): DataFrame = {
-    val cc = connectedComponents(pairs, idA, idB)
-    val sizes = cc.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
-    cc.join(sizes, "comp")
-      .select(col("id").as("doc_id"), col("comp").as("component"),
-        col("cluster_size"))
-  }
+                        idB: String = "id_b",
+                        route: Routing.Route = Routing.Auto): DataFrame =
+    components(pairs, idA, idB, maxIter = 25, checkpointDir = None,
+        route = route) match {
+      case Left(DriverLabels(spark, schema, labels)) =>
+        val id = box(schema("comp").dataType)
+        val sizes = labels.groupMapReduce(_._2)(_ => 1L)(_ + _)
+        localFrame(spark, StructType(Seq(schema("id").copy(name = "doc_id"),
+            schema("comp").copy(name = "component"),
+            StructField("cluster_size", LongType, nullable = false))),
+          labels.map { case (n, c) => Row(id(n), id(c), sizes(c)) })
+      case Right(cc) =>
+        val sizes = cc.groupBy(col("comp"))
+          .agg(count(lit(1)).as("cluster_size"))
+        cc.join(sizes, "comp")
+          .select(col("id").as("doc_id"), col("comp").as("component"),
+            col("cluster_size"))
+    }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     * deduplication of an embedding corpus: cluster, then compare pairs

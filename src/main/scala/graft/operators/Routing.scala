@@ -1,13 +1,16 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
+
 /** Every size-routing threshold in the engine, defined once, each with the
   * receipt that sets it, and the decision it drives.
   *
   * An operator with more than one physical form measures its input once —
-  * a bounded count of a small side, or [[graft.plans.PlanStats.rowCount]]
-  * (hint > exact statistics > parquet footers > count()) — and asks the
-  * predicate here which form to run. No operator carries a threshold of
-  * its own and no public operator takes one as a parameter
+  * a bounded fetch of a small side ([[fetchUpTo]], whose rows the small
+  * route then uses), or [[graft.plans.PlanStats.rowCount]] (hint > exact
+  * statistics > parquet footers > count()) — and asks the predicate here
+  * which form to run. No operator carries a threshold of its own and no
+  * public operator takes one as a parameter
   * (InventoryAuditSpec enforces both; RoutingSpec pins every predicate at
   * threshold − 1, threshold and threshold + 1). Every route returns the
   * same rows as its twin, so routing moves a plan, never an answer —
@@ -108,7 +111,7 @@ object Routing {
     * name a route, so they always get the default, [[Auto]]; the forced
     * routes exist for the differential specs (each route ≡ its twin) and
     * for query names whose contract is one specific form. A forced route
-    * pays no routing count. */
+    * pays no routing measure. */
   private[graft] sealed trait Route
   /** Measure the input and decide. */
   private[graft] case object Auto extends Route
@@ -118,6 +121,27 @@ object Routing {
   /** The large-input route: executor BPE loop, Bloom-sketch probe, wide
     * simhash, hierarchical IVF, executor CC loop. */
   private[graft] case object Large extends Route
+
+  /** The rows of `df` if it holds at most `cap` of them, else None: one
+    * bounded `limit(cap + 1).collect()`, no count first. The small route
+    * runs on the rows it gets; on None at most `cap + 1` rows reached the
+    * driver. Persist `df` first when the large route reads it too, so
+    * that read does not run the upstream stages again. */
+  private[operators] def fetchUpTo(df: DataFrame, cap: Long): Option[Array[Row]] = {
+    require(cap >= 0 && cap < Int.MaxValue, s"fetch cap $cap out of range")
+    Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
+  }
+
+  /** Resolve `route` on the rows of a small side `df`: Some(rows) is the
+    * small route, None the large one. A forced small route collects every
+    * row and a forced large route reads none; [[Auto]] fetches up to `cap`
+    * rows and asks `large` about their count. */
+  private[operators] def smallSide(route: Route, df: DataFrame, cap: Long)(
+      large: Long => Boolean): Option[Array[Row]] = route match {
+    case Small => Some(df.collect())
+    case Large => None
+    case Auto  => fetchUpTo(df, cap).filterNot(rows => large(rows.length))
+  }
 
   /** Resolve `route`: a forced route never evaluates `size`; [[Auto]]
     * measures it and asks `large`. */

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 import graft.ProcessingFailureException
-import graft.operators.DeadLetter
 
 /** Processing-guarantee semantics of the reference
   * (api/record/RecordProcessingGuarantee.java:9-19):
@@ -15,20 +14,14 @@ import graft.operators.DeadLetter
   *    replays on restart. (Exactly-once with idempotent sinks is a strict
   *    upgrade the reference cannot give.)
   *
-  *  - `none`: a failing record is logged + skipped. Engine form: classify
-  *    records with vectorized predicates and split the batch into an ok
-  *    frame and a dead-letter frame, so the query keeps running and
-  *    failures are observable data (impl/record/RecordStatusObserverImpl
-  *    .java:39-47 logs-and-continues the same way).
+  *  - `none`: a failing record is logged + skipped. Engine form:
+  *    [[graft.operators.DeadLetter.split]] classifies records with
+  *    vectorized predicates and splits the batch into an ok frame and a
+  *    dead-letter frame, so the query keeps running and failures are
+  *    observable data (impl/record/RecordStatusObserverImpl.java:39-47
+  *    logs-and-continues the same way).
   */
 object Guarantees {
-
-  /** `none`-guarantee batch handler: returns (ok, deadLetter) frames for a
-    * micro-batch; wire inside `foreachBatch { (b, _) => ... }` writing each
-    * side to its sink. */
-  def skipOnFailure(batch: DataFrame,
-                    rules: Seq[(String, Column)]): (DataFrame, DataFrame) =
-    DeadLetter.split(batch, rules)
 
   /** `at_least_once` batch wrapper: a failing batch is rethrown as the
     * taxonomy [[ProcessingFailureException]], so the pipeline terminates

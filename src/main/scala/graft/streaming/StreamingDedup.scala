@@ -3,15 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, TextFunctions}
-
 /** Streaming deduplication — `dropDuplicates` with watermark-bounded state
-  * (SURVEY.md §2.9 streaming block). Two tiers:
-  *  - exact: digest-keyed `dropDuplicatesWithinWatermark` — state holds only
-  *    digests inside the watermark window, so it is bounded at any scale;
-  *  - near-dup: simhash-bucket prefilter (band equality) before the exact
-  *    digest dedup — a streaming-friendly LSH: collisions within the window
-  *    dedupe, at the cost of recall outside it.
+  * (SURVEY.md §2.9 streaming block): digest-keyed
+  * `dropDuplicatesWithinWatermark`, whose state holds only digests inside
+  * the watermark window, so it is bounded at any scale.
   */
 object StreamingDedup {
 
@@ -22,15 +17,4 @@ object StreamingDedup {
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("digest")
       .drop("digest")
-
-  /** SimHash-band near-dup suppression within the watermark window: two
-    * payloads whose 64-bit simhash agrees on all 4 16-bit bands (hamming 0)
-    * collapse; band-0..3 columns are exposed for LSH-style relaxation. */
-  def nearBySimhash(df: DataFrame, payload: Column, tsCol: String,
-                    delay: String): DataFrame =
-    df.withColumn("sim",
-        GraftFunctions.simhash(TextFunctions.tokens(payload.cast("string"))))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("sim")
-      .drop("sim")
 }

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -68,6 +68,17 @@ object GraftShims {
   def parquetSchema(spark: SparkSession, file: Path, footer: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+  /** The persisted `df` as a frame whose plan is its cache entry alone.
+    * A self-join renews the attributes of its right side's leaves, and
+    * Spark's cache lookup does not match a renewed checkpoint leaf
+    * (`LogicalRDD` keeps its partitioning's old attributes); over this
+    * frame the self-join renews only the cache entry's own output, so
+    * both sides read the cache. */
+  def cachedLeaf(df: DataFrame): DataFrame = {
+    val d = df.asInstanceOf[classic.Dataset[_]]
+    classic.Dataset.ofRows(d.sparkSession, d.queryExecution.withCachedData)
+  }
 
   /** True for a name Spark's file listing skips: hidden `_`/`.` files other
     * than the Parquet summary files, and `._COPYING_` files. */

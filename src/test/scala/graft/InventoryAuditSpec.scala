@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * public operator takes one as a parameter. It also keeps one copy of
   * each shared mechanism: the LSH in-bucket pair expansion, the streaming
   * twins' replay harness, the SQL-function table, the one kernel-call
-  * expression, the prefix scan's row-number draw and the LM bigram stream.
+  * expression, the prefix scan's row-number draw, the LM bigram stream and
+  * the bounded routing fetch.
   */
 class InventoryAuditSpec extends AnyFunSuite {
 
@@ -203,5 +204,18 @@ class InventoryAuditSpec extends AnyFunSuite {
   test("the LM bigram stream is written once") {
     val hits = linesMatching(mainDir, """toks\[i-1\] AS w1""".r)
     assert(hits.size == 1, "bigram stream copies:\n" + hits.mkString("\n"))
+  }
+
+  test("the bounded routing fetch is written once, in Routing") {
+    val fetch = linesMatching(opsDir, """\.limit\([^\n]*\+\s*1\)""".r)
+    assert(fetch.size == 1 && fetch.head.startsWith("graft/operators/Routing.scala:"),
+      "bounded fetch copies:\n" + fetch.mkString("\n"))
+    // no routed operator counts a persisted frame to route on it
+    val counts = for {
+      f <- scalaFiles(opsDir)
+      m <- """\.persist\([^)]*\)\s*\.count\(\)""".r.findAllMatchIn(read(f))
+    } yield s"${mainDir.relativize(f)}: ${m.matched}"
+    assert(counts.isEmpty, "persist().count() routing measures:\n" +
+      counts.mkString("\n"))
   }
 }

@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -105,6 +103,53 @@ class TablesLoadSpec extends SparkSpecBase {
       .foreach { case (got, expect) => assert(got == expect) }
   }
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Runs `body` with the nanos conf unset, restoring it after. */
+  private def withoutNanosConf[A](body: => A): A = {
+    val old = spark.conf.getOption(nanosAsLong)
+    spark.conf.unset(nanosAsLong)
+    try body finally old.foreach(spark.conf.set(nanosAsLong, _))
+  }
+
+  test("a timestamp[us] events load leaves the session's conf as it was") {
+    val dir = tmp()
+    micros.toDF("us").select(timestamp_micros(col("us")).as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    withoutNanosConf {
+      val before = spark.conf.get(nanosAsLong)
+      assert(Tables.load(spark, dir, "events").schema("ts").dataType == TimestampType)
+      assert(spark.conf.get(nanosAsLong) == before,
+        "a micros events load set the nanos conf on the session")
+    }
+  }
+
+  test("a TIMESTAMP(NANOS) events file loads and normalizes to exact micros") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // Spark writes no NANOS timestamps; parquet's example writer does
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,true)); " +
+        "required int64 expected_us; }")
+    val dir = tmp()
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try micros.foreach(us =>
+      w.write(groups.newGroup().append("ts", us * 1000L).append("expected_us", us)))
+    finally w.close()
+    withoutNanosConf {
+      val loaded = Tables.load(spark, dir, "events")
+      assert(loaded.schema("ts").dataType == TimestampType)
+      loaded.select(unix_micros(col("ts")).as("got_us"), col("expected_us"))
+        .as[(Long, Long)].collect()
+        .foreach { case (got, expect) => assert(got == expect) }
+      assert(spark.conf.get(nanosAsLong) == "true")
+    }
+  }
+
   test("non-events tables take the plain parquet path (no ts rewrite)") {
     val dir = tmp()
     Seq((1L, 42L)).toDF("doc_id", "ts")
@@ -118,21 +163,6 @@ class TablesLoadSpec extends SparkSpecBase {
 
   /** The driver-provided scale-factor tables (TESTDATA.md). */
   private val testdata = "/root/testdata"
-
-  /** Runs `body` and returns (result, number of Spark jobs started). */
-  private def countingJobs[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      // the listener bus is async and its drain API is private[spark]
-      Thread.sleep(500)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** Table `name` under `dir`: the driver-read schema equals the inferred
     * one, raw and after the engine's normalization. */

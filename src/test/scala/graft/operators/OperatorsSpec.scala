@@ -153,22 +153,6 @@ class ComponentsSpec extends SparkSpecBase {
     labels.head._2.toMap
   }
 
-  /** Runs `body` and returns (result, number of Spark jobs started). */
-  private def countingJobs[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      Thread.sleep(500) // the listener bus is async
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def path200 = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
 
   test("connectedComponents closes transitive chains to min-id labels") {
@@ -226,9 +210,9 @@ class ComponentsSpec extends SparkSpecBase {
       path200, "id_a", "id_b", route = Routing.Large)
       .as[(Long, Long)].collect())
     assert(auto.sorted.toSeq == loop.sorted.toSeq)
-    // the routing count (its AQE stages) and one collect of the edges;
-    // the caller's collect reads a local frame and runs none (4 measured)
-    assert(autoJobs <= 4, s"the driver route ran $autoJobs jobs")
+    // one bounded fetch of the edges (its take scans one partition, then
+    // the rest); the caller's collect reads a local frame and runs none
+    assert(autoJobs == 2, s"the driver route ran $autoJobs jobs")
     // the loop needs >= 5 rounds on diameter 199, each at least one job
     assert(loopJobs >= autoJobs + 5,
       s"the loop ran $loopJobs jobs, the driver route $autoJobs")
@@ -298,7 +282,7 @@ class ComponentsSpec extends SparkSpecBase {
     // regime the loop exists for; a chain graph forces many rounds.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val edges = (0L until 2000L).filter(_ % 50 != 49)
@@ -364,6 +348,12 @@ class ComponentsSpec extends SparkSpecBase {
     val onBad = rounds.map(sideExchanges(_, edgeSide = true)).sum
     assert(onBad == 0, s"routed plan re-shuffles the cached edge frame " +
       s"($onBad exchange-covered edge scans):\n${rounds.head}")
+    // both sides of the pointer jump's self-join read the cached edge
+    // frame: no round re-runs the edge union and its repartition
+    val reshuffled = rounds.filter(_.collect { case e: ShuffleExchangeExec
+      if e.shuffleOrigin == REPARTITION_BY_COL => e }.nonEmpty)
+    assert(reshuffled.isEmpty,
+      s"a round repartitions the edges again:\n${reshuffled.headOption}")
     // anchor: the same probe sees the exchange that shuffles the label
     // side of that join, so a zero on the edge side is not vacuous
     assert(rounds.forall(sideExchanges(_, edgeSide = false) > 0),
@@ -423,6 +413,42 @@ class ComponentsSpec extends SparkSpecBase {
       .as[(Long, Long, Long)].collect().toSet
     assert(r == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L),
       (10L, 10L, 2L), (11L, 10L, 2L)))
+  }
+
+  test("duplicateClusters: one schema and the same rows on every route") {
+    import org.apache.spark.sql.Row
+    val rnd = new scala.util.Random(77L)
+    val graphs = Seq(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"),
+      Seq((3, 2), (2, 1), (7, 8)).toDF("id_a", "id_b"),
+      Seq((Some(1L), None), (Some(5L), Some(6L))).toDF("id_a", "id_b"),
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b"),
+      Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+        .toDF("id_a", "id_b"))
+    for ((g, i) <- graphs.zipWithIndex) withClue(s"graph $i: ") {
+      val outs = Seq(Routing.Small, Routing.Large, Routing.Auto)
+        .map(r => r -> Dedup.duplicateClusters(g, route = r))
+      for ((r, o) <- outs.tail)
+        assert(o.schema == outs.head._2.schema, s"route $r schema")
+      val rows = outs.map { case (r, o) =>
+        r -> o.collect().toSeq.sortBy(_.toString) }
+      for ((r, rs) <- rows.tail)
+        assert(rs == rows.head._2, s"route $r rows")
+      assert(outs.head._2.columns.toSeq ==
+        Seq("doc_id", "component", "cluster_size"))
+      assert(rows.head._2.forall((r: Row) => r.getLong(2) >= 1L))
+    }
+  }
+
+  test("the driver route's clusters reach the caller in a fixed number " +
+    "of jobs") {
+    // the bounded edge fetch; the cluster sizes are counted on the
+    // driver and the caller's collect reads a local frame
+    val (rows, jobs) = countingJobs(
+      Dedup.duplicateClusters(path200).collect())
+    assert(rows.length == 200 && rows.forall(r =>
+      r.getLong(1) == 0L && r.getLong(2) == 200L))
+    assert(jobs == 2, s"duplicateClusters and its collect ran $jobs jobs")
   }
 }
 

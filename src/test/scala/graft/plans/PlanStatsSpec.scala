@@ -1,8 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,23 +13,6 @@ class PlanStatsSpec extends SparkSpecBase {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  /** Runs `body` and returns (result, number of Spark jobs started). */
-  private def countingJobs[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      // the listener bus is async (and its drain API is private[spark]);
-      // give queued JobStart events time to land before reading
-      Thread.sleep(500)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("cheapRowCount reads parquet footers for a bare scan: exact, 0 jobs") {
     val docs = Tables.load(spark, sfDir, "documents")
