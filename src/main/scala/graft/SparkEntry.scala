@@ -1553,7 +1553,8 @@ object SparkEntry {
 
     // Eval-set decontamination: training docs sharing any word 4-gram
     // with the held-out eval slice (doc_id % 97 == 0) are dropped. Eval
-    // n-grams broadcast; training text never shuffles — matched ids only.
+    // n-grams become a driver key set each training row probes map-side;
+    // training text never shuffles.
     // (n=4 instead of the canonical 13 because the synthetic corpus'
     // ~40-word vocabulary makes longer grams collision-free.) At the
     // test-data SFs the measured gram count routes to the broadcast branch.
@@ -1739,9 +1740,9 @@ object SparkEntry {
 
     // URL/domain filtering (RefinedWeb §3.1): drop every doc whose URL
     // host is or sits under a blocklisted domain — exact suffix-set
-    // equi-join, never substring (the notbadsite.io case pins that).
-    // Blocklist broadcast under the measured-count threshold; Bloom-gated
-    // above it (urlFilter routes like decontaminate).
+    // match, never substring (the notbadsite.io case pins that). Under
+    // the measured-count threshold each doc probes the blocklist key set
+    // map-side; Bloom-gated above it (urlFilter routes like decontaminate).
     "url_filter" -> ((s, d) => {
       import s.implicits._
       val docs = plantedUrlDocs(T(s, d, "documents"))
@@ -1756,7 +1757,7 @@ object SparkEntry {
     // the id-capped planted slice replays through a memory stream in two
     // micro-batches, each gated per-batch via foreachBatch. Oracle = the
     // batch url_filter SQL on the same slice: stream ≡ batch is the
-    // contract (row-identical — the gate IS the batch join). The id cap
+    // contract (row-identical — the gate IS the batch probe). The id cap
     // bounds the replay harness (a driver-side collect by construction),
     // not the operator.
     "url_filter_stream" -> ((s, d) => {
@@ -2020,8 +2021,8 @@ object SparkEntry {
     // Flagship #2: the COMPLETE training-data prep chain as one plan —
     // quality gate → eval-set decontamination → exact dedup (canonical
     // kept) → leakage-proof fold split → token-budget shard packing of
-    // the train fold. Every stage is the scale-shaped operator (broadcast
-    // eval grams, bounded dedup agg state, digest folds, scan-tree pack),
+    // the train fold. Every stage is the scale-shaped operator (eval-gram
+    // key set, bounded dedup agg state, digest folds, scan-tree pack),
     // and the whole chain is one DuckDB-oracled dataflow.
     "pipeline_full" -> ((s, d) => {
       val docs = T(s, d, "documents")
@@ -2032,7 +2033,7 @@ object SparkEntry {
       // r12 optimization: `cleaned` is referenced THREE times downstream
       // (exactDuplicates reads it twice — digest build + join-back — and
       // the anti-join once), and each reference re-ran the regex-heavy
-      // quality gate + the gram-explode decontamination probe: the
+      // quality gate + the gram decontamination probe: the
       // executed plan carried the tokenize expression 1300+ times across
       // the duplicated branches. Persisting the gated+decontaminated
       // frame runs that chain ONCE (lineage stays visible through the

@@ -545,8 +545,9 @@ object GraftHash {
   }
 
   /** Count of array elements present in `set` (duplicates counted) — the
-    * kernel behind [[GraftFunctions.stopwordHits]]. */
-  def countIn(arr: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
+    * kernel behind [[GraftFunctions.stopwordHits]] and
+    * [[GraftFunctions.keyHits]]. */
+  def countIn(arr: ArrayData, set: java.util.Set[UTF8String]): Int = {
     val n = arr.numElements()
     var c = 0
     var i = 0

@@ -2,6 +2,7 @@ package graft.functions
 
 import java.lang.invoke.{LambdaMetafactory, MethodHandles, MethodType}
 import java.lang.reflect.Method
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -210,6 +211,38 @@ final class HierCentroidBank(val coarse: CentroidBank,
   }
 }
 
+/** A driver-built string set that reaches each executor through one Spark
+  * broadcast, for [[GraftFunctions.keyHits]]. A task carries only the
+  * broadcast handle, and an executor reads the set once for all its tasks;
+  * a set carried as a plan literal would be deserialized again with every
+  * task's binary. Equality is the broadcast's identity, so comparing plans
+  * never walks the keys. */
+final class BroadcastKeySet private (
+    private val bc: Broadcast[java.util.HashSet[UTF8String]],
+    override val size: Int)
+    extends java.util.AbstractSet[UTF8String] with Serializable {
+  @transient private lazy val keys = bc.value
+  override def contains(o: Any): Boolean = keys.contains(o)
+  override def iterator: java.util.Iterator[UTF8String] = keys.iterator
+  override def equals(o: Any): Boolean = o match {
+    case k: BroadcastKeySet => k.bc.id == bc.id
+    case _ => false
+  }
+  override def hashCode: Int = bc.id.hashCode
+  /** Drop the executors' copies. The driver keeps the set, so a plan built
+    * on it still runs: its executors read the set again. */
+  def unpersist(): Unit = bc.unpersist()
+}
+
+object BroadcastKeySet {
+  /** The non-null `keys` as one broadcast set. */
+  def apply(spark: SparkSession, keys: Iterator[String]): BroadcastKeySet = {
+    val set = new java.util.HashSet[UTF8String]()
+    keys.foreach(k => if (k != null) set.add(UTF8String.fromString(k)))
+    new BroadcastKeySet(spark.sparkContext.broadcast(set), set.size)
+  }
+}
+
 object CentroidBank {
   /** The exact pairwise cosine loop shared by flat and hierarchical
     * assignment (same summation order as GraftHash.cosineSimilarity). */
@@ -249,6 +282,7 @@ object GraftFunctions {
   /** A plan-time object as a literal typed by its public class. */
   private def obj[T](v: T, cls: Class[T]): Literal = Literal(v, ObjectType(cls))
   private val longs = ArrayType(LongType, containsNull = false)
+  private val stringSet = classOf[java.util.Set[UTF8String]]
 
   /** Kafka's partition-from-key rule on a string column: murmur2 masked
     * non-negative, mod `n` — the reference's HashFunctionPartitioner
@@ -294,9 +328,15 @@ object GraftFunctions {
     words.foreach(w => set.add(UTF8String.fromString(w)))
     // plans show the word list as given, not the set
     toCol(KernelCall("stopwordhits", "countIn", IntegerType,
-      Seq(toExpr(tokens), obj(set, classOf[java.util.HashSet[UTF8String]])),
-      Seq(words)))
+      Seq(toExpr(tokens), obj(set, stringSet)), Seq(words)))
   }
+  /** Count of array elements in a driver-built [[BroadcastKeySet]],
+    * duplicates counted: [[stopwordHits]]' kernel over a set that reaches
+    * each executor once. The probe stays inside the scan's codegen stage,
+    * and plans show the key count, not the keys. */
+  def keyHits(elems: Column, keys: BroadcastKeySet): Column =
+    toCol(KernelCall("keyhits", "countIn", IntegerType,
+      Seq(toExpr(elems), obj(keys, stringSet)), Seq(s"${keys.size} keys")))
   /** Subword-token count — `size(regexp_extract_all(s,
     * "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))` by [[GraftHash.subwordCount]]'s
     * byte scan. The DuckDB oracle keeps the regex formulation, so every

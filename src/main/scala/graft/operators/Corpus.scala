@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.{BroadcastKeySet, GraftFunctions, TextFunctions}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Corpus-preparation operators for a large-scale training-data pipeline:
   * deterministic sampling, weighted corpus mixing with epoch upsampling,
@@ -415,26 +416,28 @@ object Corpus {
     * Scale shape: the EVAL side collapses to distinct n-grams — bounded by
     * the eval corpus, which is orders of magnitude smaller than training —
     * and is fetched once, bounded at [[Routing.maxBroadcastGrams]]
-    * ([[Routing.fetchUpTo]]). Up to that many grams they
-    * broadcast, and the TRAINING side's exploded (id, gram) pairs
-    * left-semi-join them locally (no shuffle of the exploded frame);
-    * above it the grams collapse to a
-    * Bloom sketch the training grams probe map-side, and only the
-    * survivors reach the exact semi-join. Only the matched ids — typically
-    * a tiny fraction — reach the distinct + anti-join. Training text
-    * crosses the wire zero times; the anti-join shuffles ids only (AQE
-    * turns it into a broadcast when the contaminated set is small, which
-    * it virtually always is). Both routes return the same rows at any
-    * `fpp`: Bloom error is one-sided, and the exact join admits no junk.
+    * ([[Routing.fetchUpTo]]). Up to that many grams they become a driver
+    * key set that each executor reads once, and every training row tests
+    * its own gram array against it inside the scan's codegen stage: one
+    * projection and a filter, no explode, no join, no exchange. Above it
+    * the grams collapse to a Bloom sketch the exploded training grams
+    * probe map-side, only the survivors reach the exact semi-join, and
+    * the matched ids (typically a tiny fraction) anti-join back; that
+    * join shuffles ids only. Training text crosses the wire zero times on
+    * either route, and both return the same rows at any `fpp`: Bloom
+    * error is one-sided, and the exact join admits no junk.
     *
-    * Build, [[Decontaminator.exact]], close: on the broadcast route the
-    * fetched grams are a local frame, so the returned plan broadcasts
-    * driver rows. On the sketch route the distinct-gram frame is
-    * persisted across the fetch, the count and the sketch build, then
-    * dropped before the caller's action, so the returned plan recomputes
-    * the eval pipeline once — the price of a transparent,
-    * lineage-complete plan (eval is orders of magnitude smaller than the
-    * training side it gates). */
+    * `id` must be a key of `train`: the set probe drops rows, the sketch
+    * route drops ids. A row with a null id is kept on both routes; a null
+    * `text` has no gram and is kept.
+    *
+    * Build, [[Decontaminator.exact]], close. Closing leaves the returned
+    * frame runnable: on the broadcast route the driver keeps the key set;
+    * on the sketch route the distinct-gram frame, persisted across the
+    * fetch, the count and the sketch build, is dropped before the
+    * caller's action, so the returned plan recomputes the eval pipeline
+    * once — the price of a transparent, lineage-complete plan (eval is
+    * orders of magnitude smaller than the training side it gates). */
   def decontaminate(train: DataFrame, id: Column, text: Column,
                     eval: DataFrame, evalText: Column,
                     n: Int = 13, fpp: Double = 0.01,
@@ -449,9 +452,9 @@ object Corpus {
     * training stream against it forever after. This factory collapses the
     * eval side to distinct grams, persists and counts them, and always
     * takes the Bloom-sketch route: every micro-batch then probes the
-    * prebuilt sketch map-side and semi-joins the persisted grams, where
-    * the broadcast route would re-ship the whole gram set on every
-    * trigger. Call `close()` when retiring it. */
+    * prebuilt sketch map-side and semi-joins the persisted grams, and the
+    * stateless [[Decontaminator.gate]] has its sketch to probe. Call
+    * `close()` when retiring it. */
   def decontaminator(eval: DataFrame, evalText: Column, n: Int = 13,
                      fpp: Double = 0.01): Decontaminator =
     gramSet(eval, evalText, n, fpp, Routing.Large)
@@ -462,59 +465,95 @@ object Corpus {
                       fpp: Double, route: Routing.Route): Decontaminator = {
     require(n > 0, "need n > 0")
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    val (grams, sketch) = keySet(eval
+    new Decontaminator(keySet(eval
       .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct(), fpp, route)(Routing.maxBroadcastGrams, Routing.gramSketch)
-    new Decontaminator(grams, sketch, n)
+      .distinct(), fpp, route)(Routing.maxBroadcastGrams, Routing.gramSketch),
+      n)
   }
 
-  /** The distinct single-column key frame `keys` that [[matchedIds]]
-    * probes, with its Bloom sketch when the route is the sketch. Under
-    * [[Routing.Auto]] `keys` is persisted and fetched once, bounded at
-    * `cap`, the broadcast threshold `large` switches above: on the
-    * broadcast route the fetched keys come back as a local frame (the
-    * probe broadcasts driver rows, no cached relation stays behind); on
-    * the sketch route the persisted keys are counted, which sizes the
-    * sketch. The forced broadcast route skips the fetch and the persist.
-    * Zero keys have nothing to sketch: bloom_filter_agg over no rows
-    * yields a null buffer that BloomFilter.readFrom rejects. */
+  /** A routed gate's key side, as [[keySet]] resolves it. */
+  private[operators] sealed trait GateKeys {
+    /** Release what the keys hold; a frame already gated still runs. */
+    def close(): Unit
+  }
+  /** The broadcast route: the distinct keys as a driver set. */
+  private[operators] final case class KeyProbe(set: BroadcastKeySet)
+      extends GateKeys {
+    def close(): Unit = set.unpersist()
+  }
+  /** The sketch route: the persisted distinct key frame and its Bloom
+    * sketch. */
+  private[operators] final case class SketchedKeys(keys: DataFrame,
+      bloom: BloomFilter) extends GateKeys {
+    def close(): Unit = { keys.unpersist(): Unit }
+  }
+
+  /** Route the distinct single-column string frame `keys`. Up to `cap`,
+    * the broadcast threshold `large` switches above, the keys come to the
+    * driver and ship to the executors as one [[BroadcastKeySet]]; no
+    * cached relation stays behind. Above it the persisted keys are
+    * counted, which sizes their Bloom sketch. Under [[Routing.Auto]]
+    * `keys` is persisted and fetched once, bounded at `cap`; the forced
+    * broadcast route collects every key, and the forced sketch route
+    * reads none before the count. Zero keys have nothing to sketch
+    * (bloom_filter_agg over no rows yields a null buffer that
+    * BloomFilter.readFrom rejects), so they take the set probe. */
   private def keySet(keys: DataFrame, fpp: Double, route: Routing.Route)(
-      cap: Long, large: Long => Boolean)
-  : (DataFrame, Option[org.apache.spark.util.sketch.BloomFilter]) =
-    if (route == Routing.Small) (keys, None)
-    else {
-      keys.persist()
-      Routing.smallSide(route, keys, cap)(large) match {
-        case Some(k) =>
-          keys.unpersist()
-          (keys.sparkSession.createDataFrame(java.util.Arrays.asList(k: _*),
-            keys.schema), None)
-        case None =>
-          val n = keys.count()
-          (keys, if (n > 0L)
-            Some(keys.stat.bloomFilter(keys.columns.head, n, fpp)) else None)
-      }
+      cap: Long, large: Long => Boolean): GateKeys = {
+    def driverSet(rows: Iterator[org.apache.spark.sql.Row]) = {
+      keys.unpersist()
+      KeyProbe(BroadcastKeySet(keys.sparkSession, rows.map(_.getString(0))))
     }
+    if (route != Routing.Small) keys.persist()
+    Routing.smallSide(route, keys, cap)(large) match {
+      case Some(rows) => driverSet(rows.iterator)
+      case None =>
+        val n = keys.count()
+        if (n == 0L) driverSet(Iterator.empty)
+        else SketchedKeys(keys,
+          keys.stat.bloomFilter(keys.columns.head, n, fpp))
+    }
+  }
+
+  /** Keep (`keep`) or drop the rows of `batch` that have at least one
+    * element of the string array `probe` among `keys` — the probe
+    * [[Decontaminator]] and [[UrlGate]] share. `id` must be a key of
+    * `batch`.
+    *
+    * On the broadcast route each row tests its own array against the
+    * driver set inside the scan's codegen stage: one projection and a
+    * filter, with no explode, no join and no exchange. On the sketch route
+    * the exploded probes go through [[matchedIds]] and the matched ids
+    * join back. The routes agree row for row because `id` is a key: a
+    * null id matches no id, so it is kept when dropping and dropped when
+    * keeping, on both; a null `probe` has no element and counts no hit. */
+  private[operators] def gateRows(batch: DataFrame, id: Column,
+      probe: Column, keys: GateKeys, keep: Boolean): DataFrame = keys match {
+    case KeyProbe(set) =>
+      val hits = coalesce(GraftFunctions.keyHits(probe, set), lit(0))
+      batch.filter(if (keep) id.isNotNull && hits > 0
+                   else id.isNull || hits === 0)
+    case SketchedKeys(k, bloom) =>
+      val key = k.columns.head
+      val probes = batch.select(id.as("__gk_id"), explode(probe).as(key))
+      batch.join(matchedIds(probes, "__gk_id", key, k, bloom),
+        id === col("__gk_id"), if (keep) "left_semi" else "left_anti")
+  }
 
   /** The ids of `probes` (columns `idCol`, `keyCol`) whose key is in the
-    * distinct single-column frame `keys` — the probe [[Decontaminator]]
-    * and [[UrlGate]] share. Without a sketch `keys` broadcasts into a
-    * map-side semi-join. With one, the probes are Bloom-filtered map-side
-    * inside the scan's codegen stage (no join, no shuffle) and only the
-    * survivors — true matches plus an fpp-sized sliver — reach the exact
-    * semi-join, deliberately NOT hinted broadcast: on that route `keys` is
-    * the side too big to broadcast, while the surviving probes are tiny,
-    * so AQE picks the build side at runtime. Same ids either way: Bloom
-    * errors are false positives only, and the exact join kills them. */
-  private[operators] def matchedIds(probes: DataFrame, idCol: String,
-      keyCol: String, keys: DataFrame,
-      sketch: Option[org.apache.spark.util.sketch.BloomFilter]): DataFrame =
-    (sketch match {
-      case None => probes.join(broadcast(keys), Seq(keyCol), "left_semi")
-      case Some(b) =>
-        probes.filter(GraftFunctions.bloomMightContain(col(keyCol), b))
-          .join(keys, Seq(keyCol), "left_semi")
-    }).select(col(idCol)).distinct()
+    * distinct single-column frame `keys` — the sketch route of
+    * [[gateRows]]. The probes are Bloom-filtered map-side inside the
+    * scan's codegen stage (no join, no shuffle) and only the survivors —
+    * true matches plus an fpp-sized sliver — reach the exact semi-join,
+    * deliberately NOT hinted broadcast: on this route `keys` is the side
+    * too big to broadcast, while the surviving probes are tiny, so AQE
+    * picks the build side at runtime. Exact ids: Bloom errors are false
+    * positives only, and the join kills them. */
+  private def matchedIds(probes: DataFrame, idCol: String, keyCol: String,
+                         keys: DataFrame, sketch: BloomFilter): DataFrame =
+    probes.filter(GraftFunctions.bloomMightContain(col(keyCol), sketch))
+      .join(keys, Seq(keyCol), "left_semi")
+      .select(col(idCol)).distinct()
 
   /** Per-training-document contamination REPORT — the audit complement of
     * [[decontaminate]]: for each training doc, how many of its DISTINCT
@@ -1510,12 +1549,19 @@ object Corpus {
     * Scale shape: the domain list collapses to distinct lowercased keys
     * and is fetched once, bounded at [[Routing.maxBroadcastDomains]]
     * (domain lists are small by nature, 10⁵-10⁷ rows): up to that many
-    * keys the fetched rows broadcast into a map-side
-    * semi-join over the exploded suffixes (≤ ~6 rows per doc, no shuffle
-    * of doc text); above it, the suffixes probe a Bloom sketch map-side
-    * and only the surviving sliver reaches the exact semi-join — the
-    * [[matchedIds]] probe [[decontaminate]] uses, same one-sided-error ⇒
-    * exact-output argument. Matched ids (tiny) anti/semi-join back. */
+    * keys they become a driver key set that each executor reads once, and
+    * every document tests its own suffix array against it inside the
+    * scan's codegen stage — one projection and a filter, no explode, no
+    * join, no exchange. Above it the exploded suffixes (≤ ~6 rows per
+    * doc) probe a Bloom sketch map-side, only the surviving sliver
+    * reaches the exact semi-join, and the matched ids (tiny) anti/semi-
+    * join back — the [[gateRows]] probe [[decontaminate]] uses, same
+    * one-sided-error ⇒ exact-output argument.
+    *
+    * `id` must be a key of `docs`: the set probe keeps or drops rows, the
+    * sketch route ids. A null id is kept by `deny` and dropped by `allow`
+    * on both routes; a null URL matches no domain. The returned frame
+    * runs after this call has closed its gate. */
   def urlFilter(docs: DataFrame, id: Column, url: Column,
                 domains: DataFrame, domain: Column,
                 mode: String = "deny", fpp: Double = 0.01,
@@ -1527,19 +1573,18 @@ object Corpus {
   /** Build a [[UrlGate]] — the STREAMING deployment of [[urlFilter]]:
     * the blocklist is normalized, deduped, and measured once (domain lists
     * are static in production — RefinedWeb's runs in-stream against a
-    * fixed registry), choosing the broadcast or Bloom-prefiltered match
-    * path up front; every scored (micro-)batch then pays only the
-    * suffix-explode + semi-join, no per-batch list work. Same routing,
+    * fixed registry), choosing the driver key set or the Bloom-prefiltered
+    * match path up front; every scored (micro-)batch then pays only the
+    * map-side set probe (or, above the threshold, the suffix explode and
+    * exact semi-join), no per-batch list work. Same routing,
     * same exactness argument as the batch operator — gating an in-corpus
     * slice is row-identical to batch [[urlFilter]]. `close()` when
     * retiring it. */
   def urlGate(domains: DataFrame, domain: Column, fpp: Double = 0.01,
               route: Routing.Route = Routing.Auto): UrlGate = {
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    val (dset, bloom) = keySet(domains.select(lower(domain).as("__uf_d"))
-      .distinct(), fpp, route)(Routing.maxBroadcastDomains,
-        Routing.domainSketch)
-    new UrlGate(dset, bloom)
+    new UrlGate(keySet(domains.select(lower(domain).as("__uf_d")).distinct(),
+      fpp, route)(Routing.maxBroadcastDomains, Routing.domainSketch))
   }
 
   /** Per-domain curation report: document counts and byte mass by URL
@@ -1585,46 +1630,43 @@ object Corpus {
   * Two forms, one trade:
   *  - [[gate]] is STATELESS map-only streaming: keep a record iff none of
   *    its n-grams hits the Bloom sketch (driver-resident, serialized into
-  *    every task closure like any broadcast scalar; the factory always
-  *    builds it, and it is absent only when the eval set has no gram).
-  *    No join, no state store, composes with any streaming plan at any
-  *    scale. Error is one-sided and conservative: a clean doc is
-  *    over-dropped with probability ≈ 1-(1-fpp)^grams, a contaminated
-  *    doc is NEVER leaked (Bloom has no false negatives). For a
-  *    decontamination gate, over-dropping a 10^-2-sliver is the safe
-  *    direction.
+  *    every task closure like any broadcast scalar). The factory always
+  *    takes the sketch route; with no eval gram it holds an empty key set
+  *    instead, which passes every record. No join, no state store,
+  *    composes with any streaming plan at any scale. Error is one-sided
+  *    and conservative: a clean doc is over-dropped with probability
+  *    ≈ 1-(1-fpp)^grams, a contaminated doc is NEVER leaked (Bloom has no
+  *    false negatives). For a decontamination gate, over-dropping a
+  *    10^-2-sliver is the safe direction.
   *  - [[exact]] is the per-micro-batch form for `foreachBatch`: output
   *    IDENTICAL to [[Corpus.decontaminate]] on the same slice (CorpusSpec
-  *    pins stream ≡ batch). Direct use on an unbounded frame would need a
-  *    stream-stream anti join (rejected by Spark) — foreachBatch is the
-  *    supported shape.
+  *    pins stream ≡ batch). On the sketch route its matched ids anti-join
+  *    back, which on an unbounded frame would be a stream-stream anti
+  *    join (rejected by Spark) — foreachBatch is the supported shape.
   */
 final class Decontaminator private[operators] (
-    evalGrams: DataFrame,
-    sketch: Option[org.apache.spark.util.sketch.BloomFilter], n: Int) {
+    keys: Corpus.GateKeys, n: Int) {
 
   /** Stateless streaming gate (works on streaming AND batch frames):
     * map-only sketch probes inside whole-stage codegen, conservative
     * one-sided error (see class doc). */
-  def gate(train: DataFrame, text: Column): DataFrame = sketch match {
-    case None => train
-    case Some(b) =>
+  def gate(train: DataFrame, text: Column): DataFrame = keys match {
+    // the factory's sketch route holds a key set only for zero eval grams
+    case Corpus.KeyProbe(_) => train
+    case Corpus.SketchedKeys(_, b) =>
       train.filter(!exists(TextFunctions.wordNGrams(text, n),
         g => GraftFunctions.bloomMightContain(g, b)))
   }
 
   /** Exact per-batch form: drop every row sharing an n-gram with the eval
-    * set — ≡ [[Corpus.decontaminate]] on the same batch. */
-  def exact(trainBatch: DataFrame, id: Column, text: Column): DataFrame = {
-    val grams = trainBatch.select(id.as("__dc_id"),
-      explode(TextFunctions.wordNGrams(text, n)).as("__dc_g"))
-    val contaminated = Corpus.matchedIds(grams, "__dc_id", "__dc_g",
-      evalGrams, sketch)
-    trainBatch.join(contaminated, id === col("__dc_id"), "left_anti")
-  }
+    * set — ≡ [[Corpus.decontaminate]] on the same batch. `id` must be a
+    * key of `trainBatch` ([[Corpus.gateRows]]). */
+  def exact(trainBatch: DataFrame, id: Column, text: Column): DataFrame =
+    Corpus.gateRows(trainBatch, id, TextFunctions.wordNGrams(text, n), keys,
+      keep = false)
 
-  /** Drop the persisted gram frame. */
-  def close(): Unit = { evalGrams.unpersist(): Unit }
+  /** Release the gram set; a frame [[exact]] returned still runs. */
+  def close(): Unit = keys.close()
 }
 
 /** Per-batch LM quality scoring against a PREBUILT bigram model — the
@@ -1684,28 +1726,25 @@ final class LmScorer private[operators] (
 }
 
 /** Batch-trained URL/domain gate — [[Corpus.urlGate]]'s product. Holds the
-  * normalized blocklist (persisted, vocab-scale) and the Bloom sketch
-  * when the list outgrew the broadcast threshold; each `filter` call is
-  * the exact suffix-set equi-join of [[Corpus.urlFilter]] over one
-  * (micro-)batch. Stateless across batches: no state store, no
+  * normalized blocklist as a driver key set, or, when the list outgrew
+  * the broadcast threshold, persisted with its Bloom sketch; each
+  * `filter` call is the exact suffix-set match of [[Corpus.urlFilter]]
+  * over one (micro-)batch. Stateless across batches: no state store, no
   * watermark — a document's verdict depends only on its own URL and the
   * static list. */
-final class UrlGate private[operators] (
-    dset: DataFrame, bloom: Option[org.apache.spark.util.sketch.BloomFilter]) {
+final class UrlGate private[operators] (keys: Corpus.GateKeys) {
 
   /** Keep (`allow`) or drop (`deny`) the batch rows whose URL host is or
     * sits under a listed domain — row-identical to [[Corpus.urlFilter]]
-    * on the same input. */
+    * on the same input. `id` must be a key of `batch`
+    * ([[Corpus.gateRows]]). */
   def filter(batch: DataFrame, id: Column, url: Column,
              mode: String = "deny"): DataFrame = {
     require(mode == "deny" || mode == "allow", "mode must be deny|allow")
-    val suffixes = batch.select(id.as("__uf_id"),
-      explode(Corpus.hostSuffixes(Corpus.urlHost(url))).as("__uf_d"))
-    val matched = Corpus.matchedIds(suffixes, "__uf_id", "__uf_d", dset, bloom)
-    batch.join(matched, id === col("__uf_id"),
-      if (mode == "deny") "left_anti" else "left_semi")
+    Corpus.gateRows(batch, id, Corpus.hostSuffixes(Corpus.urlHost(url)),
+      keys, keep = mode == "allow")
   }
 
-  /** Drop the persisted blocklist frame. */
-  def close(): Unit = { dset.unpersist(): Unit }
+  /** Release the blocklist; a frame [[filter]] returned still runs. */
+  def close(): Unit = keys.close()
 }

@@ -134,12 +134,13 @@ object Similarity {
     * (k × dim) rows after partial aggregation, no per-row state — the
     * standard distributed k-means step, so it scales to any corpus the
     * index itself can cover. Clusters that lose all members drop out
-    * (standard Lloyd behavior). Each iteration is materialized to keep the
-    * lineage flat. */
+    * (standard Lloyd behavior). Each round's centroids (nlist rows) are
+    * collected once into a local frame: the next round's assignment and
+    * the caller read them with no job, the lineage stays flat, and nothing
+    * stays cached. */
   def trainCentroids(corpus: DataFrame, centroidStride: Int,
                      iters: Int): DataFrame = {
     var centroids = strideCentroids(corpus, centroidStride)
-    var previous: Option[DataFrame] = None
     for (_ <- 0 until iters) {
       val assigned = assignToCentroids(corpus, centroids)
       val next = assigned
@@ -151,11 +152,8 @@ object Similarity {
         .groupBy(col("centroid_id"))
         .agg(expr("transform(sort_array(collect_list(struct(i, m))), x -> x.m)")
           .cast("array<float>").as("centroid"))
-      next.persist()
-      next.count() // materialize before the previous round is unpersisted
-      previous.foreach(_.unpersist())
-      previous = Some(next)
-      centroids = next
+      centroids = corpus.sparkSession.createDataFrame(
+        java.util.Arrays.asList(next.collect(): _*), next.schema)
     }
     centroids
   }

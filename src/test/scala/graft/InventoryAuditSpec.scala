@@ -18,8 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * public operator takes one as a parameter. It also keeps one copy of
   * each shared mechanism: the LSH in-bucket pair expansion, the streaming
   * twins' replay harness, the SQL-function table, the one kernel-call
-  * expression, the prefix scan's row-number draw, the LM bigram stream and
-  * the bounded routing fetch.
+  * expression, the prefix scan's row-number draw, the LM bigram stream,
+  * the bounded routing fetch and the gates' key-set probe.
   */
 class InventoryAuditSpec extends AnyFunSuite {
 
@@ -217,5 +217,24 @@ class InventoryAuditSpec extends AnyFunSuite {
     } yield s"${mainDir.relativize(f)}: ${m.matched}"
     assert(counts.isEmpty, "persist().count() routing measures:\n" +
       counts.mkString("\n"))
+  }
+
+  test("the gates' key-set probe is written once, on the one set kernel") {
+    val probe = linesMatching(mainDir, """GraftFunctions\.keyHits\(""".r)
+    assert(probe.size == 1, "key-set probe copies:\n" + probe.mkString("\n"))
+    val gates = linesMatching(opsDir, """Corpus\.gateRows\(""".r)
+    assert(gates.size == 2, "UrlGate and Decontaminator share gateRows:\n" +
+      gates.mkString("\n"))
+    // countIn is the only kernel that takes a string set
+    val hashSrc = read(mainDir.resolve("graft/functions/GraftHash.scala"))
+    val setKernels = """def (\w+)\([^)]*Set\[UTF8String\]""".r
+      .findAllMatchIn(hashSrc).map(_.group(1)).toSeq
+    assert(setKernels == Seq("countIn"), s"set kernels: $setKernels")
+    // the sketch route's matchedIds keeps no broadcast semi-join arm
+    val corpus = read(opsDir.resolve("Corpus.scala"))
+    val start = corpus.indexOf("def matchedIds")
+    assert(start >= 0, "Corpus.matchedIds not found")
+    val body = corpus.substring(start, corpus.indexOf("\n\n", start))
+    assert(!body.contains("broadcast("), s"broadcast arm in matchedIds:\n$body")
   }
 }

@@ -44,9 +44,10 @@ class PlanHygieneSpec extends SparkSpecBase {
     // localCheckpoint: a checkpoint would truncate lineage to a bare
     // 'Scan ExistingRDD' and silently exempt the whole
     // quality->decontaminate->dedup chain from the two whole-inventory
-    // guards below
+    // guards below. The chain shows as decontamination's key-set probe
+    // and dedup's anti-join.
     val p = plan("pipeline_full")
-    assert(p.contains("LeftSemi") && p.contains("LeftAnti"),
+    assert(p.contains("keyhits") && p.contains("LeftAnti"),
       s"pipeline_full's upstream stages vanished from the plan:\n$p")
   }
 

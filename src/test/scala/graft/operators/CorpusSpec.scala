@@ -309,11 +309,17 @@ class CorpusSpec extends SparkSpecBase {
   }
 
   test("decontaminate broadcasts the eval grams (training text never shuffles)") {
-    val plan = Corpus.decontaminate(docs, col("doc_id"), col("text"),
-        docs.filter(col("doc_id") < 10), col("text"), n = 3)
+    // the broadcast route probes each row's gram array against the eval
+    // key set map-side: no exchange and no join at all (a range scan, so
+    // the optimizer cannot fold the gate into a local relation)
+    val scanned = spark.range(0, 1000, 1, 4).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("w"), col("id"), lit("x y z")).as("text"))
+    val plan = Corpus.decontaminate(scanned, col("doc_id"), col("text"),
+        scanned.filter(col("doc_id") < 10), col("text"), n = 3)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      s"eval-gram semi join must broadcast:\n$plan")
+    assert(plan.contains("keyhits"), s"expected the key-set probe:\n$plan")
+    assert(!plan.contains("Exchange") && !plan.contains("Join"),
+      s"the broadcast route must not shuffle or join:\n$plan")
   }
 
   test("contaminationReport: hand-computed distinct-gram overlap fractions") {
@@ -427,11 +433,12 @@ class CorpusSpec extends SparkSpecBase {
   }
 
   test("decontaminate composes with a streaming source via foreachBatch") {
-    // decontaminate's exact two-pass shape (matched ids -> anti join) is a
-    // stream-STREAM anti join if applied to a streaming frame directly,
-    // which Spark rejects; the supported composition for per-batch exact
-    // ops is foreachBatch — the same pattern GraftPipeline uses for sinks.
-    // The operator code runs UNCHANGED on each micro-batch.
+    // decontaminate's sketch route anti-joins its matched ids back, which
+    // on a streaming frame would be a stream-STREAM anti join that Spark
+    // rejects (the broadcast route is a plain filter); the supported
+    // composition for per-batch exact ops on either route is foreachBatch
+    // — the same pattern GraftPipeline uses for sinks. The operator code
+    // runs UNCHANGED on each micro-batch.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val s = MemoryStream[(Long, String)](spark)
     val streamDocs = s.toDF().toDF("doc_id", "text")
@@ -623,8 +630,7 @@ class CorpusSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val eval = Seq((100L, "prefix beta gamma delta suffix"))
       .toDF("doc_id", "text")
-    // routed to the broadcast (one eval doc): the gate builds its sketch
-    // on first use
+    // the factory always takes the sketch route, even for one eval doc
     val dc = Corpus.decontaminator(eval, col("text"), n = 3)
     try {
       val s = MemoryStream[(Long, String)](spark)
@@ -792,6 +798,92 @@ class CorpusSpec extends SparkSpecBase {
     val gateN = Corpus.urlGate(bl.filter(lit(false)), col("d"))
     try assert(gateN.filter(urls, col("doc_id"), col("url")).count() == 7)
     finally gateN.close()
+  }
+
+  private val routes = Seq(Routing.Small, Routing.Large, Routing.Auto)
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("gates give identical rows on every route; null ids and inputs pinned") {
+    // `id` is a key of each frame, so the set probe's row verdicts equal
+    // the sketch route's id join-back, null ids included: a null id
+    // matches no id, so deny/decontaminate keep it and allow drops it
+    val urls = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("https://ads.badsite.io/a")),  // blocked
+      (Some(2L), Some("https://docs.example.com/b")), // clean
+      (None, Some("https://badsite.io/c")),           // blocked, null id
+      (None, Some("https://clean.org/d")),            // clean, null id
+      (Some(3L), None),                               // null URL
+      (Some(4L), Some("https://BADSITE.IO/e"))        // blocked
+    ).toDF("doc_id", "url")
+    val bl = Seq("badsite.io", "tracker.example.com").toDF("d")
+    val deny = Seq("[2,https://docs.example.com/b]", "[3,null]",
+      "[null,https://badsite.io/c]", "[null,https://clean.org/d]")
+    val allow = Seq("[1,https://ads.badsite.io/a]", "[4,https://BADSITE.IO/e]")
+    for (r <- routes) {
+      assert(rowsOf(Corpus.urlFilter(urls, col("doc_id"), col("url"), bl,
+        col("d"), route = r)) == deny.sorted, s"deny on $r")
+      assert(rowsOf(Corpus.urlFilter(urls, col("doc_id"), col("url"), bl,
+        col("d"), mode = "allow", route = r)) == allow.sorted, s"allow on $r")
+    }
+    val train = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("alpha beta gamma delta")), // contaminated
+      (Some(2L), Some("zeta eta theta iota")),    // clean
+      (None, Some("one beta gamma delta two")),   // contaminated, null id
+      (None, Some("kappa lambda mu nu")),         // clean, null id
+      (Some(3L), None)                            // null text
+    ).toDF("doc_id", "text")
+    val eval = Seq((100L, "prefix beta gamma delta suffix"))
+      .toDF("doc_id", "text")
+    val kept = Seq("[2,zeta eta theta iota]", "[3,null]",
+      "[null,one beta gamma delta two]", "[null,kappa lambda mu nu]")
+    for (r <- routes)
+      assert(rowsOf(Corpus.decontaminate(train, col("doc_id"), col("text"),
+        eval, col("text"), n = 3, route = r)) == kept.sorted, s"route $r")
+  }
+
+  test("a broadcast-route url gate is one map-side job over a 500-row batch") {
+    val batch = spark.range(0, 500, 1, 4).select(col("id").as("doc_id"),
+      concat(lit("https://h"), (col("id") % 7).cast("string"),
+        when(col("id") % 3 === 0, lit(".badsite.io/p"))
+          .otherwise(lit(".example.com/p"))).as("url"))
+    val gate = Corpus.urlGate(Seq("badsite.io", "h1.example.com").toDF("d"),
+      col("d"))
+    try {
+      val gated = gate.filter(batch, col("doc_id"), col("url"))
+      val (kept, jobs) = countingJobs(gated.collect())
+      assert(jobs == 1, s"expected one job, ran $jobs")
+      assert(kept.length == (0L until 500L)
+        .count(i => i % 3 != 0 && i % 7 != 1))
+      val plan = gated.queryExecution.executedPlan.toString
+      assert(plan.contains("keyhits") && plan.contains("2 keys") &&
+        !plan.contains("h1.example.com"),
+        s"the plan shows the key count, not the keys:\n$plan")
+      assert(!plan.contains("Exchange") && !plan.contains("Join"),
+        s"the set probe must not shuffle or join:\n$plan")
+    } finally gate.close()
+  }
+
+  test("a gated frame still runs after its gate's close()") {
+    val urls = Seq((1L, "https://a.badsite.io/x"), (2L, "https://ok.org/y"))
+      .toDF("doc_id", "url")
+    val bl = Seq("badsite.io").toDF("d")
+    val train = Seq((1L, "alpha beta gamma delta"), (2L, "zeta eta theta"))
+      .toDF("doc_id", "text")
+    val eval = Seq((9L, "beta gamma delta")).toDF("doc_id", "text")
+    for (r <- routes) {
+      // urlFilter and decontaminate close their gate before returning
+      val f = Corpus.urlFilter(urls, col("doc_id"), col("url"), bl, col("d"),
+        route = r)
+      val d = Corpus.decontaminate(train, col("doc_id"), col("text"), eval,
+        col("text"), n = 3, route = r)
+      val gate = Corpus.urlGate(bl, col("d"), route = r)
+      val g = gate.filter(urls, col("doc_id"), col("url"))
+      gate.close()
+      for (df <- Seq(f, d, g); _ <- 1 to 2)
+        assert(df.select("doc_id").as[Long].collect().toSeq == Seq(2L),
+          s"route $r")
+    }
   }
 
   test("bpeEncode executes at 256 merges; absent pairs are no-ops") {

@@ -197,6 +197,16 @@ class KMeansIvfSpec extends SparkSpecBase {
     assert(after > 0.98, s"clusters should be tight, got $after")
   }
 
+  test("trained centroids come back local: reading them runs no job") {
+    // each Lloyd round is collected once into a local frame, so neither
+    // the next round nor the caller reads a cached (never released) frame
+    val centroids = Similarity.trainCentroids(clustered, 29, iters = 2)
+    assert(centroids.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val (rows, jobs) = countingJobs(centroids.collect())
+    assert(jobs == 0 && rows.length == 4, s"$jobs jobs, ${rows.length} rows")
+  }
+
   test("trained IVF search still returns k ranked neighbors") {
     val centroids = Similarity.trainCentroids(clustered, 29, iters = 2)
     val idx = Similarity.ivfIndex(clustered, centroids)
