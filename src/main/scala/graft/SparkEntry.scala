@@ -1851,7 +1851,7 @@ object SparkEntry {
     }),
 
     // STREAMING twin executed for real: the eval gram set is built and
-    // sketched once (Corpus.decontaminator — the production deployment:
+    // routed once (Corpus.decontaminator — the production deployment:
     // static eval set, unbounded training stream), the train slice replays through a
     // memory stream in two micro-batches, each gated EXACTLY via
     // foreachBatch, and the kept ids semi-join back for full-row output.
@@ -2001,12 +2001,15 @@ object SparkEntry {
             abs(col("ref_cos") - col("ref_cos_at_rank")) <= 1.1e-4))
         .groupBy(col("query_id"))
         .agg(count(lit(1)).as("__matched"))
+      // distinct counts as collect_set sizes (k = 5 rows per query): two
+      // DISTINCT aggregates would plan an Expand whose distinct-group
+      // order varies run to run; both forms ignore nulls
       res.groupBy(col("query_id"))
         .agg(
           (count(lit(1)) === 5).as("k_results"),
           (min(col("rank")) === 1 && max(col("rank")) === 5 &&
-            countDistinct(col("rank")) === 5).as("ranks_contiguous"),
-          (count(lit(1)) === countDistinct(col("cand_id")))
+            size(collect_set(col("rank"))) === 5).as("ranks_contiguous"),
+          (count(lit(1)) === size(collect_set(col("cand_id"))))
             .as("distinct_candidates"))
         .join(matches, Seq("query_id"), "left")
         .select(col("query_id"), col("k_results"), col("ranks_contiguous"),

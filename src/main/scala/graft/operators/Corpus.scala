@@ -449,26 +449,28 @@ object Corpus {
   /** Build a [[Decontaminator]] — the streaming deployment of
     * [[decontaminate]]. The eval corpus is static (benchmark sets change
     * rarely); a production pipeline builds its gram set ONCE and gates the
-    * training stream against it forever after. This factory collapses the
-    * eval side to distinct grams, persists and counts them, and always
-    * takes the Bloom-sketch route: every micro-batch then probes the
-    * prebuilt sketch map-side and semi-joins the persisted grams, and the
-    * stateless [[Decontaminator.gate]] has its sketch to probe. Call
+    * training stream against it forever after. This factory routes the
+    * eval grams as [[decontaminate]] does: up to
+    * [[Routing.maxBroadcastGrams]] distinct grams they become a key set
+    * each executor reads once, which every micro-batch and the stateless
+    * [[Decontaminator.gate]] probe exactly, map-side; above it they are
+    * persisted with their Bloom sketch, which the gate probes and each
+    * [[Decontaminator.exact]] batch prefilters its semi-join with. Call
     * `close()` when retiring it. */
   def decontaminator(eval: DataFrame, evalText: Column, n: Int = 13,
-                     fpp: Double = 0.01): Decontaminator =
-    gramSet(eval, evalText, n, fpp, Routing.Large)
+                     fpp: Double = 0.01,
+                     route: Routing.Route = Routing.Auto): Decontaminator =
+    gramSet(eval, evalText, n, fpp, route)
 
-  /** The distinct eval grams behind [[decontaminate]] and
-    * [[decontaminator]], routed on their count by [[keySet]]. */
+  /** The eval grams behind [[decontaminate]] and [[decontaminator]],
+    * routed on their distinct count by [[keySet]]. */
   private def gramSet(eval: DataFrame, evalText: Column, n: Int,
                       fpp: Double, route: Routing.Route): Decontaminator = {
     require(n > 0, "need n > 0")
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
     new Decontaminator(keySet(eval
-      .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g"))
-      .distinct(), fpp, route)(Routing.maxBroadcastGrams, Routing.gramSketch),
-      n)
+      .select(explode(TextFunctions.wordNGrams(evalText, n)).as("__dc_g")),
+      fpp, route)(Routing.maxBroadcastGrams, Routing.gramSketch), n)
   }
 
   /** A routed gate's key side, as [[keySet]] resolves it. */
@@ -488,24 +490,29 @@ object Corpus {
     def close(): Unit = { keys.unpersist(): Unit }
   }
 
-  /** Route the distinct single-column string frame `keys`. Up to `cap`,
-    * the broadcast threshold `large` switches above, the keys come to the
-    * driver and ship to the executors as one [[BroadcastKeySet]]; no
-    * cached relation stays behind. Above it the persisted keys are
-    * counted, which sizes their Bloom sketch. Under [[Routing.Auto]]
-    * `keys` is persisted and fetched once, bounded at `cap`; the forced
-    * broadcast route collects every key, and the forced sketch route
-    * reads none before the count. Zero keys have nothing to sketch
+  /** Route the single-column string frame `raw` on its distinct keys. Up
+    * to `cap`, the broadcast threshold `large` switches above, the keys
+    * come to the driver and ship to the executors as one
+    * [[BroadcastKeySet]], which drops duplicates and nulls; no cached
+    * relation stays behind. Above it the persisted distinct keys are
+    * counted, which sizes their Bloom sketch. Under [[Routing.Auto]] a
+    * `raw` whose row bound settles the broadcast route (a local
+    * blocklist, say) is collected as it is: no distinct, no persist, no
+    * fetch, and no Spark job at all for a local frame. Otherwise the
+    * distinct keys are persisted and fetched once, bounded at `cap`. The
+    * forced broadcast route collects every raw key, and the forced sketch
+    * route reads none before the count. Zero keys have nothing to sketch
     * (bloom_filter_agg over no rows yields a null buffer that
     * BloomFilter.readFrom rejects), so they take the set probe. */
-  private def keySet(keys: DataFrame, fpp: Double, route: Routing.Route)(
+  private def keySet(raw: DataFrame, fpp: Double, route: Routing.Route)(
       cap: Long, large: Long => Boolean): GateKeys = {
+    val keys = raw.distinct()
     def driverSet(rows: Iterator[org.apache.spark.sql.Row]) = {
       keys.unpersist()
-      KeyProbe(BroadcastKeySet(keys.sparkSession, rows.map(_.getString(0))))
+      KeyProbe(BroadcastKeySet(raw.sparkSession, rows.map(_.getString(0))))
     }
-    if (route != Routing.Small) keys.persist()
-    Routing.smallSide(route, keys, cap)(large) match {
+    if (route == Routing.Large) keys.persist()
+    Routing.smallSide(route, raw, cap, keys.persist())(large) match {
       case Some(rows) => driverSet(rows.iterator)
       case None =>
         val n = keys.count()
@@ -530,7 +537,7 @@ object Corpus {
   private[operators] def gateRows(batch: DataFrame, id: Column,
       probe: Column, keys: GateKeys, keep: Boolean): DataFrame = keys match {
     case KeyProbe(set) =>
-      val hits = coalesce(GraftFunctions.keyHits(probe, set), lit(0))
+      val hits = keyHitCount(probe, set)
       batch.filter(if (keep) id.isNotNull && hits > 0
                    else id.isNull || hits === 0)
     case SketchedKeys(k, bloom) =>
@@ -539,6 +546,12 @@ object Corpus {
       batch.join(matchedIds(probes, "__gk_id", key, k, bloom),
         id === col("__gk_id"), if (keep) "left_semi" else "left_anti")
   }
+
+  /** How many elements of the string array `probe` are in `set`, 0 for a
+    * null array: the key-set probe of [[gateRows]] and
+    * [[Decontaminator.gate]]. */
+  private[operators] def keyHitCount(probe: Column, set: BroadcastKeySet): Column =
+    coalesce(GraftFunctions.keyHits(probe, set), lit(0))
 
   /** The ids of `probes` (columns `idCol`, `keyCol`) whose key is in the
     * distinct single-column frame `keys` — the sketch route of
@@ -705,7 +718,7 @@ object Corpus {
     * count under the cap); above it the all-executor
     * [[bpeLoopDistributed]] loop, which never ships the frame to the
     * driver. Under [[Routing.Auto]] the vocab frame is persisted and
-    * fetched once, bounded at the cap ([[Routing.fetchUpTo]]): the driver
+    * fetched once, bounded at the cap ([[Routing.smallSide]]): the driver
     * loop runs on the fetched rows, the executor loop on the persisted
     * frame (one corpus scan, routing fetch included).
     *
@@ -721,9 +734,8 @@ object Corpus {
     val vocab = bpeVocab(docs, text)
     // persisted when measured: the bounded fetch and the executor loop
     // share one corpus scan
-    if (route == Routing.Auto) vocab.persist()
-    try Routing.smallSide(route, vocab, Routing.bpeLocalMaxTypes)(
-        Routing.bpeOnExecutors) match {
+    try Routing.smallSide(route, vocab, Routing.bpeLocalMaxTypes,
+        vocab.persist())(Routing.bpeOnExecutors) match {
       case Some(v) =>
         bpeLoopLocal(v.map(r => (r.getLong(0), r.getString(1))), numMerges, spark)
       case None => bpeLoopDistributed(vocab, numMerges)
@@ -1246,7 +1258,7 @@ object Corpus {
     // on the vocab-scale side and streams the occurrences — routed on
     // measured corpus size so small corpora keep the broadcast
     val lwSide =
-      if (Routing.lmShuffleHash(graft.plans.PlanStats.rowCount(raw, corpusDocs)))
+      if (Routing.isLarge(Routing.Auto, raw, corpusDocs)(Routing.lmShuffleHash))
         lw.hint("SHUFFLE_HASH")
       else lw
     val scored = rawToks.join(lwSide, Seq("w")) // every token has a count
@@ -1350,7 +1362,7 @@ object Corpus {
     // footers, no scan) so small corpora keep the strictly-better
     // broadcast conversion.
     val model =
-      if (Routing.lmShuffleHash(graft.plans.PlanStats.rowCount(docs, corpusDocs)))
+      if (Routing.isLarge(Routing.Auto, docs, corpusDocs)(Routing.lmShuffleHash))
         lp.hint("SHUFFLE_HASH")
       else lp
     docScores(base, bi.join(model, Seq("w1", "w2"))
@@ -1546,9 +1558,11 @@ object Corpus {
     * any domain in `domains`. Matching is the exact suffix-set equi-join
     * of [[hostSuffixes]] — never a substring scan.
     *
-    * Scale shape: the domain list collapses to distinct lowercased keys
-    * and is fetched once, bounded at [[Routing.maxBroadcastDomains]]
-    * (domain lists are small by nature, 10⁵-10⁷ rows): up to that many
+    * Scale shape: the lowercased domain list comes to the driver as it is
+    * when its row bound already fits under [[Routing.maxBroadcastDomains]]
+    * (no job for a local list); otherwise it collapses to distinct keys,
+    * fetched once, bounded at that cap (domain lists are small by nature,
+    * 10⁵-10⁷ rows). Up to that many
     * keys they become a driver key set that each executor reads once, and
     * every document tests its own suffix array against it inside the
     * scan's codegen stage — one projection and a filter, no explode, no
@@ -1571,7 +1585,9 @@ object Corpus {
   }
 
   /** Build a [[UrlGate]] — the STREAMING deployment of [[urlFilter]]:
-    * the blocklist is normalized, deduped, and measured once (domain lists
+    * the blocklist is normalized and routed once by [[keySet]] (a bounded
+    * list is collected without a job, any other deduped and fetched at
+    * most once; domain lists
     * are static in production — RefinedWeb's runs in-stream against a
     * fixed registry), choosing the driver key set or the Bloom-prefiltered
     * match path up front; every scored (micro-)batch then pays only the
@@ -1583,8 +1599,8 @@ object Corpus {
   def urlGate(domains: DataFrame, domain: Column, fpp: Double = 0.01,
               route: Routing.Route = Routing.Auto): UrlGate = {
     require(fpp > 0.0 && fpp < 1.0, "need 0 < fpp < 1")
-    new UrlGate(keySet(domains.select(lower(domain).as("__uf_d")).distinct(),
-      fpp, route)(Routing.maxBroadcastDomains, Routing.domainSketch))
+    new UrlGate(keySet(domains.select(lower(domain).as("__uf_d")), fpp,
+      route)(Routing.maxBroadcastDomains, Routing.domainSketch))
   }
 
   /** Per-domain curation report: document counts and byte mass by URL
@@ -1623,18 +1639,20 @@ object Corpus {
 
 /** Eval-set decontamination against a PREBUILT eval gram set —
   * [[Corpus.decontaminator]]'s product and the body of
-  * [[Corpus.decontaminate]]. The eval corpus is static, so its distinct
-  * grams are collapsed, counted and sketched once, and the training
-  * STREAM is gated against them with zero per-batch eval work.
+  * [[Corpus.decontaminate]]. The eval corpus is static, so its grams are
+  * routed once — a driver key set, or the persisted distinct grams with
+  * their Bloom sketch — and the training STREAM is gated against them
+  * with zero per-batch eval work.
   *
   * Two forms, one trade:
   *  - [[gate]] is STATELESS map-only streaming: keep a record iff none of
-  *    its n-grams hits the Bloom sketch (driver-resident, serialized into
-  *    every task closure like any broadcast scalar). The factory always
-  *    takes the sketch route; with no eval gram it holds an empty key set
-  *    instead, which passes every record. No join, no state store,
-  *    composes with any streaming plan at any scale. Error is one-sided
-  *    and conservative: a clean doc is over-dropped with probability
+  *    its n-grams is in the gram set. On the broadcast route the probe is
+  *    the exact key set, so the gate drops exactly the contaminated
+  *    records and no clean one. On the sketch route it probes the Bloom
+  *    sketch (driver-resident, serialized into every task closure like
+  *    any broadcast scalar). No join, no state store, composes with any
+  *    streaming plan at any scale. The sketch's error is one-sided and
+  *    conservative: a clean doc is over-dropped with probability
   *    ≈ 1-(1-fpp)^grams, a contaminated doc is NEVER leaked (Bloom has no
   *    false negatives). For a decontamination gate, over-dropping a
   *    10^-2-sliver is the safe direction.
@@ -1648,11 +1666,12 @@ final class Decontaminator private[operators] (
     keys: Corpus.GateKeys, n: Int) {
 
   /** Stateless streaming gate (works on streaming AND batch frames):
-    * map-only sketch probes inside whole-stage codegen, conservative
-    * one-sided error (see class doc). */
+    * map-only probes inside whole-stage codegen; exact on the broadcast
+    * route, conservative one-sided error on the sketch route (see class
+    * doc). A null `text` has no gram and passes. */
   def gate(train: DataFrame, text: Column): DataFrame = keys match {
-    // the factory's sketch route holds a key set only for zero eval grams
-    case Corpus.KeyProbe(_) => train
+    case Corpus.KeyProbe(set) =>
+      train.filter(Corpus.keyHitCount(TextFunctions.wordNGrams(text, n), set) === 0)
     case Corpus.SketchedKeys(_, b) =>
       train.filter(!exists(TextFunctions.wordNGrams(text, n),
         g => GraftFunctions.bloomMightContain(g, b)))

@@ -242,8 +242,9 @@ object Dedup {
     *    stays ≪ 1 into the 10^8-10^9-doc regime, so candidates come from
     *    signature agreement, not birthday collisions, and `bucketCap`
     *    never bites on honest corpora.
-    * The size resolves through [[graft.plans.PlanStats.rowCount]] (hint >
-    * exact statistics > parquet footers > count()).
+    * The size resolves through [[Routing.isLarge]] (hint > a bound that
+    * settles the narrow form > exact statistics > parquet footers >
+    * count()).
     *
     * The 120-bit hamming is a FINER similarity than the 60-bit one (a
     * token's vote lands in one half, not both), so the switch changes the
@@ -255,8 +256,7 @@ object Dedup {
                    rowCountHint: Option[Long] = None,
                    route: Routing.Route = Routing.Auto): DataFrame = {
     val toks = TextFunctions.tokens(text)
-    val wide = Routing.isLarge(route,
-      graft.plans.PlanStats.rowCount(docs.select(id), rowCountHint))(
+    val wide = Routing.isLarge(route, docs.select(id), rowCountHint)(
       Routing.simhashWide)
     if (wide) {
       def half(par: Int) = filter(toks, t =>
@@ -333,15 +333,19 @@ object Dedup {
     * if its pair estimate exceeds `maxPairs` the call dies in seconds —
     * at call time, before any O(block²) join is even planned — instead of
     * hours into a 100 TB run. Double arithmetic: block counts can exceed
-    * the n(n-1)/2 long range. */
+    * the n(n-1)/2 long range. No block holds more rows than the frame, so
+    * when the frame's row bound ([[graft.plans.PlanStats.maxRows]])
+    * already keeps its pairs within `maxPairs` the guard runs no action. */
   private def guardBlockPairs(light: DataFrame, blkCols: Seq[String],
                               maxPairs: Long, op: String,
                               lshPath: String): Unit = {
-    if (maxPairs < Long.MaxValue) {
+    def pairsOf(n: Double) = n * (n - 1) / 2
+    if (maxPairs < Long.MaxValue && !graft.plans.PlanStats.maxRows(light)
+        .exists(b => pairsOf(b.toDouble) <= maxPairs)) {
       val n = light.groupBy(blkCols.map(col): _*).count()
         .orderBy(col("count").desc).head(1)
         .headOption.fold(0.0)(_.getAs[Long]("count").toDouble)
-      val pairs = n * (n - 1) / 2
+      val pairs = pairsOf(n)
       if (pairs > maxPairs)
         throw new graft.GraftException(
           f"$op: hottest block holds ${n.toLong} rows ≈ $pairs%.3g " +
@@ -634,9 +638,11 @@ object Dedup {
     * node, so it never takes a label and never joins two nodes.
     *
     * Routing ([[Routing.ccOnExecutors]], on the symmetric frame's two
-    * rows per edge): under [[Routing.Auto]] the non-null edges are
-    * persisted and fetched once, bounded at [[Routing.ccLocalMaxEdges]]
-    * / 2 + 1 edges ([[Routing.fetchUpTo]]); no count runs first. When the
+    * rows per edge): under [[Routing.Auto]] an edge frame whose row bound
+    * ([[graft.plans.PlanStats.maxRows]]) already settles the driver route
+    * is collected directly; otherwise the non-null edges are persisted and
+    * fetched once, bounded at [[Routing.ccLocalMaxEdges]] / 2 + 1 edges
+    * ([[Routing.smallSide]]); no count runs first. When the
     * small route takes them the graph closes on the driver ([[unionFind]]:
     * one union-find pass, a local result frame) in a fixed number of jobs
     * instead of a handful per round. Otherwise the distributed loop below
@@ -734,10 +740,11 @@ object Dedup {
       Left(DriverLabels(edges.sparkSession, schema, labels))
     // Persisted when measured: the fetch and the loop share one run of
     // the upstream edge pipeline (an LSH candidate generator).
-    if (route != Routing.Small) kept.persist(StorageLevel.MEMORY_AND_DISK)
-    try Routing.smallSide(route,
-        kept.select(col(src).cast("long"), col(dst).cast("long")),
-        Routing.ccLocalMaxEdges / 2 + 1)(n => Routing.ccOnExecutors(2L * n)) match {
+    def persistKept(): Unit = kept.persist(StorageLevel.MEMORY_AND_DISK): Unit
+    if (route == Routing.Large) persistKept()
+    val longEdges = kept.select(col(src).cast("long"), col(dst).cast("long"))
+    try Routing.smallSide(route, longEdges, Routing.ccLocalMaxEdges / 2 + 1,
+        { persistKept(); longEdges })(n => Routing.ccOnExecutors(2L * n)) match {
       case Some(es) => onDriver(unionFind(es))
       // an empty graph has no label sum for the loop to converge on
       case None if route == Routing.Large && kept.isEmpty => onDriver(Array.empty)

@@ -5,14 +5,21 @@ import org.apache.spark.sql.{DataFrame, Row}
 /** Every size-routing threshold in the engine, defined once, each with the
   * receipt that sets it, and the decision it drives.
   *
-  * An operator with more than one physical form measures its input once —
-  * a bounded fetch of a small side ([[fetchUpTo]], whose rows the small
-  * route then uses), or [[graft.plans.PlanStats.rowCount]] (hint > exact
-  * statistics > parquet footers > count()) — and asks the predicate here
-  * which form to run. No operator carries a threshold of its own and no
-  * public operator takes one as a parameter
+  * An operator with more than one physical form reads a bound first, then
+  * measures at most once. The bound is [[graft.plans.PlanStats.maxRows]],
+  * an upper bound on the rows read off the plan and parquet footers with
+  * no Spark job; every decision here is monotone in the row count, so a
+  * bound on the small side settles the decision exactly as a measure
+  * would, and the small route then runs without one. Otherwise the
+  * operator measures: a bounded fetch of a small side ([[fetchUpTo]],
+  * whose rows the small route then uses), or
+  * [[graft.plans.PlanStats.rowCount]] (hint > exact statistics > parquet
+  * footers > count()). Either way it asks the predicate here which form
+  * to run. No operator carries a threshold of its own and no public
+  * operator takes one as a parameter
   * (InventoryAuditSpec enforces both; RoutingSpec pins every predicate at
-  * threshold − 1, threshold and threshold + 1). Every route returns the
+  * threshold − 1, threshold and threshold + 1, bounded and measured).
+  * Every route returns the
   * same rows as its twin, so routing moves a plan, never an answer —
   * except two routes that change the measure by design: the wide simhash
   * (a finer hamming) and the hierarchical IVF assignment (approximate at
@@ -132,16 +139,30 @@ object Routing {
     Some(df.limit(cap.toInt + 1).collect()).filter(_.length <= cap)
   }
 
+  /** True when the bound on `df`'s rows ([[graft.plans.PlanStats.maxRows]])
+    * already proves the small route: at most `cap` rows, and not `large`.
+    * The fetch or count it replaces could only find as many rows or fewer,
+    * and `large` is monotone, so the measure would decide the same. */
+  private[operators] def boundedSmall(df: DataFrame, cap: Long = Long.MaxValue)(
+      large: Long => Boolean): Boolean =
+    graft.plans.PlanStats.maxRows(df).exists(n => n <= cap && !large(n))
+
   /** Resolve `route` on the rows of a small side `df`: Some(rows) is the
     * small route, None the large one. A forced small route collects every
-    * row and a forced large route reads none; [[Auto]] fetches up to `cap`
-    * rows and asks `large` about their count. */
-  private[operators] def smallSide(route: Route, df: DataFrame, cap: Long)(
-      large: Long => Boolean): Option[Array[Row]] = route match {
-    case Small => Some(df.collect())
-    case Large => None
-    case Auto  => fetchUpTo(df, cap).filterNot(rows => large(rows.length))
-  }
+    * row and a forced large route reads none. [[Auto]] collects `df`
+    * directly when its bound settles the route ([[boundedSmall]]);
+    * otherwise it fetches up to `cap` rows of `fetched` and asks `large`
+    * about their count. `fetched` is evaluated only then, so it may
+    * persist what the large route reads too; it must hold the rows of
+    * `df`, up to duplicates the small route ignores. */
+  private[operators] def smallSide(route: Route, df: DataFrame, cap: Long,
+      fetched: => DataFrame)(large: Long => Boolean): Option[Array[Row]] =
+    route match {
+      case Small => Some(df.collect())
+      case Large => None
+      case Auto if boundedSmall(df, cap)(large) => Some(df.collect())
+      case Auto => fetchUpTo(fetched, cap).filterNot(rows => large(rows.length))
+    }
 
   /** Resolve `route`: a forced route never evaluates `size`; [[Auto]]
     * measures it and asks `large`. */
@@ -151,4 +172,14 @@ object Routing {
     case Large => true
     case Auto  => large(size)
   }
+
+  /** Resolve `route` on the row count of `df`: a caller's `hint` decides
+    * first, then a bound that settles the small route, and only then
+    * [[graft.plans.PlanStats.rowCount]], which may run a count. */
+  private[operators] def isLarge(route: Route, df: DataFrame,
+      hint: Option[Long])(large: Long => Boolean): Boolean =
+    route match {
+      case Auto if hint.isEmpty && boundedSmall(df)(large) => false
+      case _ => isLarge(route, graft.plans.PlanStats.rowCount(df, hint))(large)
+    }
 }

@@ -207,14 +207,14 @@ object Similarity {
     * hierarchical ≈ N^1.25 kernel ([[hierAssign]], [[hierProbe]] cells)
     * at or above it — so no caller rides the flat N^1.5 build into the
     * 10^8-vector regime. The size resolves through
-    * [[graft.plans.PlanStats.rowCount]] (hint > exact statistics > parquet
-    * footers > count()), so routing is free on a bare scan and a caller
-    * with a known corpus size never pays a pre-pass. */
+    * [[Routing.isLarge]] (hint > a bound that settles the flat route >
+    * exact statistics > parquet footers > count()), so routing is free on
+    * a bare or filtered scan and a caller with a known corpus size never
+    * pays a pre-pass. */
   def ivfIndex(corpus: DataFrame, centroids: DataFrame,
                rowCountHint: Option[Long] = None,
                route: Routing.Route = Routing.Auto): DataFrame =
-    if (Routing.isLarge(route,
-        graft.plans.PlanStats.rowCount(corpus, rowCountHint))(Routing.ivfHier))
+    if (Routing.isLarge(route, corpus, rowCountHint)(Routing.ivfHier))
       hierAssign(corpus, centroids, hierProbe)
     else assignToCentroids(corpus, centroids)
 

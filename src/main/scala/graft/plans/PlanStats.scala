@@ -6,12 +6,18 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
+  Distinct, Filter, Join, LogicalPlan, Project, Sample, Sort, SubqueryAlias,
+  Union, Window}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 
-/** Row counts WITHOUT a scan, where one is derivable.
+/** Row counts WITHOUT a scan, where one is derivable: an EXACT count
+  * ([[rowCount]], [[cheapRowCount]]) for the sizers that need the number,
+  * and an UPPER BOUND ([[maxRows]]) for the routing decisions, which only
+  * need to know the number is small.
   *
   * The corpus-size-routed operators (Similarity.ivfIndex,
   * Dedup.simhashPairs, the autoStride / autoBandBits sizers) need one
@@ -36,6 +42,11 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   * LogicalRelation (1:1 by construction — this is exactly the shape
   * Tables.load produces). Any Filter / Sample / Generate / join makes the
   * plan shape unrecognized and falls through to count().
+  *
+  * The bound reaches further than the count: a Filter, a join or an
+  * aggregate keeps it an upper bound where it stops being exact, so every
+  * size-routing predicate, monotone in the row count, is settled by it
+  * whenever the bound already falls on the small side.
   */
 object PlanStats {
 
@@ -51,17 +62,55 @@ object PlanStats {
       val plan = df.queryExecution.optimizedPlan
       plan.stats.rowCount.map(_.toLong).orElse {
         unwrap(plan) match {
-          case lr: LogicalRelation =>
-            lr.relation match {
-              case fs: HadoopFsRelation
-                  if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-                footerRowCount(df, fs)
-              case _ => None
-            }
+          case lr: LogicalRelation => footerRowCount(df.sparkSession, lr)
           case _ => None
         }
       }
     } catch { case NonFatal(_) => None }
+
+  /** An upper bound on the rows of `df` WITHOUT running a Spark job, or
+    * None. Leaves answer with Spark's own `LogicalPlan.maxRows`
+    * (LocalRelation, Range, Limit, ...) or, for a bare parquet relation,
+    * the footer row counts; the bound is carried up through operators that
+    * never add rows: Project, Filter, Sort, Sample without replacement,
+    * distinct, Aggregate (one row when global), Window, SubqueryAlias and
+    * left-semi/anti joins keep the child's bound; inner and cross joins
+    * multiply their sides' bounds; Union adds its children's. Any other
+    * operator takes Spark's own bound for it, usually None; an overflow,
+    * or a relation of more than `maxFooterFiles` files, gives None.
+    *
+    * Reads the ANALYZED plan: no optimizer pass runs, and `df`'s cached-
+    * data substitution stays unresolved, so a `persist` issued after this
+    * call (of `df` or of a frame under it) is still read by `df`'s
+    * actions. */
+  def maxRows(df: DataFrame): Option[Long] =
+    try {
+      val footers = scala.collection.mutable.Map.empty[AnyRef, Option[Long]]
+      def bound(p: LogicalPlan): Option[Long] = p match {
+        case _: Project | _: Filter | _: Sort | _: Distinct | _: Deduplicate |
+            _: Window | _: SubqueryAlias => bound(p.children.head)
+        case s: Sample if !s.withReplacement => bound(s.child)
+        case a: Aggregate =>
+          if (a.groupingExpressions.isEmpty) Some(1L) else bound(a.child)
+        case j: Join => j.joinType match {
+          case LeftSemi | LeftAnti => bound(j.left)
+          case _: InnerLike =>
+            for (l <- bound(j.left); r <- bound(j.right); n <- fit(BigInt(l) * r))
+              yield n
+          case _ => j.maxRows
+        }
+        case u: Union =>
+          u.children.foldLeft(Option(BigInt(0)))((acc, c) =>
+            for (a <- acc; n <- bound(c)) yield a + n).flatMap(fit)
+        case lr: LogicalRelation => footers.getOrElseUpdate(lr.relation,
+          footerRowCount(df.sparkSession, lr)).orElse(lr.maxRows)
+        case other => other.maxRows
+      }
+      bound(df.queryExecution.analyzed)
+    } catch { case NonFatal(_) => None }
+
+  private def fit(n: BigInt): Option[Long] =
+    if (n.isValidLong) Some(n.toLong) else None
 
   /** Count-preserving wrappers only: a Project is 1:1 per row by
     * construction, a SubqueryAlias is a pure rename. Everything else
@@ -77,22 +126,25 @@ object PlanStats {
     * a 100 TB table in sane file sizes (128 MB-1 GB) sits well under it. */
   private val maxFooterFiles = 65536
 
-  private def footerRowCount(df: DataFrame, fs: HadoopFsRelation):
-      Option[Long] = {
-    val files = fs.location.inputFiles
-    if (files.isEmpty) Some(0L)
-    else if (files.length > maxFooterFiles) None
-    else {
-      val conf = df.sparkSession.sessionState.newHadoopConf()
-      // parallel driver-side metadata reads — each is one footer fetch;
-      // no Spark job, no executor involvement
-      val total = java.util.Arrays.stream(files).parallel()
-        .mapToLong { f =>
-          footer(HadoopInputFile.fromPath(new Path(f), conf), rowGroups = true)
-            .getBlocks.stream().mapToLong(_.getRowCount).sum()
-        }.sum()
-      Some(total)
-    }
+  /** Exact rows of a parquet relation from its footers; None for any other
+    * relation. */
+  private def footerRowCount(spark: SparkSession, lr: LogicalRelation):
+      Option[Long] = lr.relation match {
+    case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+      val files = fs.location.inputFiles
+      if (files.isEmpty) Some(0L)
+      else if (files.length > maxFooterFiles) None
+      else {
+        val conf = spark.sessionState.newHadoopConf()
+        // parallel driver-side metadata reads — each is one footer fetch;
+        // no Spark job, no executor involvement
+        Some(java.util.Arrays.stream(files).parallel()
+          .mapToLong { f =>
+            footer(HadoopInputFile.fromPath(new Path(f), conf), rowGroups = true)
+              .getBlocks.stream().mapToLong(_.getRowCount).sum()
+          }.sum())
+      }
+    case _ => None
   }
 
   /** One Parquet footer, read on the driver by Spark's own footer reader.

@@ -219,6 +219,25 @@ class InventoryAuditSpec extends AnyFunSuite {
       counts.mkString("\n"))
   }
 
+  test("the row bound is written once, in PlanStats, read by Routing and the guard") {
+    val defs = linesMatching(mainDir, """\bdef\s+maxRows\b""".r)
+    assert(defs.size == 1 && defs.head.startsWith("graft/plans/PlanStats.scala:"),
+      "row-bound definitions:\n" + defs.mkString("\n"))
+    val dedup = read(opsDir.resolve("Dedup.scala"))
+    val guard = dedup.indexOf("private def guardBlockPairs")
+    assert(guard >= 0, "Dedup.guardBlockPairs not found")
+    val guardEnd = dedup.indexOf("\n\n", guard)
+    val readers = for {
+      f <- scalaFiles(mainDir) if !f.endsWith("PlanStats.scala")
+      text = read(f)
+      m <- """\bPlanStats\.maxRows\(""".r.findAllMatchIn(text)
+        if !f.endsWith("Routing.scala") &&
+          !(f.endsWith("Dedup.scala") && m.start > guard && m.start < guardEnd)
+    } yield s"${mainDir.relativize(f)}:${text.substring(0, m.start).count(_ == '\n') + 1}"
+    assert(readers.isEmpty, "the row bound read outside Routing and the " +
+      "block guard:\n" + readers.mkString("\n"))
+  }
+
   test("the gates' key-set probe is written once, on the one set kernel") {
     val probe = linesMatching(mainDir, """GraftFunctions\.keyHits\(""".r)
     assert(probe.size == 1, "key-set probe copies:\n" + probe.mkString("\n"))

@@ -51,6 +51,15 @@ class PlanHygieneSpec extends SparkSpecBase {
       s"pipeline_full's upstream stages vanished from the plan:\n$p")
   }
 
+  test("similarity_ivf_trained's invariant check plans no Expand") {
+    // two DISTINCT aggregates plan an Expand whose distinct groups Spark
+    // lists in either order from run to run; the check's set sizes keep
+    // one plan shape
+    val p = SparkEntry.queries("similarity_ivf_trained")(spark, d)
+      .queryExecution.optimizedPlan.toString
+    assert(!p.contains("Expand"), p)
+  }
+
   test("the merge's emission index stays in Tungsten (no RDD hop)") {
     // mergedN once computed emit_seq via rdd.zipWithIndex: every row
     // round-tripped UnsafeRow->Row->GenericRow and the flagship merge

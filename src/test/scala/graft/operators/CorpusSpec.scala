@@ -630,8 +630,9 @@ class CorpusSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val eval = Seq((100L, "prefix beta gamma delta suffix"))
       .toDF("doc_id", "text")
-    // the factory always takes the sketch route, even for one eval doc
-    val dc = Corpus.decontaminator(eval, col("text"), n = 3)
+    // the sketch route, forced: one eval doc would take the key set
+    val dc = Corpus.decontaminator(eval, col("text"), n = 3,
+      route = Routing.Large)
     try {
       val s = MemoryStream[(Long, String)](spark)
       val q = dc.gate(s.toDF().toDF("doc_id", "text"), col("text"))
@@ -648,6 +649,34 @@ class CorpusSpec extends SparkSpecBase {
           s"contaminated docs must never leak: $kept")
         assert(kept.subsetOf(Set(2L)), s"kept ⊆ exact output: $kept")
       } finally q.stop()
+    } finally dc.close()
+  }
+
+  test("the decontaminator's key-set gate drops exactly the contaminated rows") {
+    // under Auto a small eval set takes the broadcast route, and the
+    // stateless gate then probes the exact key set: no clean row is lost
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val eval = Seq((100L, "prefix beta gamma delta suffix"))
+      .toDF("doc_id", "text")
+    val dc = Corpus.decontaminator(eval, col("text"), n = 3)
+    try {
+      val s = MemoryStream[(Long, String)](spark)
+      val q = dc.gate(s.toDF().toDF("doc_id", "text"), col("text"))
+        .writeStream.format("memory").queryName("key_set_gate_out").start()
+      try {
+        s.addData(
+          (1L, "alpha beta gamma delta epsilon"), // contaminated
+          (2L, "zeta eta theta iota kappa"),      // clean
+          (3L, "one two beta gamma delta three"), // contaminated
+          (4L, "beta gamma epsilon delta"))       // clean: no shared 3-gram
+        q.processAllAvailable()
+        val kept = spark.table("key_set_gate_out")
+          .select("doc_id").as[Long].collect().toSet
+        assert(kept == Set(2L, 4L))
+      } finally q.stop()
+      val plan = dc.gate(Seq((1L, "a b c")).toDF("doc_id", "text"), col("text"))
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("bloommightcontain"), plan)
     } finally dc.close()
   }
 

@@ -210,9 +210,10 @@ class ComponentsSpec extends SparkSpecBase {
       path200, "id_a", "id_b", route = Routing.Large)
       .as[(Long, Long)].collect())
     assert(auto.sorted.toSeq == loop.sorted.toSeq)
-    // one bounded fetch of the edges (its take scans one partition, then
-    // the rest); the caller's collect reads a local frame and runs none
-    assert(autoJobs == 2, s"the driver route ran $autoJobs jobs")
+    // the local edge frame's bound (199 rows) settles the driver route,
+    // so its edges are collected on the driver with no fetch and no job;
+    // the caller's collect reads a local frame and runs none
+    assert(autoJobs == 0, s"the driver route ran $autoJobs jobs")
     // the loop needs >= 5 rounds on diameter 199, each at least one job
     assert(loopJobs >= autoJobs + 5,
       s"the loop ran $loopJobs jobs, the driver route $autoJobs")
@@ -442,13 +443,14 @@ class ComponentsSpec extends SparkSpecBase {
 
   test("the driver route's clusters reach the caller in a fixed number " +
     "of jobs") {
-    // the bounded edge fetch; the cluster sizes are counted on the
-    // driver and the caller's collect reads a local frame
+    // the local edge frame's bound settles the driver route: its edges
+    // are collected on the driver with no job, the cluster sizes are
+    // counted there and the caller's collect reads a local frame
     val (rows, jobs) = countingJobs(
       Dedup.duplicateClusters(path200).collect())
     assert(rows.length == 200 && rows.forall(r =>
       r.getLong(1) == 0L && r.getLong(2) == 200L))
-    assert(jobs == 2, s"duplicateClusters and its collect ran $jobs jobs")
+    assert(jobs == 0, s"duplicateClusters and its collect ran $jobs jobs")
   }
 }
 

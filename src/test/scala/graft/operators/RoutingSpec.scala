@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.{col, sum, udf}
+import org.apache.spark.sql.functions.{array, col, explode, sum, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every routing switch point in one table: each [[Routing]] decision at
@@ -10,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * specs prove each route ≡ its twin through the forced-route argument;
   * this table proves where the router switches. */
 class RoutingSpec extends AnyFunSuite {
-
-  // (threshold name, its value, decision, large route AT the threshold?)
-  private val table: Seq[(String, Long, Long => Boolean, Boolean)] = Seq(
-    ("bpeLocalMaxTypes", Routing.bpeLocalMaxTypes, Routing.bpeOnExecutors, false),
-    ("maxBroadcastGrams", Routing.maxBroadcastGrams, Routing.gramSketch, false),
-    ("maxBroadcastDomains", Routing.maxBroadcastDomains, Routing.domainSketch, false),
-    ("wideThreshold", Routing.wideThreshold, Routing.simhashWide, true),
-    ("hierThreshold", Routing.hierThreshold, Routing.ivfHier, true),
-    ("ccLocalMaxEdges", Routing.ccLocalMaxEdges, Routing.ccOnExecutors, false),
-    ("lmShuffleHashMinDocs", Routing.lmShuffleHashMinDocs, Routing.lmShuffleHash, false))
+  import RoutingSpec.table
 
   for ((name, t, large, atThreshold) <- table)
     test(s"$name: the decision switches at its threshold") {
@@ -52,6 +43,18 @@ class RoutingSpec extends AnyFunSuite {
     assert(Routing.isLarge(Routing.Auto, 5L)(_ == 5L))
     assert(!Routing.isLarge(Routing.Auto, 4L)(_ == 5L))
   }
+}
+
+object RoutingSpec {
+  // (threshold name, its value, decision, large route AT the threshold?)
+  val table: Seq[(String, Long, Long => Boolean, Boolean)] = Seq(
+    ("bpeLocalMaxTypes", Routing.bpeLocalMaxTypes, Routing.bpeOnExecutors, false),
+    ("maxBroadcastGrams", Routing.maxBroadcastGrams, Routing.gramSketch, false),
+    ("maxBroadcastDomains", Routing.maxBroadcastDomains, Routing.domainSketch, false),
+    ("wideThreshold", Routing.wideThreshold, Routing.simhashWide, true),
+    ("hierThreshold", Routing.hierThreshold, Routing.ivfHier, true),
+    ("ccLocalMaxEdges", Routing.ccLocalMaxEdges, Routing.ccOnExecutors, false),
+    ("lmShuffleHashMinDocs", Routing.lmShuffleHashMinDocs, Routing.lmShuffleHash, false))
 }
 
 /** [[Routing.fetchUpTo]], the bounded fetch a routed operator measures its
@@ -92,11 +95,78 @@ class RoutingFetchSpec extends graft.SparkSpecBase {
 
   test("smallSide: forced routes take no bound, Auto fetches and decides") {
     val df = (1L to 6L).toDF("x").repartition(2)
-    val (large, jobs) = countingJobs(Routing.smallSide(Routing.Large, df, 1L)(_ => false))
+    val (large, jobs) = countingJobs(Routing.smallSide(Routing.Large, df, 1L, df)(_ => false))
     assert(large.isEmpty && jobs == 0, s"forced large route ran $jobs jobs")
-    assert(Routing.smallSide(Routing.Small, df, 1L)(_ => true).map(_.length) == Some(6))
-    assert(Routing.smallSide(Routing.Auto, df, 6L)(_ > 6L).map(_.length) == Some(6))
-    assert(Routing.smallSide(Routing.Auto, df, 6L)(_ > 5L).isEmpty)
-    assert(Routing.smallSide(Routing.Auto, df, 5L)(_ => false).isEmpty)
+    assert(Routing.smallSide(Routing.Small, df, 1L, df)(_ => true).map(_.length) == Some(6))
+    assert(Routing.smallSide(Routing.Auto, df, 6L, df)(_ > 6L).map(_.length) == Some(6))
+    assert(Routing.smallSide(Routing.Auto, df, 6L, df)(_ > 5L).isEmpty)
+    assert(Routing.smallSide(Routing.Auto, df, 5L, df)(_ => false).isEmpty)
   }
+
+  test("smallSide: a bound that settles the route collects without a fetch") {
+    def noFetch: org.apache.spark.sql.DataFrame = fail("the bounded route fetched")
+    val local = (1L to 6L).toDF("x")
+    // a local frame collects on the driver: no persist, no limit, no job
+    val (rows, jobs) = countingJobs(
+      Routing.smallSide(Routing.Auto, local, 6L, noFetch)(_ > 6L))
+    assert(rows.map(_.map(_.getLong(0)).toSeq.sorted) == Some(1L to 6L))
+    assert(jobs == 0, s"the bounded small route ran $jobs jobs")
+    // an exploded frame has no bound: Auto evaluates `fetched`, once
+    val exploded = local.select(explode(array(col("x"), col("x"))).as("x"))
+    var fetches = 0
+    assert(Routing.smallSide(Routing.Auto, exploded, 12L,
+      { fetches += 1; exploded })(_ > 12L).map(_.length) == Some(12))
+    assert(fetches == 1)
+  }
+
+  test("with the bound at cap - 1, cap and cap + 1 the bounded decision " +
+      "equals the measured one for every predicate") {
+    // spark.range(n) carries the bound n in its plan: every decision
+    // below reads it with no job; the measure is the predicate on the
+    // frame's counted rows
+    for ((name, t, large, _) <- RoutingSpec.table; n <- Seq(t - 1, t, t + 1))
+      withClue(s"$name at $n rows: ") {
+        val df = spark.range(n).toDF()
+        val measured = df.count()
+        assert(graft.plans.PlanStats.maxRows(df).contains(measured))
+        assert(Routing.isLarge(Routing.Auto, df, None)(large) == large(measured))
+        // the small-side form: the fetch would find `measured` rows, at
+        // most `t` of them taking the small route when not large
+        assert(Routing.boundedSmall(df, t)(large) ==
+          (measured <= t && !large(measured)))
+      }
+  }
+
+  test("isLarge: a hint decides before the bound, a forced route reads neither") {
+    val small = spark.range(3).toDF()
+    assert(Routing.isLarge(Routing.Auto, small, Some(10L))(_ > 5L))
+    assert(!Routing.isLarge(Routing.Auto, small, None)(_ > 5L))
+    val (forced, jobs) = countingJobs(Routing.isLarge(Routing.Large,
+      small.filter(col("id") % 2 === 0).select(explode(array(col("id")))), None)(
+      _ => false))
+    assert(forced && jobs == 0)
+  }
+}
+
+/** The Spark jobs routed queries run on the sf0.01 tables (500 documents,
+  * 500 embeddings), result collected. Each small side whose bound settles
+  * its route runs no routing action: the block guards of both cluster
+  * queries, the edge fetch of `embedding_cluster`'s components (bound
+  * 500², under the driver route's cap) and `url_filter_stream`'s local
+  * blocklist. `dedup_cluster`'s edges join the token sets back twice, so
+  * their bound (500⁴) is over the cap and the bounded fetch still runs;
+  * `decontaminate_stream`'s eval grams come from an explode and are
+  * fetched once, onto the key-set route. Before the bound: 5, 6, 6 and
+  * 19 jobs. */
+class RoutedQueryJobsSpec extends graft.SparkSpecBase {
+  private val sfDir = "/root/testdata/sf0.01"
+
+  for ((query, pinned) <- Seq("embedding_cluster" -> 2, "dedup_cluster" -> 4,
+      "url_filter_stream" -> 3, "decontaminate_stream" -> 8))
+    test(s"$query runs $pinned jobs") {
+      graft.SparkEntry.queries(query)(spark, sfDir).collect() // warm
+      val (_, jobs) = countingJobs(
+        graft.SparkEntry.queries(query)(spark, sfDir).collect())
+      assert(jobs == pinned, s"$query ran $jobs jobs")
+    }
 }

@@ -353,6 +353,31 @@ class DedupScaleSpec extends SparkSpecBase {
     }
   }
 
+  test("the block guard skips its action only when the row bound proves it") {
+    // 10 rows in five 2-row blocks: the hottest block holds 1 pair
+    val docs = (0 until 10).map(i => (i.toLong, s"t$i", s"b${i / 2}"))
+      .toDF("doc_id", "text", "src")
+    val vecs = (0 until 10).map(i => (i.toLong, Array(1f, i.toFloat), i / 2))
+      .toDF("vec_id", "embedding", "label")
+    def jaccard(maxPairs: Long) = countingJobs(Dedup.tokenJaccardPairs(docs,
+      col("doc_id"), col("text"), Seq(col("src")), threshold = 0.9,
+      maxPairsPerBlock = maxPairs))._2
+    def cosine(maxPairs: Long) = countingJobs(Dedup.embeddingNearDup(vecs,
+      col("vec_id"), col("embedding"), col("label"), threshold = 0.9,
+      maxPairsPerBlock = maxPairs))._2
+    // the bound, 10 rows, keeps 45 pairs at most: no action runs
+    assert(jaccard(45L) == 0 && cosine(45L) == 0)
+    // a bound above the cap runs the guard, which passes: the hottest
+    // block is small
+    assert(jaccard(1L) > 0 && cosine(1L) > 0)
+    // an unbounded frame always runs it
+    val exploded = docs.select(col("doc_id"), explode(array(col("text")))
+      .as("text"), col("src"))
+    assert(countingJobs(Dedup.tokenJaccardPairs(exploded, col("doc_id"),
+      col("text"), Seq(col("src")), threshold = 0.9,
+      maxPairsPerBlock = 1000L))._2 > 0)
+  }
+
   test("bucketPairs degrades gracefully on an adversarial hot bucket") {
     // one bucket stuffed with 10× the cap: the capping window must bound
     // both the pair blowup (≤ cap·(cap−1)/2) and which ids survive (the

@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpecBase, Tables}
@@ -101,5 +103,79 @@ class PlanStatsSpec extends SparkSpecBase {
       .orderBy("doc_id")
       .as[(Long, Long, Long)].collect().toSeq
     assert(r.forall(_._3 == 0L), s"no duplicated spans expected: $r")
+  }
+
+  // ---- maxRows: an upper bound, read off the plan with no job ----------
+
+  test("maxRows: LocalRelation, Range and parquet footer leaves, 0 jobs") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val n = docs.count()
+    val (got, jobs) = countingJobs((PlanStats.maxRows(Seq(1, 2, 3).toDF("v")),
+      PlanStats.maxRows(spark.range(7).toDF()), PlanStats.maxRows(docs)))
+    assert(got == ((Some(3L), Some(7L), Some(n))))
+    assert(jobs == 0, s"the bound must not run a Spark job, ran $jobs")
+  }
+
+  test("maxRows: row-preserving operators keep the child's bound") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val n = docs.count()
+    val other = Tables.load(spark, sfDir, "documents").select(col("doc_id"))
+    val keep: Seq[(String, DataFrame)] = Seq(
+      "project" -> docs.select(col("doc_id")),
+      "filter" -> docs.filter(col("doc_id") % 3 === 0),
+      "sort" -> docs.orderBy(col("doc_id").desc),
+      "sample" -> docs.sample(0.5),
+      "distinct" -> docs.select(col("lang")).distinct(),
+      "dropDuplicates" -> docs.dropDuplicates("lang"),
+      "grouped aggregate" -> docs.groupBy(col("lang")).count(),
+      "window" -> docs.withColumn("r",
+        row_number().over(Window.partitionBy(col("lang")).orderBy(col("doc_id")))),
+      "alias" -> docs.as("d"),
+      "left semi join" -> docs.join(other, Seq("doc_id"), "left_semi"),
+      "left anti join" -> docs.join(other, Seq("doc_id"), "left_anti"))
+    for ((name, df) <- keep)
+      assert(PlanStats.maxRows(df).contains(n), s"$name lost the bound")
+    // a global aggregate is one row, even over no input
+    assert(PlanStats.maxRows(docs.filter(lit(false)).agg(count(lit(1))))
+      .contains(1L))
+  }
+
+  test("maxRows: inner and cross joins multiply, Union adds") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val n = docs.count()
+    val three = spark.range(3)
+    assert(PlanStats.maxRows(docs.join(three, col("doc_id") === col("id")))
+      .contains(3 * n))
+    assert(PlanStats.maxRows(docs.crossJoin(three)).contains(3 * n))
+    assert(PlanStats.maxRows(docs.select(col("doc_id"))
+      .union(three.toDF("doc_id"))).contains(n + 3))
+  }
+
+  test("maxRows: explode, outer joins and sampling with replacement give None") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val other = Tables.load(spark, sfDir, "documents").select(col("doc_id"))
+    assert(PlanStats.maxRows(docs.select(explode(split(col("text"), " ")))).isEmpty)
+    for (how <- Seq("left_outer", "right_outer", "full_outer"))
+      assert(PlanStats.maxRows(docs.join(other, Seq("doc_id"), how)).isEmpty, how)
+    assert(PlanStats.maxRows(docs.sample(withReplacement = true, 2.0, 1L)).isEmpty)
+  }
+
+  test("maxRows: an overflow gives None") {
+    val huge = spark.range(Long.MaxValue).toDF()
+    assert(PlanStats.maxRows(huge).contains(Long.MaxValue))
+    assert(PlanStats.maxRows(huge.crossJoin(spark.range(1))).contains(Long.MaxValue))
+    assert(PlanStats.maxRows(huge.crossJoin(spark.range(2))).isEmpty)
+    assert(PlanStats.maxRows(huge.union(spark.range(1).toDF())).isEmpty)
+  }
+
+  test("maxRows does not stop a later persist of the same frame from being used") {
+    def cached(df: DataFrame) = df.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }.isDefined
+    val df = Tables.load(spark, sfDir, "documents")
+      .filter(col("doc_id") % 2 === 0).select(col("doc_id"))
+    assert(PlanStats.maxRows(df).isDefined)
+    df.persist()
+    try assert(cached(df), "the bound froze the frame's plan before its persist")
+    finally df.unpersist()
   }
 }
