@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -55,7 +56,8 @@ object Bench {
                                         shuffleB: Long, spillB: Long,
                                         peakB: Long, ok: Boolean,
                                         median: Option[Double] = None,
-                                        jobs: Long = 0L, tasks: Long = 0L)
+                                        jobs: Long = 0L, tasks: Long = 0L,
+                                        compiles: Long = 0L)
 
   private def timeSuite(spark: SparkSession, sfDir: String,
                         meters: Meters, reps: Int,
@@ -76,6 +78,7 @@ object Bench {
       var spillB = 0L
       var jobsN = 0L
       var tasksN = 0L
+      var compilesN = 0L
       var okAny = false
       var failedReps = 0
       var lastSecs = 0.0
@@ -107,6 +110,7 @@ object Bench {
         val p0 = meters.spill.get()
         val j0 = meters.jobs.get()
         val k0 = meters.tasks.get()
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -120,6 +124,7 @@ object Bench {
           spillB = meters.spill.get() - p0
           jobsN = meters.jobs.get() - j0
           tasksN = meters.tasks.get() - k0
+          compilesN = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         }
         // a failed rep's fast-abort wall-clock must not become the min —
         // only successful materializations are steady-state measurements
@@ -137,7 +142,7 @@ object Bench {
       // a swung min is weather, not a plan change
       QStat(name, if (best == Double.MaxValue) lastSecs else best,
         shuffleB, spillB, meters.peak.get(), okAny, medianOf(okSecs.toSeq),
-        jobsN, tasksN)
+        jobsN, tasksN, compilesN)
     }
   }
 
@@ -330,6 +335,8 @@ object Bench {
     val medians = obj(primary.flatMap(q => q.median.map(m => q.name -> f"$m%.3f")))
     val jobsObj = obj(primary.map(q => q.name -> q.jobs.toString))
     val tasksObj = obj(primary.map(q => q.name -> q.tasks.toString))
+    // classes generated in rep 0: a plan recompiled on every run shows here
+    val compilesObj = obj(primary.map(q => q.name -> q.compiles.toString))
     // failed queries BY NAME in the full artifact: a failed query still
     // reports its (fast-abort) wall in `queries`, so a consumer that only
     // reads that map — tools/sweep_isolated.py did — would silently count
@@ -338,7 +345,7 @@ object Bench {
     // the sweep reported it as a 2 s success)
     val failedJson = primary.collect { case q if !q.ok => "\"" + q.name + "\"" }
       .mkString(",")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$medians,"jobs":$jobsObj,"tasks":$tasksObj,"shuffle_mb":${mbObj(shuffleMb)},"spill_mb":${mbObj(spillMb)},"peak_mem_mb":${mbObj(peakMb)},"failed":[$failedJson],"shuffle_regressions":[${shuffleRegs.mkString(",")}],"spill_regressions":[${spillRegs.mkString(",")}],"baseline_missing":[$missingJson],"sf":"$sfDir"$extra}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$medians,"jobs":$jobsObj,"tasks":$tasksObj,"codegen_compiles":$compilesObj,"shuffle_mb":${mbObj(shuffleMb)},"spill_mb":${mbObj(spillMb)},"peak_mem_mb":${mbObj(peakMb)},"failed":[$failedJson],"shuffle_regressions":[${shuffleRegs.mkString(",")}],"spill_regressions":[${spillRegs.mkString(",")}],"baseline_missing":[$missingJson],"sf":"$sfDir"$extra}"""
     println(fullLine)
     // The harness keeps only the LAST ~2000 chars of stdout; the full line
     // above (~4 KB at 107 queries) never survives that window, so a

@@ -17,6 +17,14 @@ import graft.streaming.LocalCheckpointFiles
   * `chmod` or `readlink` process per file (~23 ms each, ~100 ms per
   * trigger). Other schemes get the manager Spark would build.
   *
+  * All sessions share one executor classloader
+  * (`spark.sql.artifact.isolation.enabled=false`). Spark caches generated
+  * code per classloader, and isolation gives each session's tasks their
+  * own, so every stream (a cloned session) recompiled its plan's classes.
+  * Isolation serves Spark Connect jars added per session, which the
+  * engine never adds; a deployment that does sets it back to true, since
+  * with it off such jars reach every session and same-named classes clash.
+  *
   * On a cluster, master/parallelism come from spark-submit and only the
   * tuning confs below matter; `local(n)` is the single-JVM entry used by
   * Verify/Bench and tests.
@@ -53,5 +61,6 @@ object GraftSession {
     // (20-ish bytes), so the fallback sort is an in-memory sort of a few
     // MB per task — see Dedup.sortedRunMembers.
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config(LocalCheckpointFiles.ManagerKey, classOf[LocalCheckpointFiles].getName)
 }

@@ -358,55 +358,48 @@ object Dedup {
 
   /** Exact token-set Jaccard over blocked candidate pairs. `block` keys the
     * self-join (e.g. same source + language) so the pair count stays linear
-    * per block instead of N² global.
+    * per block instead of N² global; a null block key forms no pairs. `id`
+    * must be a key of `docs`: every pair of rows in a block is one
+    * candidate, so a repeated id repeats its pairs.
+    *
+    * Each row carries its HASHED token set (8 bytes/token, sorted) through
+    * the self-join's one exchange; Jaccard is a linear merge of two long
+    * arrays (the string-set value up to 64-bit collisions). Joining the
+    * sets back onto id-only candidates would move every set twice and lift
+    * the bound on pairs of n rows ([[graft.plans.PlanStats.maxRows]]) from
+    * n² to n⁴.
     *
     * A provably lossless size-bound prefilter runs before the set
     * arithmetic: J(A,B) >= t implies |A∩B| >= t|A∪B|, and since
     * |A∩B| <= min(|A|,|B|) and |A∪B| >= max(|A|,|B|), any qualifying pair
-    * satisfies min >= t*max. The bound is two ints per row, so the
-    * expensive intersect/union runs on ~1/15th of the pairs (the standard
-    * length-filter of set-similarity joins, cf. PPJoin, Xiao et al. 2008).
+    * satisfies min >= t*max: two ints per pair inside the join, so the
+    * merge runs on ~1/15th of the pairs (the standard length-filter of
+    * set-similarity joins, cf. PPJoin, Xiao et al. 2008).
     *
     * `maxPairsPerBlock` is the misuse guard (on by default): the call
     * fails fast — at CALL time, via one bounded scalar count over the
-    * light key frame — if any block's pair estimate exceeds it, pointing
+    * block keys — if any block's pair estimate exceeds it, pointing
     * at [[minhashLsh]] as the keyless path. `Long.MaxValue` disables. */
   def tokenJaccardPairs(docs: DataFrame, id: Column, text: Column,
                         block: Seq[Column], threshold: Double,
                         maxPairsPerBlock: Long = 25000000L): DataFrame = {
-    // Phase 1 — candidate pairs over a LIGHT frame: (block, id, set size).
-    // The O(pairs-per-block) join shuffles ~20 bytes/row and the length
-    // bound prunes before any array ever moves.
-    val light = docs.select(
+    val sets = docs.select(
       (block.zipWithIndex.map { case (c, i) => c.as(s"blk_$i") } :+
         id.as("doc_id") :+
-        size(GraftFunctions.tokenSetHash(TextFunctions.tokens(text)))
-          .as("nt")): _*)
+        GraftFunctions.tokenSetHash(TextFunctions.tokens(text)).as("t")): _*)
+      .withColumn("nt", size(col("t")))
     val blkCols = block.indices.map(i => s"blk_$i")
-    guardBlockPairs(light, blkCols, maxPairsPerBlock,
+    guardBlockPairs(sets, blkCols, maxPairsPerBlock,
       "tokenJaccardPairs", "Dedup.minhashLsh")
-    val l = light.select((blkCols.map(col) :+ col("doc_id").as("id_a") :+
-      col("nt").as("nt_a")): _*)
-    val r = light.select((blkCols.map(col) :+ col("doc_id").as("id_b") :+
-      col("nt").as("nt_b")): _*)
-    val candidates = l.join(r, blkCols)
+    def side(s: String) = sets.select((blkCols.map(col) :+
+      col("doc_id").as(s"id_$s") :+ col("t").as(s"t_$s") :+
+      col("nt").as(s"nt_$s")): _*)
+    side("a").join(side("b"), blkCols)
       .filter(col("id_a") < col("id_b") &&
         least(col("nt_a"), col("nt_b")).cast("double") >=
           lit(threshold) * greatest(col("nt_a"), col("nt_b")).cast("double"))
-      .select("id_a", "id_b")
-
-    // Phase 2 — attach HASHED token sets (8 bytes/token, sorted) to the
-    // surviving pairs only; Jaccard is a linear merge over two long arrays
-    // (same value as the string-set formulation up to 64-bit collisions).
-    val toksOf = docs.select(id.as("tid"),
-      GraftFunctions.tokenSetHash(TextFunctions.tokens(text)).as("t"))
-    candidates
-      .join(toksOf.select(col("tid").as("id_a"), col("t").as("toks_a")),
-        Seq("id_a"))
-      .join(toksOf.select(col("tid").as("id_b"), col("t").as("toks_b")),
-        Seq("id_b"))
       .withColumn("jaccard",
-        round(GraftFunctions.jaccardSorted(col("toks_a"), col("toks_b")), 4))
+        round(GraftFunctions.jaccardSorted(col("t_a"), col("t_b")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }

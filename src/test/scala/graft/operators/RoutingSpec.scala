@@ -151,17 +151,16 @@ class RoutingFetchSpec extends graft.SparkSpecBase {
 /** The Spark jobs routed queries run on the sf0.01 tables (500 documents,
   * 500 embeddings), result collected. Each small side whose bound settles
   * its route runs no routing action: the block guards of both cluster
-  * queries, the edge fetch of `embedding_cluster`'s components (bound
-  * 500², under the driver route's cap) and `url_filter_stream`'s local
-  * blocklist. `dedup_cluster`'s edges join the token sets back twice, so
-  * their bound (500⁴) is over the cap and the bounded fetch still runs;
-  * `decontaminate_stream`'s eval grams come from an explode and are
-  * fetched once, onto the key-set route. Before the bound: 5, 6, 6 and
-  * 19 jobs. */
+  * queries, the edge fetch of both queries' components (bound 500², under
+  * the driver route's cap: `dedup_cluster`'s token sets ride the blocked
+  * self-join, so no join-back multiplies the bound) and
+  * `url_filter_stream`'s local blocklist. `decontaminate_stream`'s eval
+  * grams come from an explode and are fetched once, onto the key-set
+  * route. Before the bound: 5, 6, 6 and 19 jobs. */
 class RoutedQueryJobsSpec extends graft.SparkSpecBase {
   private val sfDir = "/root/testdata/sf0.01"
 
-  for ((query, pinned) <- Seq("embedding_cluster" -> 2, "dedup_cluster" -> 4,
+  for ((query, pinned) <- Seq("embedding_cluster" -> 2, "dedup_cluster" -> 2,
       "url_filter_stream" -> 3, "decontaminate_stream" -> 8))
     test(s"$query runs $pinned jobs") {
       graft.SparkEntry.queries(query)(spark, sfDir).collect() // warm
